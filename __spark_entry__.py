@@ -1,9 +1,8 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""Query contract (PySpark target).
 
-The driver's verify runs ``entry(spark)`` as a smoke check, runs each
-``queries()[name]`` at sf=0.01 and compares it against the matching
-``oracle_sql()[name]`` via DuckDB (row-count + schema + order-insensitive
-value-hash → CORRECTNESS_r{N}.json).
+``entry(spark)`` is a smoke check. Each ``queries()[name]`` is checked
+against ``oracle_sql()[name]`` run in DuckDB (row count, schema and
+order-insensitive values).
 
 Implementations live in :mod:`smalltsdb_spark.queries`; this module is the
 thin contract adapter.
@@ -43,111 +42,10 @@ def entry(spark: SparkSession) -> DataFrame:
     return out
 
 
-# Round in which a query's SEMANTICS last changed.  A query whose most
-# recent driver-green round predates its touch round is STALE — its green
-# rows validated old code — and jumps to the head of the check order
-# regardless of how many past greens it accumulated.
-#
-# Since r8 this is DERIVED from git (smalltsdb_spark/staleness.py): round
-# boundaries come from the driver's own "round N: verdict/..." commits,
-# per-query dependencies from the AST (the registered function, its lazy
-# oracle, every same-file helper it references, and every
-# smalltsdb_spark module segment reachable through its imports), and the
-# change round from hashing each dependency segment at adjacent boundary
-# snapshots.  VERDICT r7 item 2's failure mode — r7 rewrote the storage
-# layer under six long-green queries and the hand list missed all six —
-# cannot recur: a storage.py edit now bumps every query whose closure
-# reaches the edited segment, automatically, including uncommitted work.
-#
-# _MANUAL_TOUCHED stays as a floor for judgment calls the AST cannot
-# make (e.g. a judge-requested re-confirmation); the effective round is
-# the max of both sources.
-_MANUAL_TOUCHED: dict[str, int] = {
-    # VERDICT r7 item 2 names six queries for fresh r8 confirmation.
-    # Four derive touch=7 mechanically (storage/streaming closure); the
-    # other two do not — tsdb_retention's driver row filters the events
-    # relation directly and never enters storage.py, and git shows
-    # sources/daemon.py last changed in r6, not r7 — but the judge asked
-    # for all six, so floor them in.
-    "tsdb_retention": 7,
-    "tsdb_daemon_ingest": 7,
-}
-
-
-def _touched_rounds() -> dict[str, int]:
-    from smalltsdb_spark.staleness import touch_rounds
-
-    derived = touch_rounds(QUERIES, ORACLE)
-    merged = dict(derived)
-    for name, rnd in _MANUAL_TOUCHED.items():
-        merged[name] = max(merged.get(name, 0), rnd)
-    return merged
-
-
-def _green_history(names: list[str]) -> tuple[dict[str, int], dict[str, int]]:
-    """Per-query (green count, most recent green round) from the committed
-    ``CORRECTNESS_r*.json`` files.  A query is STALE exactly when
-    ``touched[n] > last_green[n]`` — the definition :func:`_driver_order`'s
-    sort key uses, and the one the staleness property test asserts over."""
-    import glob
-    import json
-    import re
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    greens = {n: 0 for n in names}
-    last_green = {n: 0 for n in names}
-    for path in glob.glob(os.path.join(here, "CORRECTNESS_r*.json")):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        rnd = int(m.group(1)) if m else 0
-        try:
-            with open(path) as f:
-                rows = json.load(f)
-        except (OSError, ValueError):
-            continue
-        for n, row in rows.items():
-            if n in greens and isinstance(row, dict) and row.get("hash_match"):
-                greens[n] += 1
-                last_green[n] = max(last_green[n], rnd)
-    return greens, last_green
-
-
-def _driver_order(names: list[str]) -> list[str]:
-    """Order queries stale-first, then least-driver-verified.
-
-    The driver's correctness run checks a budget-capped PREFIX of this
-    dict (50/round — exactly the first N in insertion order), so
-    ordering is coverage policy: a query green in many past rounds can
-    afford to rotate out; a never-checked, hash-missed, or
-    touched-since-last-green one cannot.  Green history (count AND most
-    recent green round) is read from the committed
-    ``CORRECTNESS_r*.json`` files, so this stays self-maintaining as
-    rounds accumulate; staleness comes from :data:`TOUCHED_ROUND`.
-    Ties break newest-registered first (new operators get their first
-    driver row immediately).  Rotated-out queries keep full local
-    coverage via tests/test_oracle_parity.py.
-    """
-    greens, last_green = _green_history(names)
-    touched = _touched_rounds()
-    pos = {n: i for i, n in enumerate(names)}
-    return sorted(
-        names,
-        key=lambda n: (
-            # stale (green rows predate the last semantic touch) → first;
-            # within the stale bucket the OLDEST certification goes
-            # first, so a budget overflow drops the most recently
-            # re-certified stale rows, never the most outdated ones
-            last_green[n] >= touched.get(n, 0),
-            last_green[n],
-            greens[n],
-            -pos[n],
-        ),
-    )
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2 (+ extensions),
-    least-driver-verified first (see :func:`_driver_order`)."""
-    return {n: QUERIES[n] for n in _driver_order(list(QUERIES))}
+    in registration order."""
+    return dict(QUERIES)
 
 
 def oracle_sql() -> dict[str, str]:
@@ -155,7 +53,7 @@ def oracle_sql() -> dict[str, str]:
 
     Lazy entries (callables) embed data-derived constants — e.g. the IVF
     oracle trains the same deterministic k-means centroids the Spark query
-    trains and renders them as literals; they read the sf dir from
-    ``SMALLTSDB_ORACLE_SF_DIR`` (default: the driver's sf0.01).
+    trains and renders them as literals; they read the scale dir from
+    ``SMALLTSDB_ORACLE_SF_DIR`` or ``SMALLTSDB_PARITY_SF`` (default sf0.01).
     """
     return {k: (v() if callable(v) else v) for k, v in ORACLE.items()}

@@ -1,5 +1,3 @@
-import os
-
 from pyspark.sql import DataFrame
 
 from smalltsdb_spark.operators.aggregate import aggregate, bucket
@@ -16,12 +14,9 @@ __all__ = ["aggregate", "bucket", "spread"]
 #: per-trigger jobs were dominated by 32-task map stages over kB-sized
 #: batches; at the other end the 0.6 MB sf0.1 documents corpus keeps
 #: ~5 partitions — its tokenize-heavy jobs stay parallel and flat on
-#: wall).  Env-overridable for experimentation; the 100 TB case never
-#: reaches this code path (the big-input fast path below proves enough
-#: scan partitions and passes through).
-SPREAD_TARGET_BYTES = int(
-    os.environ.get("SMALLTSDB_SPREAD_TARGET_BYTES", str(128 << 10))
-)
+#: wall).  The 100 TB case never reaches this code path (the big-input
+#: fast path below proves enough scan partitions and passes through).
+SPREAD_TARGET_BYTES = 128 << 10
 
 
 def spread(df: DataFrame) -> DataFrame:

@@ -351,24 +351,18 @@ def fit(
         .persist()
     )
     # Size the cached relation's partition count by MEASURED bytes, not
-    # by core count (guide §2.2 — partitions track data): with the AQE
-    # cached-plan flag on during the cache build, the repartition
-    # shuffle above is coalesced from the measured post-shuffle bytes
-    # (1 MB floor locally, advisory-sized on a cluster), so a tiny
-    # training set stops paying `iters × 2 × shuffle.partitions` empty
-    # task launches per fit — measured 1.15 → 0.55 s/iteration at sf0.1
-    # (32 partitions → 1), bit-identical model (fixed-point sums are
-    # partitioning-independent by the module contract).  Scoped: set
-    # only while the cache build compiles, restored before training.
-    _aqe_key = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
-    _aqe_old = spark.conf.get(_aqe_key, "false")
-    spark.conf.set(_aqe_key, "true")
-    try:
-        # every training doc owns exactly one bias row, so this count is
-        # the old distinct-id count (and it materializes the cache)
-        n_docs = fx.filter(F.col("feature") == dim).count()
-    finally:
-        spark.conf.set(_aqe_key, _aqe_old)
+    # by core count (partitions track data): the session lets AQE
+    # coalesce cached plans (get_spark sets
+    # canChangeCachedPlanOutputPartitioning), so the repartition shuffle
+    # above is coalesced from the measured post-shuffle bytes (1 MB floor
+    # locally, advisory-sized on a cluster), and a tiny training set
+    # stops paying `iters × 2 × shuffle.partitions` empty task launches
+    # per fit — measured 1.15 → 0.55 s/iteration at sf0.1 (32 partitions
+    # → 1), bit-identical model (fixed-point sums are
+    # partitioning-independent by the module contract).
+    # Every training doc owns exactly one bias row, so this count is the
+    # old distinct-id count (and it materializes the cache).
+    n_docs = fx.filter(F.col("feature") == dim).count()
     if n_docs == 0:
         fx.unpersist()
         raise ValueError("no labeled documents to fit on")

@@ -10,6 +10,8 @@ oracle → the driver records the weaker rows-only check, as designed.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -24,6 +26,16 @@ from smalltsdb_spark.operators import (
 )
 from smalltsdb_spark.operators.packing import pack_sequences
 from smalltsdb_spark.queries import _t, query
+
+
+def _oracle_sf_dir() -> str:
+    """Scale dir the data-derived oracles read (default: sf0.01)."""
+    return (
+        os.environ.get("SMALLTSDB_ORACLE_SF_DIR")
+        or os.environ.get("SMALLTSDB_PARITY_SF")
+        or "/root/testdata/sf0.01"
+    )
+
 
 # ---------------------------------------------------------------------------
 # Deduplication
@@ -546,21 +558,15 @@ def _ivf_oracle(train_where: str = "") -> str:
     corpus-side nearest-centroid assignment and cosine scoring are plain
     SQL over those literals.
 
-    Reads ``SMALLTSDB_ORACLE_SF_DIR`` to pick the sf dir the oracle will be
-    evaluated against (default: sf0.01, the driver's correctness scale).
+    Reads the sf dir the oracle will be evaluated against from
+    :func:`_oracle_sf_dir`.
     """
-    import os
-
     import duckdb
     import numpy as np
 
     from smalltsdb_spark.operators.similarity import _kmeans
 
-    sf_dir = (
-        os.environ.get("SMALLTSDB_ORACLE_SF_DIR")
-        or os.environ.get("SMALLTSDB_PARITY_SF")
-        or "/root/testdata/sf0.01"
-    )
+    sf_dir = _oracle_sf_dir()
     if (sf_dir, train_where) in _IVF_ORACLE_CACHE:
         return _IVF_ORACLE_CACHE[(sf_dir, train_where)]
     n_centroids, nprobe, k, seed, train_sample = 16, 4, 5, 42, 100_000
@@ -745,18 +751,12 @@ def _semantic_oracle_sql(variant: str, train_where: str, pair_pred: str) -> str:
     ``list_cosine_similarity`` rounded to 6, filtered by
     ``pair_pred`` (TRUE for the full row; the batch-touching predicate
     for the incremental row)."""
-    import os
-
     import duckdb
     import numpy as np
 
     from smalltsdb_spark.operators.similarity import _kmeans
 
-    sf_dir = (
-        os.environ.get("SMALLTSDB_ORACLE_SF_DIR")
-        or os.environ.get("SMALLTSDB_PARITY_SF")
-        or "/root/testdata/sf0.01"
-    )
+    sf_dir = _oracle_sf_dir()
     key = f"{variant}:{sf_dir}"
     if key in _SEMANTIC_ORACLE_CACHE:
         return _SEMANTIC_ORACLE_CACHE[key]
@@ -895,18 +895,12 @@ def _pq_oracle() -> str:
     literals, then replays encode (nearest sub-centroid via matrix-form
     distance, first-index tie-break) and the ADC sum/rank as plain SQL.
     """
-    import os
-
     import duckdb
     import numpy as np
 
     from smalltsdb_spark.operators.similarity import _kmeans
 
-    sf_dir = (
-        os.environ.get("SMALLTSDB_ORACLE_SF_DIR")
-        or os.environ.get("SMALLTSDB_PARITY_SF")
-        or "/root/testdata/sf0.01"
-    )
+    sf_dir = _oracle_sf_dir()
     if sf_dir in _PQ_ORACLE_CACHE:
         return _PQ_ORACLE_CACHE[sf_dir]
     m, codes, k, seed, train_sample = PQ_M, PQ_CODES, PQ_K, 42, 100_000
@@ -1031,18 +1025,12 @@ def _ivf_pq_oracle() -> str:
     lists: argmin_j ||r − b_j||² drops the per-row r·r constant, so the
     rank key is −2·(v·b_j − c·b_j) + ||b_j||², all dot products of
     SLICED vectors against literals (the sim_pq_adc precedent)."""
-    import os
-
     import duckdb
     import numpy as np
 
     from smalltsdb_spark.operators.similarity import _kmeans
 
-    sf_dir = (
-        os.environ.get("SMALLTSDB_ORACLE_SF_DIR")
-        or os.environ.get("SMALLTSDB_PARITY_SF")
-        or "/root/testdata/sf0.01"
-    )
+    sf_dir = _oracle_sf_dir()
     if sf_dir in _IVFPQ_ORACLE_CACHE:
         return _IVFPQ_ORACLE_CACHE[sf_dir]
     n_centroids, nprobe, m, codes, k, seed, train_sample = (
@@ -2843,15 +2831,9 @@ def _bpe_oracle() -> str:
     the same merge sequence over the same corpus and renders it as
     literal VALUES (the sim_ivf_ann / sim_kmeans precedent for
     iterative, non-SQL-expressible algorithms)."""
-    import os
-
     import duckdb
 
-    sf_dir = (
-        os.environ.get("SMALLTSDB_ORACLE_SF_DIR")
-        or os.environ.get("SMALLTSDB_PARITY_SF")
-        or "/root/testdata/sf0.01"
-    )
+    sf_dir = _oracle_sf_dir()
     if sf_dir in _BPE_ORACLE_CACHE:
         return _BPE_ORACLE_CACHE[sf_dir]
     con = duckdb.connect()
@@ -2950,15 +2932,9 @@ def _bpe_encode_oracle() -> str:
     """Generated-constant oracle: the pure-Python reference trains AND
     encodes, aggregated per source (any per-document miscount moves a
     total)."""
-    import os
-
     import duckdb
 
-    sf_dir = (
-        os.environ.get("SMALLTSDB_ORACLE_SF_DIR")
-        or os.environ.get("SMALLTSDB_PARITY_SF")
-        or "/root/testdata/sf0.01"
-    )
+    sf_dir = _oracle_sf_dir()
     key = f"encode:{sf_dir}"
     if key in _BPE_ORACLE_CACHE:
         return _BPE_ORACLE_CACHE[key]
@@ -4110,16 +4086,10 @@ def _kmeans_fit_oracle() -> str:
     centroid literals (the sim_ivf_ann precedent: matrix-form distance
     with ``ORDER BY dist, j`` first-index tie-break, matching
     ``np.argmin``)."""
-    import os
-
     import duckdb
     import numpy as np
 
-    sf_dir = (
-        os.environ.get("SMALLTSDB_ORACLE_SF_DIR")
-        or os.environ.get("SMALLTSDB_PARITY_SF")
-        or "/root/testdata/sf0.01"
-    )
+    sf_dir = _oracle_sf_dir()
     if sf_dir in _KMEANS_ORACLE_CACHE:
         return _KMEANS_ORACLE_CACHE[sf_dir]
 
@@ -4430,15 +4400,9 @@ def _cls_scored_for(sample_frac: float | None, iters: int) -> tuple:
     iters), shared by every oracle that needs these predictions (the
     sampled-classifier row and the learned-curation row train the SAME
     model, so the mirror runs once)."""
-    import os
-
     import duckdb
 
-    sf_dir = (
-        os.environ.get("SMALLTSDB_ORACLE_SF_DIR")
-        or os.environ.get("SMALLTSDB_PARITY_SF")
-        or "/root/testdata/sf0.01"
-    )
+    sf_dir = _oracle_sf_dir()
     cache_key = f"{sf_dir}|{sample_frac}|{iters}"
     if cache_key in _CLS_SCORED_CACHE:
         return _CLS_SCORED_CACHE[cache_key]
@@ -4470,13 +4434,7 @@ def _cls_oracle_for(sample_frac: float | None, iters: int) -> str:
     counts must match EXACTLY — no float comparison anywhere (predictions
     are margin-sign decisions, and margins are integer-sum
     deterministic)."""
-    import os
-
-    sf_dir = (
-        os.environ.get("SMALLTSDB_ORACLE_SF_DIR")
-        or os.environ.get("SMALLTSDB_PARITY_SF")
-        or "/root/testdata/sf0.01"
-    )
+    sf_dir = _oracle_sf_dir()
     cache_key = f"{sf_dir}|{sample_frac}|{iters}"
     if cache_key in _CLS_ORACLE_CACHE:
         return _CLS_ORACLE_CACHE[cache_key]
@@ -4826,15 +4784,9 @@ def _embed_oracle() -> str:
     produces (determinism contract in operators/embedding.py), so the
     per-source absolute-sum checksums compare as INTEGERS — the whole
     tfidf→projection→sum pipeline value-checked with no float compare."""
-    import os
-
     import duckdb
 
-    sf_dir = (
-        os.environ.get("SMALLTSDB_ORACLE_SF_DIR")
-        or os.environ.get("SMALLTSDB_PARITY_SF")
-        or "/root/testdata/sf0.01"
-    )
+    sf_dir = _oracle_sf_dir()
     if sf_dir in _EMB_ORACLE_CACHE:
         return _EMB_ORACLE_CACHE[sf_dir]
     from smalltsdb_spark.operators.embedding import reference_embed
@@ -4922,8 +4874,6 @@ def _txt_semdedup_oracle() -> str:
     within-cluster cosine with the shared floor-round6 — and the
     resulting pairs are rendered as literals.  Any drift anywhere in
     tokenize→tf→idf→project→sum→cluster→score changes a pair."""
-    import os
-
     import duckdb
     import numpy as np
 
@@ -4931,11 +4881,7 @@ def _txt_semdedup_oracle() -> str:
     from smalltsdb_spark.operators.embedding import reference_embed
     from smalltsdb_spark.operators.similarity import _kmeans, _round6
 
-    sf_dir = (
-        os.environ.get("SMALLTSDB_ORACLE_SF_DIR")
-        or os.environ.get("SMALLTSDB_PARITY_SF")
-        or "/root/testdata/sf0.01"
-    )
+    sf_dir = _oracle_sf_dir()
     if sf_dir in _TXT_SEM_ORACLE_CACHE:
         return _TXT_SEM_ORACLE_CACHE[sf_dir]
 
@@ -5318,8 +5264,6 @@ def stream_span_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame
     count lookup the dedup join inherently needs) + an O(batch) delta
     append — the corpus text never re-shingles and the corpus index
     never rewrites outside amortized compaction (SCALE.md)."""
-    import os
-
     from smalltsdb_spark.queries import _scratch_dir
     from smalltsdb_spark.streaming.span_dedup import (
         make_span_dedup_batch_handler,
@@ -5767,8 +5711,6 @@ def stream_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     amortized compaction.  The oracle is exact because the union over
     batches must reconstruct the full frozen-centroid pair relation
     with no duplicates."""
-    import os
-
     from smalltsdb_spark.queries import _scratch_dir
     from smalltsdb_spark.streaming.semantic_dedup import (
         make_semantic_dedup_batch_handler,

@@ -46,6 +46,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from smalltsdb_spark import manifests
 from smalltsdb_spark.manifests import is_hidden_name
 from smalltsdb_spark.schemas import PARTITION_COLUMN, SECONDS_PER_DAY
 
@@ -514,8 +515,6 @@ def read_manifest(path: str) -> dict[int, list[str]] | None:
     makes the one-``os.replace`` commit atomic for the whole table."""
     import json
 
-    from smalltsdb_spark import manifests
-
     p = os.path.join(path, MANIFEST)
     if not os.path.isfile(p):
         return None
@@ -527,8 +526,6 @@ def read_manifest(path: str) -> dict[int, list[str]] | None:
 def write_manifest(path: str, files: dict[int, list[str]]) -> None:
     """Atomically publish the live-file map — THE commit point of every
     manifest-mode mutation (manifests.atomic_publish_json)."""
-    from smalltsdb_spark import manifests
-
     manifests.atomic_publish_json(
         os.path.join(path, MANIFEST), manifests.files_payload(files)
     )
@@ -581,16 +578,14 @@ def _gc_unmanifested(
     would vanish one trigger after retirement and an in-flight reader's
     already-resolved snapshot would hit FileNotFoundException mid-scan.
     mtime measures RETIREMENT age, not write age: every manifest commit
-    that retires a file re-touches it (:func:`_touch_retired`, ADVICE
-    r9 — previously a file already older than min_age when retired,
-    e.g. a slow-changing streaming partition rewritten by one late
-    event, was deleted on the very next trigger).  Crashed-writer
+    that retires a file re-touches it (:func:`manifests.touch_retired`;
+    otherwise a file already older than min_age when retired, e.g. a
+    slow-changing streaming partition rewritten by one late event,
+    would be deleted on the very next trigger).  Crashed-writer
     debris was never retired so its mtime stays its write time — it
     ages out after min_age, which is the right bound for files no
     reader ever resolved."""
     import time
-
-    from smalltsdb_spark import manifests
 
     live = {f for fs in manifest.values() for f in fs}
     removed = []
@@ -618,15 +613,6 @@ def _gc_unmanifested(
             if not os.listdir(root):
                 os.rmdir(root)
     return removed
-
-
-def _touch_retired(path: str, rel_files) -> None:
-    """Retirement stamp (manifests.touch_retired): the min-age gate in
-    :func:`_gc_unmanifested` measures retirement age, not write age
-    (ADVICE r9)."""
-    from smalltsdb_spark import manifests
-
-    manifests.touch_retired(path, rel_files)
 
 
 def _install_staged_partition(staged_dir: str, dest_dir: str) -> list[str]:
@@ -898,7 +884,7 @@ def _overwrite_partitions_manifest(
             for f in fs
             if f not in set(new_files.get(unit, []))
         ]
-        _touch_retired(path, retired)
+        manifests.touch_retired(path, retired)
     finally:
         shutil.rmtree(staging, ignore_errors=True)
 
@@ -975,7 +961,7 @@ def drop_partitions_below(
         # arbitrarily old — without re-touching, the next mutation's
         # min-age gate would see them as instantly past grace (ADVICE r9)
         doomed_set = set(doomed)
-        _touch_retired(
+        manifests.touch_retired(
             path,
             [
                 f

@@ -52,7 +52,7 @@ O(corpus) rewrite per 10 s trigger):
   delivers batch ``b`` only after ``b-1``'s checkpoint committed — so
   at most the pre-state and the new version are live).  Data files
   referenced by no live manifest are retirement-stamped (utime — the
-  storage._touch_retired discipline) and deleted once older than
+  manifests.touch_retired discipline) and deleted once older than
   ``gc_grace_seconds``, the in-flight-reader grace window.  Steady
   state: ≤ 2 manifests, live data files + at most one grace window of
   retired ones.
@@ -94,18 +94,6 @@ DEFAULT_GC_GRACE_SECONDS = 300.0
 DEFAULT_COMPACT_FILES = 4
 
 
-# The batch-versioned manifest protocol (resolve-before / atomic
-# version publish / pre-state-preserving GC) is shared machinery since
-# r12 — smalltsdb_spark.manifests owns it; the names below are this
-# module's historical public surface (tests and the semantic handler's
-# twin import them).
-latest_index_version = manifests.latest_version
-_manifest_path = manifests.version_path
-_read_manifest = manifests.read_version
-_write_manifest = manifests.write_version
-_resolve_files = manifests.resolve_version
-
-
 def _read_files(
     spark: SparkSession, index_base: str, rel_files: list[str]
 ) -> DataFrame:
@@ -132,7 +120,7 @@ def read_index(
     A partition's base + delta files union-sum here (counts are
     algebraic — the LSM read path), so callers always see one row per
     hash."""
-    _, files = _resolve_files(index_base, before)
+    _, files = manifests.resolve_version(index_base, before)
     if prefixes is None:
         wanted = [f for fs in files.values() for f in fs]
     else:
@@ -142,9 +130,6 @@ def read_index(
         .groupBy("h")
         .agg(F.sum("c").cast("long").alias("c"))
     )
-
-
-_gc_superseded = manifests.gc_superseded_versions
 
 
 def make_span_dedup_batch_handler(
@@ -185,7 +170,9 @@ def make_span_dedup_batch_handler(
             .persist()
         )
         try:
-            pre_version, pre_files = _resolve_files(index_base, before=batch_id)
+            pre_version, pre_files = manifests.resolve_version(
+                index_base, before=batch_id
+            )
             # LSM append FIRST: the batch's delta counts land as ONE new
             # file per touched partition — O(batch) written, the index
             # is never rewritten here.  Writing the delta before the
@@ -275,14 +262,14 @@ def make_span_dedup_batch_handler(
                     )
                     for p in to_compact:
                         new_files[p] = _list_pfx_files(comp_name, p)
-            _write_manifest(index_base, batch_id, new_files)
+            manifests.write_version(index_base, batch_id, new_files)
             live = {
                 f
                 for files in (new_files, pre_files)
                 for fs in files.values()
                 for f in fs
             }
-            _gc_superseded(
+            manifests.gc_superseded_versions(
                 index_base, batch_id, pre_version, live, gc_grace_seconds
             )
         finally:

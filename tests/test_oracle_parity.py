@@ -13,6 +13,7 @@ import duckdb
 import pytest
 
 import __spark_entry__ as entry_mod
+from smalltsdb_spark.queries import QUERIES
 
 SF_DIR = os.environ.get("SMALLTSDB_PARITY_SF", "/root/testdata/sf0.001")
 # lazy oracles (e.g. the IVF generated-constant SQL) must embed constants
@@ -112,12 +113,22 @@ def test_query_matches_oracle(name, spark, ddb):
     assert not diffs, f"{name}: pandas-render mismatches {diffs[:5]}"
 
 
-def test_registry_complete():
+def test_registry_complete(monkeypatch):
     """Every query has an oracle and none silently fall out of the
     registry (a dropped @query decorator also drops its parametrized
-    parity test, so the count itself must be pinned)."""
+    parity test, so the count itself must be pinned).  ``queries()`` is
+    the registry in registration order, and building the contract
+    starts no process."""
+    import subprocess
+
+    def refuse(*args, **kwargs):
+        raise AssertionError(f"contract spawned a subprocess: {args[:1]}")
+
+    monkeypatch.setattr(subprocess, "run", refuse)
+    monkeypatch.setattr(subprocess, "Popen", refuse)
     qs, oracles = entry_mod.queries(), entry_mod.oracle_sql()
-    assert set(qs) == set(oracles)
+    assert list(qs) == list(QUERIES)
+    assert set(oracles) == set(QUERIES)
     assert len(qs) >= 100
 
 

@@ -12,6 +12,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from smalltsdb_spark import manifests
 from smalltsdb_spark.sources.daemon import SpoolSink
 from smalltsdb_spark.streaming import (
     read_spool_stream,
@@ -377,7 +378,6 @@ def test_span_dedup_stream_handler_is_idempotent_and_restart_safe(
     resolve its pre-state purely from disk (a SECOND handler instance,
     as after a driver restart, continues correctly)."""
     from smalltsdb_spark.streaming.span_dedup import (
-        latest_index_version,
         make_span_dedup_batch_handler,
         read_index,
     )
@@ -424,7 +424,7 @@ def test_span_dedup_stream_handler_is_idempotent_and_restart_safe(
     # REPLAY batch 1 (same batch_id, post-crash): byte-identical state
     handle2(b1, 1)
     assert snapshot() == after_b1
-    assert latest_index_version(index_base) == 1
+    assert manifests.latest_version(index_base) == 1
     # replayed index equals the scratch index over both batches
     from smalltsdb_spark.operators.dedup import shingle_count_index
 
@@ -450,7 +450,6 @@ def test_span_dedup_index_appends_only_the_batch_delta(spark, tmp_path):
     import os
 
     from smalltsdb_spark.streaming.span_dedup import (
-        _read_manifest,
         make_span_dedup_batch_handler,
         read_index,
     )
@@ -468,7 +467,7 @@ def test_span_dedup_index_appends_only_the_batch_delta(spark, tmp_path):
         k=4, min_count=2, n_prefixes=16,
     )
     handle(b0, 0)
-    files_v0 = _read_manifest(index_base, 0)
+    files_v0 = manifests.read_version(index_base, 0)
     assert len(files_v0) >= 2  # 40 hashes spread over several prefixes
 
     handle(b1, 1)
@@ -478,7 +477,7 @@ def test_span_dedup_index_appends_only_the_batch_delta(spark, tmp_path):
         if d.startswith("pfx=")
     ]
     assert len(pfx_dirs) == 1  # one distinct shingle -> one delta file
-    files_v1 = _read_manifest(index_base, 1)
+    files_v1 = manifests.read_version(index_base, 1)
     touched = int(pfx_dirs[0].split("=", 1)[1])
     delta_files = [f for f in files_v1[touched] if f.startswith("data_b1/")]
     assert len(delta_files) == 1
@@ -504,8 +503,6 @@ def test_span_dedup_index_compaction_bounds_files_per_partition(
     compact_files=2, every committed manifest holds ≤ 2 files per
     partition, and the merged counts stay exact across folds."""
     from smalltsdb_spark.streaming.span_dedup import (
-        _read_manifest,
-        latest_index_version,
         make_span_dedup_batch_handler,
         read_index,
     )
@@ -521,7 +518,7 @@ def test_span_dedup_index_compaction_bounds_files_per_partition(
             [(b, f"x a b c d y{b}")], "doc_id long, text string"
         )
         handle(df, b)
-        files = _read_manifest(index_base, latest_index_version(index_base))
+        files = manifests.read_version(index_base, manifests.latest_version(index_base))
         assert all(len(fs) <= 2 for fs in files.values()), files
     counts = {r.h: r.c for r in read_index(spark, index_base).collect()}
     # 'x a b c' and 'a b c d' appeared once per batch; folds must not
@@ -542,7 +539,6 @@ def test_span_dedup_index_versions_and_disk_are_bounded(spark, tmp_path):
 
     from smalltsdb_spark.operators.dedup import shingle_count_index
     from smalltsdb_spark.streaming.span_dedup import (
-        _read_manifest,
         make_span_dedup_batch_handler,
         read_index,
     )
@@ -576,7 +572,7 @@ def test_span_dedup_index_versions_and_disk_are_bounded(spark, tmp_path):
     live = {
         f
         for v in versions
-        for fs in _read_manifest(index_base, v).values()
+        for fs in manifests.read_version(index_base, v).values()
         for f in fs
     }
     on_disk = set()
@@ -611,8 +607,6 @@ def test_span_dedup_index_randomized_equals_scratch(spark, tmp_path):
 
     from smalltsdb_spark.operators.dedup import shingle_count_index
     from smalltsdb_spark.streaming.span_dedup import (
-        _read_manifest,
-        latest_index_version,
         make_span_dedup_batch_handler,
         read_index,
     )
@@ -650,7 +644,7 @@ def test_span_dedup_index_randomized_equals_scratch(spark, tmp_path):
             ).collect()
         }
         assert merged == scratch, f"diverged after batch {b}"
-        files = _read_manifest(index_base, latest_index_version(index_base))
+        files = manifests.read_version(index_base, manifests.latest_version(index_base))
         assert all(len(fs) <= 3 for fs in files.values()), (b, files)
 
 
@@ -672,7 +666,6 @@ def test_reader_snapshot_survives_concurrent_commit_and_zero_grace_gc(
 
     from smalltsdb_spark.streaming.span_dedup import (
         _read_files,
-        _resolve_files,
         make_span_dedup_batch_handler,
     )
 
@@ -687,7 +680,7 @@ def test_reader_snapshot_survives_concurrent_commit_and_zero_grace_gc(
     for b in range(5):
         # reader phase: resolve the newest committed snapshot and pin
         # its expected relation BEFORE the writer moves
-        version, files = _resolve_files(index_base)
+        version, files = manifests.resolve_version(index_base)
         rels = [f for fs in files.values() for f in fs]
         expected = None
         if rels:
@@ -737,7 +730,6 @@ def test_replay_writes_attempt_unique_dir_preserving_stale_readers(
 
     from smalltsdb_spark.streaming.span_dedup import (
         _read_files,
-        _read_manifest,
         make_span_dedup_batch_handler,
     )
 
@@ -751,7 +743,7 @@ def test_replay_writes_attempt_unique_dir_preserving_stale_readers(
         [(1, "a b c d e"), (2, "a b c x y")], "doc_id long, text string"
     )
     handle(df, 0)
-    stale = _read_manifest(index_base, 0)
+    stale = manifests.read_version(index_base, 0)
     stale_rels = [f for fs in stale.values() for f in fs]
     assert stale_rels and all(f.startswith("data_b0/") for f in stale_rels)
 
@@ -766,7 +758,7 @@ def test_replay_writes_attempt_unique_dir_preserving_stale_readers(
 
     before = relation(stale_rels)
     handle(df, 0)  # replay after commit
-    fresh = _read_manifest(index_base, 0)
+    fresh = manifests.read_version(index_base, 0)
     fresh_rels = [f for fs in fresh.values() for f in fs]
     # the replay landed in an attempt-unique sibling, not data_b0
     assert all(not f.startswith("data_b0/") for f in fresh_rels), fresh_rels
