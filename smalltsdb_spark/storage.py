@@ -15,26 +15,32 @@ equivalent is day-partitioned parquet:
 
 Upserts (``insert or replace``, tsdb.py:390) replace only the
 day-partitions present in the written DataFrame — the plain-parquet MERGE
-equivalent.  Two commit protocols:
+equivalent, implemented once in :func:`upsert` for every caller (sync's
+period and histogram tables, the streaming partials sink).  Each table
+has exactly one commit protocol, decided here and nowhere else:
 
-- **manifest** (default for period tables since r8): the table carries a
-  ``_manifest.json`` naming its live data files; writers stage new files
-  into the partition directories (invisible — readers resolve the
-  manifest, not the listing) and commit EVERYTHING in one
-  ``os.replace`` of the manifest.  A sync that dies mid-write leaves the
-  old manifest — readers see the previous WHOLE-TABLE snapshot, never a
-  mix of old and new partitions (the torn-sync window VERDICT r7 named);
-  the next sync garbage-collects the unmanifested debris and completes.
-  This is the minimal slice of what a table format's transaction log
-  does; at 100 TB swap in Delta/Iceberg — the call sites are shaped so
-  that MERGE is a drop-in.  The reference gets the same property from
-  SQLite: its whole ``sync`` runs under one connection's transaction
-  (reference tsdb.py:305-420).
-- **dirswap** (legacy, and always used for the incoming table, which has
-  append-mode writers — daemon flushes — that do not coordinate through
-  a manifest): staging write + per-partition atomic directory swap, so
-  readers see each PARTITION wholly-old or wholly-new, but a mid-sync
-  crash can expose some partitions new and some old.
+- **manifest** — period, histogram and partials tables, always: the
+  table carries a ``_manifest.json`` naming its live data files;
+  writers stage new files into the partition directories (invisible —
+  readers resolve the manifest, not the listing) and commit EVERYTHING
+  in one ``os.replace`` of the manifest.  A sync that dies mid-write
+  leaves the old manifest — readers see the previous WHOLE-TABLE
+  snapshot, never a mix of old and new partitions (the torn-sync window
+  VERDICT r7 named); the next sync garbage-collects the unmanifested
+  debris and completes.  A table without a manifest (a store written
+  before r8, or a period table handed back by
+  :func:`decommission_streaming_sink`) adopts its listing as the first
+  manifest on its first upsert.  This is the minimal slice of what a
+  table format's transaction log does; at 100 TB swap in Delta/Iceberg —
+  the call sites are shaped so that MERGE is a drop-in.  The reference
+  gets the same property from SQLite: its whole ``sync`` runs under one
+  connection's transaction (reference tsdb.py:305-420).
+- **listing + dirswap** — the incoming table, always: its append-mode
+  writers (daemon flushes, ``insert``, the ingest stream's sink log) do
+  not coordinate through a manifest, so readers list the directory and
+  rewrites (retention's boundary partition, compaction) stage and swap
+  each partition directory atomically — readers see each PARTITION
+  wholly-old or wholly-new.
 """
 
 from __future__ import annotations
@@ -508,7 +514,7 @@ MANIFEST = "_manifest.json"
 
 def read_manifest(path: str) -> dict[int, list[str]] | None:
     """The table's live-file map ``{pday: [relative file paths]}``, or
-    None when the table is not manifest-tracked (legacy dirswap layout).
+    None when the table is not manifest-tracked (a listing table).
 
     The manifest is the table's single source of truth once present:
     readers resolve it INSTEAD of the directory listing, which is what
@@ -532,8 +538,9 @@ def write_manifest(path: str, files: dict[int, list[str]]) -> None:
 
 
 def _listing_as_manifest(path: str) -> dict[int, list[str]]:
-    """Adopt a legacy table's directory listing as its first manifest —
-    the seamless upgrade path for stores written before r8."""
+    """Adopt a listing table's files as its first manifest — the
+    seamless upgrade path for period tables written before r8 or handed
+    back by :func:`decommission_streaming_sink`."""
     files: dict[int, list[str]] = {}
     if not os.path.isdir(path):
         return files
@@ -705,17 +712,22 @@ def read_table(
     )
 
 
-def _one_file_per_partition(df: DataFrame) -> DataFrame:
-    """Cluster rows by partition value before a partitioned write.
+def _write_partitioned(
+    df: DataFrame, dest: str, grain_seconds: int, mode: str
+) -> None:
+    """Partitioned parquet write of ``df`` under ``dest``, clustered by
+    partition value first.
 
-    Without this every upstream task writes a file into every pday it
-    touches — an N_tasks × N_days small-file explosion (measured: a 6-
-    period sync of 1 M rows over 30 days produced ~2 000 files, and every
-    later scan paid the listing + open cost).  Repartitioning on pday
-    gives one file per partition; parallelism = number of days touched,
-    which is what partitioned-write throughput is bounded by anyway.
+    Without the clustering every upstream task writes a file into every
+    pday it touches — an N_tasks × N_days small-file explosion
+    (measured: a 6-period sync of 1 M rows over 30 days produced ~2 000
+    files, and every later scan paid the listing + open cost).
+    Repartitioning on pday gives one file per partition; parallelism =
+    number of days touched, which is what partitioned-write throughput
+    is bounded by anyway.
     """
-    return df.repartition(F.col(PARTITION_COLUMN))
+    clustered = with_pday(df, grain_seconds).repartition(F.col(PARTITION_COLUMN))
+    clustered.write.partitionBy(PARTITION_COLUMN).mode(mode).parquet(dest)
 
 
 def append(
@@ -724,58 +736,34 @@ def append(
     grain_seconds: int = SECONDS_PER_DAY,
     gc_min_age: float = 0.0,
 ) -> None:
+    """Add ``df``'s rows to the table.  A manifest table takes the append
+    transactionally (:func:`_commit_manifest` extending each unit's file
+    list); any other table — incoming — gets a plain listing append."""
     _assert_mutable(path, "batch-append into")
     manifest = read_manifest(path)
     if manifest is not None:
-        # manifest tables take appends transactionally too: stage, move,
-        # extend the live-file map, one os.replace.  Appends are manifest
-        # MUTATIONS, so they run the deferred GC like every other one
-        # (ADVICE r9: an append+retention-drop-only workload previously
-        # never reclaimed dropped files — unbounded disk growth)
-        _gc_unmanifested(path, manifest, min_age_seconds=gc_min_age)
-        import uuid
-
-        staging = os.path.join(path, f".staging-{uuid.uuid4().hex[:8]}")
-        _one_file_per_partition(with_pday(df, grain_seconds)).write.partitionBy(
-            PARTITION_COLUMN
-        ).mode("overwrite").parquet(staging)
-        prefix = f"{PARTITION_COLUMN}="
-        try:
-            for name in sorted(os.listdir(staging)):
-                if not name.startswith(prefix):
-                    continue
-                unit = int(name.split("=", 1)[1])
-                moved = _install_staged_partition(
-                    os.path.join(staging, name), os.path.join(path, name)
-                )
-                manifest.setdefault(unit, []).extend(
-                    os.path.join(name, f) for f in moved
-                )
-            write_manifest(path, manifest)
-        finally:
-            shutil.rmtree(staging, ignore_errors=True)
+        _commit_manifest(
+            df, path, grain_seconds, manifest, replace=False, gc_min_age=gc_min_age
+        )
         return
-    _one_file_per_partition(with_pday(df, grain_seconds)).write.partitionBy(
-        PARTITION_COLUMN
-    ).mode("append").parquet(path)
+    _write_partitioned(df, path, grain_seconds, "append")
 
 
 def overwrite_partitions(
     df: DataFrame,
     path: str,
     grain_seconds: int = SECONDS_PER_DAY,
-    manifest: bool | None = None,
+    manifest: bool = False,
     gc_min_age: float = 0.0,
 ) -> None:
     """Replace only the pdays present in ``df``.
 
-    ``manifest=None`` auto-detects the table's commit protocol (a table
-    with a ``_manifest.json`` stays manifest-committed forever — mixing
-    protocols would let dirswap changes go unseen by manifest readers);
-    ``True`` upgrades a legacy table by adopting its listing as the
-    first manifest; ``False`` forces the legacy dirswap ONLY on tables
-    without a manifest.  See :func:`_overwrite_partitions_manifest` for
-    the transactional path; the rest of this docstring describes
+    A table with a ``_manifest.json`` stays manifest-committed forever
+    (mixing protocols would let dirswap changes go unseen by manifest
+    readers), and ``manifest=True`` — what :func:`upsert` passes —
+    upgrades a table without one by adopting its listing as the first
+    manifest; see :func:`_commit_manifest` for that transactional path.
+    The rest of this docstring describes the listing table's (incoming's)
     dirswap — per-partition atomic swap.
 
     ``grain_seconds`` is the partition grain the table was created with
@@ -803,17 +791,17 @@ def overwrite_partitions(
     import uuid
 
     _assert_mutable(path, "overwrite partitions of")
-    existing_manifest = read_manifest(path)
-    if existing_manifest is not None or manifest:
-        _overwrite_partitions_manifest(
-            df, path, grain_seconds, existing_manifest, gc_min_age=gc_min_age
+    base = read_manifest(path)
+    if base is None and manifest:
+        base = _listing_as_manifest(path)
+    if base is not None:
+        _commit_manifest(
+            df, path, grain_seconds, base, replace=True, gc_min_age=gc_min_age
         )
         return
     token = uuid.uuid4().hex[:8]
     staging = f"{path}.staging-{token}"
-    _one_file_per_partition(with_pday(df, grain_seconds)).write.partitionBy(
-        PARTITION_COLUMN
-    ).mode("overwrite").parquet(staging)
+    _write_partitioned(df, staging, grain_seconds, "overwrite")
     os.makedirs(path, exist_ok=True)
     try:
         for name in sorted(os.listdir(staging)):
@@ -830,22 +818,31 @@ def overwrite_partitions(
         shutil.rmtree(staging, ignore_errors=True)
 
 
-def _overwrite_partitions_manifest(
+def _commit_manifest(
     df: DataFrame,
     path: str,
     grain_seconds: int,
-    existing: dict[int, list[str]] | None,
+    base: dict[int, list[str]],
+    *,
+    replace: bool,
     gc_min_age: float = 0.0,
 ) -> None:
-    """The transactional commit protocol (VERDICT r7 "What's missing" #1).
+    """The transactional commit protocol (VERDICT r7 "What's missing" #1)
+    shared by manifest appends (``replace=False``: a unit's file list is
+    extended) and partition overwrites (``replace=True``: it is replaced).
 
-    1. GC files the current manifest doesn't know about — debris from a
-       crashed previous writer plus files the previous commit replaced
-       (their grace window for in-flight readers is one sync cycle).
-    2. Stage the replacement rows into a dot-prefixed sibling dir.
+    1. GC files the current manifest ``base`` doesn't know about — debris
+       from a crashed previous writer plus files the previous commit
+       replaced (their grace window for in-flight readers is one sync
+       cycle).  Appends run it too (ADVICE r9: an append+retention-drop-
+       only workload previously never reclaimed dropped files).
+    2. Stage the new rows into a dot-prefixed sibling dir.
     3. Move each staged partition's files INTO the live partition dirs —
        still invisible: manifest readers don't list directories.
-    4. Commit all partitions at once: one ``os.replace`` of the manifest.
+    4. Commit all partitions at once: one ``os.replace`` of the manifest,
+       then stamp the files it retired (replaced units' old files) so the
+       GC min-age gate counts from RETIREMENT, not from when they were
+       written (ADVICE r9).
 
     A crash anywhere before step 4 leaves the old manifest intact —
     readers keep the previous whole-table snapshot (no mixed old/new
@@ -854,14 +851,10 @@ def _overwrite_partitions_manifest(
     """
     import uuid
 
-    base = existing if existing is not None else _listing_as_manifest(path)
     os.makedirs(path, exist_ok=True)
     _gc_unmanifested(path, base, min_age_seconds=gc_min_age)
-    token = uuid.uuid4().hex[:8]
-    staging = os.path.join(path, f".staging-{token}")
-    _one_file_per_partition(with_pday(df, grain_seconds)).write.partitionBy(
-        PARTITION_COLUMN
-    ).mode("overwrite").parquet(staging)
+    staging = os.path.join(path, f".staging-{uuid.uuid4().hex[:8]}")
+    _write_partitioned(df, staging, grain_seconds, "overwrite")
     prefix = f"{PARTITION_COLUMN}="
     try:
         new_files = dict(base)
@@ -869,24 +862,88 @@ def _overwrite_partitions_manifest(
             if not name.startswith(prefix):
                 continue
             unit = int(name.split("=", 1)[1])
-            moved = _install_staged_partition(
-                os.path.join(staging, name), os.path.join(path, name)
-            )
-            new_files[unit] = [os.path.join(name, f) for f in moved]
+            moved = [
+                os.path.join(name, f)
+                for f in _install_staged_partition(
+                    os.path.join(staging, name), os.path.join(path, name)
+                )
+            ]
+            new_files[unit] = moved if replace else new_files.get(unit, []) + moved
         write_manifest(path, new_files)  # THE commit point
-        # stamp the files this commit just retired (replaced versions of
-        # the overwritten units) so the GC min-age gate counts from
-        # RETIREMENT, not from when they were written (ADVICE r9)
-        retired = [
-            f
-            for unit, fs in base.items()
-            if new_files.get(unit) != fs
-            for f in fs
-            if f not in set(new_files.get(unit, []))
-        ]
-        manifests.touch_retired(path, retired)
+        manifests.touch_retired(
+            path,
+            [
+                f
+                for unit, fs in base.items()
+                for f in set(fs) - set(new_files[unit])
+            ],
+        )
     finally:
         shutil.rmtree(staging, ignore_errors=True)
+
+
+def upsert(
+    rows: DataFrame,
+    path: str,
+    schema: T.StructType,
+    grain_seconds: int = SECONDS_PER_DAY,
+    gc_min_age: float = 0.0,
+) -> None:
+    """``insert or replace`` keyed on (path, timestamp) (reference
+    tsdb.py:388-410): the table's affected partitions are rewritten as
+    their kept rows plus ``rows``, and committed through the manifest
+    protocol.  A key present in both sides keeps the NEW row, so a
+    recomputed bucket replaces the stored one — for the histogram
+    table, ALL of its bins, since replacement is keyed on the bucket —
+    and a replayed streaming micro-batch rewrites identical values
+    instead of duplicating rows.
+
+    ``rows`` is cached for the affected-partition collect and the write,
+    and released in ``finally``: a failed commit leaves no pinned cache.
+    When the table is the tagged empty relation (:func:`read_table`; the
+    first sync or trigger) the anti-join is skipped outright — otherwise
+    ``rows`` would be shuffled by (path, timestamp) purely to anti-join a
+    provably empty relation (AQE submits both join-child stages together,
+    so the wasted exchange really runs).
+
+    ``gc_min_age`` is the deferred GC's mtime gate
+    (:func:`_gc_unmanifested`): the per-trigger streaming upsert passes a
+    grace window, the once-per-sync batch path none.  At most one writer
+    per table (``cli.exclusive_lock`` for sync, as in the reference's
+    inter-process sync lock); concurrent readers see the previous or the
+    new whole-table snapshot."""
+    rows = rows.cache()
+    try:
+        affected = [
+            r.d
+            for r in rows.select(
+                F.floor(F.col("timestamp") / grain_seconds).cast("long").alias("d")
+            )
+            .distinct()
+            .collect()
+        ]
+        if not affected:
+            return
+        existing = read_table(
+            rows.sparkSession, path, schema, with_partition_col=True
+        )
+        out = rows
+        if not getattr(existing, "_smalltsdb_empty_relation", False):
+            # re-read the replaced days through the PARTITION column:
+            # pday ∈ affected prunes whole directories at the file index,
+            # where a floor(timestamp/grain) filter (a data column) scans
+            # the entire table every upsert
+            out = (
+                existing.filter(F.col(PARTITION_COLUMN).isin(affected))
+                .drop(PARTITION_COLUMN)
+                .join(rows, ["path", "timestamp"], "left_anti")
+                .unionByName(rows)
+            )
+        overwrite_partitions(
+            out, path, grain_seconds, manifest=True, gc_min_age=gc_min_age
+        )
+    finally:
+        rows.unpersist()
 
 
 def partition_has_files(path: str, unit: int) -> bool:
@@ -1050,31 +1107,13 @@ def compact_partitions(
     if not fragmented:
         return []
     _assert_mutable(path, "compact")
-    read_schema = T.StructType(
-        list(schema.fields) + [T.StructField(PARTITION_COLUMN, T.LongType())]
+    # a manifest table's read resolves its LIVE files only — a listing
+    # read could resurrect rows a previous commit replaced
+    rows = (
+        read_table(spark, path, schema, with_partition_col=True)
+        .filter(F.col(PARTITION_COLUMN).isin(fragmented))
+        .drop(PARTITION_COLUMN)
     )
-    manifest = read_manifest(path)
-    if manifest is not None:
-        # read the fragmented partitions' LIVE files only — a listing
-        # read here could resurrect rows a previous commit replaced
-        files = [
-            os.path.join(path, rel)
-            for u in fragmented
-            for rel in manifest.get(u, [])
-        ]
-        rows = (
-            spark.read.schema(read_schema)
-            .option("basePath", path)
-            .parquet(*files)
-            .select(*[f.name for f in schema.fields])
-        )
-    else:
-        rows = (
-            spark.read.schema(read_schema)
-            .parquet(path)
-            .filter(F.col(PARTITION_COLUMN).isin(fragmented))
-            .select(*[f.name for f in schema.fields])
-        )
     overwrite_partitions(rows, path, grain_seconds)
     return fragmented
 

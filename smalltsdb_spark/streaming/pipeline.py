@@ -39,13 +39,19 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from smalltsdb_spark import storage
 from smalltsdb_spark.config import DEFAULT_TAIL, QUANTILES
-from smalltsdb_spark.schemas import PARTITION_COLUMN, SECONDS_PER_DAY
+from smalltsdb_spark.schemas import AGG_SCHEMA, PARTITION_COLUMN, SECONDS_PER_DAY
 from smalltsdb_spark.sources.graphite import parse_lines_df
 
 #: minimum age (mtime) before the per-trigger partials upsert physically
 #: reclaims a manifest-retired file — the in-flight-reader grace window
-#: for the high-frequency commit path (see _upsert_agg_batch)
+#: for the high-frequency commit path.  The upsert runs EVERY trigger
+#: (default 10 s), so an ungated GC would delete a replaced file one
+#: trigger after retirement — far short of the one-sync-cycle grace the
+#: batch path gives in-flight readers (ADVICE r8).  The gate keeps
+#: retired files ≥5 min; debris is bounded (≈ grace/interval
+#: generations of the touched partitions' files).
 STREAM_GC_MIN_AGE = 300.0
 
 
@@ -163,71 +169,6 @@ def streaming_aggregate(
     )
 
 
-def _upsert_agg_batch(batch: DataFrame, path: str, grain_seconds: int) -> None:
-    """foreachBatch body for the partials sink: ``insert or replace``
-    keyed (path, timestamp) into a manifest-committed parquet table —
-    the same upsert shape as TablesTSDB._upsert, so a replayed
-    micro-batch (checkpoint recovery) re-writes identical values instead
-    of duplicating rows: idempotence is what turns foreachBatch's
-    at-least-once into exactly-once table contents."""
-    from smalltsdb_spark import storage
-    from smalltsdb_spark.schemas import AGG_SCHEMA
-
-    batch = batch.cache()
-    try:
-        affected = [
-            r.d
-            for r in batch.select(
-                F.floor(F.col("timestamp") / grain_seconds)
-                .cast("long")
-                .alias("d")
-            )
-            .distinct()
-            .collect()
-        ]
-        if not affected:
-            return
-        # read the replaced days through the PARTITION column (prunes at
-        # the file index; a floor(timestamp/grain) filter on the data
-        # column scans the whole table), and skip the anti-join outright
-        # on the first trigger's empty table — the same upsert shape as
-        # TablesTSDB._upsert_into
-        existing = storage.read_table(
-            batch.sparkSession, path, AGG_SCHEMA, with_partition_col=True
-        )
-        if getattr(existing, "_smalltsdb_empty_relation", False):
-            storage.overwrite_partitions(
-                batch,
-                path,
-                grain_seconds,
-                manifest=True,
-                gc_min_age=STREAM_GC_MIN_AGE,
-            )
-            return
-        kept = (
-            existing.filter(
-                F.col(storage.PARTITION_COLUMN).isin(affected)
-            )
-            .drop(storage.PARTITION_COLUMN)
-            .join(batch, ["path", "timestamp"], "left_anti")
-        )
-        # gc_min_age: this commit path runs EVERY trigger (default 10 s),
-        # so an ungated GC would delete a replaced file one trigger after
-        # retirement — far short of the one-sync-cycle grace the batch
-        # path gives in-flight readers (ADVICE r8).  The mtime gate keeps
-        # retired files ≥5 min; debris is bounded (≈ grace/interval
-        # generations of the touched partitions' files).
-        storage.overwrite_partitions(
-            kept.unionByName(batch),
-            path,
-            grain_seconds,
-            manifest=True,
-            gc_min_age=STREAM_GC_MIN_AGE,
-        )
-    finally:
-        batch.unpersist()
-
-
 def start_rollup_partials(
     incoming_stream: DataFrame,
     partial_path: str,
@@ -249,8 +190,11 @@ def start_rollup_partials(
     can read for the freshest half-built bucket.
 
     Sink shape: update mode cannot use the append-only file sink, so each
-    micro-batch upserts (replace-by-key) into a manifest-committed
-    parquet table via foreachBatch — readers get whole-table snapshot
+    micro-batch upserts (replace-by-key, :func:`storage.upsert`) into a
+    manifest-committed parquet table via foreachBatch — a replayed
+    micro-batch (checkpoint recovery) re-writes identical values instead
+    of duplicating rows, which turns foreachBatch's at-least-once into
+    exactly-once table contents.  Readers get whole-table snapshot
     isolation per query, and the table CONVERGES to the append-mode
     (final) table as the watermark passes each bucket: late rows beyond
     the tail are dropped by the same watermark, so a bucket's last
@@ -262,7 +206,13 @@ def start_rollup_partials(
     writer = (
         agg.writeStream.outputMode("update")
         .foreachBatch(
-            lambda batch, _id: _upsert_agg_batch(batch, partial_path, grain_seconds)
+            lambda batch, _id: storage.upsert(
+                batch,
+                partial_path,
+                AGG_SCHEMA,
+                grain_seconds,
+                gc_min_age=STREAM_GC_MIN_AGE,
+            )
         )
         .option("checkpointLocation", checkpoint)
     )
@@ -354,13 +304,11 @@ def start_histogram_rollup(
     the log exists — one table, one maintenance flavor
     (storage._assert_mutable); a retired stream's table converts back
     with ``storage.decommission_streaming_sink``."""
-    from smalltsdb_spark import storage as _storage
-
     # write-or-verify the geometry pin BEFORE the query starts: the
     # rows this stream appends are meaningless without it, and a
     # mismatched pin (another maintainer used a different geometry)
     # must fail here, not mis-bin bounds later
-    _storage.pin_histogram_geometry(
+    storage.pin_histogram_geometry(
         hist_path,
         {
             "bin_width": float(bin_width),

@@ -75,7 +75,6 @@ class BaseTSDB:
         exact_percentiles: bool = True,
         retention: dict[str, float] | None = None,
         partition_grain: str = "day",
-        commit_protocol: str = "manifest",
         histograms: bool = False,
         hist_bin_width: float = 50.0,
         hist_clamp_bin: int = 19,
@@ -120,23 +119,6 @@ class BaseTSDB:
             )
         self.partition_grain = partition_grain
         self.grain_seconds = PARTITION_GRAINS[partition_grain]
-        # commit protocol for PERIOD-table mutations (r8 verdict item):
-        # 'manifest' (default) = whole-table transactional commit, one
-        # os.replace per sync per table — a sync killed mid-write leaves
-        # readers on the old consistent snapshot (the reference gets
-        # this from SQLite's transaction; storage.py module docstring
-        # has the protocol).  'dirswap' = legacy per-partition swap for
-        # stores that must keep plain directory-listing reads; a table
-        # that already HAS a manifest stays manifest-committed either
-        # way (mixing protocols would hide dirswap writes from manifest
-        # readers).  Incoming always stays dirswap/append: its writers
-        # (daemon flushes, inserts) don't coordinate through a manifest.
-        if commit_protocol not in ("manifest", "dirswap"):
-            raise ValueError(
-                f"unknown commit_protocol {commit_protocol!r}; "
-                "expected 'manifest' or 'dirswap'"
-            )
-        self.commit_protocol = commit_protocol
         # persisted fine value-histogram table (r11): sync maintains a
         # (path, fine bucket, bin, n) relation at ``hist_fine_seconds``
         # buckets so get_metric_bounds_df serves provable coarse-
@@ -793,75 +775,18 @@ class TablesTSDB(BaseTSDB):
         name = next(n for n, s in self.periods if s == seconds)
         return self.period_table(name)
 
-    def _upsert(self, new_rows: DataFrame, period: str) -> None:
-        """``insert or replace`` keyed on (path, timestamp) (tsdb.py:388-410)
-        by replacing the affected day-partitions.
-
-        Concurrency contract: at most one syncer at a time — enforced by
-        ``cli.exclusive_lock`` (flock), mirroring the reference's
-        inter-process sync lock.  Readers may run concurrently: the
-        staging + atomic-swap writer (storage.overwrite_partitions) means
-        they see each partition wholly-old or wholly-new, never partially
-        rewritten."""
-        self._upsert_into(new_rows, self._period_path(period), self.period_table(period))
-
-    def _upsert_into(
-        self, new_rows: DataFrame, path: str, existing: DataFrame
+    def _upsert(
+        self, new_rows: DataFrame, path: str, schema: T.StructType
     ) -> None:
-        """The upsert body, parameterized on the target table — shared by
-        the period tables and the persisted histogram table (whose bucket
-        replacement is also keyed (path, timestamp): a recomputed bucket
-        replaces ALL its bins, which the bucket-keyed anti-join gives for
-        free)."""
-        grain = self.grain_seconds
-        new_rows = new_rows.cache()
-        affected = [
-            r.d
-            for r in new_rows.select(
-                F.floor(F.col("timestamp") / grain).cast("long").alias("d")
-            )
-            .distinct()
-            .collect()
-        ]
-        if not affected:
-            new_rows.unpersist()
-            return
-        if getattr(existing, "_smalltsdb_empty_relation", False):
-            # fresh/empty table (the first-sync case): there is nothing
-            # to keep, so skip the anti-join — otherwise new_rows is
-            # shuffled by (path, timestamp) purely to anti-join a
-            # provably empty relation (AQE submits both join-child
-            # stages together, so the wasted exchange really runs)
-            out = new_rows
-        else:
-            # re-read the replaced days through the PARTITION column:
-            # pday ∈ affected prunes whole directories at the file
-            # index, where the old floor(timestamp/grain) filter (a
-            # data column) scanned the entire table every upsert
-            kept = (
-                storage.read_table(
-                    self.spark,
-                    path,
-                    T.StructType(existing.schema.fields),
-                    with_partition_col=True,
-                )
-                .filter(F.col(storage.PARTITION_COLUMN).isin(affected))
-                .drop(storage.PARTITION_COLUMN)
-                .join(new_rows, ["path", "timestamp"], "left_anti")
-            )
-            out = kept.unionByName(new_rows)
+        """``insert or replace`` of a period or histogram table's new
+        buckets — :func:`storage.upsert`, after pinning the grain the
+        write lays its partitions out by."""
         self._pin_grain()
-        storage.overwrite_partitions(
-            out,
-            path,
-            grain,
-            manifest=(self.commit_protocol == "manifest") or None,
-        )
-        new_rows.unpersist()
+        storage.upsert(new_rows, path, schema, self.grain_seconds)
 
     def compact(self, max_files_per_partition: int = 1) -> dict[str, list[int]]:
         """Incoming plus every period table.  Sync's own upsert writes one
-        file per partition already (storage._one_file_per_partition); the
+        file per partition already (storage._write_partitioned); the
         fragmenting writers for period tables are append-mode STREAMING
         rollups (streaming/pipeline.start_rollup) sharing the store."""
         out = super().compact(max_files_per_partition)
@@ -883,7 +808,7 @@ class TablesTSDB(BaseTSDB):
             )
         return out
 
-    def sync(self, concurrent: bool = True, timeout: float | None = None) -> None:
+    def sync(self, timeout: float | None = None) -> None:
         """Advance finalized aggregates for every period, then apply
         retention to incoming (reference tsdb.py:305-420).
 
@@ -898,19 +823,20 @@ class TablesTSDB(BaseTSDB):
         from the surviving high-water marks.
 
         The per-period jobs are independent (SURVEY.md §3.2 — the
-        reference's sequential loop is a single-core artifact), so by
-        default they are submitted as concurrent Spark jobs and the
-        scheduler interleaves their stages across the cluster; incoming is
+        reference's sequential loop is a single-core artifact), so they
+        are submitted as concurrent Spark jobs, one worker thread per
+        period (plus one for the histogram), and the scheduler
+        interleaves their stages across the cluster; incoming is
         persisted for the duration so the raw data is materialized once,
         not once per period (MEMORY_AND_DISK — spills, never OOMs).
-        Results are identical to ``concurrent=False``: no period reads
+        Results do not depend on the interleaving: no period reads
         another's output, and retention runs strictly after all periods.
 
         Every phase is timed; with ``emit_metrics=True`` the timings are
         re-ingested as ordinary datapoints (T6, reference tsdb.py:310-337)
-        under ``[<prefix>.]sync.<period>.<phase>.<clock>`` names — the
-        concurrent path reproduces the same labels via per-thread timers
-        (the shared Timer's prefix stack is not thread-safe).
+        under ``[<prefix>.]sync.<period>.<phase>.<clock>`` names, built
+        by per-thread timers (the shared Timer's prefix stack is not
+        thread-safe).
         """
         from pyspark import InheritableThread, StorageLevel
 
@@ -925,7 +851,7 @@ class TablesTSDB(BaseTSDB):
                     exact=self.exact_percentiles,
                 )
                 with timer("upsert_query"):
-                    self._upsert(new_rows, name)
+                    self._upsert(new_rows, self._period_path(name), AGG_SCHEMA)
                 if name in self.retention:
                     storage.drop_partitions_below(
                         self._period_path(name),
@@ -956,31 +882,27 @@ class TablesTSDB(BaseTSDB):
                 existing = storage.read_table(
                     self.spark, hist_path, HIST_SCHEMA
                 )
-                # the empty-relation tag proves emptiness without a
-                # Spark job (fresh stores run this probe every sync)
-                _hist_empty = getattr(
-                    existing, "_smalltsdb_empty_relation", False
-                ) or not existing.limit(1).count()
-                _fine_tbl = (
-                    self.period_table(fine_name) if _hist_empty else None
-                )
-                if _hist_empty and not getattr(
-                    _fine_tbl, "_smalltsdb_empty_relation", False
-                ) and _fine_tbl.limit(1).count():
-                    # histograms enabled on a store with pre-existing
-                    # history: the histogram HWM starts from scratch,
-                    # but incoming retention may already have dropped
-                    # the raw rows behind old buckets — those buckets
-                    # will be silently ABSENT from bounds reads
-                    # (ADVICE r11: rows missing, not wrong)
-                    warnings.warn(
-                        "histogram table is empty but period tables "
-                        "have history: buckets whose raw rows predate "
-                        "retained incoming will be missing from bounds "
-                        "reads — enable histograms=True at store "
-                        "creation to avoid the gap",
-                        stacklevel=2,
-                    )
+                # the empty-relation tag decides emptiness without a
+                # Spark job (an upsert never commits an empty table)
+                if getattr(existing, "_smalltsdb_empty_relation", False):
+                    fine_tbl = self.period_table(fine_name)
+                    if not getattr(
+                        fine_tbl, "_smalltsdb_empty_relation", False
+                    ) and fine_tbl.limit(1).count():
+                        # histograms enabled on a store with pre-existing
+                        # history: the histogram HWM starts from scratch,
+                        # but incoming retention may already have dropped
+                        # the raw rows behind old buckets — those buckets
+                        # will be silently ABSENT from bounds reads
+                        # (ADVICE r11: rows missing, not wrong)
+                        warnings.warn(
+                            "histogram table is empty but period tables "
+                            "have history: buckets whose raw rows predate "
+                            "retained incoming will be missing from bounds "
+                            "reads — enable histograms=True at store "
+                            "creation to avoid the gap",
+                            stacklevel=2,
+                        )
                 new_rows = value_histogram(
                     self._eligible(
                         incoming, fine_seconds, now, hwm_from=existing
@@ -990,7 +912,7 @@ class TablesTSDB(BaseTSDB):
                     clamp_bin=self.hist_clamp_bin,
                 )
                 with timer("upsert_query"):
-                    self._upsert_into(new_rows, hist_path, existing)
+                    self._upsert(new_rows, hist_path, HIST_SCHEMA)
                 if fine_name in self.retention:
                     storage.drop_partitions_below(
                         hist_path,
@@ -1000,52 +922,46 @@ class TablesTSDB(BaseTSDB):
 
         try:
             with self.timer("sync", "all") as timings, self.query_timeout(timeout):
-                if concurrent:
-                    stack = list(self.timer._prefix_stack)  # includes 'sync'
-                    jobs = [
-                        (run_period, (name, seconds))
-                        for name, seconds in self.periods
-                    ]
-                    if self.histograms:
-                        jobs.append((run_hist, ()))
-                    subs = []
-                    for _ in jobs:
-                        t = Timer(clocks=self.timer.clocks)
-                        t._prefix_stack = list(stack)
-                        subs.append(t)
-                    # worker exceptions must PROPAGATE (r12): a plain
-                    # thread swallows them, so a failed period upsert
-                    # would leave that period silently stale and a
-                    # timed-out sync would return success; the first
-                    # failure re-raises after all workers join (inside
-                    # query_timeout, so a cancellation still surfaces
-                    # as TimeoutError), and retention is skipped — raw
-                    # data is never deleted under a failed aggregate
-                    errors: list[BaseException] = []
+                stack = list(self.timer._prefix_stack)  # includes 'sync'
+                jobs = [
+                    (run_period, (name, seconds))
+                    for name, seconds in self.periods
+                ]
+                if self.histograms:
+                    jobs.append((run_hist, ()))
+                subs = []
+                for _ in jobs:
+                    t = Timer(clocks=self.timer.clocks)
+                    t._prefix_stack = list(stack)
+                    subs.append(t)
+                # worker exceptions must PROPAGATE (r12): a plain thread
+                # swallows them, so a failed period upsert would leave
+                # that period silently stale and a timed-out sync would
+                # return success; the first failure re-raises after all
+                # workers join (inside query_timeout, so a cancellation
+                # still surfaces as TimeoutError), and retention is
+                # skipped — raw data is never deleted under a failed
+                # aggregate
+                errors: list[BaseException] = []
 
-                    def guarded(fn, args, t) -> None:
-                        try:
-                            fn(*args, t)
-                        except BaseException as e:  # noqa: BLE001
-                            errors.append(e)
+                def guarded(fn, args, t) -> None:
+                    try:
+                        fn(*args, t)
+                    except BaseException as e:  # noqa: BLE001
+                        errors.append(e)
 
-                    threads = [
-                        InheritableThread(target=guarded, args=(fn, args, t))
-                        for (fn, args), t in zip(jobs, subs)
-                    ]
-                    for th in threads:
-                        th.start()
-                    for th in threads:
-                        th.join()
-                    for t in subs:
-                        timings.extend(t.collected)
-                    if errors:
-                        raise errors[0]
-                else:
-                    for name, seconds in self.periods:
-                        run_period(name, seconds, self.timer)
-                    if self.histograms:
-                        run_hist(self.timer)
+                threads = [
+                    InheritableThread(target=guarded, args=(fn, args, t))
+                    for (fn, args), t in zip(jobs, subs)
+                ]
+                for th in threads:
+                    th.start()
+                for th in threads:
+                    th.join()
+                for t in subs:
+                    timings.extend(t.collected)
+                if errors:
+                    raise errors[0]
                 with self.timer("delete_incoming_query"):
                     self._retention(now)
         finally:

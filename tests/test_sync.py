@@ -346,8 +346,9 @@ def test_sync_killed_mid_write_keeps_readers_on_old_snapshot(
 ):
     """The crash-injection test of the r8 verdict: kill the sync between
     partition installs -> readers see the OLD whole-table snapshot (no
-    mixed old/new partitions); the next sync garbage-collects the debris
-    and completes with exactly the rows a never-crashed store has."""
+    mixed old/new partitions) and the failed sync leaves no cached RDD
+    behind; the next sync garbage-collects the debris and completes with
+    exactly the rows a never-crashed store has."""
     from smalltsdb_spark import storage
 
     day = 86400.0
@@ -371,8 +372,13 @@ def test_sync_killed_mid_write_keeps_readers_on_old_snapshot(
     real_install = storage._install_staged_partition
     calls = {"n": 0}
     installed_during_crash = []
+    tensecond = os.path.join(tsdb_dir, "tensecond") + os.sep
 
     def exploding_install(staged_dir, dest_dir):
+        # only the tensecond table's installs count and explode, so the
+        # periods' concurrent workers cannot change which install fails
+        if not dest_dir.startswith(tensecond):
+            return real_install(staged_dir, dest_dir)
         calls["n"] += 1
         if calls["n"] >= 2:
             raise OSError("injected crash between partition installs")
@@ -380,13 +386,16 @@ def test_sync_killed_mid_write_keeps_readers_on_old_snapshot(
         installed_during_crash.extend(os.path.join(dest_dir, f) for f in moved)
         return moved
 
+    jsc = spark.sparkContext._jsc
+    persisted_before = set(jsc.getPersistentRDDs().keys())
     monkeypatch.setattr(storage, "_install_staged_partition", exploding_install)
-    with pytest.raises(Exception):
-        # concurrent=False so exactly one period's upsert hits the bomb
-        # deterministically; the tensecond table is synced first
-        db.sync(concurrent=False)
+    with pytest.raises(OSError, match="injected crash"):
+        db.sync()
     monkeypatch.undo()
 
+    # the failed upsert released its cache (the session is shared across
+    # tests, so compare with the ids persisted before, not with zero)
+    assert set(jsc.getPersistentRDDs().keys()) <= persisted_before
     assert calls["n"] >= 2, "the crash fired between partition installs"
     assert installed_during_crash, "some new files were already on disk"
     # READERS: the old manifest still resolves — exactly the v1 snapshot,
@@ -448,47 +457,32 @@ def test_manifest_readers_ignore_staged_and_unmanifested_files(spark, tsdb_dir):
     }
 
 
-def test_dirswap_protocol_opt_out(spark, tsdb_dir):
-    from smalltsdb_spark import storage
-
-    clock = {"now": 86400.0}
-    db = TablesTSDB(
-        spark, tsdb_dir, now=lambda: clock["now"], commit_protocol="dirswap"
-    )
-    db.insert([("a", 5.0, 1.0), ("b", 15.0, 2.0)])
-    db.sync()
-    assert len(_all_rows(db)) == 2
-    assert not os.path.isfile(
-        os.path.join(tsdb_dir, "tensecond", storage.MANIFEST)
-    )
-    with pytest.raises(ValueError, match="commit_protocol"):
-        TablesTSDB(spark, tsdb_dir, commit_protocol="nope")
-
-
 def test_legacy_dirswap_store_upgrades_to_manifest_seamlessly(spark, tsdb_dir):
-    """A pre-r8 store (no manifest) opened with the default protocol
-    adopts its directory listing as the first manifest on the next sync;
-    nothing is lost, later reads resolve the manifest."""
+    """A listing-only period table (a pre-r8 store, or one handed back by
+    decommission) adopts its directory listing as the first manifest on
+    the next sync; nothing is lost, later reads resolve the manifest."""
     from smalltsdb_spark import storage
+    from smalltsdb_spark.schemas import AGG_SCHEMA
 
     day = 86400.0
     clock = {"now": day}
-    legacy = TablesTSDB(
-        spark, tsdb_dir, now=lambda: clock["now"], commit_protocol="dirswap"
+    table = os.path.join(tsdb_dir, "tensecond")
+    storage.append(
+        spark.createDataFrame(
+            [("a", 0.0, 1.0, 1.0, 1.0, 1.0, 1.0, 1.0, 1.0, 1.0)], AGG_SCHEMA
+        ),
+        table,
     )
-    legacy.insert([("a", 5.0, 1.0)])
-    legacy.sync()
-    v1 = _all_rows(legacy)
-
+    assert storage.read_manifest(table) is None
     db = TablesTSDB(spark, tsdb_dir, now=lambda: clock["now"])
-    assert _all_rows(db) == v1  # readable before any manifest exists
+    v1 = _all_rows(db)
+    assert v1 == [("a", 0.0, 1.0, 1.0)]  # readable before any manifest exists
     db.insert([("a", day + 5.0, 2.0)])
     clock["now"] = 2 * day
     db.sync()
-    table = os.path.join(tsdb_dir, "tensecond")
     assert os.path.isfile(os.path.join(table, storage.MANIFEST))
     rows = _all_rows(db)
-    assert len(rows) == 2  # old day adopted + new day committed
+    assert rows[0] == v1[0] and len(rows) == 2  # old day adopted + new day
     manifest = storage.read_manifest(table)
     assert _on_disk_parquet(table) >= {
         f for fs in manifest.values() for f in fs
@@ -952,7 +946,7 @@ def test_concurrent_sync_propagates_worker_failure(
 
     monkeypatch.setattr(storage, "overwrite_partitions", exploding)
     with pytest.raises(OSError, match="injected worker failure"):
-        db.sync()  # concurrent=True default
+        db.sync()
     monkeypatch.setattr(storage, "overwrite_partitions", real)
     # the raw row survived (retention skipped) and a retry completes
     assert db.incoming().count() == 1
