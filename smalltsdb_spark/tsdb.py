@@ -20,7 +20,8 @@ with one set-based plan per period: a broadcast join of incoming against
 the per-path high-water marks, a single windowed aggregation, and a
 dynamic-partition-overwrite upsert.  Same finality semantics (the
 ``intervals()`` kernel), executed as 6 independent distributed jobs instead
-of ``paths × periods`` serial SQLite queries.
+of ``paths × periods`` serial SQLite queries — for the periods that have
+something to finalize.
 """
 
 from __future__ import annotations
@@ -30,6 +31,7 @@ import os
 import threading
 import time
 from functools import reduce
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -626,8 +628,18 @@ class ViewTSDB(BaseTSDB):
         """No-op (reference tsdb.py:230-231)."""
 
 
+class _Synced(NamedTuple):
+    """What a successful :meth:`TablesTSDB.sync` proved, for the next one."""
+
+    covered: frozenset  # incoming file stats its periods were computed over
+    tables: dict  # table -> (finality key, table state)
+    cutoff: float  # incoming retention cutoff
+
+
 class TablesTSDB(BaseTSDB):
     """Materialized aggregates advanced incrementally (tsdb.py:271-420)."""
+
+    _synced: _Synced | None = None
 
     def period_table(self, period: str) -> DataFrame:
         validate_period(period, self.period_seconds)
@@ -777,12 +789,13 @@ class TablesTSDB(BaseTSDB):
 
     def _upsert(
         self, new_rows: DataFrame, path: str, schema: T.StructType
-    ) -> None:
+    ) -> dict | None:
         """``insert or replace`` of a period or histogram table's new
         buckets — :func:`storage.upsert`, after pinning the grain the
-        write lays its partitions out by."""
+        write lays its partitions out by.  Returns the published state,
+        or None when there was nothing to commit."""
         self._pin_grain()
-        storage.upsert(new_rows, path, schema, self.grain_seconds)
+        return storage.upsert(new_rows, path, schema, self.grain_seconds)
 
     def compact(self, max_files_per_partition: int = 1) -> dict[str, list[int]]:
         """Incoming plus every period table.  Sync's own upsert writes one
@@ -832,31 +845,83 @@ class TablesTSDB(BaseTSDB):
         Results do not depend on the interleaving: no period reads
         another's output, and retention runs strictly after all periods.
 
+        **Idle periods are skipped on the driver.**  Each successful sync
+        leaves a record on the handle (in memory only — a fresh handle's
+        first sync is always a full one): the stat snapshot of incoming
+        its periods were computed over (plus the files its own retention
+        rewrite installed), each table's finality key and state, and the
+        retention cutoff.  The next sync skips a period (or the
+        histogram) iff
+
+        1. its ``final_end`` — and the partition its own retention drop
+           cuts at, when it has one — is unchanged;
+        2. every file now under incoming is in the recorded snapshot
+           (removals cannot make rows eligible);
+        3. the table's state (:func:`storage.table_state`: the manifest
+           document, else a stat listing) is the one the period computed
+           its high-water marks against or published, recorded before
+           its own retention drop — a drop can lower a high-water mark,
+           so the next sync re-runs that period.
+
+        A full run of such a period would compute an eligible set that is
+        already upserted and commit nothing, so the store ends
+        byte-identical either way.  Retention is skipped iff condition 2
+        holds and the cutoff is unchanged.  Incoming is read and persisted
+        only when some period runs, so a sync with nothing to finalize
+        submits no Spark job.  A sync that raises records nothing.
+
         Every phase is timed; with ``emit_metrics=True`` the timings are
         re-ingested as ordinary datapoints (T6, reference tsdb.py:310-337)
         under ``[<prefix>.]sync.<period>.<phase>.<clock>`` names, built
         by per-thread timers (the shared Timer's prefix stack is not
-        thread-safe).
+        thread-safe).  The re-ingested file is new to incoming, so the
+        following sync runs.
         """
         from pyspark import InheritableThread, StorageLevel
 
         now = self._now()
-        incoming = self.incoming().persist(StorageLevel.MEMORY_AND_DISK)
+        cutoff = now - self.tail - max(s for _, s in self.periods)
+        # taken before self.incoming() lists the files its relation reads
+        seen = storage.file_stats(self.incoming_path)
+        last = self._synced
+        quiet = last is not None and seen <= last.covered
+        fine_name, _ = min(self.periods, key=lambda p: p[1])
+        hist_path = os.path.join(self.path, "histogram")
+        keys = {
+            name: self._finality_key(seconds, name, now)
+            for name, seconds in self.periods
+        }
+        keys["histogram"] = self._finality_key(
+            self.hist_fine_seconds, fine_name, now
+        )
+        # (finality key, table state) of every table that runs; a worker
+        # records the state before its own retention drop
+        ran: dict[str, tuple] = {}
+
+        def idle(table: str, path: str) -> bool:
+            return quiet and last.tables.get(table) == (
+                keys[table],
+                storage.table_state(path),
+            )
 
         def run_period(name: str, seconds: int, timer: Timer) -> None:
+            path = self._period_path(name)
             with timer(name, "all"):
+                state = storage.table_state(path)
                 new_rows = aggregate(
                     self._eligible(incoming, seconds, now),
                     seconds,
                     exact=self.exact_percentiles,
                 )
                 with timer("upsert_query"):
-                    self._upsert(new_rows, self._period_path(name), AGG_SCHEMA)
+                    published = self._upsert(new_rows, path, AGG_SCHEMA)
+                ran[name] = (
+                    keys[name],
+                    state if published is None else published,
+                )
                 if name in self.retention:
                     storage.drop_partitions_below(
-                        self._period_path(name),
-                        now - self.retention[name],
-                        self.grain_seconds,
+                        path, now - self.retention[name], self.grain_seconds
                     )
 
         def run_hist(timer: Timer) -> None:
@@ -874,11 +939,10 @@ class TablesTSDB(BaseTSDB):
 
             from smalltsdb_spark.operators.aggregate import value_histogram
 
-            fine_name, _ = min(self.periods, key=lambda p: p[1])
             fine_seconds = self.hist_fine_seconds
-            hist_path = os.path.join(self.path, "histogram")
             with timer("histogram", "all"):
                 self._pin_hist_geometry()
+                state = storage.table_state(hist_path)
                 existing = storage.read_table(
                     self.spark, hist_path, HIST_SCHEMA
                 )
@@ -912,7 +976,11 @@ class TablesTSDB(BaseTSDB):
                     clamp_bin=self.hist_clamp_bin,
                 )
                 with timer("upsert_query"):
-                    self._upsert(new_rows, hist_path, HIST_SCHEMA)
+                    published = self._upsert(new_rows, hist_path, HIST_SCHEMA)
+                ran["histogram"] = (
+                    keys["histogram"],
+                    state if published is None else published,
+                )
                 if fine_name in self.retention:
                     storage.drop_partitions_below(
                         hist_path,
@@ -920,15 +988,19 @@ class TablesTSDB(BaseTSDB):
                         self.grain_seconds,
                     )
 
+        jobs = [
+            (run_period, (name, seconds))
+            for name, seconds in self.periods
+            if not idle(name, self._period_path(name))
+        ]
+        if self.histograms and not idle("histogram", hist_path):
+            jobs.append((run_hist, ()))
+        incoming = (
+            self.incoming().persist(StorageLevel.MEMORY_AND_DISK) if jobs else None
+        )
         try:
             with self.timer("sync", "all") as timings, self.query_timeout(timeout):
                 stack = list(self.timer._prefix_stack)  # includes 'sync'
-                jobs = [
-                    (run_period, (name, seconds))
-                    for name, seconds in self.periods
-                ]
-                if self.histograms:
-                    jobs.append((run_hist, ()))
                 subs = []
                 for _ in jobs:
                     t = Timer(clocks=self.timer.clocks)
@@ -963,17 +1035,46 @@ class TablesTSDB(BaseTSDB):
                 if errors:
                     raise errors[0]
                 with self.timer("delete_incoming_query"):
-                    self._retention(now)
+                    installed = (
+                        frozenset()
+                        if quiet and last.cutoff == cutoff
+                        else self._retention(cutoff, seen)
+                    )
+                self._synced = _Synced(
+                    covered=seen | installed,
+                    tables={**(last.tables if last else {}), **ran},
+                    cutoff=cutoff,
+                )
         finally:
-            incoming.unpersist()
+            if incoming is not None:
+                incoming.unpersist()
         if self.emit_metrics:
             self.insert(timings)
 
-    def _retention(self, now: float) -> None:
-        """``delete from incoming where timestamp < now - tail - max_period``
-        (tsdb.py:412-420): whole-partition drops below the cutoff's
-        partition (day or hour grain), plus a rewrite of the boundary
-        partition.
+    def _finality_key(self, seconds: int, retention_period: str, now: float):
+        """What a table's sync depends on from the clock: its finality
+        cut and, when ``retention_period`` has a retention, the partition
+        its drop cuts at (:func:`storage.drop_partitions_below`)."""
+        drop_unit = (
+            int((now - self.retention[retention_period]) // self.grain_seconds)
+            if retention_period in self.retention
+            else None
+        )
+        return float(final_end(seconds, self.tail, now)), drop_unit
+
+    def _retention(self, cutoff: float, seen: frozenset) -> frozenset:
+        """``delete from incoming where timestamp < cutoff`` with
+        ``cutoff = now - tail - max_period`` (tsdb.py:412-420):
+        whole-partition drops below the cutoff's partition (day or hour
+        grain), plus a rewrite of the boundary partition, which one
+        aggregation probes for rows on both sides of the cutoff (a
+        single scan of the partition).
+
+        Returns the :func:`storage.file_stats` records of the files the
+        rewrite installed, for sync's record of what its periods have
+        covered.  A rewrite whose boundary partition held a file outside
+        ``seen`` (an append that landed after sync's snapshot) returns
+        none of them, so the next sync runs.
 
         Hybrid-flow note (streaming ingest + batch sync): while incoming
         is tracked by the ingest stream's file-sink log, retention stays
@@ -984,8 +1085,6 @@ class TablesTSDB(BaseTSDB):
         log-aware delete; a table format's row-level delete is the
         at-scale answer."""
         grain = self.grain_seconds
-        max_period = max(s for _, s in self.periods)
-        cutoff = now - self.tail - max_period
         storage.drop_partitions_below(self.incoming_path, cutoff, grain)
         boundary_unit = int(cutoff // grain)
         # pure-Python existence probe first: most syncs have NO boundary
@@ -993,7 +1092,7 @@ class TablesTSDB(BaseTSDB):
         # was just dropped whole), and absence proves there are no rows
         # to delete — skip the boundary-scan Spark job outright
         if not storage.partition_has_files(self.incoming_path, boundary_unit):
-            return
+            return frozenset()
         # read the boundary slice through the PARTITION column: pday ==
         # boundary_unit prunes to ONE partition at the file index — the
         # old floor(timestamp/grain) filter (a data column) scanned the
@@ -1008,15 +1107,26 @@ class TablesTSDB(BaseTSDB):
             .filter(F.col(storage.PARTITION_COLUMN) == boundary_unit)
             .drop(storage.PARTITION_COLUMN)
         )
-        doomed = boundary.filter(F.col("timestamp") < cutoff)
-        if doomed.limit(1).count():
-            survivors = boundary.filter(F.col("timestamp") >= cutoff)
-            if survivors.limit(1).count():
-                storage.overwrite_partitions(survivors, self.incoming_path, grain)
-            else:
-                storage.drop_partitions_below(
-                    self.incoming_path, (boundary_unit + 1) * grain, grain
-                )
+        # listed after ``boundary`` lists its files, so every file the
+        # rewrite reads is in ``listed`` (or was removed meanwhile)
+        listed = storage.file_stats(
+            self.incoming_path, f"{storage.PARTITION_COLUMN}={boundary_unit}"
+        )
+        ts = F.col("timestamp")
+        doomed, survivors = boundary.agg(
+            F.max(ts < cutoff), F.max(ts >= cutoff)
+        ).first()
+        if not doomed:
+            return frozenset()
+        if not survivors:
+            storage.drop_partitions_below(
+                self.incoming_path, (boundary_unit + 1) * grain, grain
+            )
+            return frozenset()
+        installed = storage.overwrite_partitions(
+            boundary.filter(ts >= cutoff), self.incoming_path, grain
+        )
+        return installed if listed <= seen else frozenset()
 
 
 class TwoDatabasesTSDB(TablesTSDB):

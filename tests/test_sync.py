@@ -342,13 +342,14 @@ def _on_disk_parquet(path):
 
 
 def test_sync_killed_mid_write_keeps_readers_on_old_snapshot(
-    spark, tsdb_dir, monkeypatch
+    spark, tsdb_dir, monkeypatch, count_jobs
 ):
     """The crash-injection test of the r8 verdict: kill the sync between
     partition installs -> readers see the OLD whole-table snapshot (no
     mixed old/new partitions) and the failed sync leaves no cached RDD
-    behind; the next sync garbage-collects the debris and completes with
-    exactly the rows a never-crashed store has."""
+    and no sync record behind; the next sync runs, garbage-collects the
+    debris and completes with exactly the rows a never-crashed store
+    has."""
     from smalltsdb_spark import storage
 
     day = 86400.0
@@ -388,10 +389,12 @@ def test_sync_killed_mid_write_keeps_readers_on_old_snapshot(
 
     jsc = spark.sparkContext._jsc
     persisted_before = set(jsc.getPersistentRDDs().keys())
+    synced = db._synced
     monkeypatch.setattr(storage, "_install_staged_partition", exploding_install)
     with pytest.raises(OSError, match="injected crash"):
         db.sync()
     monkeypatch.undo()
+    assert db._synced is synced, "a failed sync records nothing"
 
     # the failed upsert released its cache (the session is shared across
     # tests, so compare with the ids persisted before, not with zero)
@@ -404,9 +407,9 @@ def test_sync_killed_mid_write_keeps_readers_on_old_snapshot(
     fresh_reader = TablesTSDB(spark, tsdb_dir, now=lambda: clock["now"])
     assert _all_rows(fresh_reader) == v1
 
-    # RECOVERY: the next sync completes; results match a store that
-    # never crashed, and the crashed attempt's debris is GC'd
-    db.sync()
+    # RECOVERY: the next sync runs and completes; results match a store
+    # that never crashed, and the crashed attempt's debris is GC'd
+    assert count_jobs(db.sync) > 0
     recovered = _all_rows(db)
     assert recovered != v1 and len(recovered) == 6
     for f in installed_during_crash:
@@ -1032,3 +1035,296 @@ def test_second_sync_upsert_replaces_into_existing_days(spark, tsdb_dir):
         .collect()
     )
     assert got == want
+
+
+# ---------------------------------------------------------------------------
+# Idle sync: periods with nothing to finalize are skipped on the driver
+# ---------------------------------------------------------------------------
+
+
+def _manifests(base, names):
+    from smalltsdb_spark import storage
+
+    out = {}
+    for name in names:
+        with open(os.path.join(base, name, storage.MANIFEST), "rb") as f:
+            out[name] = f.read()
+    return out
+
+
+def test_idle_resync_submits_no_jobs(spark, tsdb_dir, count_jobs):
+    """A second sync at the same clock, after a sync whose retention
+    dropped one incoming partition and rewrote the boundary one, submits
+    no Spark job and leaves every period table's manifest byte-identical
+    and incoming untouched."""
+    def incoming_files():
+        return {
+            (rel, os.stat(os.path.join(db.incoming_path, rel)).st_mtime_ns)
+            for rel in _on_disk_parquet(db.incoming_path)
+        }
+
+    day = 86400.0
+    clock = {"now": 2 * day + 43_260.0}  # retention cutoff = day + 43_200
+    db = TablesTSDB(spark, tsdb_dir, now=lambda: clock["now"])
+    db.insert(
+        [
+            ("a", 100.0, 1.0),  # day 0: dropped whole
+            ("a", day + 1_000.0, 2.0),  # boundary day, below the cutoff
+            ("a", day + 50_000.0, 3.0),  # boundary day, kept
+            ("b", 2 * day + 5.0, 4.0),
+            ("b", 2 * day + 40_000.0, 5.0),
+        ]
+    )
+    before = incoming_files()
+    assert count_jobs(db.sync) > 0
+    after = incoming_files()
+    assert not any(rel.startswith("pday=0") for rel, _ in after)
+    assert {f for f in after if f[0].startswith("pday=1")}.isdisjoint(before)
+    assert sorted(r.timestamp for r in db.incoming().collect()) == [
+        day + 50_000.0, 2 * day + 5.0, 2 * day + 40_000.0
+    ]
+
+    names = [name for name, _ in db.periods]
+    manifests_before = _manifests(tsdb_dir, names)
+    assert count_jobs(db.sync) == 0
+    assert _manifests(tsdb_dir, names) == manifests_before
+    assert incoming_files() == after
+
+
+class _Twins:
+    """The same steps applied to two stores: one synced by a single
+    long-lived handle (which skips idle periods), the other by a fresh
+    handle per sync (which has no record, so every sync is a full one)."""
+
+    PERIODS = [("tensecond", 10), ("oneminute", 60), ("onehour", 3600)]
+
+    def __init__(self, spark, tmp_path, clock, **kw):
+        self.spark = spark
+        self.kw = dict(periods=self.PERIODS, now=lambda: clock["now"], **kw)
+        self.dirs = (str(tmp_path / "skipping"), str(tmp_path / "fresh"))
+        self.db = TablesTSDB(spark, self.dirs[0], **self.kw)
+
+    def fresh(self):
+        return TablesTSDB(self.spark, self.dirs[1], **self.kw)
+
+    def insert(self, points):
+        self.db.insert(points)
+        self.fresh().insert(points)
+
+    def sync(self, count_jobs=None):
+        """Sync both stores and check they agree; returns the jobs the
+        skipping handle's sync submitted when ``count_jobs`` is given."""
+        jobs = count_jobs(self.db.sync) if count_jobs else self.db.sync()
+        self.fresh().sync()
+        self.assert_same()
+        return jobs
+
+    def rows(self, base):
+        db = TablesTSDB(self.spark, base, **self.kw)
+        return {
+            name: sorted(map(tuple, db.period_table(name).collect()))
+            for name, _ in self.PERIODS
+        } | {"incoming": sorted(map(tuple, db.incoming().collect()))}
+
+    def assert_same(self):
+        assert self.rows(self.dirs[0]) == self.rows(self.dirs[1])
+
+
+def test_idle_sync_finalizes_a_late_point_at_the_same_clock(
+    spark, tmp_path, count_jobs
+):
+    """A point inserted with no clock advance, for a path whose
+    high-water mark is older than the finality cut, is finalized."""
+    clock = {"now": 1_000.0}
+    twins = _Twins(spark, tmp_path, clock)
+    twins.insert([("a", 5.0, 1.0), ("a", 900.0, 2.0), ("b", 5.0, 3.0)])
+    twins.sync()
+    assert twins.sync(count_jobs) == 0
+    twins.insert([("b", 500.0, 4.0)])  # b's HWM is bucket 0
+    assert twins.sync(count_jobs) > 0
+    assert ("b", 500.0) in {
+        (r.path, r.timestamp) for r in twins.db.period_table("tensecond").collect()
+    }
+
+
+def test_idle_sync_finalizes_the_tail_when_the_clock_advances(
+    spark, tmp_path, count_jobs
+):
+    """A clock advance with no new file moves ``final_end``, so the
+    tail rows that just became final are written."""
+    clock = {"now": 1_000.0}
+    twins = _Twins(spark, tmp_path, clock)
+    twins.insert([("a", 5.0, 1.0), ("a", 950.0, 2.0), ("a", 3_000.0, 3.0)])
+    twins.sync()
+    tail = ("a", 950.0)
+    assert tail not in {
+        (r.path, r.timestamp) for r in twins.db.period_table("tensecond").collect()
+    }
+    clock["now"] = 1_100.0
+    assert twins.sync(count_jobs) > 0
+    assert tail in {
+        (r.path, r.timestamp) for r in twins.db.period_table("tensecond").collect()
+    }
+
+
+def test_idle_sync_rebuilds_a_changed_period_table(spark, tmp_path, count_jobs):
+    """A period table whose directory or manifest changed between syncs
+    is re-evaluated at the same clock: a deleted table is rebuilt from
+    incoming, and a partition dropped from a manifest is refilled."""
+    import shutil
+
+    from smalltsdb_spark import storage
+
+    day = 86400.0
+    clock = {"now": day + 3_800.0}
+    twins = _Twins(spark, tmp_path, clock, partition_grain="hour")
+    twins.insert([("a", day + 200.0, 1.0), ("b", day + 3_700.0, 2.0)])
+    twins.sync()
+    assert twins.sync(count_jobs) == 0
+
+    for base in twins.dirs:
+        shutil.rmtree(os.path.join(base, "oneminute"))
+    assert twins.sync(count_jobs) > 0
+    assert twins.db.period_table("oneminute").count() == 2
+
+    for base in twins.dirs:  # drop hour 24, and with it a's only bucket
+        storage.drop_partitions_below(
+            os.path.join(base, "tensecond"), day + 3_600.0, 3600
+        )
+    assert twins.sync(count_jobs) > 0
+    assert twins.db.period_table("tensecond").count() == 2
+    assert twins.sync(count_jobs) == 0
+
+
+def test_idle_sync_reruns_a_period_after_its_retention_drop(
+    spark, tmp_path, count_jobs
+):
+    """A period's own retention drop can lower a path's high-water mark,
+    so the sync after the drop runs that period again; it and a full
+    sync leave the same rows."""
+    clock = {"now": 3_000.0}
+    twins = _Twins(
+        spark, tmp_path, clock, partition_grain="hour", retention={"tensecond": 60.0}
+    )
+    twins.insert([("a", 3_550.0, 1.0), ("b", 3_700.0, 2.0)])
+    twins.sync()
+    twins.insert([("a", 10.0, 3.0)])
+    clock["now"] = 3_800.0  # tensecond drops hour 0 (and a's bucket 10)
+    twins.sync()
+    assert twins.sync(count_jobs) > 0
+
+
+def test_idle_sync_runs_after_a_file_lands_in_the_rewritten_boundary(
+    spark, tmp_path, monkeypatch, count_jobs
+):
+    """A file that lands in retention's boundary partition after sync's
+    snapshot is folded into the rewritten partition without any period
+    having seen its rows; the rewrite's files then do not count as
+    covered, so the next sync at the same clock runs and finalizes them."""
+    import shutil
+
+    from smalltsdb_spark import storage
+    from smalltsdb_spark.schemas import INCOMING_SCHEMA
+
+    late = ("z", 7_600.0, 5.0)  # hour 2, above the next cutoff
+    foreign = str(tmp_path / "foreign")
+    storage.append(spark.createDataFrame([late], INCOMING_SCHEMA), foreign, 3600)
+    (part,) = _on_disk_parquet(foreign)
+
+    clock = {"now": 10_000.0}
+    twins = _Twins(spark, tmp_path, clock, partition_grain="hour")
+    twins.insert([("a", 7_300.0, 1.0), ("a", 7_500.0, 2.0)])
+    twins.sync()
+
+    clock["now"] = 11_060.0  # cutoff 7_400 splits hour 2
+    real = storage.partition_has_files
+
+    def land_then_probe(path, unit):
+        dest = os.path.join(twins.db.incoming_path, part)
+        shutil.copy(os.path.join(foreign, part), dest)
+        monkeypatch.setattr(storage, "partition_has_files", real)
+        return real(path, unit)
+
+    monkeypatch.setattr(storage, "partition_has_files", land_then_probe)
+    twins.db.sync()
+    monkeypatch.undo()
+    assert ("z", 7_600.0, 5.0) in {tuple(r) for r in twins.db.incoming().collect()}
+    twins.fresh().insert([late])
+    assert twins.sync(count_jobs) > 0
+
+
+def test_idle_sync_sees_a_change_under_spark_metadata(
+    spark, tmp_path, count_jobs
+):
+    """Hidden entries are part of incoming's snapshot: a file sink log
+    appearing under ``_spark_metadata`` disables the skip (the log now
+    decides which files the reader lists)."""
+    import json
+
+    clock = {"now": 1_000.0}
+    twins = _Twins(spark, tmp_path, clock)
+    twins.insert([("a", 5.0, 1.0), ("a", 900.0, 2.0)])
+    twins.sync()
+    assert twins.sync(count_jobs) == 0
+    for base in twins.dirs:
+        incoming = os.path.join(base, "incoming")
+        files = sorted(_on_disk_parquet(incoming))
+        md = os.path.join(incoming, "_spark_metadata")
+        os.makedirs(md)
+        with open(os.path.join(md, "0"), "w") as f:
+            f.write("v1\n")
+            for rel in files:
+                full = os.path.join(incoming, rel)
+                st = os.stat(full)
+                f.write(
+                    json.dumps(
+                        {
+                            "path": "file://" + full,
+                            "size": st.st_size,
+                            "isDir": False,
+                            "modificationTime": st.st_mtime_ns // 1_000_000,
+                            "blockReplication": 1,
+                            "blockSize": 33554432,
+                            "action": "add",
+                        }
+                    )
+                    + "\n"
+                )
+    assert twins.sync(count_jobs) > 0
+    assert twins.sync(count_jobs) == 0
+
+
+def test_idle_sync_matches_full_sync_on_a_random_schedule(
+    spark, tmp_path, count_jobs
+):
+    """Seeded mix of inserts ahead of and behind the high-water marks,
+    clock advances or none, and syncs: after every sync the skipping
+    handle's store equals the one a fresh handle syncs in full, and a
+    sync with no step since the previous one submits no job."""
+    import random
+
+    rng = random.Random(20261017)
+    clock = {"now": 4_000.0}
+    twins = _Twins(spark, tmp_path, clock)
+    paths = ["a", "b", "c"]
+    twins.insert([(p, 5.0, 1.0) for p in paths])
+    twins.sync()
+    dirty = False
+    for _ in range(14):
+        step = rng.choice(["ahead", "behind", "advance", "sync", "sync"])
+        if step == "ahead":
+            ts = clock["now"] - rng.uniform(0, 200)
+            twins.insert([(rng.choice(paths), ts, rng.uniform(0, 10))])
+        elif step == "behind":
+            ts = clock["now"] - rng.uniform(500, 3_000)
+            twins.insert([(rng.choice(paths), ts, rng.uniform(0, 10))])
+        elif step == "advance":
+            clock["now"] += rng.choice([5.0, 60.0, 700.0])
+        else:
+            jobs = twins.sync(count_jobs)
+            if not dirty:
+                assert jobs == 0
+            dirty = False
+            continue
+        dirty = True
+    twins.sync()
