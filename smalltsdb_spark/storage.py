@@ -707,42 +707,23 @@ def read_table(
     can skip it outright instead of shuffling the new side against a
     provably empty relation."""
     manifest = read_manifest(path)
-    out_fields = [f.name for f in schema.fields] + (
-        [PARTITION_COLUMN] if with_partition_col else []
-    )
-    empty_schema = (
-        T.StructType(
-            list(schema.fields) + [T.StructField(PARTITION_COLUMN, T.LongType())]
-        )
-        if with_partition_col
-        else schema
-    )
     read_schema = T.StructType(
         list(schema.fields) + [T.StructField(PARTITION_COLUMN, T.LongType())]
     )
     if manifest is not None:
-        files = [
-            os.path.join(path, rel) for fs in manifest.values() for rel in fs
-        ]
-        if not files:
-            df = spark.createDataFrame([], empty_schema)
-            df._smalltsdb_empty_relation = True
-            return df
-        return (
-            spark.read.schema(read_schema)
-            .option("basePath", path)
-            .parquet(*files)
-            .select(*out_fields)
+        files = [os.path.join(path, rel) for fs in manifest.values() for rel in fs]
+    else:
+        files = [path] if _has_data(path) else []
+    if not files:
+        df = spark.createDataFrame(
+            [], read_schema if with_partition_col else schema
         )
-    if not _has_data(path):
-        df = spark.createDataFrame([], empty_schema)
         df._smalltsdb_empty_relation = True
         return df
-    return (
-        spark.read.schema(read_schema)
-        .parquet(path)
-        .select(*out_fields)
-    )
+    # the reader already yields ``schema`` then ``pday``, in that order:
+    # a select-by-name here would cost ~one py4j round trip per column
+    df = spark.read.schema(read_schema).option("basePath", path).parquet(*files)
+    return df if with_partition_col else df.drop(PARTITION_COLUMN)
 
 
 def _write_partitioned(

@@ -12,6 +12,11 @@ Call surface matches the reference:
 - the outermost block's context value is the shared timings list; inner
   blocks append before outer ones (they finish first).
 
+Block state (the prefix stack and the open timings list) is kept per
+thread, so one Timer can be shared by threads whose blocks overlap — a
+web app's reads and the sync loop on one TSDB handle: each thread's
+blocks nest only with its own.
+
 Clocks are callables returning ``(clock_name, reading)`` pairs; a block's
 metric names are ``<prefix...>.<name>.<clock_name>``.  Defaults: wall
 time always; user/system CPU and IO counters when psutil importable
@@ -21,6 +26,7 @@ try-import.
 
 from __future__ import annotations
 
+import threading
 import time
 from contextlib import contextmanager
 
@@ -66,36 +72,52 @@ class Timer:
 
     def __init__(self, clocks=None, prefix: str | None = None):
         self.clocks = list(clocks) if clocks is not None else default_clocks()
-        self._prefix_stack: list[str] = [prefix] if prefix else []
-        self._timings: list[tuple[str, float, float]] | None = None
-        #: the finished outermost block's timings (the context value is
-        #: reset on exit; this survives for after-the-fact collection,
-        #: e.g. merging per-thread timers in TablesTSDB.sync)
+        self._prefix = [prefix] if prefix else []
+        self._local = threading.local()
+        #: the last finished outermost block's timings, from any thread
+        #: (the context value is reset on exit; this survives for
+        #: after-the-fact collection, e.g. merging per-thread timers in
+        #: TablesTSDB.sync)
         self.collected: list[tuple[str, float, float]] = []
+
+    def _state(self):
+        """This thread's (prefix stack, open timings or None)."""
+        local = self._local
+        if not hasattr(local, "stack"):
+            local.stack = list(self._prefix)
+            local.timings = None
+        return local
+
+    @property
+    def prefix(self) -> str:
+        """The calling thread's current prefix, dot-joined."""
+        return SEPARATOR.join(self._state().stack)
 
     @contextmanager
     def __call__(self, name_or_prefix: str, group_name: str | None = None):
+        state = self._state()
         pushed = group_name is not None
         if pushed:
-            self._prefix_stack.append(name_or_prefix)
-        label = SEPARATOR.join(self._prefix_stack + [group_name or name_or_prefix])
+            state.stack.append(name_or_prefix)
+        label = SEPARATOR.join(state.stack + [group_name or name_or_prefix])
 
-        outermost = self._timings is None
+        outermost = state.timings is None
         if outermost:
-            self._timings = []
+            state.timings = []
+        timings = state.timings
 
         start_utc = utcnow()
         begin = {k: v for clock in self.clocks for k, v in clock()}
         try:
-            yield self._timings
+            yield timings
         finally:
             for clock in reversed(self.clocks):
                 for k, end in clock():
-                    self._timings.append(
+                    timings.append(
                         (f"{label}{SEPARATOR}{k}", start_utc, end - begin[k])
                     )
             if pushed:
-                self._prefix_stack.pop()
+                state.stack.pop()
             if outermost:
-                self.collected = self._timings
-                self._timings = None
+                self.collected = timings
+                state.timings = None

@@ -31,6 +31,7 @@ import os
 import threading
 import time
 from functools import reduce
+from operator import itemgetter
 from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
@@ -56,6 +57,20 @@ from smalltsdb_spark.timer import Timer
 from smalltsdb_spark.utils import coerce_epoch
 
 Datapoint = tuple[str, float, float]
+
+
+def _sorted_rows(
+    df: DataFrame, key: str, offset: int = 0, limit: int | None = None
+) -> list[tuple]:
+    """``df``'s rows ordered by its unique first column ``key``, then
+    paged: sorted in Python after one unordered collect.  With ``limit``
+    only the first ``offset + limit`` rows by ``key`` are collected (one
+    TakeOrderedAndProject job)."""
+    if offset < 0 or (limit is not None and limit < 0):
+        raise ValueError(f"offset and limit must be >= 0, got {offset}, {limit}")
+    if limit is not None:
+        df = df.orderBy(key).limit(offset + limit)
+    return sorted(map(tuple, df.collect()), key=itemgetter(0))[offset:]
 
 
 class BaseTSDB:
@@ -292,6 +307,20 @@ class BaseTSDB:
         bucket present in the period table is never shadowed by the
         recompute (left-anti on the bucket key — broadcast-sized, one
         metric's rows)."""
+        df = self._metric_rows(
+            path, period, stat, interval, include_partial
+        ).orderBy("timestamp")
+        if offset:
+            df = df.offset(offset)
+        if limit is not None:
+            df = df.limit(limit)
+        return df
+
+    def _metric_rows(
+        self, path, period, stat, interval, include_partial: bool
+    ) -> DataFrame:
+        """The unordered ``(timestamp, stat)`` rows behind
+        :meth:`get_metric_df` and :meth:`get_metric` — one per bucket."""
         validate_period(period, self.period_seconds)
         validate_stat(stat)
         start, end = (coerce_epoch(x) for x in interval)
@@ -308,11 +337,6 @@ class BaseTSDB:
                     .join(base.select("timestamp"), "timestamp", "left_anti")
                     .select("timestamp", stat)
                 )
-        df = df.orderBy("timestamp")
-        if offset:
-            df = df.offset(offset)
-        if limit is not None:
-            df = df.limit(limit)
         return df
 
     def _period_slice(self, period: str, start: float, end: float) -> DataFrame:
@@ -388,7 +412,22 @@ class BaseTSDB:
         include_partial: bool = False,
         bounds: bool = False,
     ) -> list[tuple]:
-        """``bounds=True`` serves the percentile as provable (lo, hi)
+        """The rows of :meth:`get_metric_df` (or, with ``bounds=True``,
+        of :meth:`get_metric_bounds_df`) as a list of tuples.
+
+        The rows are sorted on the driver, not by Spark: the relation is
+        collected unordered and sorted in Python on ``timestamp``, so a
+        read is one Spark job instead of a range-partitioned global sort
+        (sampling job, shuffle stage, result).  With ``limit`` the
+        relation is cut to its first ``offset + limit`` rows by time
+        first (one TakeOrderedAndProject job, so the driver never holds
+        more than that) and ``offset`` is sliced off here.  The order is
+        the one ``get_metric_df`` returns: ``timestamp`` is unique per
+        row (period tables are upserted on ``(path, timestamp)``, the
+        partial union anti-joins on it, bounds have one row per bucket),
+        and Python's float order is Spark's for finite doubles.
+
+        ``bounds=True`` serves the percentile as provable (lo, hi)
         containment bounds from the histogram cascade instead of the
         materialized exact value — rows become (timestamp, lo, hi); see
         :meth:`get_metric_bounds_df`.  The bounds path serves FINAL
@@ -403,24 +442,15 @@ class BaseTSDB:
                     "bounds path — read the partial buckets without "
                     "bounds, or drop include_partial"
                 )
-            with self.timer("get_metric"), self.query_timeout(timeout):
-                df = self.get_metric_bounds_df(path, period, stat, interval)
-                if offset:
-                    df = df.offset(offset)
-                if limit is not None:
-                    df = df.limit(limit)
-                return [tuple(r) for r in df.collect()]
         with self.timer("get_metric"), self.query_timeout(timeout):
-            df = self.get_metric_df(
-                path,
-                period,
-                stat,
-                interval,
-                limit=limit,
-                offset=offset,
-                include_partial=include_partial,
+            df = (
+                self._bounds_rows(path, period, stat, interval)
+                if bounds
+                else self._metric_rows(
+                    path, period, stat, interval, include_partial
+                )
             )
-            return [tuple(r) for r in df.collect()]
+            return _sorted_rows(df, "timestamp", offset, limit)
 
     def get_metric_bounds_df(
         self,
@@ -475,6 +505,31 @@ class BaseTSDB:
         geometry.  Containment of the exact percentile is value-gated
         by the ``tsdb_get_metric_bounds`` driver row and golden-pinned
         in tests/test_api_ops.py."""
+        return self._bounds_rows(
+            path,
+            period,
+            stat,
+            interval,
+            fine_seconds=fine_seconds,
+            bin_width=bin_width,
+            clamp_bin=clamp_bin,
+            hist=hist,
+        ).orderBy("timestamp")
+
+    def _bounds_rows(
+        self,
+        path,
+        period,
+        stat,
+        interval,
+        *,
+        fine_seconds: int | None = None,
+        bin_width: float | None = None,
+        clamp_bin: int | None = None,
+        hist: DataFrame | None = None,
+    ) -> DataFrame:
+        """The unordered rows behind :meth:`get_metric_bounds_df` and the
+        bounds reads — one per bucket."""
         from smalltsdb_spark.operators.aggregate import (
             histogram_quantile_bounds,
             value_histogram,
@@ -546,18 +601,18 @@ class BaseTSDB:
             clamp_bin=clamp_bin,
             fine_seconds=fine_seconds,
         )
-        return (
-            bounds.filter(F.col("timestamp").between(start, end))
-            .select("timestamp", f"{stat}_lo", f"{stat}_hi")
-            .orderBy("timestamp")
+        return bounds.filter(F.col("timestamp").between(start, end)).select(
+            "timestamp", f"{stat}_lo", f"{stat}_hi"
         )
 
     def get_metric_bounds(
         self, path, period, stat, interval, *, timeout: float | None = None, **kw
     ) -> list[tuple[float, float, float | None]]:
+        """The rows of :meth:`get_metric_bounds_df`, sorted on the driver
+        (see :meth:`get_metric`)."""
         with self.timer("get_metric_bounds"), self.query_timeout(timeout):
-            df = self.get_metric_bounds_df(path, period, stat, interval, **kw)
-            return [tuple(r) for r in df.collect()]
+            df = self._bounds_rows(path, period, stat, interval, **kw)
+            return _sorted_rows(df, "timestamp")
 
     def _histogram_table(self) -> DataFrame | None:
         """The store's persisted fine histogram relation, or None when
@@ -574,13 +629,14 @@ class BaseTSDB:
         return reduce(DataFrame.union, dfs).distinct()
 
     def list_metrics(self, *, limit: int | None = None, offset: int = 0) -> list[str]:
+        """The paths of :meth:`list_metrics_df` in ``path`` order, sorted
+        on the driver like :meth:`get_metric`'s rows (``distinct`` makes
+        the key unique).  Python orders ``str`` by code point, and so
+        does Spark's default ``UTF8_BINARY`` collation, because UTF-8
+        byte order is code-point order."""
         with self.timer("list_metrics"):
-            df = self.list_metrics_df().orderBy("path")
-            if offset:
-                df = df.offset(offset)
-            if limit is not None:
-                df = df.limit(limit)
-            return [r.path for r in df.collect()]
+            rows = _sorted_rows(self.list_metrics_df(), "path", offset, limit)
+            return [path for (path,) in rows]
 
     def sync(self) -> None:
         raise NotImplementedError
@@ -873,8 +929,8 @@ class TablesTSDB(BaseTSDB):
         Every phase is timed; with ``emit_metrics=True`` the timings are
         re-ingested as ordinary datapoints (T6, reference tsdb.py:310-337)
         under ``[<prefix>.]sync.<period>.<phase>.<clock>`` names, built
-        by per-thread timers (the shared Timer's prefix stack is not
-        thread-safe).  The re-ingested file is new to incoming, so the
+        by one timer per worker thread, each under the handle timer's
+        current prefix.  The re-ingested file is new to incoming, so the
         following sync runs.
         """
         from pyspark import InheritableThread, StorageLevel
@@ -1000,12 +1056,8 @@ class TablesTSDB(BaseTSDB):
         )
         try:
             with self.timer("sync", "all") as timings, self.query_timeout(timeout):
-                stack = list(self.timer._prefix_stack)  # includes 'sync'
-                subs = []
-                for _ in jobs:
-                    t = Timer(clocks=self.timer.clocks)
-                    t._prefix_stack = list(stack)
-                    subs.append(t)
+                prefix = self.timer.prefix  # ends in 'sync'
+                subs = [Timer(clocks=self.timer.clocks, prefix=prefix) for _ in jobs]
                 # worker exceptions must PROPAGATE (r12): a plain thread
                 # swallows them, so a failed period upsert would leave
                 # that period silently stale and a timed-out sync would

@@ -27,6 +27,111 @@ def test_list_metrics_pagination(spark, tsdb_dir):
     assert db.list_metrics(limit=1, offset=1) == ["two"]
 
 
+def _served_store(spark, tsdb_dir):
+    """A synced TablesTSDB: paths "one"/"two", 10 s points over ten
+    minutes, every bucket final (the dashboard's serving path)."""
+    db = TablesTSDB(spark, tsdb_dir, now=lambda: 1e9)
+    db.insert(
+        [(p, float(t), float(t % 70)) for p in ("one", "two") for t in range(0, 600, 10)]
+    )
+    db.sync()
+    return db
+
+
+#: (offset, limit): no paging, limit=0, a page inside, a page running
+#: past the end, an offset past the end
+PAGES = [(0, None), (0, 0), (0, 3), (2, None), (2, 0), (2, 3), (2, 500), (500, None), (500, 3)]
+
+
+def test_get_metric_is_one_spark_job(spark, tsdb_dir, count_jobs):
+    """A read collects its rows unordered and sorts them on the driver:
+    one Spark job for every limit/offset, not a range-partitioned global
+    sort (sampling job, shuffle stage, result); list_metrics is the
+    distinct stage plus the result."""
+    db = _served_store(spark, tsdb_dir)
+    for kw in ({}, {"limit": 3}, {"offset": 2}, {"limit": 3, "offset": 2}):
+        jobs = count_jobs(
+            lambda: db.get_metric("one", "tensecond", "avg", (0, 600), **kw)
+        )
+        assert jobs == 1, kw
+    assert count_jobs(db.list_metrics) <= 2
+
+
+def test_get_metric_pages_match_the_ordered_dataframe(spark, tsdb_dir):
+    """The driver sort returns exactly the rows of the DataFrame API,
+    which sorts in Spark, over a grid of offset/limit values (limit=0
+    and an offset past the end included)."""
+    db = _served_store(spark, tsdb_dir)
+    args = ("one", "oneminute", "p90", (0, 600))
+    for offset, limit in PAGES:
+        want = db.get_metric_df(*args, limit=limit, offset=offset).collect()
+        got = db.get_metric(*args, limit=limit, offset=offset)
+        assert got == [tuple(r) for r in want], (offset, limit)
+
+
+def test_get_metric_partial_pages_match_the_ordered_dataframe(spark, tsdb_dir):
+    """Same equality for include_partial=True: final buckets from the
+    period table, open ones recomputed from incoming."""
+    clock = {"now": 0.0}
+    db = TablesTSDB(spark, tsdb_dir, now=lambda: clock["now"])
+    db.insert([("one", float(t), float(t % 7)) for t in range(0, 200, 3)])
+    clock["now"] = 160.0  # buckets before 100 final, 100..190 open
+    db.sync()
+    args = ("one", "tensecond", "max", (0, 200))
+    full = db.get_metric(*args, include_partial=True)
+    assert [ts for ts, _ in full] == [float(t) for t in range(0, 200, 10)]
+    for offset, limit in PAGES:
+        want = db.get_metric_df(
+            *args, limit=limit, offset=offset, include_partial=True
+        ).collect()
+        got = db.get_metric(*args, limit=limit, offset=offset, include_partial=True)
+        assert got == [tuple(r) for r in want], (offset, limit)
+
+
+def test_get_metric_bounds_sorts_on_the_driver(spark, tsdb_dir, count_jobs):
+    """The bounds form pages the rows of get_metric_bounds_df, a clamp
+    row (hi None) included, in fewer Spark jobs than that DataFrame's
+    ordered collect."""
+    db = TablesTSDB(spark, tsdb_dir, now=lambda: 1e9, histograms=True)
+    db.insert(
+        [("m", float(t), float(t % 130)) for t in range(0, 600, 5)]
+        + [("m", 605.0, 2000.0)]
+    )
+    db.sync()
+    args = ("m", "oneminute", "p99", (0, 660))
+    want = [tuple(r) for r in db.get_metric_bounds_df(*args).collect()]
+    assert len(want) == 11 and want[-1][2] is None
+    assert db.get_metric_bounds(*args) == want
+    for offset, limit in PAGES:
+        got = db.get_metric(*args, limit=limit, offset=offset, bounds=True)
+        assert got == want[offset:][:limit], (offset, limit)
+    ordered = count_jobs(lambda: db.get_metric_bounds_df(*args).collect())
+    assert count_jobs(lambda: db.get_metric(*args, bounds=True)) < ordered
+
+
+def test_list_metrics_code_point_order(spark, tsdb_dir):
+    """list_metrics sorts on the driver in Python's str order, which is
+    Spark's default (UTF8_BINARY) order: case, accents, CJK and astral
+    characters included."""
+    paths = ["Z", "a", "é", "ß", "中", "😀", "cpu", "CPU", "Cpu", "e"]
+    db = TablesTSDB(spark, tsdb_dir, now=lambda: 1e9)
+    db.insert([(p, 1.0, 1.0) for p in paths])
+    db.sync()
+    want = [r.path for r in db.list_metrics_df().orderBy("path").collect()]
+    assert want == sorted(paths)
+    assert db.list_metrics() == want
+    for offset, limit in PAGES:
+        assert db.list_metrics(limit=limit, offset=offset) == want[offset:][:limit]
+
+
+def test_negative_page_arguments_refuse(spark, tsdb_dir):
+    db = ViewTSDB(spark, tsdb_dir)
+    with pytest.raises(ValueError, match=">= 0"):
+        db.list_metrics(offset=-1)
+    with pytest.raises(ValueError, match=">= 0"):
+        db.get_metric("one", "tensecond", "n", (0, 100), limit=-1)
+
+
 def test_sync_emit_metrics(spark, tsdb_dir):
     """T6: sync timings re-ingested as datapoints with the reference's
     dotted naming (tsdb.py:310-337, cli.py:59-60)."""
@@ -148,7 +253,7 @@ def test_query_timeout_cancels_slow_query(spark, tsdb_dir):
 
     real_df = db.get_metric_df("two", "tensecond", "avg", (0, 100))
     slowed = real_df.withColumn("avg", crawl("avg"))
-    db.get_metric_df = lambda *a, **k: slowed
+    db._metric_rows = lambda *a, **k: slowed  # the relation get_metric collects
 
     t0 = _time.perf_counter()
     with pytest.raises(TimeoutError):
@@ -156,7 +261,7 @@ def test_query_timeout_cancels_slow_query(spark, tsdb_dir):
     assert _time.perf_counter() - t0 < 60  # cancelled, not slept out
 
     # the session survives: an untimed query on the same handle works
-    del db.get_metric_df  # restore the class method
+    del db._metric_rows  # restore the class method
     assert db.get_metric("two", "tensecond", "n", (0, 100))
 
 

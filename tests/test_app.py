@@ -67,6 +67,31 @@ def test_graph_data_golden_b(spark, tsdb_dir):
     assert two["timestamps"] == [0.0, 10.0, 40.0]
 
 
+def test_graph_of_three_series_is_three_spark_jobs(spark, tsdb_dir, count_jobs):
+    """/graph reads one series per get_metric, and each read is one
+    Spark job (rows sorted on the driver)."""
+    from smalltsdb_spark.app import create_app
+
+    db = TablesTSDB(spark, tsdb_dir, now=lambda: 1e9)
+    db.insert(
+        [(p, float(t), float(t % 9)) for p in ("a", "b", "c") for t in range(0, 300, 5)]
+    )
+    db.sync()
+    query = {"start": "0", "end": "300"} | {
+        f"metrics.{i}.{key}": value
+        for i, path in enumerate("abc")
+        for key, value in (("name", path), ("period", "tensecond"), ("stat", "avg"))
+    }
+    client = create_app(db).test_client()
+    responses = []
+    assert count_jobs(lambda: responses.append(client.get("/graph", query_string=query))) == 3
+    (resp,) = responses
+    assert resp.status_code == 200
+    series = resp.get_json()["series"]
+    assert [s["name"] for s in series] == ["a", "b", "c"]
+    assert all(s["timestamps"] == [float(t) for t in range(0, 300, 10)] for s in series)
+
+
 def test_graph_data_empty_series_placeholder(spark, tsdb_dir):
     db = ViewTSDB(spark, tsdb_dir)
     db.insert(GOLDEN_B_INPUT)

@@ -1,6 +1,8 @@
 """Timer (reference timer.py doctest semantics) and the flat codec
 (reference tests/test_app_flat.py, all cases carried over)."""
 
+import sys
+import threading
 import time
 
 import pytest
@@ -65,6 +67,87 @@ def test_timer_constructor_prefix_and_wall_clock():
     for _, start, duration in timings:
         assert start > 1e9  # epoch seconds
         assert duration >= 0.0
+
+
+@pytest.mark.parametrize("read_first", [True, False])
+def test_timer_blocks_overlapping_across_threads(read_first):
+    """A dashboard read and ``sync()`` share the handle's timer, and
+    their blocks overlap: read opens, sync opens, read closes, sync
+    closes (``read_first``), or sync opens, read opens, read closes,
+    sync closes.  Neither block fails on exit, and each thread's timings
+    carry exactly its own labels."""
+    timer = Timer([fake_clock_factory()])
+    read_open, sync_open, read_closed = (threading.Event() for _ in range(3))
+    got, errors = {}, []
+
+    def read():
+        if not read_first:
+            sync_open.wait(5)
+        with timer("get_metric") as timings:
+            read_open.set()
+            if read_first:
+                sync_open.wait(5)
+        got["read"] = [name for name, _, _ in timings]
+        read_closed.set()
+
+    def sync():
+        if read_first:
+            read_open.wait(5)
+        with timer("sync", "all") as timings:
+            with timer("upsert_query"):
+                sync_open.set()
+                read_closed.wait(5)
+        got["sync"] = [name for name, _, _ in timings]
+
+    def run(fn):
+        try:
+            fn()
+        except BaseException as e:  # noqa: BLE001
+            errors.append(e)
+            read_closed.set()
+
+    threads = [threading.Thread(target=run, args=(fn,)) for fn in (read, sync)]
+    for th in threads:
+        th.start()
+    for th in threads:
+        th.join(10)
+    assert errors == []
+    assert got["sync"] == ["sync.upsert_query.time", "sync.all.time"]
+    assert got["read"] == ["get_metric.time"]
+
+
+def test_timer_shared_by_many_threads_keeps_each_threads_blocks():
+    """Stress: more threads than cores, a short switch interval, every
+    thread nesting blocks under its own prefix on one shared Timer; each
+    outermost block yields exactly its own thread's labels."""
+    timer = Timer([fake_clock_factory()], prefix="db")
+    bad, errors = [], []
+
+    def work(i):
+        try:
+            for _ in range(200):
+                with timer(f"t{i}", "all") as timings:
+                    with timer("inner"):
+                        pass
+                names = [name for name, _, _ in timings]
+                if names != [f"db.t{i}.inner.time", f"db.t{i}.all.time"]:
+                    bad.append(names)
+        except Exception as e:  # noqa: BLE001
+            errors.append(e)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=work, args=(i,)) for i in range(16)]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(th.is_alive() for th in threads)
+    assert errors == [] and bad == []
+    assert timer.prefix == "db"
 
 
 # -- flat codec (reference tests/test_app_flat.py:66-79 + dict/int cases) ----
