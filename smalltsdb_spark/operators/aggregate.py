@@ -41,13 +41,16 @@ from pyspark.sql import functions as F
 from smalltsdb_spark.config import QUANTILES
 
 
-def bucket(ts: Column | str, seconds: int) -> Column:
+def bucket(ts: Column | str, seconds: int | Column) -> Column:
     """Tumbling-window bucket start as a DoubleType epoch (floor semantics).
+    ``seconds`` is a literal period or an integer column holding each
+    row's period.
 
     Reference: ``cast(timestamp as integer) / {s} * {s}`` (tsdb.py:187).
     """
     c = F.col(ts) if isinstance(ts, str) else ts
-    return (F.floor(c / F.lit(seconds)) * F.lit(seconds)).cast("double")
+    s = seconds if isinstance(seconds, Column) else F.lit(seconds)
+    return (F.floor(c / s) * s).cast("double")
 
 
 def aggregate_salted(
@@ -167,15 +170,21 @@ def counter_rate(
 
 def aggregate(
     incoming: DataFrame,
-    seconds: int,
+    seconds: int | Column,
     exact: bool = True,
     approx_accuracy: int = 10000,
+    keys: tuple[str, ...] = (),
 ) -> DataFrame:
     """All 8 stats per (path, bucket) — the reference's one aggregation.
 
     Input must have columns (path, timestamp, value); output has the fixed
     10-column aggregate schema (schemas.AGG_SCHEMA), ``n`` cast to double
     for parity with the reference's REAL count (tsdb.py:171).
+
+    ``keys`` are extra grouping columns, output first: with a period tag
+    among them and ``seconds`` the tagged row's period column (see
+    :func:`bucket`), one aggregation computes several periods' buckets
+    (``TablesTSDB.sync``).
     """
     if exact:
         pcts = F.percentile("value", F.array(*[F.lit(q) for q in QUANTILES]))
@@ -184,7 +193,9 @@ def aggregate(
             "value", F.array(*[F.lit(q) for q in QUANTILES]), F.lit(approx_accuracy)
         )
     return (
-        incoming.groupBy("path", bucket("timestamp", seconds).alias("timestamp"))
+        incoming.groupBy(
+            *keys, "path", bucket("timestamp", seconds).alias("timestamp")
+        )
         .agg(
             F.count("value").cast("double").alias("n"),
             F.min("value").alias("min"),
@@ -194,6 +205,7 @@ def aggregate(
             pcts.alias("_pcts"),
         )
         .select(
+            *keys,
             "path",
             "timestamp",
             "n",

@@ -13,28 +13,31 @@ equivalent is day-partitioned parquet:
   reference's two-database locking workaround (tsdb.py:273-275,423-454)
   architecturally unnecessary.
 
-Upserts (``insert or replace``, tsdb.py:390) replace only the
-day-partitions present in the written DataFrame — the plain-parquet MERGE
-equivalent, implemented once in :func:`upsert` for every caller (sync's
-period and histogram tables, the streaming partials sink).  Each table
-has exactly one commit protocol, decided here and nowhere else:
+Two writers commit into the manifest tables.  :func:`install_staged`
+appends sync's new buckets: a sync writes every table's slice in one
+pass into a hidden staging directory, and each table takes its slice
+by extending its manifest's file lists.  :func:`upsert` is the
+``insert or replace`` (reference tsdb.py:390) of the streaming partials
+sink, whose replayed micro-batches collide with stored keys; it
+rewrites only the partitions present in the written DataFrame.  Each
+table has exactly one commit protocol, decided here and nowhere else:
 
 - **manifest** — period, histogram and partials tables, always: the
   table carries a ``_manifest.json`` naming its live data files;
   writers stage new files into the partition directories (invisible —
   readers resolve the manifest, not the listing) and commit EVERYTHING
-  in one ``os.replace`` of the manifest.  A sync that dies mid-write
+  in one ``os.replace`` of the manifest.  A writer that dies mid-write
   leaves the old manifest — readers see the previous WHOLE-TABLE
   snapshot, never a mix of old and new partitions (the torn-sync window
-  VERDICT r7 named); the next sync garbage-collects the unmanifested
-  debris and completes.  A table without a manifest (a store written
-  before r8, or a period table handed back by
-  :func:`decommission_streaming_sink`) adopts its listing as the first
-  manifest on its first upsert.  This is the minimal slice of what a
-  table format's transaction log does; at 100 TB swap in Delta/Iceberg —
-  the call sites are shaped so that MERGE is a drop-in.  The reference
-  gets the same property from SQLite: its whole ``sync`` runs under one
-  connection's transaction (reference tsdb.py:305-420).
+  VERDICT r7 named); the next commit garbage-collects the unmanifested
+  debris.  A table without a manifest (a store written before r8, or a
+  period table handed back by :func:`decommission_streaming_sink`)
+  adopts its listing as the first manifest on its first commit.  This
+  is the minimal slice of what a table format's transaction log does;
+  at 100 TB swap in Delta/Iceberg — the call sites are shaped so that
+  an append or MERGE is a drop-in.  Commits are atomic per table; the
+  reference runs its whole ``sync`` under one SQLite transaction
+  (reference tsdb.py:305-420).
 - **listing + dirswap** — the incoming table, always: its append-mode
   writers (daemon flushes, ``insert``, the ingest stream's sink log) do
   not coordinate through a manifest, so readers list the directory and
@@ -111,9 +114,9 @@ def pin_grain(root: str, grain_seconds: int) -> None:
             "the store to change its partition grain"
         )
     os.makedirs(root, exist_ok=True)
-    # unique tmp per writer: pid alone collides across THREADS (the six
-    # concurrent sync workers all pin on first upsert), and a colliding
-    # tmp name lets one thread os.replace the other's file away
+    # unique tmp per writer: pid alone collides across THREADS (an
+    # insert and a sync on one handle may both pin first), and a
+    # colliding tmp name lets one thread os.replace the other's file away
     import uuid
 
     tmp = f"{marker}.tmp-{os.getpid()}-{uuid.uuid4().hex[:8]}"
@@ -164,7 +167,7 @@ def pin_histogram_geometry(
     bin, n) row MEANS; a mixed-geometry table merges garbage, so a
     mismatch is a hard error at pin/open time, not a corruption found
     in a bounds read.  Shared by BOTH maintenance flavors: the batch
-    syncer (TablesTSDB, before its first histogram upsert) and the
+    syncer (TablesTSDB, before its first histogram commit) and the
     always-on stream (streaming.start_histogram_rollup, before
     ``start()`` — VERDICT r12: the stream path previously wrote no
     marker, so a store opened with different geometry over a
@@ -558,8 +561,7 @@ def file_stats(root: str, sub: str = "") -> frozenset[tuple[str, int, int]]:
 
 def table_state(path: str) -> dict | frozenset:
     """A token that changes whenever the table's readable state may have:
-    the ``_manifest.json`` document of a manifest table (the same value
-    :func:`upsert` returns for the state it publishes), else the
+    the ``_manifest.json`` document of a manifest table, else the
     :func:`file_stats` listing of a listing or streaming-sink table."""
     import json
 
@@ -726,22 +728,27 @@ def read_table(
     return df if with_partition_col else df.drop(PARTITION_COLUMN)
 
 
-def _write_partitioned(
-    df: DataFrame, dest: str, grain_seconds: int, mode: str
+def write_partitioned(
+    df: DataFrame,
+    dest: str,
+    grain_seconds: int,
+    mode: str,
+    keys: tuple[str, ...] = (),
 ) -> None:
-    """Partitioned parquet write of ``df`` under ``dest``, clustered by
-    partition value first.
+    """Parquet write of ``df`` under ``dest``, partitioned by ``keys``
+    then ``pday`` and clustered by those values first.
 
     Without the clustering every upstream task writes a file into every
     pday it touches — an N_tasks × N_days small-file explosion
     (measured: a 6-period sync of 1 M rows over 30 days produced ~2 000
     files, and every later scan paid the listing + open cost).
-    Repartitioning on pday gives one file per partition; parallelism =
-    number of days touched, which is what partitioned-write throughput
-    is bounded by anyway.
+    Repartitioning on the partition values gives one file per partition;
+    parallelism = number of partitions touched, which is what
+    partitioned-write throughput is bounded by anyway.
     """
-    clustered = with_pday(df, grain_seconds).repartition(F.col(PARTITION_COLUMN))
-    clustered.write.partitionBy(PARTITION_COLUMN).mode(mode).parquet(dest)
+    by = [*keys, PARTITION_COLUMN]
+    clustered = with_pday(df, grain_seconds).repartition(*by)
+    clustered.write.partitionBy(*by).mode(mode).parquet(dest)
 
 
 def append(
@@ -754,13 +761,12 @@ def append(
     transactionally (:func:`_commit_manifest` extending each unit's file
     list); any other table — incoming — gets a plain listing append."""
     _assert_mutable(path, "batch-append into")
-    manifest = read_manifest(path)
-    if manifest is not None:
+    if read_manifest(path) is not None:
         _commit_manifest(
-            df, path, grain_seconds, manifest, replace=False, gc_min_age=gc_min_age
+            df, path, grain_seconds, replace=False, gc_min_age=gc_min_age
         )
         return
-    _write_partitioned(df, path, grain_seconds, "append")
+    write_partitioned(df, path, grain_seconds, "append")
 
 
 def overwrite_partitions(
@@ -808,16 +814,13 @@ def overwrite_partitions(
     import uuid
 
     _assert_mutable(path, "overwrite partitions of")
-    base = read_manifest(path)
-    if base is None and manifest:
-        base = _listing_as_manifest(path)
-    if base is not None:
+    if manifest or read_manifest(path) is not None:
         return _commit_manifest(
-            df, path, grain_seconds, base, replace=True, gc_min_age=gc_min_age
+            df, path, grain_seconds, replace=True, gc_min_age=gc_min_age
         )
     token = uuid.uuid4().hex[:8]
     staging = f"{path}.staging-{token}"
-    _write_partitioned(df, staging, grain_seconds, "overwrite")
+    write_partitioned(df, staging, grain_seconds, "overwrite")
     os.makedirs(path, exist_ok=True)
     installed = frozenset()
     try:
@@ -841,65 +844,76 @@ def _commit_manifest(
     df: DataFrame,
     path: str,
     grain_seconds: int,
-    base: dict[int, list[str]],
     *,
     replace: bool,
     gc_min_age: float = 0.0,
 ) -> dict[int, list[str]]:
-    """The transactional commit protocol (VERDICT r7 "What's missing" #1)
-    shared by manifest appends (``replace=False``: a unit's file list is
-    extended) and partition overwrites (``replace=True``: it is replaced).
+    """The transactional commit of ``df`` into the manifest table at
+    ``path`` (VERDICT r7 "What's missing" #1): stage its rows into a
+    dot-prefixed directory inside the table, then :func:`install_staged`
+    them.  Returns the published file map."""
+    import uuid
 
-    1. GC files the current manifest ``base`` doesn't know about — debris
-       from a crashed previous writer plus files the previous commit
-       replaced (their grace window for in-flight readers is one sync
-       cycle).  Appends run it too (ADVICE r9: an append+retention-drop-
-       only workload previously never reclaimed dropped files).
-    2. Stage the new rows into a dot-prefixed sibling dir.
-    3. Move each staged partition's files INTO the live partition dirs —
+    staging = os.path.join(path, f".staging-{uuid.uuid4().hex[:8]}")
+    write_partitioned(df, staging, grain_seconds, "overwrite")
+    try:
+        return install_staged(
+            path, staging, replace=replace, gc_min_age=gc_min_age
+        )
+    finally:
+        shutil.rmtree(staging, ignore_errors=True)
+
+
+def install_staged(
+    path: str, staged: str, *, replace: bool = False, gc_min_age: float = 0.0
+) -> dict[int, list[str]]:
+    """Commit the ``pday=N`` partitions staged under ``staged`` into the
+    manifest table at ``path``, shared by appends (``replace=False``: a
+    unit's file list is extended — sync's new buckets) and partition
+    overwrites (``replace=True``: it is replaced).  A table without a
+    manifest adopts its listing as the base first.
+
+    1. GC files the base manifest doesn't know about — debris from a crashed
+       previous writer plus files the previous commit replaced (their
+       grace window for in-flight readers is one commit cycle).  Appends
+       run it too (ADVICE r9: an append+retention-drop-only workload
+       previously never reclaimed dropped files).
+    2. Move each staged partition's files INTO the live partition dirs —
        still invisible: manifest readers don't list directories.
-    4. Commit all partitions at once: one ``os.replace`` of the manifest,
+    3. Commit all partitions at once: one ``os.replace`` of the manifest,
        then stamp the files it retired (replaced units' old files) so the
        GC min-age gate counts from RETIREMENT, not from when they were
        written (ADVICE r9).
 
-    A crash anywhere before step 4 leaves the old manifest intact —
+    A crash anywhere before step 3 leaves the old manifest intact —
     readers keep the previous whole-table snapshot (no mixed old/new
-    partitions) and the next sync's step 1 removes the debris before
-    recomputing from the surviving high-water marks.  Returns the
-    published file map.
+    partitions) and the next commit's step 1 removes the debris.
+    Returns the published file map.
     """
-    import uuid
-
+    _assert_mutable(path, "commit into")
+    base = read_manifest(path)
+    if base is None:
+        base = _listing_as_manifest(path)
     os.makedirs(path, exist_ok=True)
     _gc_unmanifested(path, base, min_age_seconds=gc_min_age)
-    staging = os.path.join(path, f".staging-{uuid.uuid4().hex[:8]}")
-    _write_partitioned(df, staging, grain_seconds, "overwrite")
     prefix = f"{PARTITION_COLUMN}="
-    try:
-        new_files = dict(base)
-        for name in sorted(os.listdir(staging)):
-            if not name.startswith(prefix):
-                continue
-            unit = int(name.split("=", 1)[1])
-            moved = [
-                os.path.join(name, f)
-                for f in _install_staged_partition(
-                    os.path.join(staging, name), os.path.join(path, name)
-                )
-            ]
-            new_files[unit] = moved if replace else new_files.get(unit, []) + moved
-        write_manifest(path, new_files)  # THE commit point
-        manifests.touch_retired(
-            path,
-            [
-                f
-                for unit, fs in base.items()
-                for f in set(fs) - set(new_files[unit])
-            ],
-        )
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
+    new_files = dict(base)
+    for name in sorted(os.listdir(staged)):
+        if not name.startswith(prefix):
+            continue
+        unit = int(name.split("=", 1)[1])
+        moved = [
+            os.path.join(name, f)
+            for f in _install_staged_partition(
+                os.path.join(staged, name), os.path.join(path, name)
+            )
+        ]
+        new_files[unit] = moved if replace else new_files.get(unit, []) + moved
+    write_manifest(path, new_files)  # THE commit point
+    manifests.touch_retired(
+        path,
+        [f for unit, fs in base.items() for f in set(fs) - set(new_files[unit])],
+    )
     return new_files
 
 
@@ -909,34 +923,27 @@ def upsert(
     schema: T.StructType,
     grain_seconds: int = SECONDS_PER_DAY,
     gc_min_age: float = 0.0,
-) -> dict | None:
+) -> None:
     """``insert or replace`` keyed on (path, timestamp) (reference
-    tsdb.py:388-410): the table's affected partitions are rewritten as
-    their kept rows plus ``rows``, and committed through the manifest
-    protocol.  A key present in both sides keeps the NEW row, so a
-    recomputed bucket replaces the stored one — for the histogram
-    table, ALL of its bins, since replacement is keyed on the bucket —
-    and a replayed streaming micro-batch rewrites identical values
+    tsdb.py:388-410) — the streaming partials sink's commit: the table's
+    affected partitions are rewritten as their kept rows plus ``rows``,
+    and committed through the manifest protocol.  A key present in both
+    sides keeps the NEW row, so an updated open bucket replaces the
+    stored one and a replayed micro-batch rewrites identical values
     instead of duplicating rows.
 
     ``rows`` is cached for the affected-partition collect and the write,
     and released in ``finally``: a failed commit leaves no pinned cache.
     When the table is the tagged empty relation (:func:`read_table`; the
-    first sync or trigger) the anti-join is skipped outright — otherwise
+    first trigger) the anti-join is skipped outright — otherwise
     ``rows`` would be shuffled by (path, timestamp) purely to anti-join a
     provably empty relation (AQE submits both join-child stages together,
     so the wasted exchange really runs).
 
     ``gc_min_age`` is the deferred GC's mtime gate
     (:func:`_gc_unmanifested`): the per-trigger streaming upsert passes a
-    grace window, the once-per-sync batch path none.  At most one writer
-    per table (``cli.exclusive_lock`` for sync, as in the reference's
-    inter-process sync lock); concurrent readers see the previous or the
-    new whole-table snapshot.
-
-    Returns the state the commit published, in :func:`table_state` form
-    (the manifest document), or None when ``rows`` is empty and nothing
-    was committed."""
+    grace window.  At most one writer per table; concurrent readers see
+    the previous or the new whole-table snapshot."""
     rows = rows.cache()
     try:
         affected = [
@@ -948,7 +955,7 @@ def upsert(
             .collect()
         ]
         if not affected:
-            return None
+            return
         existing = read_table(
             rows.sparkSession, path, schema, with_partition_col=True
         )
@@ -964,10 +971,9 @@ def upsert(
                 .join(rows, ["path", "timestamp"], "left_anti")
                 .unionByName(rows)
             )
-        published = overwrite_partitions(
+        overwrite_partitions(
             out, path, grain_seconds, manifest=True, gc_min_age=gc_min_age
         )
-        return manifests.files_payload(published)
     finally:
         rows.unpersist()
 
@@ -992,6 +998,29 @@ def partition_has_files(path: str, unit: int) -> bool:
         ):
             return True
     return False
+
+
+def column_ranges(files, column: str) -> list[tuple] | None:
+    """``(min, max)`` of ``column`` in every non-empty row group of the
+    parquet ``files``, read from their footers on the driver — no Spark
+    job.  None when some row group carries no min/max statistics (a
+    writer that skipped them, or an all-null column), so the caller must
+    scan the rows instead."""
+    import pyarrow.parquet as pq
+
+    ranges = []
+    for f in files:
+        meta = pq.read_metadata(f)
+        col = meta.schema.names.index(column)
+        for i in range(meta.num_row_groups):
+            group = meta.row_group(i)
+            if group.num_rows == 0:
+                continue
+            stats = group.column(col).statistics
+            if stats is None or not stats.has_min_max:
+                return None
+            ranges.append((stats.min, stats.max))
+    return ranges
 
 
 def drop_partitions_below(
@@ -1103,9 +1132,13 @@ def compact_partitions(
     schema: T.StructType,
     grain_seconds: int = SECONDS_PER_DAY,
     max_files: int = 1,
+    units=None,
 ) -> list[int]:
     """Rewrite fragmented partitions (more than ``max_files`` data files)
     down to one file each; returns the compacted partition values.
+    ``units``, when given, is a predicate on the partition value that
+    restricts which partitions are candidates (sync compacts only the
+    closed ones).
 
     The maintenance half of the append write path: every daemon flush,
     streaming micro-batch, and ``insert`` call appends one file per
@@ -1128,7 +1161,9 @@ def compact_partitions(
     metadata-transactional drop-in, same call shape.
     """
     fragmented = sorted(
-        u for u, n in partition_file_counts(path).items() if n > max_files
+        u
+        for u, n in partition_file_counts(path).items()
+        if n > max_files and (units is None or units(u))
     )
     if not fragmented:
         return []

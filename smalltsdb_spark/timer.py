@@ -76,8 +76,7 @@ class Timer:
         self._local = threading.local()
         #: the last finished outermost block's timings, from any thread
         #: (the context value is reset on exit; this survives for
-        #: after-the-fact collection, e.g. merging per-thread timers in
-        #: TablesTSDB.sync)
+        #: after-the-fact collection, e.g. the phases of the last sync)
         self.collected: list[tuple[str, float, float]] = []
 
     def _state(self):

@@ -16,27 +16,29 @@ logical model and method signatures, re-expressed over DataFrames:
                      readers this is pure API parity, not a locking fix.
 
 ``sync()`` replaces the reference's per-path Python loop (tsdb.py:371-410)
-with one set-based plan per period: a broadcast join of incoming against
-the per-path high-water marks, a single windowed aggregation, and a
-dynamic-partition-overwrite upsert.  Same finality semantics (the
-``intervals()`` kernel), executed as 6 independent distributed jobs instead
-of ``paths × periods`` serial SQLite queries — for the periods that have
-something to finalize.
+with one set-based plan for all the periods that have something to
+finalize: incoming tagged once per period, a broadcast join against every
+table's per-path high-water marks, a single aggregation grouped by
+``(period, path, bucket)`` and a single write, which each period table
+then takes its slice of by a manifest append.  Same finality semantics
+(the ``intervals()`` kernel), executed as one distributed pass instead of
+``paths × periods`` serial SQLite queries.
 """
 
 from __future__ import annotations
 
 import datetime
 import os
+import shutil
 import threading
 import time
+import uuid
 from functools import reduce
 from operator import itemgetter
 from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from smalltsdb_spark import storage
 from smalltsdb_spark.config import (
@@ -46,7 +48,8 @@ from smalltsdb_spark.config import (
     validate_stat,
 )
 from smalltsdb_spark.intervals import final_end
-from smalltsdb_spark.operators.aggregate import aggregate
+from smalltsdb_spark.manifests import is_hidden_name
+from smalltsdb_spark.operators.aggregate import aggregate, value_histogram
 from smalltsdb_spark.schemas import (
     AGG_SCHEMA,
     HIST_SCHEMA,
@@ -57,6 +60,11 @@ from smalltsdb_spark.timer import Timer
 from smalltsdb_spark.utils import coerce_epoch
 
 Datapoint = tuple[str, float, float]
+
+#: sync's tag column: the index of a due table in one pass
+_TABLE = "_table"
+#: name prefix of sync's staging directory under the store root
+_STAGING = ".sync-staging-"
 
 
 def _sorted_rows(
@@ -121,9 +129,10 @@ class BaseTSDB:
         for period in self.retention:
             validate_period(period, self.period_seconds)
         # storage partition grain (r5/r6 verdict item): 'day' (default)
-        # or 'hour'.  Hour-grain shrinks the upsert/retention rewrite
-        # unit 24× — on a hot table one late bucket rewrites an hour,
-        # not the whole day — at 24× the partition count; fixed at store
+        # or 'hour'.  Hour-grain shrinks the compaction/retention
+        # rewrite unit 24× — sync compacts a partition once it closes,
+        # an hour after its first append instead of a day — at 24× the
+        # partition count; fixed at store
         # creation (mismatched grains would silently mix incompatible
         # pday values, so open validates eagerly and the first write
         # pins a root marker — storage.pin_grain).
@@ -224,9 +233,9 @@ class BaseTSDB:
     def _pin_grain(self) -> None:
         """Write-path hook: pin the grain markers (first write creates
         them; later opens with a different grain then fail eagerly).
-        Serialized per handle — sync's six concurrent period workers all
-        pin on their first upsert, and pin-once is cheaper than six
-        racing tmp+rename sequences."""
+        Serialized per handle — an insert (the daemon's flush thread) and
+        a sync may both pin first, and pin-once is cheaper than racing
+        tmp+rename sequences."""
         with self._grain_lock:
             if self._grain_pinned:
                 return
@@ -423,7 +432,7 @@ class BaseTSDB:
         first (one TakeOrderedAndProject job, so the driver never holds
         more than that) and ``offset`` is sliced off here.  The order is
         the one ``get_metric_df`` returns: ``timestamp`` is unique per
-        row (period tables are upserted on ``(path, timestamp)``, the
+        row (period tables hold one row per ``(path, timestamp)``, the
         partial union anti-joins on it, bounds have one row per bucket),
         and Python's float order is Spark's for finite doubles.
 
@@ -790,6 +799,51 @@ class TablesTSDB(BaseTSDB):
 
     # -- incremental sync ---------------------------------------------------
 
+    def _eligible_rows(self, incoming: DataFrame, due: list[tuple]) -> DataFrame:
+        """Rows in each due table's final interval, per path half-open
+        ``[last_final + period, final_end)``.  ``due`` lists one
+        ``(period seconds, final_end, high-water-mark source)`` per
+        table; an ``inline`` of literal tags copies each row once per
+        table (a generator, not a join), table ``i``'s copy carrying
+        ``_table = i`` and ``_seconds``.  Set-based replacement of the
+        reference's per-path loop (tsdb.py:371-410): one ``groupBy`` over
+        the sources' union gives every table's per-path high-water marks,
+        tiny enough to broadcast.  ``coalesce(last_final + s, 0)``
+        encodes ``last_final=None ⇒ -period`` (intervals.py).  A source
+        tagged as the known-empty relation (every first sync) adds no
+        marks; when all are, the join is skipped (guide §2.4)."""
+        ts = F.col("timestamp")
+        tags = F.array(
+            *[
+                F.struct(
+                    F.lit(i).alias(_TABLE),
+                    F.lit(seconds).alias("_seconds"),
+                    F.lit(fe).alias("_fe"),
+                )
+                for i, (seconds, fe, _src) in enumerate(due)
+            ]
+        )
+        rows = (
+            incoming.filter(ts < F.lit(max(fe for _s, fe, _src in due)))
+            .select("path", "timestamp", "value", F.inline(tags))
+            .filter(ts < F.col("_fe"))
+        )
+        hwms = [
+            src.select(F.lit(i).alias(_TABLE), "path", "timestamp")
+            for i, (_s, _fe, src) in enumerate(due)
+            if not getattr(src, "_smalltsdb_empty_relation", False)
+        ]
+        low = F.lit(0.0)
+        if hwms:
+            hwm = (
+                reduce(DataFrame.union, hwms)
+                .groupBy(_TABLE, "path")
+                .agg(F.max("timestamp").alias("_last_final"))
+            )
+            rows = rows.join(F.broadcast(hwm), [_TABLE, "path"], "left")
+            low = F.coalesce(F.col("_last_final") + F.col("_seconds"), low)
+        return rows.filter(ts >= low).drop("_fe", "_last_final")
+
     def _eligible(
         self,
         incoming: DataFrame,
@@ -797,67 +851,23 @@ class TablesTSDB(BaseTSDB):
         now: float,
         hwm_from: DataFrame | None = None,
     ) -> DataFrame:
-        """Rows in each path's final interval: half-open
-        ``[last_final + period, floor((now - tail)/period)*period)``.
-
-        Set-based replacement of the reference's per-path loop
-        (tsdb.py:371-410): per-path high-water marks are tiny (one row per
-        metric), so the join is broadcast — no shuffle of the raw data
-        beyond the aggregation's own.
-
-        ``coalesce(last_final + s, 0)`` encodes ``last_final=None ⇒
-        -period`` (intervals.py): never-synced paths start at bucket 0.
-
-        ``hwm_from`` overrides the high-water-mark source relation (the
-        persisted histogram table advances by its own HWM, same finality
-        rule).
-        """
+        """:meth:`_eligible_rows` of one table, untagged, whose marks come
+        from the ``seconds`` period's table or from ``hwm_from``."""
+        if hwm_from is None:
+            hwm_from = self.period_table(
+                next(n for n, s in self.periods if s == seconds)
+            )
         fe = float(final_end(seconds, self.tail, now))
-        src = (
-            self.period_table_name_df(seconds)
-            if hwm_from is None
-            else hwm_from
+        return self._eligible_rows(incoming, [(seconds, fe, hwm_from)]).drop(
+            _TABLE, "_seconds"
         )
-        if getattr(src, "_smalltsdb_empty_relation", False):
-            # fresh/empty HWM table (every first sync): a left join
-            # against a provably empty relation tags every row
-            # _last_final=null and the filter reduces to the coalesce
-            # fallback — so skip the per-period HWM aggregation +
-            # broadcast build outright (guide §2.4); the filters below
-            # are exactly what the join path evaluates to
-            return incoming.filter(F.col("timestamp") >= F.lit(0.0)).filter(
-                F.col("timestamp") < F.lit(fe)
-            )
-        hwm = src.groupBy("path").agg(F.max("timestamp").alias("_last_final"))
-        return (
-            incoming.join(F.broadcast(hwm), "path", "left")
-            .filter(
-                F.col("timestamp")
-                >= F.coalesce(F.col("_last_final") + F.lit(float(seconds)), F.lit(0.0))
-            )
-            .filter(F.col("timestamp") < F.lit(fe))
-            .drop("_last_final")
-        )
-
-    def period_table_name_df(self, seconds: int) -> DataFrame:
-        name = next(n for n, s in self.periods if s == seconds)
-        return self.period_table(name)
-
-    def _upsert(
-        self, new_rows: DataFrame, path: str, schema: T.StructType
-    ) -> dict | None:
-        """``insert or replace`` of a period or histogram table's new
-        buckets — :func:`storage.upsert`, after pinning the grain the
-        write lays its partitions out by.  Returns the published state,
-        or None when there was nothing to commit."""
-        self._pin_grain()
-        return storage.upsert(new_rows, path, schema, self.grain_seconds)
 
     def compact(self, max_files_per_partition: int = 1) -> dict[str, list[int]]:
-        """Incoming plus every period table.  Sync's own upsert writes one
-        file per partition already (storage._write_partitioned); the
-        fragmenting writers for period tables are append-mode STREAMING
-        rollups (streaming/pipeline.start_rollup) sharing the store."""
+        """Incoming plus every period table.  Sync compacts each period
+        table's closed partitions itself; what is left for this pass are
+        sync's open partitions (one file per sync that appended to them)
+        and the period tables of append-mode STREAMING rollups
+        (streaming/pipeline.start_rollup) sharing the store."""
         out = super().compact(max_files_per_partition)
         for name, _seconds in self.periods:
             out[name] = storage.compact_partitions(
@@ -881,25 +891,28 @@ class TablesTSDB(BaseTSDB):
         """Advance finalized aggregates for every period, then apply
         retention to incoming (reference tsdb.py:305-420).
 
-        ``timeout`` bounds the whole sync via :meth:`query_timeout`
-        (reference TODO tsdb.py:349).  The per-period workers run under
-        the same job group — ``InheritableThread`` propagates the
-        group's thread-local JVM properties, which plain threads would
-        not under pinned-thread mode — so one cancel reaches every
-        period's jobs.  A timed-out sync leaves aggregates consistent:
-        each period's upsert is an atomic partition overwrite that
-        either fully commits or not at all, and a later sync resumes
-        from the surviving high-water marks.
+        **One pass, appended.**  The due periods' new buckets come from
+        one plan (:meth:`_eligible_rows`, one aggregation by ``(table,
+        path, bucket)``, one write into a hidden staging directory under
+        the store root); each table takes its slice by a manifest append
+        (:func:`storage.install_staged`), and one with no new rows
+        commits nothing.  Appending is exact: a path's new rows start at
+        ``last_final + period``, above every key the table holds for it
+        (the reference's ``insert or replace`` never replaces either).  A
+        table that took rows then compacts its closed partitions (ending
+        at or before its ``final_end``); the open one is only appended
+        to.  The persisted histogram (``histograms=True``, buckets
+        ``hist_fine_seconds`` wide) runs its own ``value_histogram`` plan
+        after the pass, under the same rule and append; its retention
+        follows the finest period's.
 
-        The per-period jobs are independent (SURVEY.md §3.2 — the
-        reference's sequential loop is a single-core artifact), so they
-        are submitted as concurrent Spark jobs, one worker thread per
-        period (plus one for the histogram), and the scheduler
-        interleaves their stages across the cluster; incoming is
-        persisted for the duration so the raw data is materialized once,
-        not once per period (MEMORY_AND_DISK — spills, never OOMs).
-        Results do not depend on the interleaving: no period reads
-        another's output, and retention runs strictly after all periods.
+        ``timeout`` bounds the whole sync via :meth:`query_timeout`
+        (reference TODO tsdb.py:349).  Each table commits atomically, so
+        a sync that fails or times out leaves every table on a whole
+        snapshot and skips retention (raw data is never deleted under a
+        failed aggregate); the next sync, under the writer lock
+        (``cli.exclusive_lock``), removes its debris and resumes from the
+        committed high-water marks.
 
         **Idle periods are skipped on the driver.**  Each successful sync
         leaves a record on the handle (in memory only — a fresh handle's
@@ -920,21 +933,20 @@ class TablesTSDB(BaseTSDB):
            so the next sync re-runs that period.
 
         A full run of such a period would compute an eligible set that is
-        already upserted and commit nothing, so the store ends
+        already committed and commit nothing, so the store ends
         byte-identical either way.  Retention is skipped iff condition 2
-        holds and the cutoff is unchanged.  Incoming is read and persisted
-        only when some period runs, so a sync with nothing to finalize
-        submits no Spark job.  A sync that raises records nothing.
+        holds and the cutoff is unchanged.  Incoming is read only when
+        some table runs, so a sync with nothing to finalize submits no
+        Spark job.  A sync that raises records nothing.
 
         Every phase is timed; with ``emit_metrics=True`` the timings are
         re-ingested as ordinary datapoints (T6, reference tsdb.py:310-337)
-        under ``[<prefix>.]sync.<period>.<phase>.<clock>`` names, built
-        by one timer per worker thread, each under the handle timer's
-        current prefix.  The re-ingested file is new to incoming, so the
-        following sync runs.
+        under ``[<prefix>.]sync.<table>.<phase>.<clock>`` names —
+        ``<table>.all`` times a table's install, compaction and
+        retention, ``<table>.upsert_query`` its manifest commit (the
+        reference's label).  The re-ingested file is new to incoming, so
+        the following sync runs.
         """
-        from pyspark import InheritableThread, StorageLevel
-
         now = self._now()
         cutoff = now - self.tail - max(s for _, s in self.periods)
         # taken before self.incoming() lists the files its relation reads
@@ -942,166 +954,139 @@ class TablesTSDB(BaseTSDB):
         last = self._synced
         quiet = last is not None and seen <= last.covered
         fine_name, _ = min(self.periods, key=lambda p: p[1])
-        hist_path = os.path.join(self.path, "histogram")
+        tables = list(self.periods)
+        if self.histograms:
+            tables.append(("histogram", self.hist_fine_seconds))
+
+        def retained(name: str) -> str:
+            """The period whose retention ``name`` follows."""
+            return fine_name if name == "histogram" else name
+
         keys = {
-            name: self._finality_key(seconds, name, now)
-            for name, seconds in self.periods
+            name: self._finality_key(seconds, retained(name), now)
+            for name, seconds in tables
         }
-        keys["histogram"] = self._finality_key(
-            self.hist_fine_seconds, fine_name, now
-        )
-        # (finality key, table state) of every table that runs; a worker
-        # records the state before its own retention drop
-        ran: dict[str, tuple] = {}
+        # (finality key, table state) of every table that runs, with the
+        # state its high-water marks are computed against — read before
+        # any relation lists the table's files
+        ran = {
+            name: (keys[name], storage.table_state(self._period_path(name)))
+            for name, _seconds in tables
+        }
+        if quiet:
+            ran = {n: r for n, r in ran.items() if last.tables.get(n) != r}
+        periods = [(n, s) for n, s in self.periods if n in ran]
+        grain = self.grain_seconds
+        for name in os.listdir(self.path) if os.path.isdir(self.path) else []:
+            if name.startswith(_STAGING):  # a failed sync's debris
+                shutil.rmtree(os.path.join(self.path, name), ignore_errors=True)
+        staging = os.path.join(self.path, f"{_STAGING}{uuid.uuid4().hex[:8]}")
 
-        def idle(table: str, path: str) -> bool:
-            return quiet and last.tables.get(table) == (
-                keys[table],
-                storage.table_state(path),
-            )
-
-        def run_period(name: str, seconds: int, timer: Timer) -> None:
+        def commit(name: str, staged: str, schema) -> None:
+            """Append ``name``'s staged slice, compact its closed
+            partitions, record its state, then apply its retention."""
             path = self._period_path(name)
-            with timer(name, "all"):
-                state = storage.table_state(path)
+            appended = os.path.isdir(staged)
+            with self.timer("upsert_query"):
+                if appended:
+                    storage.install_staged(path, staged)
+            if appended:
+                fe = keys[name][0]
+                storage.compact_partitions(
+                    self.spark,
+                    path,
+                    schema,
+                    grain,
+                    units=lambda u: (u + 1) * grain <= fe,
+                )
+                ran[name] = (keys[name], storage.table_state(path))
+            if retained(name) in self.retention:
+                storage.drop_partitions_below(
+                    path, now - self.retention[retained(name)], grain
+                )
+
+        with self.timer("sync", "all") as timings, self.query_timeout(timeout):
+            if ran:
+                self._pin_grain()
+                incoming = self.incoming()
+            if "histogram" in ran:
+                hist_hwm = self._histogram_source(fine_name)
+            if periods:
                 new_rows = aggregate(
-                    self._eligible(incoming, seconds, now),
-                    seconds,
-                    exact=self.exact_percentiles,
-                )
-                with timer("upsert_query"):
-                    published = self._upsert(new_rows, path, AGG_SCHEMA)
-                ran[name] = (
-                    keys[name],
-                    state if published is None else published,
-                )
-                if name in self.retention:
-                    storage.drop_partitions_below(
-                        path, now - self.retention[name], self.grain_seconds
-                    )
-
-        def run_hist(timer: Timer) -> None:
-            """Advance the persisted fine histogram (histograms=True) —
-            an extra independent per-sync job: same finality window and
-            HWM discipline as the periods, but at ``hist_fine_seconds``
-            buckets (decoupled from the finest period — VERDICT r11
-            item 2: at a 1 s finest period the histogram is
-            ≈ raw-sized; 60 s default gives 60–3600× compression), the
-            HWM comes from the histogram table itself, the aggregate is
-            the mergeable value_histogram, and replacement stays
-            bucket-keyed (one bucket replaces all its bins).  Retention
-            follows the finest period's configured retention."""
-            import warnings
-
-            from smalltsdb_spark.operators.aggregate import value_histogram
-
-            fine_seconds = self.hist_fine_seconds
-            with timer("histogram", "all"):
-                self._pin_hist_geometry()
-                state = storage.table_state(hist_path)
-                existing = storage.read_table(
-                    self.spark, hist_path, HIST_SCHEMA
-                )
-                # the empty-relation tag decides emptiness without a
-                # Spark job (an upsert never commits an empty table)
-                if getattr(existing, "_smalltsdb_empty_relation", False):
-                    fine_tbl = self.period_table(fine_name)
-                    if not getattr(
-                        fine_tbl, "_smalltsdb_empty_relation", False
-                    ) and fine_tbl.limit(1).count():
-                        # histograms enabled on a store with pre-existing
-                        # history: the histogram HWM starts from scratch,
-                        # but incoming retention may already have dropped
-                        # the raw rows behind old buckets — those buckets
-                        # will be silently ABSENT from bounds reads
-                        # (ADVICE r11: rows missing, not wrong)
-                        warnings.warn(
-                            "histogram table is empty but period tables "
-                            "have history: buckets whose raw rows predate "
-                            "retained incoming will be missing from bounds "
-                            "reads — enable histograms=True at store "
-                            "creation to avoid the gap",
-                            stacklevel=2,
-                        )
-                new_rows = value_histogram(
-                    self._eligible(
-                        incoming, fine_seconds, now, hwm_from=existing
+                    self._eligible_rows(
+                        incoming,
+                        [(s, keys[n][0], self.period_table(n)) for n, s in periods],
                     ),
-                    fine_seconds,
-                    bin_width=self.hist_bin_width,
-                    clamp_bin=self.hist_clamp_bin,
+                    F.col("_seconds"),
+                    exact=self.exact_percentiles,
+                    keys=(_TABLE,),
                 )
-                with timer("upsert_query"):
-                    published = self._upsert(new_rows, hist_path, HIST_SCHEMA)
-                ran["histogram"] = (
-                    keys["histogram"],
-                    state if published is None else published,
+                storage.write_partitioned(
+                    new_rows, staging, grain, "overwrite", keys=(_TABLE,)
                 )
-                if fine_name in self.retention:
-                    storage.drop_partitions_below(
-                        hist_path,
-                        now - self.retention[fine_name],
-                        self.grain_seconds,
+            for i, (name, _seconds) in enumerate(periods):
+                with self.timer(name, "all"):
+                    staged = os.path.join(staging, f"{_TABLE}={i}")
+                    commit(name, staged, AGG_SCHEMA)
+            if "histogram" in ran:
+                with self.timer("histogram", "all"):
+                    fine = self.hist_fine_seconds
+                    staged = os.path.join(staging, "histogram")
+                    new_rows = value_histogram(
+                        self._eligible(incoming, fine, now, hwm_from=hist_hwm),
+                        fine,
+                        bin_width=self.hist_bin_width,
+                        clamp_bin=self.hist_clamp_bin,
                     )
-
-        jobs = [
-            (run_period, (name, seconds))
-            for name, seconds in self.periods
-            if not idle(name, self._period_path(name))
-        ]
-        if self.histograms and not idle("histogram", hist_path):
-            jobs.append((run_hist, ()))
-        incoming = (
-            self.incoming().persist(StorageLevel.MEMORY_AND_DISK) if jobs else None
-        )
-        try:
-            with self.timer("sync", "all") as timings, self.query_timeout(timeout):
-                prefix = self.timer.prefix  # ends in 'sync'
-                subs = [Timer(clocks=self.timer.clocks, prefix=prefix) for _ in jobs]
-                # worker exceptions must PROPAGATE (r12): a plain thread
-                # swallows them, so a failed period upsert would leave
-                # that period silently stale and a timed-out sync would
-                # return success; the first failure re-raises after all
-                # workers join (inside query_timeout, so a cancellation
-                # still surfaces as TimeoutError), and retention is
-                # skipped — raw data is never deleted under a failed
-                # aggregate
-                errors: list[BaseException] = []
-
-                def guarded(fn, args, t) -> None:
-                    try:
-                        fn(*args, t)
-                    except BaseException as e:  # noqa: BLE001
-                        errors.append(e)
-
-                threads = [
-                    InheritableThread(target=guarded, args=(fn, args, t))
-                    for (fn, args), t in zip(jobs, subs)
-                ]
-                for th in threads:
-                    th.start()
-                for th in threads:
-                    th.join()
-                for t in subs:
-                    timings.extend(t.collected)
-                if errors:
-                    raise errors[0]
-                with self.timer("delete_incoming_query"):
-                    installed = (
-                        frozenset()
-                        if quiet and last.cutoff == cutoff
-                        else self._retention(cutoff, seen)
-                    )
-                self._synced = _Synced(
-                    covered=seen | installed,
-                    tables={**(last.tables if last else {}), **ran},
-                    cutoff=cutoff,
+                    storage.write_partitioned(new_rows, staged, grain, "overwrite")
+                    commit("histogram", staged, HIST_SCHEMA)
+            with self.timer("delete_incoming_query"):
+                installed = (
+                    frozenset()
+                    if quiet and last.cutoff == cutoff
+                    else self._retention(cutoff, seen)
                 )
-        finally:
-            if incoming is not None:
-                incoming.unpersist()
+            self._synced = _Synced(
+                covered=seen | installed,
+                tables={**(last.tables if last else {}), **ran},
+                cutoff=cutoff,
+            )
+        shutil.rmtree(staging, ignore_errors=True)
         if self.emit_metrics:
             self.insert(timings)
+
+    def _histogram_source(self, fine_name: str) -> DataFrame:
+        """The persisted fine histogram, after pinning its geometry, as
+        sync's high-water-mark source.  Called before the pass commits,
+        so the finest table's history below predates this sync."""
+        import warnings
+
+        self._pin_hist_geometry()
+        existing = storage.read_table(
+            self.spark, self._period_path("histogram"), HIST_SCHEMA
+        )
+        # the empty-relation tag decides emptiness without a Spark job
+        # (a commit never leaves an empty table)
+        if getattr(existing, "_smalltsdb_empty_relation", False):
+            fine_tbl = self.period_table(fine_name)
+            if not getattr(
+                fine_tbl, "_smalltsdb_empty_relation", False
+            ) and fine_tbl.limit(1).count():
+                # histograms enabled on a store with pre-existing
+                # history: the histogram HWM starts from scratch, but
+                # incoming retention may already have dropped the raw
+                # rows behind old buckets — those buckets will be
+                # silently ABSENT from bounds reads (ADVICE r11: rows
+                # missing, not wrong)
+                warnings.warn(
+                    "histogram table is empty but period tables "
+                    "have history: buckets whose raw rows predate "
+                    "retained incoming will be missing from bounds "
+                    "reads — enable histograms=True at store "
+                    "creation to avoid the gap",
+                    stacklevel=3,
+                )
+        return existing
 
     def _finality_key(self, seconds: int, retention_period: str, now: float):
         """What a table's sync depends on from the clock: its finality
@@ -1118,9 +1103,10 @@ class TablesTSDB(BaseTSDB):
         """``delete from incoming where timestamp < cutoff`` with
         ``cutoff = now - tail - max_period`` (tsdb.py:412-420):
         whole-partition drops below the cutoff's partition (day or hour
-        grain), plus a rewrite of the boundary partition, which one
-        aggregation probes for rows on both sides of the cutoff (a
-        single scan of the partition).
+        grain), plus a rewrite of the boundary partition when it holds
+        rows on both sides of the cutoff — read off its files' row-group
+        ``timestamp`` min/max on the driver, or, when a row group has no
+        statistics or a sink log picks the files, by one aggregation.
 
         Returns the :func:`storage.file_stats` records of the files the
         rewrite installed, for sync's record of what its periods have
@@ -1165,9 +1151,22 @@ class TablesTSDB(BaseTSDB):
             self.incoming_path, f"{storage.PARTITION_COLUMN}={boundary_unit}"
         )
         ts = F.col("timestamp")
-        doomed, survivors = boundary.agg(
-            F.max(ts < cutoff), F.max(ts >= cutoff)
-        ).first()
+        files = [
+            os.path.join(self.incoming_path, rel)
+            for rel, _size, _mtime in listed
+            if rel.endswith(".parquet")
+            and not any(map(is_hidden_name, rel.split(os.sep)))
+        ]
+        ranges = None
+        if not storage.is_streaming_sink(self.incoming_path):
+            ranges = storage.column_ranges(files, "timestamp")
+        if ranges is None:
+            doomed, survivors = boundary.agg(
+                F.max(ts < cutoff), F.max(ts >= cutoff)
+            ).first()
+        else:
+            doomed = any(lo < cutoff for lo, _hi in ranges)
+            survivors = any(hi >= cutoff for _lo, hi in ranges)
         if not doomed:
             return frozenset()
         if not survivors:

@@ -14,6 +14,53 @@ from pyspark.sql import functions as F
 from smalltsdb_spark.tsdb import TablesTSDB, TwoDatabasesTSDB
 
 
+def _file_keys(files, schema_names) -> list[tuple]:
+    """The ``(path, timestamp[, bin])`` keys of parquet ``files``, read
+    with pyarrow (no Spark job, so a job count around a sync is unmoved)."""
+    import pyarrow.parquet as pq
+
+    cols = ["path", "timestamp", *(["bin"] if "bin" in schema_names else [])]
+    keys = []
+    for f in files:
+        t = pq.read_table(f, columns=cols)
+        keys.extend(zip(*(t[c].to_pylist() for c in cols)))
+    return keys
+
+
+@pytest.fixture(autouse=True)
+def appends_never_collide(monkeypatch):
+    """Test-only spy on sync's install step, for every test here: the
+    keys a manifest append stages are unique and disjoint from the
+    table's committed keys — the invariant that lets sync append where
+    the reference replaces.  Returns the appended tables' paths."""
+    import pyarrow.parquet as pq
+
+    from smalltsdb_spark import manifests, storage
+
+    real = storage.install_staged
+    appended = []
+
+    def spy(path, staged, *, replace=False, **kw):
+        staged_files = manifests.collect_parquets(staged)
+        if not replace and staged_files:
+            committed = storage.read_manifest(path)
+            if committed is None:
+                committed = storage._listing_as_manifest(path)
+            names = pq.read_schema(staged_files[0]).names
+            new = _file_keys(staged_files, names)
+            old = _file_keys(
+                [os.path.join(path, f) for fs in committed.values() for f in fs],
+                names,
+            )
+            assert len(set(new)) == len(new), f"duplicate staged keys in {path}"
+            assert set(new).isdisjoint(old), f"an append to {path} collides"
+            appended.append(path)
+        return real(path, staged, replace=replace, **kw)
+
+    monkeypatch.setattr(storage, "install_staged", spy)
+    return appended
+
+
 def rows_n(db):
     return [
         (r.path, r.timestamp, r.n)
@@ -931,26 +978,24 @@ def test_histograms_enabled_late_warns_about_missing_history(spark, tsdb_dir):
 def test_concurrent_sync_propagates_worker_failure(
     spark, tsdb_dir, monkeypatch
 ):
-    """r12: the default CONCURRENT sync must re-raise a period worker's
-    failure — a plain thread swallows it, leaving the period silently
-    stale while sync reports success (and a timed-out concurrent sync
-    would never surface its TimeoutError).  Retention must not run
-    under a failed aggregate (raw rows would be deleted before ever
-    being aggregated)."""
+    """r12: sync must re-raise a failed table commit instead of leaving
+    the period silently stale while sync reports success.  Retention
+    must not run under a failed aggregate (raw rows would be deleted
+    before ever being aggregated)."""
     from smalltsdb_spark import storage
 
     clock = {"now": 100.0}
     db = TablesTSDB(spark, tsdb_dir, now=lambda: clock["now"])
     db.insert([("m", 1.0, 1.0)])
 
-    real = storage.overwrite_partitions
+    real = storage.install_staged
     def exploding(*a, **kw):
         raise OSError("injected worker failure")
 
-    monkeypatch.setattr(storage, "overwrite_partitions", exploding)
+    monkeypatch.setattr(storage, "install_staged", exploding)
     with pytest.raises(OSError, match="injected worker failure"):
         db.sync()
-    monkeypatch.setattr(storage, "overwrite_partitions", real)
+    monkeypatch.setattr(storage, "install_staged", real)
     # the raw row survived (retention skipped) and a retry completes
     assert db.incoming().count() == 1
     db.sync()
@@ -1328,3 +1373,323 @@ def test_idle_sync_matches_full_sync_on_a_random_schedule(
             continue
         dirty = True
     twins.sync()
+
+
+# ---------------------------------------------------------------------------
+# Sync as one append-only pass
+# ---------------------------------------------------------------------------
+
+DAY = 86400.0
+
+
+def _points(rng, paths, lo, hi, n):
+    """``n`` points spread evenly over ``[lo, hi)`` on random paths."""
+    step = (hi - lo) / n
+    return [
+        (rng.choice(paths), lo + i * step + rng.uniform(0, step), float(rng.randint(0, 99)))
+        for i in range(n)
+    ]
+
+
+def _staging_dirs(base):
+    return [n for n in os.listdir(base) if n.startswith(".sync-staging-")]
+
+
+def test_non_idle_sync_is_at_most_ten_jobs(
+    spark, tsdb_dir, count_jobs, appends_never_collide
+):
+    """An hourly tick over the six default periods, a day of history and
+    incoming retention in steady state: one HWM aggregate, one
+    aggregation and one write for all six tables, then six manifest
+    appends — at most 10 Spark jobs, where one job chain per period
+    took about 60."""
+    import random
+
+    rng = random.Random(11)
+    paths = [f"m{i}" for i in range(200)]
+    t0 = 20 * DAY + 1800.0
+    clock = {"now": t0}
+    db = TablesTSDB(spark, tsdb_dir, now=lambda: clock["now"])
+    db.insert(_points(rng, paths, t0 - 25 * 3600.0, t0, 25 * 200))
+    db.sync()
+    for k in (1, 2):
+        db.insert(_points(rng, paths, t0 + (k - 1) * 3600.0, t0 + k * 3600.0, 200))
+        clock["now"] = t0 + k * 3600.0
+        appends_never_collide.clear()
+        assert count_jobs(db.sync) <= 10
+        # non-idle: every table below a day took new buckets
+        assert sorted(appends_never_collide) == sorted(
+            db._period_path(name) for name, s in db.periods if s < DAY
+        )
+    assert _staging_dirs(tsdb_dir) == []
+
+
+def test_sync_across_a_day_boundary_compacts_only_closed_partitions(
+    spark, tmp_path
+):
+    """Hourly syncs from 21:00 to 02:00: each sync appends one file to a
+    table's open day partition and never rewrites it, and the first
+    sync whose ``final_end`` passes midnight compacts the closed day to
+    one live file with the same rows — every store equal to a fresh
+    handle's full sync throughout."""
+    from smalltsdb_spark import storage
+    from smalltsdb_spark.intervals import final_end
+
+    clock = {"now": DAY - 3 * 3600.0}
+    twins = _Twins(spark, tmp_path, clock)
+    db = twins.db
+    open_files = {}
+    compacted = set()
+    for _ in range(5):
+        lo = clock["now"]
+        twins.insert(
+            [(p, lo + s + 7.0, float(s)) for p in ("a", "b") for s in range(0, 3600, 600)]
+        )
+        clock["now"] = lo + 3600.0
+        before = {
+            name: storage.read_manifest(db._period_path(name)) or {}
+            for name, _ in twins.PERIODS
+        }
+        twins.sync()
+        for name, seconds in twins.PERIODS:
+            fe = final_end(seconds, db.tail, clock["now"])
+            manifest = storage.read_manifest(db._period_path(name)) or {}
+            for unit, files in manifest.items():
+                if (unit + 1) * DAY <= fe:
+                    assert len(files) == 1, (name, unit)
+                    if len(before[name].get(unit, [])) > 1:
+                        compacted.add(name)
+                else:  # open: appended to, never rewritten
+                    assert set(open_files.get((name, unit), [])) <= set(files)
+                    open_files[(name, unit)] = files
+    assert compacted == {name for name, _ in twins.PERIODS}
+    assert len(open_files[("tensecond", 1)]) == 2  # two syncs into day 1
+
+
+@pytest.mark.parametrize("fail_at", [1, 2], ids=["before-first", "between-tables"])
+def test_sync_crash_between_installs_leaves_whole_table_snapshots(
+    spark, tmp_path, monkeypatch, fail_at
+):
+    """Crash injection after the one write: before the first table's
+    install, and between two tables' installs.  Readers see each table
+    at its old or its new whole snapshot; the failed sync leaves no
+    persisted RDD and no sync record, only its staging directory; the
+    next sync removes that debris and ends equal to a store that never
+    crashed."""
+    from smalltsdb_spark import storage
+
+    clock = {"now": 4_000.0}
+    twins = _Twins(spark, tmp_path, clock)
+    db = twins.db
+    names = [name for name, _ in twins.PERIODS]
+    twins.insert([(p, t, 1.0) for p in ("a", "b") for t in (5.0, 1_500.0, 2_900.0)])
+    twins.sync()
+    twins.insert([(p, t, 2.0) for p in ("a", "b") for t in (3_950.0, 4_100.0)])
+    clock["now"] = 8_000.0
+
+    def snapshot():
+        reader = TablesTSDB(spark, db.path, **twins.kw)
+        return {
+            name: sorted(map(tuple, reader.period_table(name).collect()))
+            for name in names
+        }
+
+    old = snapshot()
+    manifests_before = _manifests(db.path, names)
+    real = storage.install_staged
+    calls = []
+
+    def crashing(path, *a, **kw):
+        calls.append(path)
+        if len(calls) == fail_at:
+            raise OSError("injected crash between installs")
+        return real(path, *a, **kw)
+
+    jsc = spark.sparkContext._jsc
+    persisted_before = set(jsc.getPersistentRDDs().keys())
+    synced = db._synced
+    monkeypatch.setattr(storage, "install_staged", crashing)
+    with pytest.raises(OSError, match="injected crash"):
+        db.sync()
+    monkeypatch.setattr(storage, "install_staged", real)
+    assert db._synced is synced
+    assert set(jsc.getPersistentRDDs().keys()) <= persisted_before
+    assert len(_staging_dirs(db.path)) == 1
+
+    mid = snapshot()
+    committed = {os.path.basename(p) for p in calls[: fail_at - 1]}
+    manifests_mid = _manifests(db.path, names)
+    for name in names:
+        if name in committed:
+            assert mid[name] != old[name]
+        else:
+            assert manifests_mid[name] == manifests_before[name]
+            assert mid[name] == old[name]
+
+    twins.sync()  # the retry, compared with a never-crashed store
+    assert _staging_dirs(db.path) == []
+    after = snapshot()
+    for name in committed:
+        assert after[name] == mid[name]  # the new whole snapshot, kept
+
+
+class _KeyedTwins(_Twins):
+    """:class:`_Twins` whose comparison also checks that every table's
+    keys are unique, and covers the persisted histogram."""
+
+    def rows(self, base):
+        from smalltsdb_spark import storage
+
+        out = super().rows(base)
+        db = TablesTSDB(self.spark, base, **self.kw)
+        if db.histograms:
+            out["histogram"] = sorted(
+                map(
+                    tuple,
+                    db._histogram_table().drop(storage.PARTITION_COLUMN).collect(),
+                )
+            )
+        for name, rows in out.items():
+            if name != "incoming":
+                width = 3 if name == "histogram" else 2
+                keys = [r[:width] for r in rows]
+                assert len(set(keys)) == len(keys), f"{name} holds a key twice"
+        return out
+
+
+def test_appends_stay_disjoint_when_retention_drops_a_paths_only_rows(
+    spark, tmp_path, appends_never_collide
+):
+    """A period's retention drops a path's only bucket while incoming
+    still holds the raw row, so the path's high-water mark falls back to
+    nothing: the next sync finalizes the row again into the dropped
+    partition (which retention drops again), and new points for the
+    path then arrive — no append ever meets a stored key."""
+    clock = {"now": 3_000.0}
+    twins = _KeyedTwins(
+        spark, tmp_path, clock, partition_grain="hour", retention={"tensecond": 60.0}
+    )
+    twins.insert([("a", 100.0, 1.0), ("b", 3_500.0, 2.0)])
+    twins.sync()
+    clock["now"] = 3_700.0  # tensecond drops hour 0; incoming keeps a@100
+    twins.sync()
+    twins.sync()
+    twins.insert([("a", 3_650.0, 3.0), ("a", 3_690.0, 4.0)])
+    clock["now"] = 3_800.0
+    twins.sync()
+    assert appends_never_collide
+
+
+def test_appends_stay_disjoint_with_late_points_behind_the_high_water_mark(
+    spark, tmp_path, appends_never_collide
+):
+    """Points behind a path's high-water mark are dropped by the finer
+    tables and finalized by the coarser ones whose bucket is still
+    open."""
+    clock = {"now": 1_000.0}
+    twins = _KeyedTwins(spark, tmp_path, clock)
+    twins.insert([("a", 5.0, 1.0), ("a", 900.0, 2.0)])
+    twins.sync()
+    twins.insert([("a", 400.0, 3.0), ("a", 3.0, 4.0)])
+    twins.sync()
+    clock["now"] = 4_000.0
+    twins.sync()
+    twins.insert([("a", 450.0, 5.0)])
+    twins.sync()
+    assert appends_never_collide
+
+
+def test_appends_stay_disjoint_after_a_timed_out_sync_is_retried(
+    spark, tmp_path, monkeypatch, appends_never_collide
+):
+    """A sync cancelled by ``timeout=`` mid-aggregation raises
+    TimeoutError and commits nothing; the retry appends exactly the
+    buckets a store that never timed out has."""
+    import time
+
+    from pyspark.sql import functions as F
+
+    from smalltsdb_spark import tsdb
+
+    clock = {"now": 1_000.0}
+    twins = _KeyedTwins(spark, tmp_path, clock)
+    twins.insert([(p, float(t), 1.0) for p in ("a", "b") for t in range(5, 900, 60)])
+    twins.sync()
+    twins.insert([(p, float(t), 2.0) for p in ("a", "b") for t in range(905, 1900, 60)])
+    clock["now"] = 2_000.0
+    appends_never_collide.clear()
+    real = tsdb.aggregate
+    slow = F.udf(lambda _: time.sleep(1.0) is None, "boolean")
+
+    def slow_aggregate(rows, *a, **kw):
+        return real(rows.filter(slow(F.col("value"))), *a, **kw)
+
+    monkeypatch.setattr(tsdb, "aggregate", slow_aggregate)
+    with pytest.raises(TimeoutError):
+        twins.db.sync(timeout=3.0)
+    monkeypatch.setattr(tsdb, "aggregate", real)
+    assert appends_never_collide == []
+    twins.sync()
+    assert appends_never_collide
+
+
+def test_appends_stay_disjoint_for_the_histogram_table(
+    spark, tmp_path, appends_never_collide
+):
+    """The persisted histogram appends ``(path, timestamp, bin)`` keys
+    under the same rule, behind its own high-water marks."""
+    import random
+
+    rng = random.Random(5)
+    clock = {"now": 1_000.0}
+    twins = _KeyedTwins(spark, tmp_path, clock, histograms=True)
+    for _ in range(4):
+        twins.insert(_points(rng, ["a", "b"], clock["now"] - 900.0, clock["now"], 30))
+        twins.sync()
+        clock["now"] += rng.choice([60.0, 700.0, 3_600.0])
+    twins.sync()
+    hist = os.path.join(twins.db.path, "histogram")
+    assert hist in appends_never_collide
+
+
+def test_retention_probe_reads_parquet_footers(spark, tmp_path, count_jobs):
+    """Retention decides whether the boundary partition holds rows on
+    either side of the cutoff from the files' footers, with no Spark
+    job; a file written without statistics takes the Spark probe, and
+    both stores end with the same rows."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from smalltsdb_spark import storage
+
+    rows = [("a", DAY + 100.0, 1.0), ("a", DAY + 5_000.0, 2.0), ("b", DAY + 9_000.0, 3.0)]
+    stats_db = TablesTSDB(spark, str(tmp_path / "stats"))
+    stats_db.insert(rows)
+    bare_db = TablesTSDB(spark, str(tmp_path / "bare"))
+    bare_db.insert([("z", 0.0, 0.0)])  # pins the grain; day 0, dropped below
+    pdir = os.path.join(bare_db.incoming_path, "pday=1")
+    os.makedirs(pdir)
+    path, ts, value = zip(*rows)
+    bare = os.path.join(pdir, "part-bare.parquet")
+    pq.write_table(
+        pa.table({"path": list(path), "timestamp": list(ts), "value": list(value)}),
+        bare,
+        write_statistics=False,
+    )
+    assert storage.column_ranges([bare], "timestamp") is None
+
+    def retention(db, cutoff):
+        jobs = count_jobs(
+            lambda: db._retention(cutoff, storage.file_stats(db.incoming_path))
+        )
+        return jobs, sorted(map(tuple, db.incoming().collect()))
+
+    # every row at or above the cutoff: nothing to rewrite
+    stats_jobs, stats_rows = retention(stats_db, DAY + 50.0)
+    bare_jobs, bare_rows = retention(bare_db, DAY + 50.0)
+    assert (stats_jobs, stats_rows) == (0, sorted(rows))
+    assert bare_jobs > 0 and bare_rows == stats_rows
+    # the cutoff splits the partition: both rewrite it the same way
+    _, stats_rows = retention(stats_db, DAY + 4_000.0)
+    _, bare_rows = retention(bare_db, DAY + 4_000.0)
+    assert stats_rows == bare_rows == sorted(rows[1:])
