@@ -1136,9 +1136,9 @@ def compact_partitions(
 ) -> list[int]:
     """Rewrite fragmented partitions (more than ``max_files`` data files)
     down to one file each; returns the compacted partition values.
-    ``units``, when given, is a predicate on the partition value that
-    restricts which partitions are candidates (sync compacts only the
-    closed ones).
+    ``units``, when given, is a predicate on a partition's value and
+    live file count that restricts which partitions are candidates (sync
+    compacts the closed ones, and the open one past a file bound).
 
     The maintenance half of the append write path: every daemon flush,
     streaming micro-batch, and ``insert`` call appends one file per
@@ -1163,7 +1163,7 @@ def compact_partitions(
     fragmented = sorted(
         u
         for u, n in partition_file_counts(path).items()
-        if n > max_files and (units is None or units(u))
+        if n > max_files and (units is None or units(u, n))
     )
     if not fragmented:
         return []

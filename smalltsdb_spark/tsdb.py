@@ -65,6 +65,9 @@ Datapoint = tuple[str, float, float]
 _TABLE = "_table"
 #: name prefix of sync's staging directory under the store root
 _STAGING = ".sync-staging-"
+#: live files a table's open partition may hold before sync compacts it
+#: too (one is appended per sync that touches it)
+_OPEN_FILES = 8
 
 
 def _sorted_rows(
@@ -865,9 +868,10 @@ class TablesTSDB(BaseTSDB):
     def compact(self, max_files_per_partition: int = 1) -> dict[str, list[int]]:
         """Incoming plus every period table.  Sync compacts each period
         table's closed partitions itself; what is left for this pass are
-        sync's open partitions (one file per sync that appended to them)
-        and the period tables of append-mode STREAMING rollups
-        (streaming/pipeline.start_rollup) sharing the store."""
+        sync's open partitions (one file per sync that appended to them,
+        up to ``_OPEN_FILES``) and the period tables of append-mode
+        STREAMING rollups (streaming/pipeline.start_rollup) sharing the
+        store."""
         out = super().compact(max_files_per_partition)
         for name, _seconds in self.periods:
             out[name] = storage.compact_partitions(
@@ -900,8 +904,10 @@ class TablesTSDB(BaseTSDB):
         ``last_final + period``, above every key the table holds for it
         (the reference's ``insert or replace`` never replaces either).  A
         table that took rows then compacts its closed partitions (ending
-        at or before its ``final_end``); the open one is only appended
-        to.  The persisted histogram (``histograms=True``, buckets
+        at or before its ``final_end``); the open one is appended to and
+        compacted only once it holds more than ``_OPEN_FILES`` files, so a
+        frequent sync cadence cannot fragment it without bound.  The
+        persisted histogram (``histograms=True``, buckets
         ``hist_fine_seconds`` wide) runs its own ``value_histogram`` plan
         after the pass, under the same rule and append; its retention
         follows the finest period's.
@@ -984,9 +990,13 @@ class TablesTSDB(BaseTSDB):
 
         def commit(name: str, staged: str, schema) -> None:
             """Append ``name``'s staged slice, compact its closed
-            partitions, record its state, then apply its retention."""
+            partitions (and an overfull open one), record its state, then
+            apply its retention."""
             path = self._period_path(name)
-            appended = os.path.isdir(staged)
+            prefix = f"{storage.PARTITION_COLUMN}="
+            appended = os.path.isdir(staged) and any(
+                n.startswith(prefix) for n in os.listdir(staged)
+            )
             with self.timer("upsert_query"):
                 if appended:
                     storage.install_staged(path, staged)
@@ -997,7 +1007,7 @@ class TablesTSDB(BaseTSDB):
                     path,
                     schema,
                     grain,
-                    units=lambda u: (u + 1) * grain <= fe,
+                    units=lambda u, n: (u + 1) * grain <= fe or n > _OPEN_FILES,
                 )
                 ran[name] = (keys[name], storage.table_state(path))
             if retained(name) in self.retention:

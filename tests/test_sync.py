@@ -1466,6 +1466,56 @@ def test_sync_across_a_day_boundary_compacts_only_closed_partitions(
     assert len(open_files[("tensecond", 1)]) == 2  # two syncs into day 1
 
 
+def test_sync_bounds_the_open_partitions_file_count(spark, tmp_path, monkeypatch):
+    """Syncs every 10 s into one open day partition: each appends a file
+    until the partition holds more than ``_OPEN_FILES``, when that sync
+    compacts it to one — the store equal to a fresh handle's full sync
+    throughout."""
+    from smalltsdb_spark import storage, tsdb
+
+    monkeypatch.setattr(tsdb, "_OPEN_FILES", 3)
+    clock = {"now": 1_000.0}
+    twins = _Twins(spark, tmp_path, clock)
+    counts = []
+    for k in range(6):
+        # final for tensecond (tail 60 s) once the clock steps 10 s
+        twins.insert([("a", clock["now"] - 55.0, float(k))])
+        clock["now"] += 10.0
+        twins.sync()
+        counts.append(storage.partition_file_counts(twins.db._period_path("tensecond")))
+    assert counts == [{0: n} for n in (1, 2, 3, 1, 2, 3)]
+
+
+def test_histogram_without_new_buckets_commits_nothing(
+    spark, tmp_path, appends_never_collide
+):
+    """A sync that finalizes tensecond buckets but no 60 s histogram
+    bucket appends to tensecond only: the histogram's first such sync
+    writes no manifest, and a later one leaves it untouched."""
+    from smalltsdb_spark import storage
+
+    clock = {"now": 100.0}  # tensecond final below 40, histogram below 0
+    twins = _KeyedTwins(spark, tmp_path, clock, histograms=True)
+    db = twins.db
+    hist = os.path.join(db.path, "histogram")
+    manifest = os.path.join(hist, storage.MANIFEST)
+    twins.insert([("a", 5.0, 1.0)])
+    twins.sync()
+    assert not os.path.exists(manifest)
+    twins.insert([("a", float(t), 2.0) for t in range(15, 940, 60)])
+    clock["now"] = 1_000.0
+    twins.sync()
+    assert hist in appends_never_collide
+    before = os.stat(manifest)
+    appends_never_collide.clear()
+    twins.insert([("a", 945.0, 3.0)])  # final for tensecond only
+    clock["now"] = 1_010.0
+    twins.sync()
+    assert {os.path.basename(p) for p in appends_never_collide} == {"tensecond"}
+    after = os.stat(manifest)
+    assert (after.st_ino, after.st_mtime_ns) == (before.st_ino, before.st_mtime_ns)
+
+
 @pytest.mark.parametrize("fail_at", [1, 2], ids=["before-first", "between-tables"])
 def test_sync_crash_between_installs_leaves_whole_table_snapshots(
     spark, tmp_path, monkeypatch, fail_at
