@@ -171,33 +171,44 @@ def embed_text(
     matrix distinct — a broadcast-side plan — and the contribution
     join); uncached, each consumer re-runs the full tokenize/explode/
     groupBy pass (measured at sf0.1: ~4× the CPU, which the host's
-    throughput phases then amplify into minute-long cold runs)."""
+    throughput phases then amplify into minute-long cold runs).  A
+    failure releases both caches: ``tf`` always, ``out`` when its
+    materialization fails."""
     tf = featurize(df, id_col, text_col, n_features).persist()
-    feats = tfidf_features(df, id_col, text_col, n_features, _tf=tf)
-    proj = random_projection_matrix(feats, d)
-    contrib = feats.join(F.broadcast(proj), "feature").select(
-        id_col,
-        F.transform(
-            F.col("signs"),
-            lambda s: F.floor(F.col("w") * s * F.lit(FP_SCALE) + F.lit(0.5)).cast(
-                "long"
-            ),
-        ).alias("_c"),
-    )
-    sums = contrib.groupBy(id_col).agg(
-        *[
-            F.sum(F.element_at(F.col("_c"), j + 1)).alias(f"_e{j}")
-            for j in range(d)
-        ]
-    )
-    out = sums.select(
-        id_col,
-        F.array(
-            *[(F.col(f"_e{j}") / F.lit(FP_SCALE)).cast("double") for j in range(d)]
-        ).alias("embedding"),
-    ).persist()
-    out.count()  # materialize so tf can be released
-    tf.unpersist()
+    try:
+        feats = tfidf_features(df, id_col, text_col, n_features, _tf=tf)
+        proj = random_projection_matrix(feats, d)
+        contrib = feats.join(F.broadcast(proj), "feature").select(
+            id_col,
+            F.transform(
+                F.col("signs"),
+                lambda s: F.floor(
+                    F.col("w") * s * F.lit(FP_SCALE) + F.lit(0.5)
+                ).cast("long"),
+            ).alias("_c"),
+        )
+        sums = contrib.groupBy(id_col).agg(
+            *[
+                F.sum(F.element_at(F.col("_c"), j + 1)).alias(f"_e{j}")
+                for j in range(d)
+            ]
+        )
+        out = sums.select(
+            id_col,
+            F.array(
+                *[
+                    (F.col(f"_e{j}") / F.lit(FP_SCALE)).cast("double")
+                    for j in range(d)
+                ]
+            ).alias("embedding"),
+        ).persist()
+        try:
+            out.count()  # materialize so tf can be released
+        except BaseException:
+            out.unpersist()
+            raise
+    finally:
+        tf.unpersist()
     return out
 
 

@@ -17,22 +17,25 @@ logical model and method signatures, re-expressed over DataFrames:
 
 ``sync()`` replaces the reference's per-path Python loop (tsdb.py:371-410)
 with one set-based plan for all the periods that have something to
-finalize: incoming tagged once per period, a broadcast join against every
-table's per-path high-water marks, a single aggregation grouped by
-``(period, path, bucket)`` and a single write, which each period table
-then takes its slice of by a manifest append.  Same finality semantics
-(the ``intervals()`` kernel), executed as one distributed pass instead of
-``paths × periods`` serial SQLite queries.
+finalize: incoming tagged once per period, filtered against every
+table's per-path high-water marks (read off the driver-side path
+catalog, catalog.py, and carried in the plan as a literal), a single
+aggregation grouped by ``(period, path, bucket)`` and a single write,
+which each period table then takes its slice of by a manifest append.
+Same finality semantics (the ``intervals()`` kernel), executed as one
+distributed pass instead of ``paths × periods`` serial SQLite queries.
 """
 
 from __future__ import annotations
 
 import datetime
+import json
 import os
 import shutil
 import threading
 import time
 import uuid
+import zlib
 from functools import reduce
 from operator import itemgetter
 from typing import NamedTuple
@@ -41,6 +44,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from smalltsdb_spark import storage
+from smalltsdb_spark.catalog import PathCatalog
 from smalltsdb_spark.config import (
     DEFAULT_TAIL,
     PERIODS,
@@ -70,6 +74,11 @@ _STAGING = ".sync-staging-"
 _OPEN_FILES = 8
 
 
+def _check_page(offset: int, limit: int | None) -> None:
+    if offset < 0 or (limit is not None and limit < 0):
+        raise ValueError(f"offset and limit must be >= 0, got {offset}, {limit}")
+
+
 def _sorted_rows(
     df: DataFrame, key: str, offset: int = 0, limit: int | None = None
 ) -> list[tuple]:
@@ -77,8 +86,7 @@ def _sorted_rows(
     paged: sorted in Python after one unordered collect.  With ``limit``
     only the first ``offset + limit`` rows by ``key`` are collected (one
     TakeOrderedAndProject job)."""
-    if offset < 0 or (limit is not None and limit < 0):
-        raise ValueError(f"offset and limit must be >= 0, got {offset}, {limit}")
+    _check_page(offset, limit)
     if limit is not None:
         df = df.orderBy(key).limit(offset + limit)
     return sorted(map(tuple, df.collect()), key=itemgetter(0))[offset:]
@@ -329,16 +337,29 @@ class BaseTSDB:
         return df
 
     def _metric_rows(
-        self, path, period, stat, interval, include_partial: bool
-    ) -> DataFrame:
+        self,
+        path,
+        period,
+        stat,
+        interval,
+        include_partial: bool,
+        *,
+        known_only: bool = False,
+    ) -> DataFrame | None:
         """The unordered ``(timestamp, stat)`` rows behind
-        :meth:`get_metric_df` and :meth:`get_metric` — one per bucket."""
+        :meth:`get_metric_df` and :meth:`get_metric` — one per bucket.
+        With ``known_only`` and no partial buckets asked for, None (no
+        plan built) when the period table provably holds no row of
+        ``path``."""
         validate_period(period, self.period_seconds)
         validate_stat(stat)
         start, end = (coerce_epoch(x) for x in interval)
-        base = self._period_slice(period, start, end).filter(
-            F.col("path") == path
+        table = self._period_slice(
+            period, start, end, path if known_only and not include_partial else None
         )
+        if table is None:
+            return None
+        base = table.filter(F.col("path") == path)
         df = base.select("timestamp", stat)
         if include_partial:
             extra = self._partial_table(period)
@@ -351,13 +372,16 @@ class BaseTSDB:
                 )
         return df
 
-    def _period_slice(self, period: str, start: float, end: float) -> DataFrame:
+    def _period_slice(
+        self, period: str, start: float, end: float, holding=None
+    ) -> DataFrame | None:
         """The period table restricted to ``timestamp ∈ [start, end]``
         (inclusive, the reference's read semantics).  TablesTSDB
         overrides this to ALSO restrict the partition column, so the
         interval prunes whole ``pday=`` directories at the file index —
         a filter on ``timestamp`` alone only reaches parquet row-group
-        statistics, never the listing."""
+        statistics, never the listing — and to answer None when
+        ``holding`` names a path its table provably does not hold."""
         return self.period_table(period).filter(
             F.col("timestamp").between(start, end)
         )
@@ -425,7 +449,10 @@ class BaseTSDB:
         bounds: bool = False,
     ) -> list[tuple]:
         """The rows of :meth:`get_metric_df` (or, with ``bounds=True``,
-        of :meth:`get_metric_bounds_df`) as a list of tuples.
+        of :meth:`get_metric_bounds_df`) as a list of tuples.  On
+        TablesTSDB a path absent from the period table's path catalog
+        (catalog.py) answers ``[]`` with no plan built, unless
+        ``include_partial`` or ``bounds`` asks for rows from elsewhere.
 
         The rows are sorted on the driver, not by Spark: the relation is
         collected unordered and sorted in Python on ``timestamp``, so a
@@ -459,9 +486,12 @@ class BaseTSDB:
                 self._bounds_rows(path, period, stat, interval)
                 if bounds
                 else self._metric_rows(
-                    path, period, stat, interval, include_partial
+                    path, period, stat, interval, include_partial, known_only=True
                 )
             )
+            if df is None:  # a path the period table does not hold
+                _check_page(offset, limit)
+                return []
             return _sorted_rows(df, "timestamp", offset, limit)
 
     def get_metric_bounds_df(
@@ -709,26 +739,52 @@ class TablesTSDB(BaseTSDB):
 
     _synced: _Synced | None = None
 
+    def __init__(self, *args, **kwargs):
+        super().__init__(*args, **kwargs)
+        self._catalog = PathCatalog()
+
+    def _hwms(self, name: str) -> dict[str, float]:
+        """``{path: last bucket}`` of table ``name``, from the catalog."""
+        return self._catalog.hwms(self._period_path(name))
+
+    def list_metrics(self, *, limit: int | None = None, offset: int = 0) -> list[str]:
+        """The sorted union of the period tables' path catalogs
+        (catalog.py): no Spark job, and the same paths, order and paging
+        as :meth:`BaseTSDB.list_metrics` over :meth:`list_metrics_df`
+        (the DataFrame form stays for the query surface)."""
+        _check_page(offset, limit)
+        with self.timer("list_metrics"):
+            paths = set()
+            for name, _seconds in self.periods:
+                paths.update(self._hwms(name))
+            paths = sorted(paths)[offset:]
+            return paths if limit is None else paths[:limit]
+
     def period_table(self, period: str) -> DataFrame:
         validate_period(period, self.period_seconds)
         return storage.read_table(self.spark, self._period_path(period), AGG_SCHEMA)
 
-    def _period_slice(self, period: str, start: float, end: float) -> DataFrame:
+    def _period_slice(
+        self, period: str, start: float, end: float, holding=None
+    ) -> DataFrame | None:
         """Interval read with PARTITION pruning: ``timestamp ∈ [start,
         end]`` implies ``pday ∈ [floor(start/grain), floor(end/grain)]``
         (pday is written as exactly that floor), so the range filter on
         the partition column skips whole directories at the file index
-        before the timestamp filter refines within files."""
+        before the timestamp filter refines within files.  The catalog
+        check on ``holding`` and the read share one resolution of the
+        table's live files."""
         import math
 
         validate_period(period, self.period_seconds)
         grain = self.grain_seconds
+        table = self._period_path(period)
+        live = storage.live_files(table)
+        if holding is not None and holding not in self._catalog.hwms(table, live):
+            return None
         return (
             storage.read_table(
-                self.spark,
-                self._period_path(period),
-                AGG_SCHEMA,
-                with_partition_col=True,
+                self.spark, table, AGG_SCHEMA, with_partition_col=True, live=live
             )
             .filter(
                 F.col(storage.PARTITION_COLUMN).between(
@@ -805,16 +861,19 @@ class TablesTSDB(BaseTSDB):
     def _eligible_rows(self, incoming: DataFrame, due: list[tuple]) -> DataFrame:
         """Rows in each due table's final interval, per path half-open
         ``[last_final + period, final_end)``.  ``due`` lists one
-        ``(period seconds, final_end, high-water-mark source)`` per
-        table; an ``inline`` of literal tags copies each row once per
-        table (a generator, not a join), table ``i``'s copy carrying
-        ``_table = i`` and ``_seconds``.  Set-based replacement of the
-        reference's per-path loop (tsdb.py:371-410): one ``groupBy`` over
-        the sources' union gives every table's per-path high-water marks,
-        tiny enough to broadcast.  ``coalesce(last_final + s, 0)``
-        encodes ``last_final=None ⇒ -period`` (intervals.py).  A source
-        tagged as the known-empty relation (every first sync) adds no
-        marks; when all are, the join is skipped (guide §2.4)."""
+        ``(period seconds, final_end, {path: last_final})`` per table; an
+        ``inline`` of literal tags copies each row once per table (a
+        generator, not a join), table ``i``'s copy carrying ``_table = i``
+        and ``_seconds``.  Set-based replacement of the reference's
+        per-path loop (tsdb.py:371-410): the high-water marks ride in the
+        plan as one literal hash table — bucket ``crc32(path) mod n``
+        holds ``{path: [last_final per due table]}`` — so the plan scans
+        incoming and nothing else, and a row finds its marks in O(1).
+        (Spark searches a map literal linearly: one ``{"i:path": mark}``
+        map made a 1,000-path, six-table pass ~5× slower than a
+        broadcast join of the marks.)
+        ``coalesce(last_final + s, 0)`` encodes ``last_final=None ⇒
+        -period`` (intervals.py)."""
         ts = F.col("timestamp")
         tags = F.array(
             *[
@@ -823,45 +882,47 @@ class TablesTSDB(BaseTSDB):
                     F.lit(seconds).alias("_seconds"),
                     F.lit(fe).alias("_fe"),
                 )
-                for i, (seconds, fe, _src) in enumerate(due)
+                for i, (seconds, fe, _hwms) in enumerate(due)
             ]
         )
+        paths = set().union(*(hwms for _s, _fe, hwms in due))
+        marks = F.lit(None).cast("array<double>")
+        if paths:
+            n = len(paths)
+            buckets = [{} for _ in range(n)]
+            for path in paths:
+                buckets[zlib.crc32(path.encode()) % n][path] = [
+                    hwms.get(path) for _s, _fe, hwms in due
+                ]
+            table = F.from_json(
+                F.lit(json.dumps(buckets)), "array<map<string,array<double>>>"
+            )
+            bucket = F.pmod(F.crc32(F.col("path").cast("binary")), F.lit(n)) + 1
+            marks = F.element_at(
+                F.element_at(table, bucket.cast("int")), F.col("path")
+            )
         rows = (
-            incoming.filter(ts < F.lit(max(fe for _s, fe, _src in due)))
-            .select("path", "timestamp", "value", F.inline(tags))
+            incoming.filter(ts < F.lit(max(fe for _s, fe, _hwms in due)))
+            .select("path", "timestamp", "value", marks.alias("_marks"), F.inline(tags))
             .filter(ts < F.col("_fe"))
         )
-        hwms = [
-            src.select(F.lit(i).alias(_TABLE), "path", "timestamp")
-            for i, (_s, _fe, src) in enumerate(due)
-            if not getattr(src, "_smalltsdb_empty_relation", False)
-        ]
-        low = F.lit(0.0)
-        if hwms:
-            hwm = (
-                reduce(DataFrame.union, hwms)
-                .groupBy(_TABLE, "path")
-                .agg(F.max("timestamp").alias("_last_final"))
-            )
-            rows = rows.join(F.broadcast(hwm), [_TABLE, "path"], "left")
-            low = F.coalesce(F.col("_last_final") + F.col("_seconds"), low)
-        return rows.filter(ts >= low).drop("_fe", "_last_final")
+        last_final = F.element_at(F.col("_marks"), F.col(_TABLE) + 1)
+        low = F.coalesce(last_final + F.col("_seconds"), F.lit(0.0))
+        return rows.filter(ts >= low).drop("_fe", "_marks")
 
     def _eligible(
         self,
         incoming: DataFrame,
         seconds: int,
         now: float,
-        hwm_from: DataFrame | None = None,
+        hwms: dict[str, float] | None = None,
     ) -> DataFrame:
-        """:meth:`_eligible_rows` of one table, untagged, whose marks come
-        from the ``seconds`` period's table or from ``hwm_from``."""
-        if hwm_from is None:
-            hwm_from = self.period_table(
-                next(n for n, s in self.periods if s == seconds)
-            )
+        """:meth:`_eligible_rows` of one table, untagged, whose marks are
+        ``hwms`` or else the ``seconds`` period table's."""
+        if hwms is None:
+            hwms = self._hwms(next(n for n, s in self.periods if s == seconds))
         fe = float(final_end(seconds, self.tail, now))
-        return self._eligible_rows(incoming, [(seconds, fe, hwm_from)]).drop(
+        return self._eligible_rows(incoming, [(seconds, fe, hwms)]).drop(
             _TABLE, "_seconds"
         )
 
@@ -898,9 +959,13 @@ class TablesTSDB(BaseTSDB):
         **One pass, appended.**  The due periods' new buckets come from
         one plan (:meth:`_eligible_rows`, one aggregation by ``(table,
         path, bucket)``, one write into a hidden staging directory under
-        the store root); each table takes its slice by a manifest append
-        (:func:`storage.install_staged`), and one with no new rows
-        commits nothing.  Appending is exact: a path's new rows start at
+        the store root) that scans incoming only: each table's per-path
+        high-water marks come from the driver-side path catalog
+        (catalog.py, one pyarrow read per live file not seen before,
+        the files this handle's previous sync wrote included) and ride
+        in the plan as a literal.  Each table takes its slice by a
+        manifest append (:func:`storage.install_staged`), and one with no
+        new rows commits nothing.  Appending is exact: a path's new rows start at
         ``last_final + period``, above every key the table holds for it
         (the reference's ``insert or replace`` never replaces either).  A
         table that took rows then compacts its closed partitions (ending
@@ -1025,7 +1090,7 @@ class TablesTSDB(BaseTSDB):
                 new_rows = aggregate(
                     self._eligible_rows(
                         incoming,
-                        [(s, keys[n][0], self.period_table(n)) for n, s in periods],
+                        [(s, keys[n][0], self._hwms(n)) for n, s in periods],
                     ),
                     F.col("_seconds"),
                     exact=self.exact_percentiles,
@@ -1043,7 +1108,7 @@ class TablesTSDB(BaseTSDB):
                     fine = self.hist_fine_seconds
                     staged = os.path.join(staging, "histogram")
                     new_rows = value_histogram(
-                        self._eligible(incoming, fine, now, hwm_from=hist_hwm),
+                        self._eligible(incoming, fine, now, hwms=hist_hwm),
                         fine,
                         bin_width=self.hist_bin_width,
                         clamp_bin=self.hist_clamp_bin,
@@ -1065,38 +1130,30 @@ class TablesTSDB(BaseTSDB):
         if self.emit_metrics:
             self.insert(timings)
 
-    def _histogram_source(self, fine_name: str) -> DataFrame:
-        """The persisted fine histogram, after pinning its geometry, as
-        sync's high-water-mark source.  Called before the pass commits,
-        so the finest table's history below predates this sync."""
+    def _histogram_source(self, fine_name: str) -> dict[str, float]:
+        """The persisted fine histogram's high-water marks, after pinning
+        its geometry.  Called before the pass commits, so the finest
+        table's catalog below predates this sync."""
         import warnings
 
         self._pin_hist_geometry()
-        existing = storage.read_table(
-            self.spark, self._period_path("histogram"), HIST_SCHEMA
-        )
-        # the empty-relation tag decides emptiness without a Spark job
-        # (a commit never leaves an empty table)
-        if getattr(existing, "_smalltsdb_empty_relation", False):
-            fine_tbl = self.period_table(fine_name)
-            if not getattr(
-                fine_tbl, "_smalltsdb_empty_relation", False
-            ) and fine_tbl.limit(1).count():
-                # histograms enabled on a store with pre-existing
-                # history: the histogram HWM starts from scratch, but
-                # incoming retention may already have dropped the raw
-                # rows behind old buckets — those buckets will be
-                # silently ABSENT from bounds reads (ADVICE r11: rows
-                # missing, not wrong)
-                warnings.warn(
-                    "histogram table is empty but period tables "
-                    "have history: buckets whose raw rows predate "
-                    "retained incoming will be missing from bounds "
-                    "reads — enable histograms=True at store "
-                    "creation to avoid the gap",
-                    stacklevel=3,
-                )
-        return existing
+        hwms = self._hwms("histogram")
+        if not hwms and self._hwms(fine_name):
+            # histograms enabled on a store with pre-existing
+            # history: the histogram HWM starts from scratch, but
+            # incoming retention may already have dropped the raw
+            # rows behind old buckets — those buckets will be
+            # silently ABSENT from bounds reads (ADVICE r11: rows
+            # missing, not wrong)
+            warnings.warn(
+                "histogram table is empty but period tables "
+                "have history: buckets whose raw rows predate "
+                "retained incoming will be missing from bounds "
+                "reads — enable histograms=True at store "
+                "creation to avoid the gap",
+                stacklevel=3,
+            )
+        return hwms
 
     def _finality_key(self, seconds: int, retention_period: str, now: float):
         """What a table's sync depends on from the clock: its finality

@@ -116,3 +116,21 @@ def test_projection_matrix_is_derived_and_unit_scaled(spark):
         for r in embedding.random_projection_matrix(feats, 4).collect()
     }
     assert all(list(r.signs) == again[r.feature] for r in rows)
+
+
+def test_failed_materialization_leaves_no_cache(spark, monkeypatch):
+    """A failure while ``embed_text`` materializes its result releases
+    both the tf cache and the result's own: no persisted RDD is left."""
+    spark.catalog.clearCache()
+    frame = type(spark.range(1))  # the session's concrete DataFrame class
+    real = frame.count
+
+    def failing(self):
+        if self.columns == ["doc_id", "embedding"]:
+            raise RuntimeError("injected failure in out.count()")
+        return real(self)
+
+    monkeypatch.setattr(frame, "count", failing)
+    with pytest.raises(RuntimeError, match="injected"):
+        embedding.embed_text(_docs(spark, CORPUS), "doc_id", "text", d=4)
+    assert spark.sparkContext._jsc.getPersistentRDDs().isEmpty()

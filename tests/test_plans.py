@@ -7,6 +7,7 @@ regression here is invisible at sf0.001 and fatal at 100 TB.
 """
 
 import os
+import re
 
 import pytest
 
@@ -23,6 +24,7 @@ from smalltsdb_spark.plans import (
 )
 from smalltsdb_spark import queries_ext  # noqa: F401  (registers extensions)
 from smalltsdb_spark import queries_rel  # noqa: F401  (registers rel/window wave)
+from smalltsdb_spark.plans.inspect import plan_nodes
 from smalltsdb_spark.queries import QUERIES, events_as_incoming
 from smalltsdb_spark.tsdb import TablesTSDB
 from tests.test_golden import GOLDEN_A_INPUT
@@ -105,16 +107,27 @@ def test_star_join_broadcasts_dimensions(spark):
     assert exchange_count(df) <= 5
 
 
-def test_hwm_join_broadcasts(spark, tsdb_dir):
-    """Incremental sync's eligibility join: the per-path high-water-mark
-    side is tiny and must broadcast (tsdb.py _eligible)."""
+def test_eligible_rows_scan_only_incoming(spark, tsdb_dir):
+    """Incremental sync's eligibility filter (tsdb.py _eligible_rows):
+    every due table's per-path high-water marks come from the path
+    catalog as a plan literal, so the plan is one file scan (incoming)
+    with no join and no exchange."""
+    from smalltsdb_spark.intervals import final_end
+
     db = TablesTSDB(spark, tsdb_dir, now=lambda: 100.0)
     db.insert(GOLDEN_A_INPUT)
     db.sync()
     db.insert([("one", 70.0, 2.0)])
-    eligible = db._eligible(db.incoming(), 10, 200.0)
-    assert broadcast_join_count(eligible) == 1
-    assert exchange_count(eligible) <= 1  # only the HWM group-by's own
+    due = [
+        (s, float(final_end(s, db.tail, 200.0)), db._hwms(n)) for n, s in db.periods
+    ]
+    assert due[0][2]  # the marks are not all empty
+    eligible = db._eligible_rows(db.incoming(), due)
+    plan = physical_plan(eligible)
+    assert not [n for n in plan_nodes(eligible) if "Join" in n or "Cartesian" in n]
+    assert exchange_count(eligible) == 0
+    (location,) = re.findall(r"Location: \w+ \[([^\]]*)\]", plan)
+    assert location.rstrip("/").endswith(os.path.join(tsdb_dir, "incoming"))
 
 
 def test_list_metrics_scans_only_path(spark, tsdb_dir):

@@ -1399,10 +1399,10 @@ def test_non_idle_sync_is_at_most_ten_jobs(
     spark, tsdb_dir, count_jobs, appends_never_collide
 ):
     """An hourly tick over the six default periods, a day of history and
-    incoming retention in steady state: one HWM aggregate, one
-    aggregation and one write for all six tables, then six manifest
-    appends — at most 10 Spark jobs, where one job chain per period
-    took about 60."""
+    incoming retention in steady state: the high-water marks come from
+    the driver-side path catalog, so one aggregation and one write for
+    all six tables, then six manifest appends — at most 5 Spark jobs,
+    where one job chain per period took about 60."""
     import random
 
     rng = random.Random(11)
@@ -1416,7 +1416,7 @@ def test_non_idle_sync_is_at_most_ten_jobs(
         db.insert(_points(rng, paths, t0 + (k - 1) * 3600.0, t0 + k * 3600.0, 200))
         clock["now"] = t0 + k * 3600.0
         appends_never_collide.clear()
-        assert count_jobs(db.sync) <= 10
+        assert count_jobs(db.sync) <= 5
         # non-idle: every table below a day took new buckets
         assert sorted(appends_never_collide) == sorted(
             db._period_path(name) for name, s in db.periods if s < DAY
@@ -1743,3 +1743,194 @@ def test_retention_probe_reads_parquet_footers(spark, tmp_path, count_jobs):
     _, stats_rows = retention(stats_db, DAY + 4_000.0)
     _, bare_rows = retention(bare_db, DAY + 4_000.0)
     assert stats_rows == bare_rows == sorted(rows[1:])
+
+
+# ---------------------------------------------------------------------------
+# The path catalog (catalog.py)
+# ---------------------------------------------------------------------------
+
+
+def _catalog_matches_scan(dbs, names) -> dict:
+    """``list_metrics()`` equals the sorted ``list_metrics_df()`` and each
+    table's catalog marks equal a Spark ``groupBy(path).max``, on every
+    handle in ``dbs``; returns the scanned marks."""
+    want = {
+        name: {
+            path: ts
+            for path, ts in dbs[0]
+            .period_table(name)
+            .groupBy("path")
+            .agg(F.max("timestamp"))
+            .collect()
+        }
+        for name in names
+    }
+    paths = sorted(r.path for r in dbs[0].list_metrics_df().collect())
+    for db in dbs:
+        assert db.list_metrics() == paths
+        for name in names:
+            assert db._hwms(name) == want[name], name
+    return want
+
+
+def test_path_catalog_equals_a_scan_on_a_random_schedule(
+    spark, tmp_path, appends_never_collide
+):
+    """Seeded inserts, late points, clock advances, syncs and
+    compactions over a store with every kind of period table: a
+    manifest table whose retention drops whole hours (lowering
+    high-water marks), a pre-manifest listing table adopted on its first
+    append, and one owned by a streaming rollup's file-sink log, next to
+    a data file the log never committed.  After every step the catalog
+    of the live handle and of a fresh one equals a scan."""
+    import random
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from smalltsdb_spark import manifests, storage
+    from smalltsdb_spark.operators.aggregate import aggregate
+    from smalltsdb_spark.schemas import INCOMING_SCHEMA
+    from smalltsdb_spark.sources.daemon import SpoolSink
+    from smalltsdb_spark.streaming import read_spool_stream, start_rollup
+
+    hour = 3600
+    base = str(tmp_path / "store")
+    clock = {"now": 4 * hour + 30.0}
+    kw = dict(
+        periods=[
+            ("tensecond", 10), ("oneminute", 60), ("onehour", hour), ("oneday", DAY)
+        ],
+        partition_grain="hour",
+        retention={"tensecond": 2 * hour},
+        now=lambda: clock["now"],
+    )
+    names = [name for name, _ in kw["periods"]]
+    db = TablesTSDB(spark, base, **kw)
+    first = [(p, 30.0 * i + 7.0, float(i)) for i, p in enumerate("abcab" * 20)]
+    db.insert(first + [("e", 200.0, 1.0)])  # e: one point, dropped at 02:00+2h
+
+    # oneminute predates manifests: a plain listing of a's and b's buckets
+    legacy = spark.createDataFrame(
+        [r for r in first if r[1] < 600.0], INCOMING_SCHEMA
+    )
+    storage.write_partitioned(
+        aggregate(legacy, 60), db._period_path("oneminute"), hour, "append"
+    )
+    # oneday is owned by a streaming rollup; the clock stays below its
+    # first final bucket, so sync never appends to it
+    spool = SpoolSink(str(tmp_path / "spool"))
+    spool([(f"s{d}", d * DAY + 100.0, 1.0) for d in (3, 4, 5)] + [("sw", 7 * DAY, 1.0)])
+    start_rollup(
+        read_spool_stream(spark, spool.spool_dir),
+        db._period_path("oneday"),
+        str(tmp_path / "ckpt"),
+        86400,
+        available_now=True,
+        grain_seconds=hour,
+    ).awaitTermination(120)
+    sink = db._period_path("oneday")
+    assert storage.is_streaming_sink(sink)
+    orphan = os.path.join(sink, "pday=9999", "part-99999-orphan.c000.snappy.parquet")
+    os.makedirs(os.path.dirname(orphan))
+    rows = pq.read_table(manifests.collect_parquets(sink)[0])
+    pq.write_table(
+        rows.set_column(0, "path", pa.array(["ghost"] * rows.num_rows)), orphan
+    )
+
+    def check():
+        return _catalog_matches_scan([db, TablesTSDB(spark, base, **kw)], names)
+
+    marks = [check()]
+    assert set(marks[0]["oneday"]) == {"s3", "s4", "s5"}
+    assert storage.read_manifest(db._period_path("oneminute")) is None
+    db.sync()
+    assert storage.read_manifest(db._period_path("oneminute")) is not None
+    marks.append(check())
+
+    rng = random.Random(20261018)
+    paths = ["a", "b", "c", "d"]
+    steps = ["ahead", "late", "advance", "sync", "sync", "compact"]
+    for step in [rng.choice(steps) for _ in range(12)] + ["advance", "sync"]:
+        now = clock["now"]
+        if step == "ahead":
+            db.insert(
+                [(rng.choice(paths), now - rng.uniform(0, 900), 1.0) for _ in range(3)]
+            )
+        elif step == "late":
+            db.insert([(rng.choice(paths), now - rng.uniform(1_800, 3 * hour), 2.0)])
+        elif step == "advance":
+            clock["now"] += rng.choice([600.0, 1_800.0, hour])
+        elif step == "sync":
+            db.sync()
+        else:
+            db.compact()
+        marks.append(check())
+    assert clock["now"] < DAY  # oneday stayed the stream's alone
+    # some retention drop lowered a high-water mark (e's, at least)
+    assert any(
+        path not in after["tensecond"] or after["tensecond"][path] < ts
+        for before, after in zip(marks, marks[1:])
+        for path, ts in before["tensecond"].items()
+    )
+    assert db._period_path("oneminute") in appends_never_collide
+
+
+def test_list_metrics_during_sync_sees_a_whole_state(spark, tsdb_dir):
+    """``list_metrics`` in a second thread while ``sync`` commits, on the
+    syncing handle and on fresh ones: every answer is the pre-sync or
+    the post-sync path set, and none raises."""
+    import threading
+
+    clock = {"now": 2 * 3600.0}
+    db = TablesTSDB(spark, tsdb_dir, now=lambda: clock["now"])
+    db.insert([(f"old{i}", 10.0 * i, 1.0) for i in range(50)])
+    db.sync()
+    # every new path has a final onesecond bucket, so the first table
+    # sync commits already holds them all
+    db.insert([(f"new{i}", 3_600.0 + 10.0 * i, 1.0) for i in range(50)])
+    clock["now"] += 60.0
+    pre = tuple(db.list_metrics())
+    answers, errors, done = [], [], threading.Event()
+
+    def read():
+        k = 0
+        while not done.is_set():
+            k += 1
+            handle = db if k % 2 else TablesTSDB(spark, tsdb_dir, now=db._now)
+            try:
+                answers.append(tuple(handle.list_metrics()))
+            except Exception as exc:  # noqa: BLE001 — the test's subject
+                errors.append(exc)
+
+    reader = threading.Thread(target=read)
+    reader.start()
+    try:
+        db.sync()
+    finally:
+        done.set()
+        reader.join()
+    post = tuple(db.list_metrics())
+    assert errors == []
+    assert set(post) == set(pre) | {f"new{i}" for i in range(50)}
+    assert answers and set(answers) <= {pre, post}
+
+
+def test_path_catalog_re_resolves_a_retired_file_and_raises_on_a_lost_one(
+    spark, tsdb_dir
+):
+    """A file list resolved before a commit removed one of its files is
+    re-resolved; a live file that is gone from disk raises, as a scan
+    does, instead of retrying forever."""
+    from smalltsdb_spark import storage
+
+    db = TablesTSDB(spark, tsdb_dir, now=lambda: 1_000.0)
+    db.insert([("a", 5.0, 1.0), ("b", 15.0, 2.0)])
+    db.sync()
+    table = db._period_path("tensecond")
+    live = storage.live_files(table)
+    retired = live._replace(files=[*live.files, "pday=0/part-retired.parquet"])
+    assert db._catalog.hwms(table, retired) == {"a": 0.0, "b": 10.0}
+    os.remove(os.path.join(table, live.files[0]))
+    with pytest.raises(FileNotFoundError):
+        db._catalog.hwms(table)
