@@ -50,7 +50,6 @@ from __future__ import annotations
 
 import os
 import shutil
-from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -681,24 +680,17 @@ def with_pday(df: DataFrame, grain_seconds: int = SECONDS_PER_DAY) -> DataFrame:
     )
 
 
-class LiveFiles(NamedTuple):
-    """A table's live data files, resolved once."""
-
-    manifest: dict[int, list[str]] | None  # None: a listing or sink-log table
-    files: list[str]  # relative to the table root
-
-
-def live_files(path: str) -> LiveFiles:
-    """The data files :func:`read_table` scans: a manifest table's
-    manifest files; else, under a streaming file sink, the visible files
-    its ``_spark_metadata`` log committed (matched as
-    :func:`reconcile_sink_log` matches them); else the visible
-    ``*.parquet`` listing.  No Spark job."""
+def live_files(path: str) -> list[str]:
+    """The data files :func:`read_table` scans, relative to the table
+    root: a manifest table's manifest files; else, under a streaming
+    file sink, the visible files its ``_spark_metadata`` log committed
+    (matched as :func:`reconcile_sink_log` matches them); else the
+    visible ``*.parquet`` listing.  No Spark job."""
     manifest = read_manifest(path)
     if manifest is not None:
-        return LiveFiles(manifest, [f for fs in manifest.values() for f in fs])
+        return [f for fs in manifest.values() for f in fs]
     if not os.path.isdir(path):
-        return LiveFiles(None, [])
+        return []
     files = [
         os.path.relpath(f, path) for f in manifests.collect_parquets(path)
     ]
@@ -710,7 +702,7 @@ def live_files(path: str) -> LiveFiles:
             for f in files
             if f in rel_paths or os.path.basename(f) in basenames
         ]
-    return LiveFiles(None, sorted(files))
+    return sorted(files)
 
 
 def read_table(
@@ -718,7 +710,6 @@ def read_table(
     path: str,
     schema: T.StructType,
     with_partition_col: bool = False,
-    live: LiveFiles | None = None,
 ) -> DataFrame:
     """Read a partitioned table, returning an empty DataFrame if absent.
 
@@ -741,18 +732,13 @@ def read_table(
     The known-empty returns are tagged ``_smalltsdb_empty_relation`` so
     callers with an existing-vs-new merge step (the upsert anti-join)
     can skip it outright instead of shuffling the new side against a
-    provably empty relation.
-
-    ``live`` is the table's :func:`live_files`, when the caller resolved
-    it already (the read then uses that snapshot)."""
-    manifest = read_manifest(path) if live is None else live.manifest
+    provably empty relation."""
+    manifest = read_manifest(path)
     read_schema = T.StructType(
         list(schema.fields) + [T.StructField(PARTITION_COLUMN, T.LongType())]
     )
     if manifest is not None:
         files = [os.path.join(path, rel) for fs in manifest.values() for rel in fs]
-    elif live is not None:
-        files = [path] if live.files else []
     else:
         files = [path] if _has_data(path) else []
     if not files:

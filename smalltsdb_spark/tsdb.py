@@ -337,29 +337,16 @@ class BaseTSDB:
         return df
 
     def _metric_rows(
-        self,
-        path,
-        period,
-        stat,
-        interval,
-        include_partial: bool,
-        *,
-        known_only: bool = False,
-    ) -> DataFrame | None:
+        self, path, period, stat, interval, include_partial: bool
+    ) -> DataFrame:
         """The unordered ``(timestamp, stat)`` rows behind
-        :meth:`get_metric_df` and :meth:`get_metric` — one per bucket.
-        With ``known_only`` and no partial buckets asked for, None (no
-        plan built) when the period table provably holds no row of
-        ``path``."""
+        :meth:`get_metric_df` and :meth:`get_metric` — one per bucket."""
         validate_period(period, self.period_seconds)
         validate_stat(stat)
         start, end = (coerce_epoch(x) for x in interval)
-        table = self._period_slice(
-            period, start, end, path if known_only and not include_partial else None
+        base = self._period_slice(period, start, end).filter(
+            F.col("path") == path
         )
-        if table is None:
-            return None
-        base = table.filter(F.col("path") == path)
         df = base.select("timestamp", stat)
         if include_partial:
             extra = self._partial_table(period)
@@ -372,16 +359,13 @@ class BaseTSDB:
                 )
         return df
 
-    def _period_slice(
-        self, period: str, start: float, end: float, holding=None
-    ) -> DataFrame | None:
+    def _period_slice(self, period: str, start: float, end: float) -> DataFrame:
         """The period table restricted to ``timestamp ∈ [start, end]``
         (inclusive, the reference's read semantics).  TablesTSDB
         overrides this to ALSO restrict the partition column, so the
         interval prunes whole ``pday=`` directories at the file index —
         a filter on ``timestamp`` alone only reaches parquet row-group
-        statistics, never the listing — and to answer None when
-        ``holding`` names a path its table provably does not hold."""
+        statistics, never the listing."""
         return self.period_table(period).filter(
             F.col("timestamp").between(start, end)
         )
@@ -449,10 +433,7 @@ class BaseTSDB:
         bounds: bool = False,
     ) -> list[tuple]:
         """The rows of :meth:`get_metric_df` (or, with ``bounds=True``,
-        of :meth:`get_metric_bounds_df`) as a list of tuples.  On
-        TablesTSDB a path absent from the period table's path catalog
-        (catalog.py) answers ``[]`` with no plan built, unless
-        ``include_partial`` or ``bounds`` asks for rows from elsewhere.
+        of :meth:`get_metric_bounds_df`) as a list of tuples.
 
         The rows are sorted on the driver, not by Spark: the relation is
         collected unordered and sorted in Python on ``timestamp``, so a
@@ -486,12 +467,9 @@ class BaseTSDB:
                 self._bounds_rows(path, period, stat, interval)
                 if bounds
                 else self._metric_rows(
-                    path, period, stat, interval, include_partial, known_only=True
+                    path, period, stat, interval, include_partial
                 )
             )
-            if df is None:  # a path the period table does not hold
-                _check_page(offset, limit)
-                return []
             return _sorted_rows(df, "timestamp", offset, limit)
 
     def get_metric_bounds_df(
@@ -764,27 +742,22 @@ class TablesTSDB(BaseTSDB):
         validate_period(period, self.period_seconds)
         return storage.read_table(self.spark, self._period_path(period), AGG_SCHEMA)
 
-    def _period_slice(
-        self, period: str, start: float, end: float, holding=None
-    ) -> DataFrame | None:
+    def _period_slice(self, period: str, start: float, end: float) -> DataFrame:
         """Interval read with PARTITION pruning: ``timestamp ∈ [start,
         end]`` implies ``pday ∈ [floor(start/grain), floor(end/grain)]``
         (pday is written as exactly that floor), so the range filter on
         the partition column skips whole directories at the file index
-        before the timestamp filter refines within files.  The catalog
-        check on ``holding`` and the read share one resolution of the
-        table's live files."""
+        before the timestamp filter refines within files."""
         import math
 
         validate_period(period, self.period_seconds)
         grain = self.grain_seconds
-        table = self._period_path(period)
-        live = storage.live_files(table)
-        if holding is not None and holding not in self._catalog.hwms(table, live):
-            return None
         return (
             storage.read_table(
-                self.spark, table, AGG_SCHEMA, with_partition_col=True, live=live
+                self.spark,
+                self._period_path(period),
+                AGG_SCHEMA,
+                with_partition_col=True,
             )
             .filter(
                 F.col(storage.PARTITION_COLUMN).between(

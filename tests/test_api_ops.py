@@ -72,42 +72,6 @@ def test_list_metrics_submits_no_job(spark, tsdb_dir, count_jobs):
         db.list_metrics(offset=-1)
 
 
-def test_get_metric_of_an_unknown_path_builds_no_plan(
-    spark, tsdb_dir, count_jobs, monkeypatch
-):
-    """A path absent from the period table's catalog answers [] without
-    reading the table; a known path's read resolves the table's manifest
-    once (the catalog check and the read share it) and answers as the
-    ordered DataFrame does."""
-    from smalltsdb_spark import storage
-
-    db = _served_store(spark, tsdb_dir)
-    calls = {"read_table": 0, "read_manifest": 0}
-    for name in calls:
-        real = getattr(storage, name)
-
-        def spy(*a, _real=real, _name=name, **kw):
-            calls[_name] += 1
-            return _real(*a, **kw)
-
-        monkeypatch.setattr(storage, name, spy)
-    unknown = ("nope", "tensecond", "avg", (0, 600))
-    assert count_jobs(lambda: db.get_metric(*unknown)) == 0
-    assert db.get_metric(*unknown, limit=3, offset=1) == []
-    assert calls["read_table"] == 0
-    with pytest.raises(ValueError):
-        db.get_metric("nope", "sevensecond", "avg", (0, 600))
-    with pytest.raises(ValueError):
-        db.get_metric(*unknown, offset=-1)
-
-    known = ("one", "tensecond", "avg", (0, 600))
-    calls.update(read_table=0, read_manifest=0)
-    got = db.get_metric(*known)
-    assert calls == {"read_table": 1, "read_manifest": 1}
-    assert got == [tuple(r) for r in db.get_metric_df(*known).collect()]
-    assert len(got) == 60
-
-
 def test_get_metric_pages_match_the_ordered_dataframe(spark, tsdb_dir):
     """The driver sort returns exactly the rows of the DataFrame API,
     which sorts in Spark, over a grid of offset/limit values (limit=0

@@ -128,6 +128,10 @@ def test_eligible_rows_scan_only_incoming(spark, tsdb_dir):
     assert exchange_count(eligible) == 0
     (location,) = re.findall(r"Location: \w+ \[([^\]]*)\]", plan)
     assert location.rstrip("/").endswith(os.path.join(tsdb_dir, "incoming"))
+    # the marks' JSON is parsed once, at planning: the optimizer folds
+    # from_json of a literal into a map literal, so no row parses it
+    optimized = eligible._jdf.queryExecution().optimizedPlan().toString()
+    assert "from_json" not in optimized and "keys: [" in optimized
 
 
 def test_list_metrics_scans_only_path(spark, tsdb_dir):

@@ -1916,8 +1916,41 @@ def test_list_metrics_during_sync_sees_a_whole_state(spark, tsdb_dir):
     assert answers and set(answers) <= {pre, post}
 
 
+def test_eligible_rows_find_every_mark_by_crc32(spark, tsdb_dir):
+    """Sync's marks literal buckets paths by Python's zlib.crc32 of their
+    UTF-8 bytes and rows find their bucket by Spark's crc32: the two must
+    agree for every path, non-ASCII ones included, or a row would miss
+    its mark and be aggregated again."""
+    import random
+
+    db = TablesTSDB(spark, tsdb_dir, now=lambda: 0.0)
+    rng = random.Random(5)
+    names = ["ü", "日本.cpu", "emoji.\U0001f600", "tab\tpath", "", "a" * 300]
+    paths = names + [f"{rng.choice(names)}.{i}" for i in range(300)]
+    marks = [
+        {p: rng.randrange(0, 100) * 10.0 for p in paths if rng.random() < 0.8},
+        {p: rng.randrange(0, 20) * 60.0 for p in paths if rng.random() < 0.8},
+    ]
+    rows = [(p, rng.uniform(0, 1500.0), 1.0) for p in paths for _ in range(4)]
+    due = [(10, 1_200.0, marks[0]), (60, 1_200.0, marks[1])]
+    got = sorted(
+        (r.path, r.timestamp, r._table)
+        for r in db._eligible_rows(
+            spark.createDataFrame(rows, "path string, timestamp double, value double"),
+            due,
+        ).collect()
+    )
+    want = sorted(
+        (p, ts, i)
+        for p, ts, _v in rows
+        for i, (s, fe, hwms) in enumerate(due)
+        if (hwms[p] + s if p in hwms else 0.0) <= ts < fe
+    )
+    assert got == want
+
+
 def test_path_catalog_re_resolves_a_retired_file_and_raises_on_a_lost_one(
-    spark, tsdb_dir
+    spark, tsdb_dir, monkeypatch
 ):
     """A file list resolved before a commit removed one of its files is
     re-resolved; a live file that is gone from disk raises, as a scan
@@ -1929,8 +1962,45 @@ def test_path_catalog_re_resolves_a_retired_file_and_raises_on_a_lost_one(
     db.sync()
     table = db._period_path("tensecond")
     live = storage.live_files(table)
-    retired = live._replace(files=[*live.files, "pday=0/part-retired.parquet"])
-    assert db._catalog.hwms(table, retired) == {"a": 0.0, "b": 10.0}
-    os.remove(os.path.join(table, live.files[0]))
+    real = storage.live_files
+    answers = iter([[*live, "pday=0/part-retired.parquet"]])
+    monkeypatch.setattr(
+        storage, "live_files", lambda path: next(answers, None) or real(path)
+    )
+    assert db._catalog.hwms(table) == {"a": 0.0, "b": 10.0}
+    os.remove(os.path.join(table, live[0]))
     with pytest.raises(FileNotFoundError):
         db._catalog.hwms(table)
+
+
+def test_path_catalog_older_snapshot_keeps_newer_files(tmp_path, monkeypatch):
+    """Only the newest resolution of a table's live files evicts: a
+    reader that resolved before a commit and folds after it answers from
+    its own snapshot and leaves the commit's files cached, so neither
+    side summarizes the other's files again."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from smalltsdb_spark import catalog, storage
+
+    table = str(tmp_path)
+    for name, path, ts in [("old", "a", 10.0), ("new", "b", 20.0)]:
+        pq.write_table(
+            pa.table({"path": [path], "timestamp": [ts]}),
+            os.path.join(table, f"{name}.parquet"),
+        )
+    reads = []
+    real = catalog.file_hwms
+    monkeypatch.setattr(
+        catalog, "file_hwms", lambda f: reads.append(os.path.basename(f)) or real(f)
+    )
+    cat = catalog.PathCatalog()
+    # resolution 1 saw old.parquet; a commit swapped it for new.parquet;
+    # resolution 2 saw that and folds first, then resolution 1 folds
+    assert cat._fold(table, ["new.parquet"], 2) == {"b": 20.0}
+    assert cat._fold(table, ["old.parquet"], 1) == {"a": 10.0}
+    assert cat._fold(table, ["new.parquet"], 3) == {"b": 20.0}
+    assert reads == ["new.parquet", "old.parquet"]
+    monkeypatch.setattr(storage, "live_files", lambda path: ["new.parquet"])
+    assert cat.hwms(table) == {"b": 20.0}
+    assert reads == ["new.parquet", "old.parquet"]
