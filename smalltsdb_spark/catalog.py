@@ -67,8 +67,8 @@ class PathCatalog:
         self._resolved = 0
         # table path -> {relpath: ((size, mtime_ns), file_hwms)}
         self._files: dict[str, dict] = {}
-        # table path -> (resolution number, its live relpaths)
-        self._newest: dict[str, tuple[int, frozenset]] = {}
+        # table path -> the number of the resolution cached
+        self._newest: dict[str, int] = {}
         # table path -> (the file keys folded, their folded marks)
         self._folds: dict[str, tuple] = {}
 
@@ -117,16 +117,11 @@ class PathCatalog:
                         out[path] = ts
             folded = (folded_keys, out)
         with self._lock:
-            newest = self._newest.get(table)
-            if newest is None or number >= newest[0]:
-                # the newest live set: cache exactly its files
-                self._newest[table] = (number, frozenset(files))
+            # the newest live set replaces the cache with exactly its
+            # files; an older one has nothing to add, since the newest
+            # set's files are all cached already
+            if number >= self._newest.get(table, 0):
+                self._newest[table] = number
                 self._files[table] = summaries
                 self._folds[table] = folded
-            else:
-                # an older snapshot: keep what the newest set still holds
-                cached = self._files.setdefault(table, {})
-                for rel, summary in summaries.items():
-                    if rel in newest[1] and rel not in cached:
-                        cached[rel] = summary
         return folded[1]
