@@ -27,6 +27,7 @@ Redesigned for the Spark architecture:
 
 from __future__ import annotations
 
+import errno
 import logging
 import os
 import queue
@@ -101,6 +102,12 @@ class _TCPServer(socketserver.TCPServer):
     allow_reuse_address = True
 
 
+#: UDP+TCP pairs tried on fresh ephemeral ports before a port-0 Daemon
+#: gives up: another socket may already hold the TCP side of the number
+#: UDP was given
+_BIND_ATTEMPTS = 8
+
+
 class Daemon:
     """Listen for Graphite lines on UDP and TCP, micro-batch into a sink.
 
@@ -126,18 +133,33 @@ class Daemon:
         self._threads: list[threading.Thread] = []
         self._received = 0
         self._received_cond = threading.Condition()
-        self._servers = []
-        for server_cls, handler_cls in (
-            (_UDPServer, _DatagramHandler),
-            (_TCPServer, _StreamHandler),
-        ):
-            srv = server_cls(address, handler_cls)
+        self._servers = self._bind(address)
+        for srv in self._servers:
             srv.ingest_queue = self._queue
             srv.on_enqueued = self._note_enqueued
-            self._servers.append(srv)
-            # after the first bind with port 0, reuse the allotted port for
-            # the second transport so both listen on the same number
-            address = (address[0], srv.server_address[1])
+
+    @staticmethod
+    def _bind(address: tuple[str, int]) -> list[socketserver.BaseServer]:
+        """UDP then TCP on one port number.  With port 0 the TCP side
+        reuses the port UDP was allotted, which another TCP socket may
+        hold already: the pair is then retried on a fresh ephemeral
+        port, up to ``_BIND_ATTEMPTS`` times.  An explicit port raises
+        at once.  A failed pair's UDP server is closed either way."""
+        host, port = address
+        for attempt in range(_BIND_ATTEMPTS):
+            udp = _UDPServer(address, _DatagramHandler)
+            try:
+                tcp = _TCPServer((host, udp.server_address[1]), _StreamHandler)
+            except OSError as exc:
+                udp.server_close()
+                if (
+                    port != 0
+                    or exc.errno != errno.EADDRINUSE
+                    or attempt == _BIND_ATTEMPTS - 1
+                ):
+                    raise
+                continue
+            return [udp, tcp]
 
     @property
     def address(self) -> tuple[str, int]:

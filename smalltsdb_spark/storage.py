@@ -48,8 +48,10 @@ table has exactly one commit protocol, decided here and nowhere else:
 
 from __future__ import annotations
 
+import math
 import os
 import shutil
+from operator import itemgetter
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -160,7 +162,7 @@ HIST_GEOMETRY_MARKER = "_geometry.json"
 
 def pin_histogram_geometry(
     hist_dir: str, want: dict, write: bool = True
-) -> None:
+) -> bool:
     """Pin (or verify) a persisted histogram table's geometry marker —
     ``{bin_width, clamp_bin, fine_seconds}`` as ``_geometry.json`` in
     the table directory.  The geometry decides what every (timestamp,
@@ -178,7 +180,8 @@ def pin_histogram_geometry(
     serving bounds from it would be a silent-corruption bet.  Same
     tmp+rename + re-read-after-replace discipline as :func:`pin_grain`
     (two concurrent creators with different geometries: last replace
-    wins, the loser fails)."""
+    wins, the loser fails).  Returns True when this call wrote the
+    marker (the table's first pin)."""
     import json
     import uuid
 
@@ -192,7 +195,7 @@ def pin_histogram_geometry(
                 f"geometry {existing}; cannot open with {want} — "
                 "rebuild the histogram table to change its geometry"
             )
-        return
+        return False
     if _histogram_has_data(hist_dir):
         raise ValueError(
             f"histogram table at {hist_dir!r} is non-empty but carries "
@@ -202,7 +205,7 @@ def pin_histogram_geometry(
             "marker with the geometry that wrote it)"
         )
     if not write:
-        return
+        return False
     os.makedirs(hist_dir, exist_ok=True)
     tmp = f"{marker}.tmp-{os.getpid()}-{uuid.uuid4().hex[:8]}"
     with open(tmp, "w") as f:
@@ -215,6 +218,7 @@ def pin_histogram_geometry(
             f"histogram table at {hist_dir!r} was concurrently pinned "
             f"to geometry {final}; cannot open with {want}"
         )
+    return True
 
 
 def _histogram_has_data(hist_dir: str) -> bool:
@@ -761,7 +765,8 @@ def write_partitioned(
     keys: tuple[str, ...] = (),
 ) -> None:
     """Parquet write of ``df`` under ``dest``, partitioned by ``keys``
-    then ``pday`` and clustered by those values first.
+    then ``pday``, clustered by those values first and sorted by
+    ``(path, timestamp)`` within each partition.
 
     Without the clustering every upstream task writes a file into every
     pday it touches — an N_tasks × N_days small-file explosion
@@ -770,9 +775,19 @@ def write_partitioned(
     Repartitioning on the partition values gives one file per partition;
     parallelism = number of partitions touched, which is what
     partitioned-write throughput is bounded by anyway.
+
+    The sort gives each row group a narrow ``path`` range, so a read of
+    one path (:func:`read_series`, or a Spark scan with a pushed
+    ``path`` filter) decodes only the row groups holding it, not the
+    whole partition.  It extends the partition-column sort the writer
+    needs anyway, so it adds no stage.
     """
     by = [*keys, PARTITION_COLUMN]
-    clustered = with_pday(df, grain_seconds).repartition(*by)
+    clustered = (
+        with_pday(df, grain_seconds)
+        .repartition(*by)
+        .sortWithinPartitions(*by, "path", "timestamp")
+    )
     clustered.write.partitionBy(*by).mode(mode).parquet(dest)
 
 
@@ -1046,6 +1061,96 @@ def column_ranges(files, column: str) -> list[tuple] | None:
                 return None
             ranges.append((stats.min, stats.max))
     return ranges
+
+
+def _may_hold(stats, lo, hi) -> bool:
+    """Whether a row group whose column statistics are ``stats`` may hold
+    a value in ``[lo, hi]``; a group without min/max is always read."""
+    return (
+        stats is None
+        or not stats.has_min_max
+        or (stats.min <= hi and stats.max >= lo)
+    )
+
+
+def read_series(
+    table: str,
+    files: list[str],
+    schema: T.StructType,
+    path: str,
+    column: str,
+    start: float,
+    end: float,
+    grain_seconds: int,
+    keep: int | None = None,
+) -> list[tuple]:
+    """``(timestamp, column)`` of the rows with ``path == path`` and
+    ``start <= timestamp <= end``, in ``timestamp`` order, read on the
+    driver with pyarrow from ``table``'s ``files`` (relative paths, as
+    :func:`live_files` resolves them) and cast to ``schema`` — no Spark
+    job.  The same rows a scan of those files filtered on the interval
+    and its ``pday`` range returns:
+
+    - only files whose ``pday`` unit is in ``[floor(start / grain),
+      floor(end / grain)]`` are opened (the partition pruning of the
+      scan);
+    - of those, only the row groups whose ``path`` and ``timestamp``
+      min/max statistics can hold a matching row are decoded, which
+      :func:`write_partitioned`'s ``(path, timestamp)`` sort makes a
+      narrow set;
+    - with ``keep``, at most the first ``keep`` rows by timestamp are
+      held between files.
+
+    A file that is missing raises ``FileNotFoundError``, as a scan
+    does."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    want = [
+        (name, to_arrow_type(schema[name].dataType))
+        for name in ("timestamp", column)
+    ]
+    lo, hi = math.floor(start / grain_seconds), math.floor(end / grain_seconds)
+    match = (
+        (pc.field("path") == path)
+        & (pc.field("timestamp") >= start)
+        & (pc.field("timestamp") <= end)
+    )
+    rows: list[tuple] = []
+    for rel in files:
+        try:
+            unit = int(rel.split(os.sep, 1)[0].removeprefix(f"{PARTITION_COLUMN}="))
+        except ValueError:  # outside any partition: a scan gives it no pday
+            continue
+        if not lo <= unit <= hi:
+            continue
+        with pq.ParquetFile(os.path.join(table, rel)) as parquet:
+            meta = parquet.metadata
+            names = meta.schema.names
+            p, t = names.index("path"), names.index("timestamp")
+            groups = []
+            for i in range(meta.num_row_groups):
+                group = meta.row_group(i)
+                if (
+                    group.num_rows
+                    and _may_hold(group.column(p).statistics, path, path)
+                    and _may_hold(group.column(t).statistics, start, end)
+                ):
+                    groups.append(i)
+            if not groups:
+                continue
+            got = parquet.read_row_groups(
+                groups, columns=["path", *(name for name, _ in want)]
+            )
+        got = got.filter(match)
+        rows.extend(
+            zip(*(got[name].cast(type_).to_pylist() for name, type_ in want))
+        )
+        rows.sort(key=itemgetter(0))
+        if keep is not None:
+            del rows[keep:]
+    return rows
 
 
 def drop_partitions_below(

@@ -10,7 +10,9 @@ logical model and method signatures, re-expressed over DataFrames:
                      grouping key), so a one-metric read does not scan every
                      metric's values.
 - ``TablesTSDB``   — aggregates materialized as day-partitioned parquet,
-                     advanced incrementally by ``sync()`` (tsdb.py:271-420).
+                     advanced incrementally by ``sync()`` (tsdb.py:271-420);
+                     a read of finalized buckets is served from the
+                     table's files on the driver, with no Spark job.
 - ``TwoDatabasesTSDB`` — incoming stored under a separate location
                      (tsdb.py:423-454); with snapshot-isolated parquet
                      readers this is pure API parity, not a locking fix.
@@ -228,14 +230,14 @@ class BaseTSDB:
             "fine_seconds": self.hist_fine_seconds,
         }
 
-    def _pin_hist_geometry(self, write: bool = True) -> None:
+    def _pin_hist_geometry(self, write: bool = True) -> bool:
         """Pin/verify the persisted histogram's geometry marker
         (storage.pin_histogram_geometry — shared with the streaming
         maintenance path, which pins the same marker before start()).
         A mismatch, or a non-empty table with no marker at all, is a
         hard error at open/write/read time, not a corruption discovered
-        in a bounds read."""
-        storage.pin_histogram_geometry(
+        in a bounds read.  True when this call wrote the marker."""
+        return storage.pin_histogram_geometry(
             os.path.join(self.path, "histogram"),
             self._hist_geometry(),
             write=write,
@@ -340,7 +342,8 @@ class BaseTSDB:
         self, path, period, stat, interval, include_partial: bool
     ) -> DataFrame:
         """The unordered ``(timestamp, stat)`` rows behind
-        :meth:`get_metric_df` and :meth:`get_metric` — one per bucket."""
+        :meth:`get_metric_df` and the Spark reads of :meth:`get_metric`
+        — one per bucket."""
         validate_period(period, self.period_seconds)
         validate_stat(stat)
         start, end = (coerce_epoch(x) for x in interval)
@@ -453,7 +456,13 @@ class BaseTSDB:
         :meth:`get_metric_bounds_df`.  The bounds path serves FINAL
         histogram buckets only, so combining it with
         ``include_partial=True`` raises rather than silently dropping
-        the open buckets the caller asked for (ADVICE r11)."""
+        the open buckets the caller asked for (ADVICE r11).
+
+        ``timeout`` bounds the Spark jobs the call submits
+        (:meth:`query_timeout`).  A finalized read on
+        :class:`TablesTSDB` (``include_partial=False, bounds=False``)
+        submits none: it reads the period table's files on the driver,
+        so there is nothing to cancel."""
         if bounds:
             if include_partial:
                 raise ValueError(
@@ -767,6 +776,73 @@ class TablesTSDB(BaseTSDB):
             .drop(storage.PARTITION_COLUMN)
             .filter(F.col("timestamp").between(start, end))
         )
+
+    def get_metric(
+        self,
+        path,
+        period,
+        stat,
+        interval,
+        *,
+        limit: int | None = None,
+        offset: int = 0,
+        timeout: float | None = None,
+        include_partial: bool = False,
+        bounds: bool = False,
+    ) -> list[tuple]:
+        """:meth:`BaseTSDB.get_metric`; a finalized read (no partial
+        buckets, no bounds — every read the dashboard makes) is served on
+        the driver with no DataFrame, py4j call or Spark job, like the
+        reference's one SQLite range scan (reference tsdb.py:130-137).
+        It resolves the period table's live files once
+        (:func:`storage.live_files`, the set :meth:`period_table`
+        scans) and reads ``timestamp`` and ``stat`` of ``path`` in the
+        interval from the files of its ``pday`` range
+        (:func:`storage.read_series`), keeping at most ``offset +
+        limit`` rows by time when ``limit`` is given — the bound the
+        Spark form's TakeOrderedAndProject gives.  A file that a commit
+        retired and removed after the resolution makes it resolve again,
+        as :meth:`PathCatalog.hwms` does; a live file that is gone
+        raises ``FileNotFoundError``, as a scan would.  The rows are
+        :meth:`get_metric_df`'s, which the tests compare against."""
+        if include_partial or bounds:
+            return super().get_metric(
+                path,
+                period,
+                stat,
+                interval,
+                limit=limit,
+                offset=offset,
+                timeout=timeout,
+                include_partial=include_partial,
+                bounds=bounds,
+            )
+        validate_period(period, self.period_seconds)
+        validate_stat(stat)
+        _check_page(offset, limit)
+        start, end = (coerce_epoch(x) for x in interval)
+        table = self._period_path(period)
+        with self.timer("get_metric"):
+            seen = None
+            while True:
+                files = storage.live_files(table)
+                try:
+                    rows = storage.read_series(
+                        table,
+                        files,
+                        AGG_SCHEMA,
+                        path,
+                        stat,
+                        start,
+                        end,
+                        self.grain_seconds,
+                        keep=None if limit is None else offset + limit,
+                    )
+                    return rows[offset:]
+                except FileNotFoundError:
+                    if files == seen:
+                        raise
+                    seen = files
 
     def _histogram_table(self) -> DataFrame | None:
         """The persisted fine histogram (histograms=True): maintained by
@@ -1109,15 +1185,15 @@ class TablesTSDB(BaseTSDB):
         table's catalog below predates this sync."""
         import warnings
 
-        self._pin_hist_geometry()
-        hwms = self._hwms("histogram")
-        if not hwms and self._hwms(fine_name):
-            # histograms enabled on a store with pre-existing
-            # history: the histogram HWM starts from scratch, but
-            # incoming retention may already have dropped the raw
-            # rows behind old buckets — those buckets will be
-            # silently ABSENT from bounds reads (ADVICE r11: rows
-            # missing, not wrong)
+        if self._pin_hist_geometry() and self._hwms(fine_name):
+            # the first pin of the histogram geometry on a store whose
+            # finest table already holds buckets: histograms were
+            # enabled late, so the histogram HWM starts from scratch,
+            # but incoming retention may already have dropped the raw
+            # rows behind old buckets — those buckets will be silently
+            # ABSENT from bounds reads (ADVICE r11: rows missing, not
+            # wrong).  Later syncs stay quiet, whether or not a
+            # histogram bucket is final yet.
             warnings.warn(
                 "histogram table is empty but period tables "
                 "have history: buckets whose raw rows predate "
@@ -1126,7 +1202,7 @@ class TablesTSDB(BaseTSDB):
                 "creation to avoid the gap",
                 stacklevel=3,
             )
-        return hwms
+        return self._hwms("histogram")
 
     def _finality_key(self, seconds: int, retention_period: str, now: float):
         """What a table's sync depends on from the clock: its finality

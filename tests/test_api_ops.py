@@ -43,18 +43,27 @@ def _served_store(spark, tsdb_dir):
 PAGES = [(0, None), (0, 0), (0, 3), (2, None), (2, 0), (2, 3), (2, 500), (500, None), (500, 3)]
 
 
-def test_get_metric_is_one_spark_job(spark, tsdb_dir, count_jobs):
-    """A read collects its rows unordered and sorts them on the driver:
-    one Spark job for every limit/offset, not a range-partitioned global
-    sort (sampling job, shuffle stage, result); list_metrics is the
-    distinct stage plus the result."""
+def test_get_metric_submits_no_job(spark, tsdb_dir, count_jobs, monkeypatch):
+    """A finalized read is served on the driver from the period table's
+    files: no Spark job and no py4j round trip, for every limit/offset
+    (list_metrics, off the path catalog, submits none either)."""
     db = _served_store(spark, tsdb_dir)
-    for kw in ({}, {"limit": 3}, {"offset": 2}, {"limit": 3, "offset": 2}):
+    pages = ({}, {"limit": 3}, {"offset": 2}, {"limit": 3, "offset": 2})
+    for kw in pages:
         jobs = count_jobs(
             lambda: db.get_metric("one", "tensecond", "avg", (0, 600), **kw)
         )
-        assert jobs == 1, kw
-    assert count_jobs(db.list_metrics) <= 2
+        assert jobs == 0, kw
+    assert count_jobs(db.list_metrics) == 0
+    client = spark.sparkContext._gateway._gateway_client
+    calls = []
+    real = client.send_command
+    monkeypatch.setattr(
+        client, "send_command", lambda *a, **k: calls.append(a) or real(*a, **k)
+    )
+    for kw in pages:
+        assert db.get_metric("one", "tensecond", "avg", (0, 600), **kw), kw
+    assert calls == []
 
 
 def test_list_metrics_submits_no_job(spark, tsdb_dir, count_jobs):
@@ -268,11 +277,15 @@ def test_query_timeout_cancels_slow_query(spark, tsdb_dir):
 
     real_df = db.get_metric_df("two", "tensecond", "avg", (0, 100))
     slowed = real_df.withColumn("avg", crawl("avg"))
-    db._metric_rows = lambda *a, **k: slowed  # the relation get_metric collects
+    # the relation a read with partial buckets collects (a finalized
+    # read runs no Spark job, so there is nothing of it to cancel)
+    db._metric_rows = lambda *a, **k: slowed
 
     t0 = _time.perf_counter()
     with pytest.raises(TimeoutError):
-        db.get_metric("two", "tensecond", "avg", (0, 100), timeout=2.0)
+        db.get_metric(
+            "two", "tensecond", "avg", (0, 100), timeout=2.0, include_partial=True
+        )
     assert _time.perf_counter() - t0 < 60  # cancelled, not slept out
 
     # the session survives: an untimed query on the same handle works

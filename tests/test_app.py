@@ -67,9 +67,9 @@ def test_graph_data_golden_b(spark, tsdb_dir):
     assert two["timestamps"] == [0.0, 10.0, 40.0]
 
 
-def test_graph_of_three_series_is_three_spark_jobs(spark, tsdb_dir, count_jobs):
-    """/graph reads one series per get_metric, and each read is one
-    Spark job (rows sorted on the driver)."""
+def test_graph_of_three_series_submits_no_job(spark, tsdb_dir, count_jobs):
+    """/graph reads one series per get_metric, and each finalized read
+    is served on the driver: no Spark job for the whole request."""
     from smalltsdb_spark.app import create_app
 
     db = TablesTSDB(spark, tsdb_dir, now=lambda: 1e9)
@@ -84,7 +84,7 @@ def test_graph_of_three_series_is_three_spark_jobs(spark, tsdb_dir, count_jobs):
     }
     client = create_app(db).test_client()
     responses = []
-    assert count_jobs(lambda: responses.append(client.get("/graph", query_string=query))) == 3
+    assert count_jobs(lambda: responses.append(client.get("/graph", query_string=query))) == 0
     (resp,) = responses
     assert resp.status_code == 200
     series = resp.get_json()["series"]

@@ -102,3 +102,50 @@ def test_daemon_malformed_datagram_dropped(spark, tsdb_dir):
         assert _wait(lambda: db.incoming().count() == 1)
     rows = [tuple(r) for r in db.incoming().collect()]
     assert rows == [("ok", 7.0, 3.0)]
+
+
+def test_daemon_retries_a_port_whose_tcp_side_is_taken(monkeypatch):
+    """With port 0, a TCP bind that fails with EADDRINUSE (another socket
+    holds the TCP side of the port UDP was given) retries the pair on a
+    fresh port and closes the failed pair's UDP server; with an explicit
+    port the error is raised, the UDP server closed all the same."""
+    import errno
+
+    from smalltsdb_spark.sources import daemon as daemon_mod
+
+    real_bind = daemon_mod._TCPServer.server_bind
+    failures = {"left": 1}
+
+    def bind(self):
+        if failures["left"]:
+            failures["left"] -= 1
+            raise OSError(errno.EADDRINUSE, "Address already in use")
+        real_bind(self)
+
+    closed = []
+    real_close = daemon_mod._UDPServer.server_close
+
+    def close(self):
+        closed.append(self.server_address[1])
+        real_close(self)
+
+    monkeypatch.setattr(daemon_mod._TCPServer, "server_bind", bind)
+    monkeypatch.setattr(daemon_mod._UDPServer, "server_close", close)
+    got = []
+    daemon = Daemon(got.extend, interval=60.0)
+    assert len(closed) == 1 and daemon.address[1] != closed[0]
+    with daemon:
+        send_udp(daemon.address, [b"one 1 1"])
+        send_tcp(daemon.address, [b"two 2 2\n"])
+        assert daemon.wait_for_datapoints(2)
+    assert sorted(got) == [("one", 1.0, 1.0), ("two", 2.0, 2.0)]
+
+    closed.clear()
+    failures["left"] = 1
+    with socket.socket(socket.AF_INET, socket.SOCK_DGRAM) as s:
+        s.bind(("localhost", 0))
+        port = s.getsockname()[1]
+    with pytest.raises(OSError) as exc:
+        Daemon(got.extend, ("localhost", port))
+    assert exc.value.errno == errno.EADDRINUSE
+    assert closed == [port]

@@ -967,11 +967,14 @@ def test_histograms_enabled_late_warns_about_missing_history(spark, tsdb_dir):
     with warnings.catch_warnings(record=True) as w:
         warnings.simplefilter("always")
         db2.sync()
-    assert any("histogram table is empty" in str(x.message) for x in w)
-    # once the histogram has rows, later syncs stay quiet
+    assert sum("histogram table is empty" in str(x.message) for x in w) == 1
+    # the sync that pinned the histogram's geometry warned; later syncs,
+    # on this handle or a fresh one, stay quiet
+    clock["now"] += 60.0
     with warnings.catch_warnings(record=True) as w:
         warnings.simplefilter("always")
         db2.sync()
+        TablesTSDB(spark, tsdb_dir, now=lambda: clock["now"], histograms=True).sync()
     assert not any("histogram table is empty" in str(x.message) for x in w)
 
 
@@ -1492,6 +1495,8 @@ def test_histogram_without_new_buckets_commits_nothing(
     """A sync that finalizes tensecond buckets but no 60 s histogram
     bucket appends to tensecond only: the histogram's first such sync
     writes no manifest, and a later one leaves it untouched."""
+    import warnings
+
     from smalltsdb_spark import storage
 
     clock = {"now": 100.0}  # tensecond final below 40, histogram below 0
@@ -1499,21 +1504,26 @@ def test_histogram_without_new_buckets_commits_nothing(
     db = twins.db
     hist = os.path.join(db.path, "histogram")
     manifest = os.path.join(hist, storage.MANIFEST)
-    twins.insert([("a", 5.0, 1.0)])
-    twins.sync()
-    assert not os.path.exists(manifest)
-    twins.insert([("a", float(t), 2.0) for t in range(15, 940, 60)])
-    clock["now"] = 1_000.0
-    twins.sync()
-    assert hist in appends_never_collide
-    before = os.stat(manifest)
-    appends_never_collide.clear()
-    twins.insert([("a", 945.0, 3.0)])  # final for tensecond only
-    clock["now"] = 1_010.0
-    twins.sync()
+    with warnings.catch_warnings(record=True) as w:
+        # a store created with histograms: no histogram bucket being
+        # final yet is not the "enabled late" state
+        warnings.simplefilter("always")
+        twins.insert([("a", 5.0, 1.0)])
+        twins.sync()
+        assert not os.path.exists(manifest)
+        twins.insert([("a", float(t), 2.0) for t in range(15, 940, 60)])
+        clock["now"] = 1_000.0
+        twins.sync()
+        assert hist in appends_never_collide
+        before = os.stat(manifest)
+        appends_never_collide.clear()
+        twins.insert([("a", 945.0, 3.0)])  # final for tensecond only
+        clock["now"] = 1_010.0
+        twins.sync()
     assert {os.path.basename(p) for p in appends_never_collide} == {"tensecond"}
     after = os.stat(manifest)
     assert (after.st_ino, after.st_mtime_ns) == (before.st_ino, before.st_mtime_ns)
+    assert not [x for x in w if "histogram table is empty" in str(x.message)]
 
 
 @pytest.mark.parametrize("fail_at", [1, 2], ids=["before-first", "between-tables"])
@@ -1773,6 +1783,25 @@ def _catalog_matches_scan(dbs, names) -> dict:
     return want
 
 
+def _series_match_dataframe(db, names, path, interval) -> None:
+    """``get_metric`` (served on the driver) equals the ordered rows of
+    ``get_metric_df`` (a Spark scan) on every table in ``names``, for
+    every stat and every page of the ``PAGES`` grid."""
+    from smalltsdb_spark.config import STATS
+    from tests.test_api_ops import PAGES
+
+    for name in names:
+        for stat in STATS:
+            want = [
+                tuple(r) for r in db.get_metric_df(path, name, stat, interval).collect()
+            ]
+            for offset, limit in PAGES:
+                got = db.get_metric(
+                    path, name, stat, interval, offset=offset, limit=limit
+                )
+                assert got == want[offset:][:limit], (name, stat, offset, limit)
+
+
 def test_path_catalog_equals_a_scan_on_a_random_schedule(
     spark, tmp_path, appends_never_collide
 ):
@@ -1782,7 +1811,8 @@ def test_path_catalog_equals_a_scan_on_a_random_schedule(
     high-water marks), a pre-manifest listing table adopted on its first
     append, and one owned by a streaming rollup's file-sink log, next to
     a data file the log never committed.  After every step the catalog
-    of the live handle and of a fresh one equals a scan."""
+    of the live handle and of a fresh one equals a scan, and so does a
+    read of one seeded path and interval (:func:`_series_match_dataframe`)."""
     import random
 
     import pyarrow as pa
@@ -1838,7 +1868,19 @@ def test_path_catalog_equals_a_scan_on_a_random_schedule(
         rows.set_column(0, "path", pa.array(["ghost"] * rows.num_rows)), orphan
     )
 
+    rng = random.Random(20261018)
+    reads = random.Random(8)  # its own stream: the schedule stays rng's
+    paths = ["a", "b", "c", "d"]
+
     def check():
+        # a seeded path (the sink table's ones and the uncommitted
+        # file's included) between two of: minute-aligned times, and its
+        # last bucket in each table, which puts a bucket on an end of
+        # the inclusive interval
+        path = reads.choice([*paths, "e", "s4", "ghost"])
+        edges = [60.0 * reads.randrange(0, int(clock["now"]) // 60) for _ in "ab"]
+        edges += [hwms[path] for hwms in map(db._hwms, names) if path in hwms]
+        _series_match_dataframe(db, names, path, sorted(reads.sample(edges, 2)))
         return _catalog_matches_scan([db, TablesTSDB(spark, base, **kw)], names)
 
     marks = [check()]
@@ -1848,8 +1890,6 @@ def test_path_catalog_equals_a_scan_on_a_random_schedule(
     assert storage.read_manifest(db._period_path("oneminute")) is not None
     marks.append(check())
 
-    rng = random.Random(20261018)
-    paths = ["a", "b", "c", "d"]
     steps = ["ahead", "late", "advance", "sync", "sync", "compact"]
     for step in [rng.choice(steps) for _ in range(12)] + ["advance", "sync"]:
         now = clock["now"]
@@ -1916,6 +1956,139 @@ def test_list_metrics_during_sync_sees_a_whole_state(spark, tsdb_dir):
     assert answers and set(answers) <= {pre, post}
 
 
+def test_get_metric_during_sync_sees_a_whole_state(spark, tsdb_dir):
+    """``get_metric`` in a second thread while ``sync`` appends to a
+    period table and compacts its closed partitions (retiring the files
+    the pre-sync snapshot names), on the syncing handle and on fresh
+    ones: every answer is the pre-sync or the post-sync series, and
+    none raises."""
+    import threading
+
+    from smalltsdb_spark import storage
+
+    hour = 3600
+    clock = {"now": 1_800.0}
+    kw = dict(now=lambda: clock["now"], partition_grain="hour")
+    db = TablesTSDB(spark, tsdb_dir, **kw)
+    db.insert([("m", float(t), float(t % 17)) for t in range(0, 2 * hour, 5)])
+    db.sync()  # hour 0 partly final: its partition stays open
+    table = db._period_path("tensecond")
+    before = set(storage.live_files(table))
+    clock["now"] = 2 * hour + 600.0
+    args = ("m", "tensecond", "avg", (0, 2 * hour))
+    pre = tuple(db.get_metric(*args))
+    answers, errors, done = [], [], threading.Event()
+
+    def read():
+        k = 0
+        while not done.is_set():
+            k += 1
+            handle = db if k % 2 else TablesTSDB(spark, tsdb_dir, **kw)
+            try:
+                answers.append(tuple(handle.get_metric(*args)))
+            except Exception as exc:  # noqa: BLE001 — the test's subject
+                errors.append(exc)
+
+    reader = threading.Thread(target=read)
+    reader.start()
+    try:
+        db.sync()
+    finally:
+        done.set()
+        reader.join(timeout=120)
+    assert not reader.is_alive()
+    post = tuple(db.get_metric(*args))
+    assert errors == []
+    assert len(pre) == 174 and len(post) == 2 * hour // 10
+    # hours 0 and 1 closed: compacted to one new file each
+    assert storage.partition_file_counts(table) == {0: 1, 1: 1}
+    assert before.isdisjoint(storage.live_files(table))
+    assert answers and set(answers) <= {pre, post}
+
+
+def test_written_partitions_are_sorted_by_path_and_time(spark, tsdb_dir):
+    """Every file the write path leaves (incoming's appends, sync's
+    staged pass, compaction) holds its rows in ``(path, timestamp)``
+    order, with ``path`` min/max statistics on every row group, so a
+    one-path read can skip the row groups of other paths."""
+    import random
+
+    import pyarrow.parquet as pq
+
+    from smalltsdb_spark import storage
+
+    rng = random.Random(3)
+    rows = [(f"p{rng.randrange(20)}", rng.uniform(0, 7_000), 1.0) for _ in range(2_000)]
+    db = TablesTSDB(spark, tsdb_dir, now=lambda: 8_000.0, partition_grain="hour")
+    db.insert(rows[:1_000])
+    db.insert(rows[1_000:])
+    db.sync()
+    db.compact()
+    tables = [db.incoming_path] + [db._period_path(n) for n, _ in db.periods]
+    files = [os.path.join(t, rel) for t in tables for rel in storage.live_files(t)]
+    assert len(files) > len(tables)
+    for f in files:
+        got = pq.read_table(f, columns=["path", "timestamp"])
+        keys = list(zip(got["path"].to_pylist(), got["timestamp"].to_pylist()))
+        assert keys == sorted(keys), f
+        meta = pq.read_metadata(f)
+        col = meta.schema.names.index("path")
+        for i in range(meta.num_row_groups):
+            assert meta.row_group(i).column(col).statistics.has_min_max, f
+
+
+def test_read_series_decodes_only_the_row_groups_holding_its_path(
+    tmp_path, monkeypatch
+):
+    """On a file of several small row groups sorted by path, a read of
+    one path decodes only the row groups whose ``path`` statistics cover
+    it (and, of those, whose ``timestamp`` range meets the interval); a
+    path between two groups' ranges decodes none."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from smalltsdb_spark import storage
+    from smalltsdb_spark.schemas import AGG_SCHEMA
+
+    table = str(tmp_path)
+    rel = os.path.join("pday=0", "part-0.parquet")
+    os.makedirs(os.path.join(table, "pday=0"))
+    paths = ["a", "b", "c", "d"]
+    pq.write_table(
+        pa.table(
+            {
+                "path": [p for p in paths for _ in range(10)],
+                "timestamp": [10.0 * i for _ in paths for i in range(10)],
+                "avg": [float(k) for k in range(40)],
+            }
+        ),
+        os.path.join(table, rel),
+        row_group_size=5,  # two groups per path
+    )
+    decoded = []
+    real = pq.ParquetFile.read_row_groups
+
+    def spy(self, groups, *args, **kwargs):
+        decoded.append(list(groups))
+        return real(self, groups, *args, **kwargs)
+
+    monkeypatch.setattr(pq.ParquetFile, "read_row_groups", spy)
+
+    def read(path, start, end, keep=None):
+        decoded.clear()
+        return storage.read_series(
+            table, [rel], AGG_SCHEMA, path, "avg", start, end, 86_400, keep=keep
+        )
+
+    assert read("b", 0.0, 90.0) == [(10.0 * i, 10.0 + i) for i in range(10)]
+    assert decoded == [[2, 3]]
+    assert read("b", 50.0, 70.0) == [(50.0, 15.0), (60.0, 16.0), (70.0, 17.0)]
+    assert decoded == [[3]]
+    assert read("b", 0.0, 90.0, keep=3) == [(0.0, 10.0), (10.0, 11.0), (20.0, 12.0)]
+    assert read("bb", 0.0, 90.0) == [] and decoded == []
+    assert read("b", 86_400.0, 90_000.0) == [] and decoded == []  # pday 1
+
+
 def test_eligible_rows_find_every_mark_by_crc32(spark, tsdb_dir):
     """Sync's marks literal buckets paths by Python's zlib.crc32 of their
     UTF-8 bytes and rows find their bucket by Spark's crc32: the two must
@@ -1954,7 +2127,8 @@ def test_path_catalog_re_resolves_a_retired_file_and_raises_on_a_lost_one(
 ):
     """A file list resolved before a commit removed one of its files is
     re-resolved; a live file that is gone from disk raises, as a scan
-    does, instead of retrying forever."""
+    does, instead of retrying forever.  The same holds for the catalog
+    and for get_metric's driver read of the period table."""
     from smalltsdb_spark import storage
 
     db = TablesTSDB(spark, tsdb_dir, now=lambda: 1_000.0)
@@ -1963,14 +2137,20 @@ def test_path_catalog_re_resolves_a_retired_file_and_raises_on_a_lost_one(
     table = db._period_path("tensecond")
     live = storage.live_files(table)
     real = storage.live_files
-    answers = iter([[*live, "pday=0/part-retired.parquet"]])
+    answers = iter([])
     monkeypatch.setattr(
         storage, "live_files", lambda path: next(answers, None) or real(path)
     )
+    stale = [*live, "pday=0/part-retired.parquet"]
+    answers = iter([stale])
     assert db._catalog.hwms(table) == {"a": 0.0, "b": 10.0}
+    answers = iter([stale])
+    assert db.get_metric("b", "tensecond", "avg", (0, 100)) == [(10.0, 2.0)]
     os.remove(os.path.join(table, live[0]))
     with pytest.raises(FileNotFoundError):
         db._catalog.hwms(table)
+    with pytest.raises(FileNotFoundError):
+        db.get_metric("b", "tensecond", "avg", (0, 100))
 
 
 def test_path_catalog_older_snapshot_keeps_newer_files(tmp_path, monkeypatch):
