@@ -54,7 +54,6 @@ from smalltsdb_spark.config import (
     validate_stat,
 )
 from smalltsdb_spark.intervals import final_end
-from smalltsdb_spark.manifests import is_hidden_name
 from smalltsdb_spark.operators.aggregate import aggregate, value_histogram
 from smalltsdb_spark.schemas import (
     AGG_SCHEMA,
@@ -263,7 +262,12 @@ class BaseTSDB:
 
         Accepts an iterable of ``(path, timestamp, value)`` tuples
         (timestamp may be a number or datetime) or a DataFrame with the
-        incoming schema.
+        incoming schema.  Tuples — every daemon flush and every
+        ``emit_metrics`` re-ingest — are written on the driver with
+        pyarrow (:func:`storage.append_rows`: one file per ``pday``,
+        committed only once all are written), with no Spark job or py4j
+        call, like the reference's one SQLite ``INSERT``; a DataFrame is
+        written by a Spark job (:func:`storage.append`).
         """
         if not self.with_incoming:
             raise ValueError("this handle was opened without incoming access")
@@ -273,13 +277,15 @@ class BaseTSDB:
                 F.col("timestamp").cast("double"),
                 F.col("value").cast("double"),
             )
-        else:
-            rows = [(str(p), coerce_epoch(t), float(v)) for p, t, v in datapoints]
-            if not rows:
-                return
-            df = self.spark.createDataFrame(rows, INCOMING_SCHEMA)
-        self._pin_grain()
-        storage.append(df, self.incoming_path, self.grain_seconds)
+            self._pin_grain()
+            storage.append(df, self.incoming_path, self.grain_seconds)
+            return
+        rows = [(str(p), coerce_epoch(t), float(v)) for p, t, v in datapoints]
+        if rows:
+            self._pin_grain()
+            storage.append_rows(
+                rows, self.incoming_path, INCOMING_SCHEMA, self.grain_seconds
+            )
 
     def incoming(self) -> DataFrame:
         return storage.read_table(self.spark, self.incoming_path, INCOMING_SCHEMA)
@@ -1038,7 +1044,7 @@ class TablesTSDB(BaseTSDB):
         leaves a record on the handle (in memory only — a fresh handle's
         first sync is always a full one): the stat snapshot of incoming
         its periods were computed over (plus the files its own retention
-        rewrite installed), each table's finality key and state, and the
+        replaced), each table's finality key and state, and the
         retention cutoff.  The next sync skips a period (or the
         histogram) iff
 
@@ -1219,16 +1225,20 @@ class TablesTSDB(BaseTSDB):
         """``delete from incoming where timestamp < cutoff`` with
         ``cutoff = now - tail - max_period`` (tsdb.py:412-420):
         whole-partition drops below the cutoff's partition (day or hour
-        grain), plus a rewrite of the boundary partition when it holds
-        rows on both sides of the cutoff — read off its files' row-group
-        ``timestamp`` min/max on the driver, or, when a row group has no
-        statistics or a sink log picks the files, by one aggregation.
+        grain), then the boundary partition file by file on the driver
+        (:func:`storage.delete_rows_below`: from each file's footer
+        ``timestamp`` min/max, or its ``timestamp`` column when the file
+        has no statistics).  A file wholly below the cutoff is removed,
+        one wholly at or above it is untouched, and one that straddles it
+        is replaced under its own name by its rows at or above the
+        cutoff.  No Spark job, and a file that an ``insert`` lands in the
+        boundary partition meanwhile is kept whole.
 
-        Returns the :func:`storage.file_stats` records of the files the
-        rewrite installed, for sync's record of what its periods have
-        covered.  A rewrite whose boundary partition held a file outside
-        ``seen`` (an append that landed after sync's snapshot) returns
-        none of them, so the next sync runs.
+        Returns the :func:`storage.file_stats` records of the replaced
+        files whose originals are in ``seen`` (so their rows were covered
+        by this sync's periods), for sync's record of what it has
+        covered.  A file outside ``seen`` — an append that landed after
+        sync's snapshot — stays outside the record, so the next sync runs.
 
         Hybrid-flow note (streaming ingest + batch sync): while incoming
         is tracked by the ingest stream's file-sink log, retention stays
@@ -1240,60 +1250,15 @@ class TablesTSDB(BaseTSDB):
         at-scale answer."""
         grain = self.grain_seconds
         storage.drop_partitions_below(self.incoming_path, cutoff, grain)
-        boundary_unit = int(cutoff // grain)
-        # pure-Python existence probe first: most syncs have NO boundary
-        # partition (the cutoff falls before the data or the partition
-        # was just dropped whole), and absence proves there are no rows
-        # to delete — skip the boundary-scan Spark job outright
-        if not storage.partition_has_files(self.incoming_path, boundary_unit):
+        unit = int(cutoff // grain)
+        # most syncs have no boundary partition: the cutoff falls before
+        # the data, or its partition was just dropped whole
+        if not storage.partition_has_files(self.incoming_path, unit):
             return frozenset()
-        # read the boundary slice through the PARTITION column: pday ==
-        # boundary_unit prunes to ONE partition at the file index — the
-        # old floor(timestamp/grain) filter (a data column) scanned the
-        # whole incoming table on every retention pass
-        boundary = (
-            storage.read_table(
-                self.spark,
-                self.incoming_path,
-                INCOMING_SCHEMA,
-                with_partition_col=True,
-            )
-            .filter(F.col(storage.PARTITION_COLUMN) == boundary_unit)
-            .drop(storage.PARTITION_COLUMN)
+        replaced = storage.delete_rows_below(
+            self.incoming_path, "timestamp", cutoff, unit
         )
-        # listed after ``boundary`` lists its files, so every file the
-        # rewrite reads is in ``listed`` (or was removed meanwhile)
-        listed = storage.file_stats(
-            self.incoming_path, f"{storage.PARTITION_COLUMN}={boundary_unit}"
-        )
-        ts = F.col("timestamp")
-        files = [
-            os.path.join(self.incoming_path, rel)
-            for rel, _size, _mtime in listed
-            if rel.endswith(".parquet")
-            and not any(map(is_hidden_name, rel.split(os.sep)))
-        ]
-        ranges = None
-        if not storage.is_streaming_sink(self.incoming_path):
-            ranges = storage.column_ranges(files, "timestamp")
-        if ranges is None:
-            doomed, survivors = boundary.agg(
-                F.max(ts < cutoff), F.max(ts >= cutoff)
-            ).first()
-        else:
-            doomed = any(lo < cutoff for lo, _hi in ranges)
-            survivors = any(hi >= cutoff for _lo, hi in ranges)
-        if not doomed:
-            return frozenset()
-        if not survivors:
-            storage.drop_partitions_below(
-                self.incoming_path, (boundary_unit + 1) * grain, grain
-            )
-            return frozenset()
-        installed = storage.overwrite_partitions(
-            boundary.filter(ts >= cutoff), self.incoming_path, grain
-        )
-        return installed if listed <= seen else frozenset()
+        return frozenset(after for before, after in replaced if before in seen)
 
 
 class TwoDatabasesTSDB(TablesTSDB):

@@ -66,6 +66,25 @@ def test_get_metric_submits_no_job(spark, tsdb_dir, count_jobs, monkeypatch):
     assert calls == []
 
 
+def test_insert_of_rows_submits_no_job(spark, tsdb_dir, count_jobs, monkeypatch):
+    """An insert of rows — every daemon flush — is written on the driver
+    with pyarrow: no Spark job and no py4j round trip, counted as
+    test_get_metric_submits_no_job counts them."""
+    db = TablesTSDB(spark, tsdb_dir, now=lambda: 1e9)
+    rows = [(p, float(t), float(t % 70)) for p in ("one", "two") for t in range(0, 600, 10)]
+    assert count_jobs(lambda: db.insert(rows[:60])) == 0
+    client = spark.sparkContext._gateway._gateway_client
+    calls = []
+    real = client.send_command
+    monkeypatch.setattr(
+        client, "send_command", lambda *a, **k: calls.append(a) or real(*a, **k)
+    )
+    db.insert(rows[60:])
+    assert calls == []
+    monkeypatch.undo()
+    assert sorted(map(tuple, db.incoming().collect())) == sorted(rows)
+
+
 def test_list_metrics_submits_no_job(spark, tsdb_dir, count_jobs):
     """TablesTSDB.list_metrics is the union of the period tables' path
     catalogs: no Spark job, and the pages of the sorted list_metrics_df."""

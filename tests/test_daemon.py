@@ -149,3 +149,39 @@ def test_daemon_retries_a_port_whose_tcp_side_is_taken(monkeypatch):
         Daemon(got.extend, ("localhost", port))
     assert exc.value.errno == errno.EADDRINUSE
     assert closed == [port]
+
+
+def test_a_failed_flush_leaves_no_file_and_its_retry_stores_each_point_once(
+    spark, tsdb_dir, monkeypatch
+):
+    """An insert writes one file per partition and commits none until all
+    are written: a failure while writing the second leaves no visible
+    file (and no staging debris), the daemon keeps the batch, and its
+    retry stores every point exactly once."""
+    import os
+
+    from smalltsdb_spark import storage
+
+    db = TablesTSDB(spark, tsdb_dir, now=lambda: 100.0, partition_grain="hour")
+    batch = [("one", 10.0, 1.0), ("one", 3_700.0, 2.0), ("two", 7_300.0, 3.0)]
+    real = storage._write_arrow
+    writes = []
+
+    def fail_second(table, dest):
+        writes.append(dest)
+        if len(writes) == 2:
+            raise OSError("No space left on device")
+        real(table, dest)
+
+    monkeypatch.setattr(storage, "_write_arrow", fail_second)
+    with Daemon(db.insert, interval=60.0) as daemon:
+        daemon._pending = list(batch)
+        daemon._flush()
+        assert daemon._pending == batch  # kept for the next tick
+        assert [files for _, _, files in os.walk(db.incoming_path) if files] == []
+        assert db.incoming().count() == 0
+        monkeypatch.undo()
+        daemon._flush()
+        assert daemon._pending == []
+    assert len(writes) == 2
+    assert sorted(map(tuple, db.incoming().collect())) == sorted(batch)

@@ -1266,9 +1266,10 @@ def test_idle_sync_runs_after_a_file_lands_in_the_rewritten_boundary(
     spark, tmp_path, monkeypatch, count_jobs
 ):
     """A file that lands in retention's boundary partition after sync's
-    snapshot is folded into the rewritten partition without any period
-    having seen its rows; the rewrite's files then do not count as
-    covered, so the next sync at the same clock runs and finalizes them."""
+    snapshot, without any period having seen its rows, is outside the
+    record of what sync covered (only the files retention replaced are
+    added to it), so the next sync at the same clock runs and finalizes
+    them."""
     import shutil
 
     from smalltsdb_spark import storage
@@ -1398,14 +1399,15 @@ def _staging_dirs(base):
     return [n for n in os.listdir(base) if n.startswith(".sync-staging-")]
 
 
-def test_non_idle_sync_is_at_most_ten_jobs(
+def test_non_idle_sync_is_at_most_three_jobs(
     spark, tsdb_dir, count_jobs, appends_never_collide
 ):
     """An hourly tick over the six default periods, a day of history and
     incoming retention in steady state: the high-water marks come from
     the driver-side path catalog, so one aggregation and one write for
-    all six tables, then six manifest appends — at most 5 Spark jobs,
-    where one job chain per period took about 60."""
+    all six tables, then six manifest appends, and retention rewrites the
+    boundary partition's straddling file on the driver — at most 3 Spark
+    jobs, where one job chain per period took about 60."""
     import random
 
     rng = random.Random(11)
@@ -1419,7 +1421,7 @@ def test_non_idle_sync_is_at_most_ten_jobs(
         db.insert(_points(rng, paths, t0 + (k - 1) * 3600.0, t0 + k * 3600.0, 200))
         clock["now"] = t0 + k * 3600.0
         appends_never_collide.clear()
-        assert count_jobs(db.sync) <= 5
+        assert count_jobs(db.sync) <= 3
         # non-idle: every table below a day took new buckets
         assert sorted(appends_never_collide) == sorted(
             db._period_path(name) for name, s in db.periods if s < DAY
@@ -1713,10 +1715,11 @@ def test_appends_stay_disjoint_for_the_histogram_table(
 
 
 def test_retention_probe_reads_parquet_footers(spark, tmp_path, count_jobs):
-    """Retention decides whether the boundary partition holds rows on
-    either side of the cutoff from the files' footers, with no Spark
-    job; a file written without statistics takes the Spark probe, and
-    both stores end with the same rows."""
+    """Retention decides whether the boundary partition's files hold rows
+    on either side of the cutoff from their footers, with no Spark job; a
+    file written without statistics is decided from its ``timestamp``
+    column on the driver, with no Spark job either, and both stores end
+    with the same rows."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -1748,11 +1751,196 @@ def test_retention_probe_reads_parquet_footers(spark, tmp_path, count_jobs):
     stats_jobs, stats_rows = retention(stats_db, DAY + 50.0)
     bare_jobs, bare_rows = retention(bare_db, DAY + 50.0)
     assert (stats_jobs, stats_rows) == (0, sorted(rows))
-    assert bare_jobs > 0 and bare_rows == stats_rows
+    assert bare_jobs == 0 and bare_rows == stats_rows
     # the cutoff splits the partition: both rewrite it the same way
     _, stats_rows = retention(stats_db, DAY + 4_000.0)
     _, bare_rows = retention(bare_db, DAY + 4_000.0)
     assert stats_rows == bare_rows == sorted(rows[1:])
+
+
+def test_insert_writes_only_encodings_spark_reads(spark, tmp_path):
+    """An insert of rows writes its files on the driver in the encodings
+    Spark's vectorized reader decodes (PLAIN, RLE, RLE_DICTIONARY — not
+    BYTE_STREAM_SPLIT), dictionary-encoding a column only where that is
+    smaller than plain: ``path`` always, ``value`` when rounded, the
+    distinct timestamps never.  ``insert`` of the same rows as tuples and
+    as a DataFrame reads back the same through ``incoming()``."""
+    import random
+
+    import pyarrow.parquet as pq
+
+    from smalltsdb_spark import storage
+    from smalltsdb_spark.schemas import INCOMING_SCHEMA
+
+    rng = random.Random(7)
+    paths = [f"host{i}.cpu" for i in range(300)]
+    points = [(rng.choice(paths), DAY + rng.uniform(0, 2 * DAY)) for _ in range(1_800)]
+    cases = {
+        "rounded": [(p, t, round(rng.gauss(50, 10), 1)) for p, t in points],
+        "unrounded": [(p, t, rng.gauss(50, 10)) for p, t in points],
+    }
+    for case, rows in cases.items():
+        driver = TablesTSDB(spark, str(tmp_path / case / "driver"))
+        driver.insert(rows)
+        files = storage.live_files(driver.incoming_path)
+        assert len(files) == 2, case  # days 1 and 2
+        for rel in files:
+            meta = pq.read_metadata(os.path.join(driver.incoming_path, rel))
+            encodings = {}
+            for i in range(meta.num_row_groups):
+                for c in range(meta.num_columns):
+                    column = meta.row_group(i).column(c)
+                    encodings.setdefault(column.path_in_schema, set()).update(
+                        column.encodings
+                    )
+            assert set().union(*encodings.values()) <= {"PLAIN", "RLE", "RLE_DICTIONARY"}
+            dictionary = {n for n, e in encodings.items() if "RLE_DICTIONARY" in e}
+            want = {"path", "value"} if case == "rounded" else {"path"}
+            assert dictionary == want, (case, rel)
+        spark_written = TablesTSDB(spark, str(tmp_path / case / "spark"))
+        spark_written.insert(spark.createDataFrame(rows, INCOMING_SCHEMA))
+        assert sorted(map(tuple, driver.incoming().collect())) == sorted(
+            map(tuple, spark_written.incoming().collect())
+        )
+
+
+def _sidecars_without_files(root):
+    """Hadoop ``.<name>.crc`` sidecars under ``root`` whose file is gone."""
+    out = []
+    for base, _dirs, files in os.walk(root):
+        for f in files:
+            if f.startswith(".") and f.endswith(".crc"):
+                if not os.path.exists(os.path.join(base, f[1:-4])):
+                    out.append(os.path.join(base, f))
+    return out
+
+
+def test_retention_rewrites_a_spark_written_file_and_its_sidecar(
+    spark, tsdb_dir, count_jobs
+):
+    """Retention replaces a Spark-written straddling file on the driver
+    and removes its checksum sidecar first (a stale one fails every later
+    Spark scan with ``ChecksumException``); a Spark-written file wholly
+    below the cutoff goes with its sidecar.  The partition reads back
+    through Spark, and no sidecar is left without its file."""
+    from smalltsdb_spark import storage
+    from smalltsdb_spark.schemas import INCOMING_SCHEMA
+
+    db = TablesTSDB(spark, tsdb_dir)
+    straddling = [("a", DAY + 100.0, 1.0), ("a", DAY + 5_000.0, 2.0), ("b", DAY + 9_000.0, 3.0)]
+    below = [("c", DAY + 200.0, 4.0)]
+    for rows in (straddling, below):
+        db.insert(spark.createDataFrame(rows, INCOMING_SCHEMA))
+    pdir = os.path.join(db.incoming_path, "pday=1")
+    sidecars = [f for f in os.listdir(pdir) if f.endswith(".crc")]
+    assert len(sidecars) == 2
+    jobs = count_jobs(
+        lambda: db._retention(DAY + 4_000.0, storage.file_stats(db.incoming_path))
+    )
+    assert jobs == 0
+    assert sorted(map(tuple, db.incoming().collect())) == straddling[1:]
+    assert [f for f in os.listdir(pdir) if f.endswith(".crc")] == []
+    assert _sidecars_without_files(db.incoming_path) == []
+
+
+def test_a_file_landing_in_the_boundary_partition_during_retention_survives(
+    spark, tmp_path, monkeypatch, count_jobs
+):
+    """A file that an insert lands in retention's boundary partition after
+    retention listed it is left whole (a rewrite of the whole partition
+    directory lost it), and the next sync at the same clock runs and
+    finalizes its rows."""
+    import shutil
+
+    from smalltsdb_spark import storage
+    from smalltsdb_spark.schemas import INCOMING_SCHEMA
+
+    late = ("z", 7_600.0, 5.0)  # hour 2, above the next cutoff
+    foreign = str(tmp_path / "foreign")
+    storage.append(spark.createDataFrame([late], INCOMING_SCHEMA), foreign, 3600)
+    (part,) = _on_disk_parquet(foreign)
+
+    clock = {"now": 10_000.0}
+    db = TablesTSDB(
+        spark,
+        str(tmp_path / "db"),
+        periods=_Twins.PERIODS,
+        now=lambda: clock["now"],
+        partition_grain="hour",
+    )
+    db.insert([("a", 7_300.0, 1.0), ("a", 7_500.0, 2.0)])
+    db.sync()
+
+    clock["now"] = 11_060.0  # cutoff 7_400 splits hour 2
+    real = storage.file_stats
+
+    def list_then_land(root, sub=""):
+        listed = real(root, sub)
+        if sub:  # retention's listing of the boundary partition
+            shutil.copy(
+                os.path.join(foreign, part), os.path.join(db.incoming_path, part)
+            )
+            monkeypatch.setattr(storage, "file_stats", real)
+        return listed
+
+    monkeypatch.setattr(storage, "file_stats", list_then_land)
+    db.sync()
+    monkeypatch.undo()
+    assert sorted(map(tuple, db.incoming().collect())) == [("a", 7_500.0, 2.0), late]
+    assert count_jobs(db.sync) > 0
+    assert ("z", 7_600.0) in {
+        (r.path, r.timestamp) for r in db.period_table("tensecond").collect()
+    }
+
+
+def test_a_failure_between_two_straddling_rewrites_loses_no_row(
+    spark, tsdb_dir, monkeypatch, count_jobs
+):
+    """Retention replaces each straddling file on its own: a failure
+    after the first replacement leaves every row at or above the cutoff
+    visible exactly once, and the next sync finishes the delete."""
+    import collections
+
+    from smalltsdb_spark import storage
+
+    clock = {"now": 10_000.0}
+    db = TablesTSDB(
+        spark,
+        tsdb_dir,
+        periods=_Twins.PERIODS,
+        now=lambda: clock["now"],
+        partition_grain="hour",
+    )
+    rows = [
+        [("a", 7_300.0, 1.0), ("a", 7_500.0, 2.0)],
+        [("b", 7_350.0, 3.0), ("b", 7_550.0, 4.0)],
+    ]
+    for batch in rows:
+        db.insert(batch)
+    db.sync()
+
+    clock["now"] = 11_060.0  # cutoff 7_400 splits both files
+    cutoff = 7_400.0
+    above = sorted(r for batch in rows for r in batch if r[1] >= cutoff)
+    real = storage._keep_rows_at_or_above
+    calls = []
+
+    def fail_second(*args):
+        calls.append(args)
+        if len(calls) == 2:
+            raise OSError("interrupted between two replacements")
+        real(*args)
+
+    monkeypatch.setattr(storage, "_keep_rows_at_or_above", fail_second)
+    with pytest.raises(OSError, match="interrupted"):
+        db.sync()
+    monkeypatch.undo()
+    visible = collections.Counter(map(tuple, db.incoming().collect()))
+    assert {r: n for r, n in visible.items() if r[1] >= cutoff} == {r: 1 for r in above}
+    assert len(visible) == len(above) + 1  # the second file's row below
+    db.sync()
+    assert sorted(map(tuple, db.incoming().collect())) == above
+    assert count_jobs(db.sync) == 0
 
 
 # ---------------------------------------------------------------------------
@@ -2007,10 +2195,11 @@ def test_get_metric_during_sync_sees_a_whole_state(spark, tsdb_dir):
 
 
 def test_written_partitions_are_sorted_by_path_and_time(spark, tsdb_dir):
-    """Every file the write path leaves (incoming's appends, sync's
-    staged pass, compaction) holds its rows in ``(path, timestamp)``
-    order, with ``path`` min/max statistics on every row group, so a
-    one-path read can skip the row groups of other paths."""
+    """Every file the write path leaves (incoming's appends written on
+    the driver, sync's staged pass, compaction) holds its rows in
+    ``(path, timestamp)`` order, with ``path`` min/max statistics on
+    every row group, so a one-path read can skip the row groups of other
+    paths."""
     import random
 
     import pyarrow.parquet as pq
@@ -2022,19 +2211,28 @@ def test_written_partitions_are_sorted_by_path_and_time(spark, tsdb_dir):
     db = TablesTSDB(spark, tsdb_dir, now=lambda: 8_000.0, partition_grain="hour")
     db.insert(rows[:1_000])
     db.insert(rows[1_000:])
+
+    def assert_sorted_with_path_statistics(files):
+        for f in files:
+            got = pq.read_table(f, columns=["path", "timestamp"])
+            keys = list(zip(got["path"].to_pylist(), got["timestamp"].to_pylist()))
+            assert keys == sorted(keys), f
+            meta = pq.read_metadata(f)
+            col = meta.schema.names.index("path")
+            for i in range(meta.num_row_groups):
+                assert meta.row_group(i).column(col).statistics.has_min_max, f
+
+    inserted = storage.live_files(db.incoming_path)
+    assert len(inserted) == 2 * 2  # one file per insert per hour
+    assert_sorted_with_path_statistics(
+        os.path.join(db.incoming_path, rel) for rel in inserted
+    )
     db.sync()
     db.compact()
     tables = [db.incoming_path] + [db._period_path(n) for n, _ in db.periods]
     files = [os.path.join(t, rel) for t in tables for rel in storage.live_files(t)]
     assert len(files) > len(tables)
-    for f in files:
-        got = pq.read_table(f, columns=["path", "timestamp"])
-        keys = list(zip(got["path"].to_pylist(), got["timestamp"].to_pylist()))
-        assert keys == sorted(keys), f
-        meta = pq.read_metadata(f)
-        col = meta.schema.names.index("path")
-        for i in range(meta.num_row_groups):
-            assert meta.row_group(i).column(col).statistics.has_min_max, f
+    assert_sorted_with_path_statistics(files)
 
 
 def test_read_series_decodes_only_the_row_groups_holding_its_path(
