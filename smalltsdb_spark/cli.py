@@ -98,9 +98,10 @@ def cmd_sync(args) -> None:
 
 def cmd_compact(args) -> None:
     """Maintenance pass: coalesce fragmented partitions (see
-    TSDB.compact).  Shares the sync lock — compaction is a writer and
-    must not race an appender; readers stay safe via the per-partition
-    atomic swap."""
+    TSDB.compact).  Shares the sync lock, which keeps sync and other
+    compactions out; an append (the daemon takes no lock) that lands
+    meanwhile survives, since compaction takes out only the files it
+    read."""
     from smalltsdb_spark.session import get_spark
     from smalltsdb_spark.storage import read_grain
     from smalltsdb_spark.tsdb import TSDB
@@ -404,7 +405,11 @@ def main(argv=None) -> None:
         help="coalesce fragmented partitions to one file each (maintenance)",
     )
     p.add_argument("--db", required=True)
-    p.add_argument("--lock-file", help="flock here so compaction never races a writer")
+    p.add_argument(
+        "--lock-file",
+        help="flock here so compaction never races a sync or another "
+        "compaction (an append that lands meanwhile survives)",
+    )
     p.add_argument(
         "--max-files",
         type=int,

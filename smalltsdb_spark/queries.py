@@ -1013,10 +1013,11 @@ def tsdb_compact_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     Two interleaved insert batches fragment every day-partition of the
     incoming table to 2 files (storage.append adds one file per touched
     partition per write — the daemon/streaming write pattern), then
-    ``compact()`` rewrites each fragmented partition down to one file via
-    the same atomic per-partition swap the upsert path uses.  The
-    one-hour aggregation of the compacted table equals the plain oracle
-    iff no row was lost, duplicated, or altered by the rewrite.
+    ``compact()`` rewrites each fragmented partition down to one file in
+    the file-set commit every storage mutation uses: the files it read
+    come out, the rewritten one goes in.  The one-hour aggregation of
+    the compacted table equals the plain oracle iff no row was lost,
+    duplicated, or altered by the rewrite.
 
     Scale shape: compaction reads ONLY fragmented partitions (``pday IN
     (...)`` prunes at the file index) and rewrites one partition per

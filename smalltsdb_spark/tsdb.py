@@ -693,9 +693,11 @@ class BaseTSDB:
         Row multiset is preserved exactly (pinned by
         tests/test_sync.test_compact_preserves_rows and the
         ``tsdb_compact_roundtrip`` driver row).  Run it where sync runs —
-        under the writer lock (cli.exclusive_lock): compaction must not
-        race an appender, while readers stay safe via the per-partition
-        atomic swap.
+        under the writer lock (cli.exclusive_lock), which keeps sync and
+        other compactions out.  An ``insert`` that lands meanwhile
+        survives: compaction takes out only the files it read
+        (:func:`storage.compact_partitions`), and a concurrent reader sees
+        some of a partition's old files or its new one, never both.
         """
         return {
             "incoming": storage.compact_partitions(
@@ -970,12 +972,10 @@ class TablesTSDB(BaseTSDB):
         incoming: DataFrame,
         seconds: int,
         now: float,
-        hwms: dict[str, float] | None = None,
+        hwms: dict[str, float],
     ) -> DataFrame:
         """:meth:`_eligible_rows` of one table, untagged, whose marks are
-        ``hwms`` or else the ``seconds`` period table's."""
-        if hwms is None:
-            hwms = self._hwms(next(n for n, s in self.periods if s == seconds))
+        ``hwms``."""
         fe = float(final_end(seconds, self.tail, now))
         return self._eligible_rows(incoming, [(seconds, fe, hwms)]).drop(
             _TABLE, "_seconds"
@@ -1151,9 +1151,7 @@ class TablesTSDB(BaseTSDB):
                     exact=self.exact_percentiles,
                     keys=(_TABLE,),
                 )
-                storage.write_partitioned(
-                    new_rows, staging, grain, "overwrite", keys=(_TABLE,)
-                )
+                storage.write_partitioned(new_rows, staging, grain, keys=(_TABLE,))
             for i, (name, _seconds) in enumerate(periods):
                 with self.timer(name, "all"):
                     staged = os.path.join(staging, f"{_TABLE}={i}")
@@ -1168,7 +1166,7 @@ class TablesTSDB(BaseTSDB):
                         bin_width=self.hist_bin_width,
                         clamp_bin=self.hist_clamp_bin,
                     )
-                    storage.write_partitioned(new_rows, staged, grain, "overwrite")
+                    storage.write_partitioned(new_rows, staged, grain)
                     commit("histogram", staged, HIST_SCHEMA)
             with self.timer("delete_incoming_query"):
                 installed = (
@@ -1250,13 +1248,8 @@ class TablesTSDB(BaseTSDB):
         at-scale answer."""
         grain = self.grain_seconds
         storage.drop_partitions_below(self.incoming_path, cutoff, grain)
-        unit = int(cutoff // grain)
-        # most syncs have no boundary partition: the cutoff falls before
-        # the data, or its partition was just dropped whole
-        if not storage.partition_has_files(self.incoming_path, unit):
-            return frozenset()
         replaced = storage.delete_rows_below(
-            self.incoming_path, "timestamp", cutoff, unit
+            self.incoming_path, "timestamp", cutoff, int(cutoff // grain)
         )
         return frozenset(after for before, after in replaced if before in seen)
 

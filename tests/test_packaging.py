@@ -64,3 +64,39 @@ def test_readme_query_count_matches_registry():
     assert int(m.group(1)) == n and int(m.group(2)) == n, (
         f"README claims {m.group(1)}/{m.group(2)} queries, registry has {n}"
     )
+
+
+def test_coverage_map_names_only_existing_tests():
+    """Every full ``test_*`` name in COVERAGE.md is a test function or a
+    test module under ``tests/`` or ``perfbench/tests/``, so the test map
+    cannot drift as tests are renamed.  A name ending in ``*`` must
+    prefix one; abbreviations ending in ``...`` (or ``…``) are exempt."""
+    import ast
+    import glob
+    import re
+
+    known = set()
+    for f in glob.glob(os.path.join(ROOT, "tests", "**", "*.py"), recursive=True) + glob.glob(
+        os.path.join(ROOT, "perfbench", "tests", "*.py")
+    ):
+        known.add(os.path.splitext(os.path.basename(f))[0])
+        with open(f) as src:
+            tree = ast.parse(src.read())
+        known.update(
+            node.name
+            for node in ast.walk(tree)
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
+        )
+    with open(os.path.join(ROOT, "COVERAGE.md")) as f:
+        text = f.read()
+    stale = set()
+    for m in re.finditer(r"\btest_\w*(\.\.\.|…|\*)?", text):
+        name, tail = m.group(0).rstrip(".…*"), m.group(1)
+        if tail in ("...", "…"):
+            continue
+        if tail == "*" and any(k.startswith(name) for k in known):
+            continue
+        if tail != "*" and name in known:
+            continue
+        stale.add(m.group(0))
+    assert not stale, f"COVERAGE.md names tests that do not exist: {sorted(stale)}"

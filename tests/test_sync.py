@@ -40,12 +40,12 @@ def appends_never_collide(monkeypatch):
     real = storage.install_staged
     appended = []
 
-    def spy(path, staged, *, replace=False, **kw):
+    def spy(path, staged, **kw):
         staged_files = manifests.collect_parquets(staged)
-        if not replace and staged_files:
+        if staged_files:
             committed = storage.read_manifest(path)
             if committed is None:
-                committed = storage._listing_as_manifest(path)
+                committed = storage._live_by_unit(path)
             names = pq.read_schema(staged_files[0]).names
             new = _file_keys(staged_files, names)
             old = _file_keys(
@@ -55,7 +55,7 @@ def appends_never_collide(monkeypatch):
             assert len(set(new)) == len(new), f"duplicate staged keys in {path}"
             assert set(new).isdisjoint(old), f"an append to {path} collides"
             appended.append(path)
-        return real(path, staged, replace=replace, **kw)
+        return real(path, staged, **kw)
 
     monkeypatch.setattr(storage, "install_staged", spy)
     return appended
@@ -362,6 +362,68 @@ def test_compact_preserves_rows(spark, tmp_path):
     assert storage.read_grain(root) == 86400
     # no stranded tmp files from a lost rename race
     assert [f for f in os.listdir(root) if ".tmp-" in f] == []
+
+
+def test_an_insert_landing_during_compaction_survives(spark, tmp_path, monkeypatch):
+    """Compaction takes out exactly the files its read resolved: an
+    insert that lands in the fragmented partition after compaction's
+    staged write keeps its file (a swap of the whole partition directory
+    deleted it), and every row is present exactly once."""
+    import collections
+
+    from smalltsdb_spark import storage
+
+    db = TablesTSDB(spark, str(tmp_path / "db"), now=lambda: 0.0)
+    earlier = [(f"m.{i}", 10.0 * i, 1.0) for i in range(3)]
+    for row in earlier:
+        db.insert([row])
+    late = ("late", 30.0, 3.0)
+    real = storage.write_partitioned
+
+    def write_then_land(*args, **kwargs):
+        real(*args, **kwargs)
+        monkeypatch.setattr(storage, "write_partitioned", real)
+        db.insert([late])
+
+    monkeypatch.setattr(storage, "write_partitioned", write_then_land)
+    assert db.compact()["incoming"] == [0]
+    monkeypatch.undo()
+    rows = collections.Counter(map(tuple, db.incoming().collect()))
+    assert rows == collections.Counter([*earlier, late])
+    assert storage.partition_file_counts(db.incoming_path) == {0: 2}
+
+
+def test_compacting_an_adopted_spark_written_table_leaves_no_sidecar(spark, tmp_path):
+    """A Spark-written listing table (a period table from before
+    manifests, or one handed back by ``decommission_streaming_sink``)
+    adopts its files as its first manifest; once compaction retires
+    them, the next commit's GC removes each with its Hadoop ``.crc``
+    sidecar."""
+    from smalltsdb_spark import storage
+    from smalltsdb_spark.schemas import AGG_SCHEMA
+
+    path = str(tmp_path / "t")
+
+    def agg_rows(ts_values):
+        return spark.createDataFrame(
+            [("p", ts, 1.0, 1.0, 1.0, 1.0, 1.0, 1.0, 1.0, 1.0) for ts in ts_values],
+            AGG_SCHEMA,
+        )
+
+    for ts in (5.0, 15.0):  # two Spark appends: two files in pday=0
+        storage.with_pday(agg_rows([ts])).write.partitionBy(
+            storage.PARTITION_COLUMN
+        ).mode("append").parquet(path)
+    pdir = os.path.join(path, "pday=0")
+    assert len([f for f in os.listdir(pdir) if f.endswith(".crc")]) == 2
+    storage.upsert(agg_rows([DAY + 5.0]), path, AGG_SCHEMA)  # adopts the listing
+    assert storage.compact_partitions(spark, path, AGG_SCHEMA) == [0]
+    storage.upsert(agg_rows([DAY + 15.0]), path, AGG_SCHEMA)  # GCs the retired files
+    assert _sidecars_without_files(path) == []
+    assert [f for f in os.listdir(pdir) if f.endswith(".crc")] == []
+    assert sorted(r.timestamp for r in storage.read_table(spark, path, AGG_SCHEMA).collect()) == [
+        5.0, 15.0, DAY + 5.0, DAY + 15.0
+    ]
 
 
 # ---------------------------------------------------------------------------
@@ -1286,15 +1348,15 @@ def test_idle_sync_runs_after_a_file_lands_in_the_rewritten_boundary(
     twins.sync()
 
     clock["now"] = 11_060.0  # cutoff 7_400 splits hour 2
-    real = storage.partition_has_files
+    real = storage.delete_rows_below
 
-    def land_then_probe(path, unit):
+    def land_then_delete(path, *args):
         dest = os.path.join(twins.db.incoming_path, part)
         shutil.copy(os.path.join(foreign, part), dest)
-        monkeypatch.setattr(storage, "partition_has_files", real)
-        return real(path, unit)
+        monkeypatch.setattr(storage, "delete_rows_below", real)
+        return real(path, *args)
 
-    monkeypatch.setattr(storage, "partition_has_files", land_then_probe)
+    monkeypatch.setattr(storage, "delete_rows_below", land_then_delete)
     twins.db.sync()
     monkeypatch.undo()
     assert ("z", 7_600.0, 5.0) in {tuple(r) for r in twins.db.incoming().collect()}
@@ -2032,9 +2094,7 @@ def test_path_catalog_equals_a_scan_on_a_random_schedule(
     legacy = spark.createDataFrame(
         [r for r in first if r[1] < 600.0], INCOMING_SCHEMA
     )
-    storage.write_partitioned(
-        aggregate(legacy, 60), db._period_path("oneminute"), hour, "append"
-    )
+    storage.write_partitioned(aggregate(legacy, 60), db._period_path("oneminute"), hour)
     # oneday is owned by a streaming rollup; the clock stays below its
     # first final bucket, so sync never appends to it
     spool = SpoolSink(str(tmp_path / "spool"))
