@@ -18,12 +18,23 @@ Spark-first re-expression:
 - count/min/max/avg/sum are built-in hash aggregates with map-side partial
   aggregation (the physical plan Catalyst picks is partial HashAggregate →
   shuffle on (path, bucket) → final HashAggregate);
-- the three percentiles use Spark's built-in exact ``percentile``, whose
-  linear interpolation matches ``numpy.percentile`` (the reference's UDAF,
-  tsdb.py:16-50) bit-for-bit — pinned by the golden test p90({1,5}) = 4.6.
+- the three percentiles use Spark's built-in exact ``percentile``: over
+  the group's values sorted ascending (NaN last) ``v``, with ``pos = (n −
+  1)·q``, ``lo = floor(pos)`` and ``hi = ceil(pos)``, it returns
+  ``v[lo]`` when ``lo = hi`` or ``v[lo] = v[hi]``, else ``(hi − pos)·v[lo]
+  + (pos − lo)·v[hi]``.  That is the linear interpolation of the
+  reference's UDAF (``numpy.percentile``, tsdb.py:16-50), pinned by the
+  golden test p90({1,5}) = 4.6, but not bit-for-bit: numpy evaluates the
+  interpolation in another order, and on random groups with ties about
+  one value in ten differs in the last bits.  The formula is pinned by
+  ``test_golden.test_spark_percentile_is_the_driver_formula``.
   All three quantiles are computed in ONE pass via the array form, fixing
   the reference's own known inefficiency of re-accumulating and re-sorting
   the group once per stat (tsdb.py:32-34).
+- :func:`aggregate_table` and :func:`histogram_table` are the driver
+  twins of :func:`aggregate` and :func:`value_histogram`: the same rows,
+  computed with numpy and pyarrow on rows already on the driver (sync's
+  small deltas, ``TablesTSDB.sync``).
 
 Scale note (100 TB): exact percentile buffers each group's values; that is
 the *correctness mode* (and the reference's semantics, IDEAS.md:3-4 —
@@ -241,6 +252,121 @@ def value_histogram(
     return incoming.groupBy(
         "path", b.alias("timestamp"), bin_.alias("bin")
     ).agg(F.count(F.lit(1)).alias("n"))
+
+
+def _sorted_groups(rows, seconds: int, keys=(), within=None):
+    """``rows`` (an arrow table of ``path``, ``timestamp`` and ``value``)
+    grouped by ``(path, bucket, *keys)``: returns ``(names, cols, order,
+    starts)`` — the distinct paths in Spark's order (code point, which is
+    UTF-8 byte order), the numpy columns ``(rank, bucket, *keys)`` sorted
+    by themselves and then by ``within``, the permutation of ``rows``
+    that sorts them, and the index of each group's first row."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    encoded = pc.dictionary_encode(rows["path"]).combine_chunks()
+    by_rank = pc.array_sort_indices(encoded.dictionary)
+    rank = np.empty(len(by_rank), np.int64)
+    rank[by_rank.to_numpy()] = np.arange(len(by_rank))
+    rank = rank[encoded.indices.to_numpy()]
+    bucket = np.floor(rows["timestamp"].to_numpy() / seconds) * seconds
+    sort = [rank, bucket, *keys, *([] if within is None else [within])]
+    order = np.lexsort(sort[::-1])
+    cols = [c[order] for c in (rank, bucket, *keys)]
+    changed = np.zeros(len(order), bool)
+    changed[:1] = True
+    for c in cols:
+        changed[1:] |= c[1:] != c[:-1]
+    return encoded.dictionary.take(by_rank), cols, order, np.flatnonzero(changed)
+
+
+def spark_percentile(values, starts, counts, q: float):
+    """Spark's exact ``percentile`` at ``q`` of each group of the sorted
+    ``values`` (ascending within a group, NaN last) that starts at
+    ``starts`` and holds ``counts`` rows — the formula of the module
+    docstring, evaluated in Spark's order of operations, so it returns
+    the same doubles."""
+    import numpy as np
+
+    pos = (counts - 1) * q
+    lo, hi = np.floor(pos), np.ceil(pos)
+    a = values[starts + lo.astype(np.int64)]
+    c = values[starts + hi.astype(np.int64)]
+    with np.errstate(invalid="ignore"):
+        mixed = (hi - pos) * a + (pos - lo) * c
+    return np.where((lo == hi) | (a == c), a, mixed)
+
+
+def aggregate_table(rows, seconds: int):
+    """:func:`aggregate` of the arrow table ``rows`` on the driver: one
+    row per ``(path, bucket)`` in the fixed aggregate schema, ordered by
+    ``(path, timestamp)``, equal to Spark's rows.  ``min``/``max`` and
+    the percentiles come from the group's values sorted with NaN last
+    (Spark's ordering of doubles) and :func:`spark_percentile`; ``sum``
+    is added in value order rather than Spark's row order, so it and
+    ``avg = sum / n`` can differ from Spark's in the last bits.  ``rows``
+    holds no null (the caller checks)."""
+    import numpy as np
+    import pyarrow as pa
+
+    from smalltsdb_spark.schemas import AGG_COLUMNS
+
+    values = rows["value"].to_numpy()
+    names, (rank, bucket), order, starts = _sorted_groups(
+        rows, seconds, within=values
+    )
+    values = values[order]
+    counts = np.diff(np.append(starts, len(values)))
+    with np.errstate(invalid="ignore"):  # ∞ − ∞ is NaN, as in Spark
+        sums = np.add.reduceat(values, starts) if len(starts) else values[:0]
+    cols = {
+        "path": names.take(rank[starts]),
+        "timestamp": bucket[starts],
+        "n": counts.astype(np.float64),
+        "min": values[starts],
+        "max": values[starts + counts - 1],
+        "avg": sums / counts,
+        "sum": sums,
+    }
+    for stat, q in zip(("p50", "p90", "p99"), QUANTILES):
+        cols[stat] = spark_percentile(values, starts, counts, q)
+    return pa.table({name: cols[name] for name in AGG_COLUMNS})
+
+
+def _spark_long(x):
+    """Java's ``(long)`` cast of the doubles ``x``: NaN is 0, and values
+    past the range (±∞ included) saturate."""
+    import numpy as np
+
+    big = 2.0**63
+    out = np.where(np.isnan(x) | (np.abs(x) >= big), 0.0, x).astype(np.int64)
+    out[x <= -big] = np.iinfo(np.int64).min
+    out[x >= big] = np.iinfo(np.int64).max
+    return out
+
+
+def histogram_table(rows, seconds: int, bin_width: float = 50.0, clamp_bin: int = 19):
+    """:func:`value_histogram` of the arrow table ``rows`` on the driver:
+    ``(path, timestamp, bin, n)`` ordered by ``(path, timestamp, bin)``,
+    with Spark's ``least(floor(value / bin_width), clamp_bin)`` as a
+    long (NaN in bin 0, −∞ in the least long)."""
+    import numpy as np
+    import pyarrow as pa
+
+    bins = _spark_long(
+        np.minimum(np.floor(rows["value"].to_numpy() / bin_width), clamp_bin)
+    )
+    names, (rank, bucket, bins), _order, starts = _sorted_groups(
+        rows, seconds, keys=(bins,)
+    )
+    return pa.table(
+        {
+            "path": names.take(rank[starts]),
+            "timestamp": bucket[starts],
+            "bin": bins[starts],
+            "n": np.diff(np.append(starts, len(bins))),
+        }
+    )
 
 
 def histogram_quantile_bounds(

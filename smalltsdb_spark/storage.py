@@ -58,7 +58,7 @@ import math
 import os
 import shutil
 import uuid
-from contextlib import contextmanager
+from contextlib import ExitStack, contextmanager
 from operator import itemgetter
 
 from pyspark.sql import DataFrame, SparkSession
@@ -68,6 +68,12 @@ from pyspark.sql import types as T
 from smalltsdb_spark import manifests
 from smalltsdb_spark.manifests import is_hidden_name
 from smalltsdb_spark.schemas import PARTITION_COLUMN, SECONDS_PER_DAY
+
+#: the parquet codec of every file written on the driver
+DRIVER_CODEC = "zstd"
+#: the most rows a sync pass or a compaction reads onto the driver; past
+#: it the work runs as a Spark plan (SCALE.md "Driver sync")
+_DRIVER_ROWS = 400_000
 
 
 def _has_data(path: str) -> bool:
@@ -864,18 +870,44 @@ def _dictionary_columns(table) -> list[str]:
     return out
 
 
-def _write_arrow(table, dest: str) -> None:
-    """Write the arrow ``table`` to ``dest`` as one parquet file in the
-    encodings Spark's vectorized reader decodes (PLAIN, RLE and
+def _write_arrow(table, directory: str) -> None:
+    """Write the arrow ``table`` into ``directory`` as one new parquet
+    file, compressed with :data:`DRIVER_CODEC` like every file the driver
+    writes, in the encodings Spark's vectorized reader decodes (PLAIN, RLE and
     RLE_DICTIONARY; never BYTE_STREAM_SPLIT), with row-group statistics."""
     import pyarrow.parquet as pq
 
+    os.makedirs(directory, exist_ok=True)
     pq.write_table(
         table,
-        dest,
+        os.path.join(directory, f"part-{uuid.uuid4().hex}.zstd.parquet"),
         use_dictionary=_dictionary_columns(table) or False,
+        compression=DRIVER_CODEC,
         store_schema=False,
     )
+
+
+def write_units(table, dest: str, grain_seconds: int) -> None:
+    """Write the arrow ``table`` (with a ``timestamp`` column) into the
+    fresh directory ``dest`` on the driver, laid out as
+    :func:`write_partitioned` lays out a Spark write: one file per
+    ``pday``, sorted by ``(path, timestamp)`` (a stable sort, so rows
+    that tie keep their order)."""
+    import numpy as np
+    import pyarrow as pa
+
+    units = np.floor(table["timestamp"].to_numpy() / grain_seconds).astype(np.int64)
+    table = table.append_column(PARTITION_COLUMN, pa.array(units)).sort_by(
+        [(PARTITION_COLUMN, "ascending"), ("path", "ascending"), ("timestamp", "ascending")]
+    )
+    units = table[PARTITION_COLUMN].to_numpy()
+    starts = [0, *np.flatnonzero(np.diff(units)) + 1] if len(units) else []
+    table = table.drop_columns([PARTITION_COLUMN])
+    for start, end in zip(starts, [*starts[1:], len(units)]):
+        _write_arrow(
+            table.slice(start, end - start),
+            os.path.join(dest, f"{PARTITION_COLUMN}={units[start]}"),
+        )
 
 
 def append_rows(
@@ -888,37 +920,21 @@ def append_rows(
     a ``timestamp`` column) to the table on the driver: no Spark job and
     no py4j call.  One file per ``pday``, sorted by ``(path, timestamp)``
     as :func:`write_partitioned` sorts, is written with pyarrow into a
-    hidden staging directory inside the table; only once every file is
-    written are they committed (:func:`_commit`).  A failure before the
-    commit leaves no visible file, so a retry of the same rows stores
-    each once.  A table tracked by a streaming-sink log refuses the
-    append (:func:`_assert_mutable`)."""
-    import numpy as np
+    hidden staging directory inside the table (:func:`write_units`); only
+    once every file is written are they committed (:func:`_commit`).  A
+    failure before the commit leaves no visible file, so a retry of the
+    same rows stores each once.  A table tracked by a streaming-sink log
+    refuses the append (:func:`_assert_mutable`)."""
     import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_type
 
     _assert_mutable(path, "batch-append into")
-    table = pa.table(
-        {
-            f.name: pa.array(values, to_arrow_type(f.dataType))
-            for f, values in zip(schema.fields, zip(*rows))
-        }
+    target = _arrow_schema(schema)
+    table = pa.Table.from_arrays(
+        [pa.array(values, f.type) for f, values in zip(target, zip(*rows))],
+        schema=target,
     )
-    units = np.floor(table["timestamp"].to_numpy() / grain_seconds).astype(np.int64)
-    table = table.append_column(PARTITION_COLUMN, pa.array(units)).sort_by(
-        [(PARTITION_COLUMN, "ascending"), ("path", "ascending"), ("timestamp", "ascending")]
-    )
-    units = table[PARTITION_COLUMN].to_numpy()
-    starts = [0, *np.flatnonzero(np.diff(units)) + 1]
-    table = table.drop_columns([PARTITION_COLUMN])
     with _staging(path) as staged:
-        for start, end in zip(starts, [*starts[1:], len(units)]):
-            pdir = os.path.join(staged, f"{PARTITION_COLUMN}={units[start]}")
-            os.makedirs(pdir, exist_ok=True)
-            _write_arrow(
-                table.slice(start, end - start),
-                os.path.join(pdir, f"part-{uuid.uuid4().hex}.snappy.parquet"),
-            )
+        write_units(table, staged, grain_seconds)
         _commit(path, staged)
 
 
@@ -1135,6 +1151,58 @@ def upsert(
         rows.unpersist()
 
 
+def _arrow_schema(schema: T.StructType):
+    """The arrow schema of the Spark ``schema``, as pyarrow reads and
+    writes a table of it."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    return pa.schema([(f.name, to_arrow_type(f.dataType)) for f in schema.fields])
+
+
+def read_files(
+    path: str, files: list[str], schema: T.StructType, limit: int, where=None
+):
+    """The rows of the table's ``files`` (relative paths) as one arrow
+    table in ``schema``, read on the driver with pyarrow — no Spark job —
+    or None when they hold more than ``limit`` rows, which their footers
+    tell before any row is read.  ``where(lo, hi)``, when given, is a
+    predicate on a row group's ``timestamp`` footer minimum and maximum
+    (None when the group has no statistics): only the row groups it
+    accepts are counted and read."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    target = _arrow_schema(schema)
+    tables, n = [], 0
+    with ExitStack() as stack:
+        chosen = []
+        for rel in files:
+            parquet = stack.enter_context(pq.ParquetFile(os.path.join(path, rel)))
+            meta = parquet.metadata
+            col = meta.schema.names.index("timestamp")
+            groups = []
+            for i in range(meta.num_row_groups):
+                group = meta.row_group(i)
+                stats = group.column(col).statistics
+                if stats is None or not stats.has_min_max:
+                    bounds = (None, None)
+                else:
+                    bounds = (stats.min, stats.max)
+                if where is None or where(*bounds):
+                    groups.append(i)
+                    n += group.num_rows
+            if n > limit:
+                return None
+            if groups:
+                chosen.append((parquet, groups))
+        for parquet, groups in chosen:
+            tables.append(
+                parquet.read_row_groups(groups, columns=target.names).cast(target)
+            )
+    return pa.concat_tables(tables) if tables else target.empty_table()
+
+
 def column_ranges(files, column: str) -> list[tuple] | None:
     """``(min, max)`` of ``column`` in every non-empty row group of the
     parquet ``files``, read from their footers on the driver — no Spark
@@ -1181,7 +1249,8 @@ def _keep_rows_at_or_above(file: str, column: str, cutoff: float) -> None:
     (a group whose statistics lie wholly below the cutoff is not read)
     and swapped in with one ``os.replace`` — a reader opens the old file
     or the new one, never a partial one.  A column keeps the dictionary
-    encoding its first row group had (the choice of the file's writer)."""
+    encoding its first row group had (the choice of the file's writer);
+    the codec is :data:`DRIVER_CODEC`, as for every driver write."""
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
@@ -1201,6 +1270,7 @@ def _keep_rows_at_or_above(file: str, column: str, cutoff: float) -> None:
                 tmp,
                 src.schema_arrow,
                 use_dictionary=dictionary or False,
+                compression=DRIVER_CODEC,
                 store_schema=False,
             ) as writer:
                 for i in range(meta.num_row_groups):
@@ -1410,12 +1480,17 @@ def compact_partitions(
     streaming micro-batch, and ``insert`` call appends one file per
     touched partition, so a hot partition accumulates files linearly
     with write count and every later scan pays listing + footer + seek
-    per file.  Compaction reads ONLY the fragmented partitions (the
-    ``pday IN (...)`` filter prunes at the file index — untouched
-    partitions are never opened, so cost scales with fragmentation, not
-    table size) and commits each back via :func:`overwrite_partitions`,
-    preserving the row multiset exactly: the files it read come out and
-    the rewritten ones go in.
+    per file.  Compaction reads ONLY the fragmented partitions' live
+    files — untouched partitions are never opened, so cost scales with
+    fragmentation, not table size — and commits their rewrite in one
+    :func:`_commit`, preserving the row multiset exactly: the files it
+    read come out and the rewritten ones go in.  While those files hold
+    at most ``_DRIVER_ROWS`` rows (their footers say, with no job) the
+    rewrite runs on the driver: pyarrow reads them and writes one file
+    per partition sorted by ``(path, timestamp)`` (:func:`write_units`),
+    so it submits no Spark job.  Past that, or when a ``timestamp`` is
+    null, a Spark plan reads them (the ``pday IN (...)`` filter prunes at
+    the file index) and :func:`overwrite_partitions` commits.
 
     Run it under the same exclusive lock as sync
     (``cli.exclusive_lock``), which keeps sync and other compactions
@@ -1428,14 +1503,22 @@ def compact_partitions(
     format (Delta OPTIMIZE / Iceberg rewrite_data_files) it becomes a
     metadata-transactional drop-in, same call shape.
     """
+    live = _live_by_unit(path)
     fragmented = sorted(
         u
-        for u, n in partition_file_counts(path).items()
-        if n > max_files and (units is None or units(u, n))
+        for u, fs in live.items()
+        if len(fs) > max_files and (units is None or units(u, len(fs)))
     )
     if not fragmented:
         return []
     _assert_mutable(path, "compact")
+    files = [f for u in fragmented for f in live[u]]
+    rows = read_files(path, files, schema, limit=_DRIVER_ROWS)
+    if rows is not None and not rows["timestamp"].null_count:
+        with _staging(path) as staged:
+            write_units(rows, staged, grain_seconds)
+            _commit(path, staged, files)
+        return fragmented
     # a manifest table's read resolves its LIVE files only — a listing
     # read could resurrect rows a previous commit replaced
     rows = (

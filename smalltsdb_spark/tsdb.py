@@ -18,14 +18,17 @@ logical model and method signatures, re-expressed over DataFrames:
                      readers this is pure API parity, not a locking fix.
 
 ``sync()`` replaces the reference's per-path Python loop (tsdb.py:371-410)
-with one set-based plan for all the periods that have something to
-finalize: incoming tagged once per period, filtered against every
-table's per-path high-water marks (read off the driver-side path
-catalog, catalog.py, and carried in the plan as a literal), a single
-aggregation grouped by ``(period, path, bucket)`` and a single write,
-which each period table then takes its slice of by a manifest append.
-Same finality semantics (the ``intervals()`` kernel), executed as one
-distributed pass instead of ``paths × periods`` serial SQLite queries.
+with one set-based pass for all the periods that have something to
+finalize: incoming filtered against every table's per-path high-water
+marks (read off the driver-side path catalog, catalog.py), aggregated by
+``(period, path, bucket)`` and written once, which each period table
+then takes its slice of by a manifest append.  A small delta — every
+tick of the rundev loop — is computed on the driver with pyarrow and
+numpy, as the reference computes it in its own process; a large one is
+one distributed Spark plan (incoming tagged once per period, the marks
+carried in the plan as a literal).  Same finality semantics (the
+``intervals()`` kernel) either way, instead of ``paths × periods``
+serial SQLite queries.
 """
 
 from __future__ import annotations
@@ -54,7 +57,12 @@ from smalltsdb_spark.config import (
     validate_stat,
 )
 from smalltsdb_spark.intervals import final_end
-from smalltsdb_spark.operators.aggregate import aggregate, value_histogram
+from smalltsdb_spark.operators.aggregate import (
+    aggregate,
+    aggregate_table,
+    histogram_table,
+    value_histogram,
+)
 from smalltsdb_spark.schemas import (
     AGG_SCHEMA,
     HIST_SCHEMA,
@@ -981,6 +989,59 @@ class TablesTSDB(BaseTSDB):
             _TABLE, "_seconds"
         )
 
+    def _sync_on_driver(self, due: dict, staging: str) -> bool:
+        """The driver twin of sync's Spark pass: ``due`` maps each due
+        table to ``(period seconds, final_end, {path: last_final})``, and
+        each table's new rows are written under ``staging`` as the Spark
+        pass writes them (``_table=i`` for the ``i``-th period, then
+        ``histogram``).  Incoming's live files are read with pyarrow, only
+        the row groups whose footer ``timestamp`` range can hold an
+        eligible row (below the largest ``final_end``, at or above the
+        smallest lower bound); each table keeps :meth:`_eligible_rows`'
+        rows (per path, ``[last_final + period, final_end)``, with
+        ``last_final=None ⇒ 0``) and computes them with
+        :func:`aggregate_table` or :func:`histogram_table`.  Returns False,
+        having written nothing, when those row groups hold more than
+        ``storage._DRIVER_ROWS`` rows, a read column holds a null, or
+        percentiles are approximate: the Spark pass runs instead."""
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        if not self.exact_percentiles:
+            return False
+        top = max(fe for _s, fe, _hwms in due.values())
+        low = min(
+            [0.0, *(h + s for s, _fe, hwms in due.values() for h in hwms.values())]
+        )
+        rows = storage.read_files(
+            self.incoming_path,
+            storage.live_files(self.incoming_path),
+            INCOMING_SCHEMA,
+            storage._DRIVER_ROWS,
+            where=lambda lo, hi: lo is None or (lo < top and hi >= low),
+        )
+        if rows is None or any(c.null_count for c in rows.columns):
+            return False
+        encoded = pc.dictionary_encode(rows["path"]).combine_chunks()
+        paths = encoded.dictionary.to_pylist()
+        index = encoded.indices.to_numpy()
+        ts = rows["timestamp"].to_numpy()
+        for i, (name, (seconds, fe, hwms)) in enumerate(due.items()):
+            lows = np.array([hwms[p] + seconds if p in hwms else 0.0 for p in paths])
+            eligible = (ts < fe) & (ts >= lows[index])
+            if not eligible.any():
+                continue
+            new = rows.filter(pa.array(eligible))
+            if name == "histogram":
+                table, dest = histogram_table(
+                    new, seconds, self.hist_bin_width, self.hist_clamp_bin
+                ), "histogram"
+            else:
+                table, dest = aggregate_table(new, seconds), f"{_TABLE}={i}"
+            storage.write_units(table, os.path.join(staging, dest), self.grain_seconds)
+        return True
+
     def compact(self, max_files_per_partition: int = 1) -> dict[str, list[int]]:
         """Incoming plus every period table.  Sync compacts each period
         table's closed partitions itself; what is left for this pass are
@@ -1011,16 +1072,22 @@ class TablesTSDB(BaseTSDB):
         """Advance finalized aggregates for every period, then apply
         retention to incoming (reference tsdb.py:305-420).
 
-        **One pass, appended.**  The due periods' new buckets come from
-        one plan (:meth:`_eligible_rows`, one aggregation by ``(table,
-        path, bucket)``, one write into a hidden staging directory under
-        the store root) that scans incoming only: each table's per-path
-        high-water marks come from the driver-side path catalog
-        (catalog.py, one pyarrow read per live file not seen before,
-        the files this handle's previous sync wrote included) and ride
-        in the plan as a literal.  Each table takes its slice by a
-        manifest append (:func:`storage.install_staged`), and one with no
-        new rows commits nothing.  Appending is exact: a path's new rows start at
+        **One pass, appended.**  The due tables' new buckets are computed
+        in one pass over incoming and written into a hidden staging
+        directory under the store root; each table's per-path high-water
+        marks come from the driver-side path catalog (catalog.py, one
+        pyarrow read per live file not seen before, the files this
+        handle's previous sync wrote included).  The pass runs on the
+        driver (:meth:`_sync_on_driver`: pyarrow and numpy, one sorted
+        file per table and ``pday``, no Spark job) whenever the row
+        groups of incoming that can hold an eligible row number at most
+        ``storage._DRIVER_ROWS`` rows by their footers; past that, and
+        with ``exact_percentiles=False``, it is one Spark plan
+        (:meth:`_eligible_rows` with the marks as a literal, one
+        aggregation by ``(table, path, bucket)``, one write).  Both give
+        the same rows.  Each table takes its slice by a manifest append
+        (:func:`storage.install_staged`), and one with no new rows
+        commits nothing.  Appending is exact: a path's new rows start at
         ``last_final + period``, above every key the table holds for it
         (the reference's ``insert or replace`` never replaces either).  A
         table that took rows then compacts its closed partitions (ending
@@ -1028,12 +1095,16 @@ class TablesTSDB(BaseTSDB):
         compacted only once it holds more than ``_OPEN_FILES`` files, so a
         frequent sync cadence cannot fragment it without bound.  The
         persisted histogram (``histograms=True``, buckets
-        ``hist_fine_seconds`` wide) runs its own ``value_histogram`` plan
-        after the pass, under the same rule and append; its retention
-        follows the finest period's.
+        ``hist_fine_seconds`` wide) takes its rows from the same driver
+        pass, or from its own ``value_histogram`` plan after the Spark
+        pass, under the same rule and append; its retention follows the
+        finest period's.  The compactions run on the driver too while
+        their files are small (:func:`storage.compact_partitions`).
 
         ``timeout`` bounds the whole sync via :meth:`query_timeout`
-        (reference TODO tsdb.py:349).  Each table commits atomically, so
+        (reference TODO tsdb.py:349); the driver pass checks it before
+        the first commit and raises ``TimeoutError`` having committed
+        nothing.  Each table commits atomically, so
         a sync that fails or times out leaves every table on a whole
         snapshot and skips retention (raw data is never deleted under a
         failed aggregate); the next sync, under the writer lock
@@ -1062,8 +1133,7 @@ class TablesTSDB(BaseTSDB):
         already committed and commit nothing, so the store ends
         byte-identical either way.  Retention is skipped iff condition 2
         holds and the cutoff is unchanged.  Incoming is read only when
-        some table runs, so a sync with nothing to finalize submits no
-        Spark job.  A sync that raises records nothing.
+        some table runs.  A sync that raises records nothing.
 
         Every phase is timed; with ``emit_metrics=True`` the timings are
         re-ingested as ordinary datapoints (T6, reference tsdb.py:310-337)
@@ -1073,6 +1143,7 @@ class TablesTSDB(BaseTSDB):
         reference's label).  The re-ingested file is new to incoming, so
         the following sync runs.
         """
+        deadline = None if timeout is None else time.monotonic() + timeout
         now = self._now()
         cutoff = now - self.tail - max(s for _, s in self.periods)
         # taken before self.incoming() lists the files its relation reads
@@ -1138,15 +1209,23 @@ class TablesTSDB(BaseTSDB):
         with self.timer("sync", "all") as timings, self.query_timeout(timeout):
             if ran:
                 self._pin_grain()
-                incoming = self.incoming()
+            due = {n: (s, keys[n][0], self._hwms(n)) for n, s in periods}
             if "histogram" in ran:
-                hist_hwm = self._histogram_source(fine_name)
-            if periods:
+                due["histogram"] = (
+                    self.hist_fine_seconds,
+                    keys["histogram"][0],
+                    self._histogram_source(fine_name),
+                )
+            driver = bool(due) and self._sync_on_driver(due, staging)
+            if driver and deadline is not None and time.monotonic() > deadline:
+                raise TimeoutError(
+                    f"sync exceeded {timeout}s before its first commit"
+                )
+            if due and not driver:
+                incoming = self.incoming()
+            if periods and not driver:
                 new_rows = aggregate(
-                    self._eligible_rows(
-                        incoming,
-                        [(s, keys[n][0], self._hwms(n)) for n, s in periods],
-                    ),
+                    self._eligible_rows(incoming, [due[n] for n, _s in periods]),
                     F.col("_seconds"),
                     exact=self.exact_percentiles,
                     keys=(_TABLE,),
@@ -1158,15 +1237,16 @@ class TablesTSDB(BaseTSDB):
                     commit(name, staged, AGG_SCHEMA)
             if "histogram" in ran:
                 with self.timer("histogram", "all"):
-                    fine = self.hist_fine_seconds
                     staged = os.path.join(staging, "histogram")
-                    new_rows = value_histogram(
-                        self._eligible(incoming, fine, now, hwms=hist_hwm),
-                        fine,
-                        bin_width=self.hist_bin_width,
-                        clamp_bin=self.hist_clamp_bin,
-                    )
-                    storage.write_partitioned(new_rows, staged, grain)
+                    if not driver:
+                        fine, _fe, hwms = due["histogram"]
+                        new_rows = value_histogram(
+                            self._eligible(incoming, fine, now, hwms=hwms),
+                            fine,
+                            bin_width=self.hist_bin_width,
+                            clamp_bin=self.hist_clamp_bin,
+                        )
+                        storage.write_partitioned(new_rows, staged, grain)
                     commit("histogram", staged, HIST_SCHEMA)
             with self.timer("delete_incoming_query"):
                 installed = (

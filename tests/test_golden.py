@@ -110,3 +110,46 @@ def test_golden_b_capability_flags(spark, tsdb_dir):
     with pytest.raises(ValueError):
         reader.insert([("x", 1, 1)])
     assert reader.get_metric("two", "oneminute", "sum", (0, 60))[0][1] == pytest.approx(14.0)
+
+
+def _same_double(a, b) -> bool:
+    """Equal as doubles, NaN equal to NaN (and −0.0 to 0.0, as ``==``)."""
+    import math
+
+    return a == b or (math.isnan(a) and math.isnan(b))
+
+
+def test_spark_percentile_is_the_driver_formula(spark):
+    """Spark's exact ``percentile`` is the formula of
+    ``operators.aggregate.spark_percentile``, double for double, on random
+    groups with ties, NaN and ±inf: the driver sync pass computes its
+    percentiles with it."""
+    import random
+
+    import numpy as np
+    from pyspark.sql import functions as F
+
+    from smalltsdb_spark.config import QUANTILES
+    from smalltsdb_spark.operators.aggregate import spark_percentile
+
+    rng = random.Random(41)
+    pool = [1.0, 2.0, 2.0, 2.5, -3.25, 0.0, float("nan"), float("inf"), -float("inf")]
+    groups = {
+        g: [
+            rng.choice(pool) if rng.random() < 0.4 else rng.uniform(-1e3, 1e3)
+            for _ in range(rng.randint(1, 12))
+        ]
+        for g in range(1_500)
+    }
+    df = spark.createDataFrame(
+        [(g, v) for g, vs in groups.items() for v in vs], "g long, value double"
+    )
+    pcts = F.percentile("value", F.array(*[F.lit(q) for q in QUANTILES]))
+    want = {r.g: r.p for r in df.groupBy("g").agg(pcts.alias("p")).collect()}
+    for g, vs in groups.items():
+        values = np.sort(np.array(vs))  # NaN last, as Spark orders doubles
+        got = [
+            spark_percentile(values, np.array([0]), np.array([len(vs)]), q)[0]
+            for q in QUANTILES
+        ]
+        assert all(map(_same_double, got, want[g])), (vs, got, want[g])

@@ -6,6 +6,7 @@ finalization timing, the silent-late-row drop, and sync idempotency.
 """
 
 import os
+import time
 
 import pytest
 
@@ -66,6 +67,17 @@ def rows_n(db):
         (r.path, r.timestamp, r.n)
         for r in db.period_table("tensecond").orderBy("path", "timestamp").collect()
     ]
+
+
+def _synced_tables(db) -> set[str]:
+    """The tables ``db``'s last sync computed rather than skipped: each
+    leaves its ``sync.<table>.all`` timing (whichever path, driver or
+    Spark, computed it)."""
+    return {
+        label.split(".")[1]
+        for label, _start, _seconds in db.timer.collected
+        if label.startswith("sync.") and label.endswith(".all.time") and label.count(".") == 3
+    }
 
 
 @pytest.mark.parametrize(
@@ -336,6 +348,9 @@ def test_compact_preserves_rows(spark, tmp_path):
     again = db.compact()
     assert set(again) == {"incoming"} | {n for n, _ in db.periods}
     assert all(v == [] for v in again.values())
+
+
+def test_pin_grain_from_many_threads_keeps_one_marker(tmp_path):
     """pin_grain from many threads of one process must not lose the
     marker: the tmp name is per-writer (pid+uuid), so no thread can
     os.replace another's tmp file away mid-write."""
@@ -357,7 +372,8 @@ def test_compact_preserves_rows(spark, tmp_path):
     for t in threads:
         t.start()
     for t in threads:
-        t.join()
+        t.join(timeout=30)
+    assert not [t for t in threads if t.is_alive()]
     assert not errors
     assert storage.read_grain(root) == 86400
     # no stranded tmp files from a lost rename race
@@ -367,8 +383,25 @@ def test_compact_preserves_rows(spark, tmp_path):
 def test_an_insert_landing_during_compaction_survives(spark, tmp_path, monkeypatch):
     """Compaction takes out exactly the files its read resolved: an
     insert that lands in the fragmented partition after compaction's
-    staged write keeps its file (a swap of the whole partition directory
-    deleted it), and every row is present exactly once."""
+    staged write, just before its commit, keeps its file (a swap of the
+    whole partition directory deleted it), and every row is present
+    exactly once.  The partition is small, so compaction runs on the
+    driver."""
+    _an_insert_lands_during_compaction(spark, tmp_path, monkeypatch)
+
+
+def test_an_insert_landing_during_a_spark_compaction_survives(
+    spark, tmp_path, monkeypatch
+):
+    """:func:`test_an_insert_landing_during_compaction_survives` with
+    compaction on its Spark path (``_DRIVER_ROWS`` = 0)."""
+    from smalltsdb_spark import storage
+
+    monkeypatch.setattr(storage, "_DRIVER_ROWS", 0)
+    _an_insert_lands_during_compaction(spark, tmp_path, monkeypatch)
+
+
+def _an_insert_lands_during_compaction(spark, tmp_path, monkeypatch):
     import collections
 
     from smalltsdb_spark import storage
@@ -378,16 +411,16 @@ def test_an_insert_landing_during_compaction_survives(spark, tmp_path, monkeypat
     for row in earlier:
         db.insert([row])
     late = ("late", 30.0, 3.0)
-    real = storage.write_partitioned
+    real = storage._commit
 
-    def write_then_land(*args, **kwargs):
-        real(*args, **kwargs)
-        monkeypatch.setattr(storage, "write_partitioned", real)
+    def land_then_commit(*args, **kwargs):
+        monkeypatch.setattr(storage, "_commit", real)
         db.insert([late])
+        return real(*args, **kwargs)
 
-    monkeypatch.setattr(storage, "write_partitioned", write_then_land)
+    monkeypatch.setattr(storage, "_commit", land_then_commit)
     assert db.compact()["incoming"] == [0]
-    monkeypatch.undo()
+    assert storage._commit is real  # the commit of compaction's rewrite ran
     rows = collections.Counter(map(tuple, db.incoming().collect()))
     assert rows == collections.Counter([*earlier, late])
     assert storage.partition_file_counts(db.incoming_path) == {0: 2}
@@ -451,7 +484,7 @@ def _on_disk_parquet(path):
 
 
 def test_sync_killed_mid_write_keeps_readers_on_old_snapshot(
-    spark, tsdb_dir, monkeypatch, count_jobs
+    spark, tsdb_dir, monkeypatch
 ):
     """The crash-injection test of the r8 verdict: kill the sync between
     partition installs -> readers see the OLD whole-table snapshot (no
@@ -518,7 +551,8 @@ def test_sync_killed_mid_write_keeps_readers_on_old_snapshot(
 
     # RECOVERY: the next sync runs and completes; results match a store
     # that never crashed, and the crashed attempt's debris is GC'd
-    assert count_jobs(db.sync) > 0
+    db.sync()
+    assert _synced_tables(db)
     recovered = _all_rows(db)
     assert recovered != v1 and len(recovered) == 6
     for f in installed_during_crash:
@@ -1186,7 +1220,8 @@ def test_idle_resync_submits_no_jobs(spark, tsdb_dir, count_jobs):
         ]
     )
     before = incoming_files()
-    assert count_jobs(db.sync) > 0
+    db.sync()
+    assert _synced_tables(db)
     after = incoming_files()
     assert not any(rel.startswith("pday=0") for rel, _ in after)
     assert {f for f in after if f[0].startswith("pday=1")}.isdisjoint(before)
@@ -1197,6 +1232,7 @@ def test_idle_resync_submits_no_jobs(spark, tsdb_dir, count_jobs):
     names = [name for name, _ in db.periods]
     manifests_before = _manifests(tsdb_dir, names)
     assert count_jobs(db.sync) == 0
+    assert _synced_tables(db) == set()
     assert _manifests(tsdb_dir, names) == manifests_before
     assert incoming_files() == after
 
@@ -1221,13 +1257,14 @@ class _Twins:
         self.db.insert(points)
         self.fresh().insert(points)
 
-    def sync(self, count_jobs=None):
-        """Sync both stores and check they agree; returns the jobs the
-        skipping handle's sync submitted when ``count_jobs`` is given."""
-        jobs = count_jobs(self.db.sync) if count_jobs else self.db.sync()
+    def sync(self) -> int:
+        """Sync both stores and check they agree; returns how many tables
+        the skipping handle's sync computed (:func:`_synced_tables`)."""
+        self.db.sync()
+        synced = len(_synced_tables(self.db))
         self.fresh().sync()
         self.assert_same()
-        return jobs
+        return synced
 
     def rows(self, base):
         db = TablesTSDB(self.spark, base, **self.kw)
@@ -1240,26 +1277,22 @@ class _Twins:
         assert self.rows(self.dirs[0]) == self.rows(self.dirs[1])
 
 
-def test_idle_sync_finalizes_a_late_point_at_the_same_clock(
-    spark, tmp_path, count_jobs
-):
+def test_idle_sync_finalizes_a_late_point_at_the_same_clock(spark, tmp_path):
     """A point inserted with no clock advance, for a path whose
     high-water mark is older than the finality cut, is finalized."""
     clock = {"now": 1_000.0}
     twins = _Twins(spark, tmp_path, clock)
     twins.insert([("a", 5.0, 1.0), ("a", 900.0, 2.0), ("b", 5.0, 3.0)])
     twins.sync()
-    assert twins.sync(count_jobs) == 0
+    assert twins.sync() == 0
     twins.insert([("b", 500.0, 4.0)])  # b's HWM is bucket 0
-    assert twins.sync(count_jobs) > 0
+    assert twins.sync() > 0
     assert ("b", 500.0) in {
         (r.path, r.timestamp) for r in twins.db.period_table("tensecond").collect()
     }
 
 
-def test_idle_sync_finalizes_the_tail_when_the_clock_advances(
-    spark, tmp_path, count_jobs
-):
+def test_idle_sync_finalizes_the_tail_when_the_clock_advances(spark, tmp_path):
     """A clock advance with no new file moves ``final_end``, so the
     tail rows that just became final are written."""
     clock = {"now": 1_000.0}
@@ -1271,13 +1304,13 @@ def test_idle_sync_finalizes_the_tail_when_the_clock_advances(
         (r.path, r.timestamp) for r in twins.db.period_table("tensecond").collect()
     }
     clock["now"] = 1_100.0
-    assert twins.sync(count_jobs) > 0
+    assert twins.sync() > 0
     assert tail in {
         (r.path, r.timestamp) for r in twins.db.period_table("tensecond").collect()
     }
 
 
-def test_idle_sync_rebuilds_a_changed_period_table(spark, tmp_path, count_jobs):
+def test_idle_sync_rebuilds_a_changed_period_table(spark, tmp_path):
     """A period table whose directory or manifest changed between syncs
     is re-evaluated at the same clock: a deleted table is rebuilt from
     incoming, and a partition dropped from a manifest is refilled."""
@@ -1290,25 +1323,23 @@ def test_idle_sync_rebuilds_a_changed_period_table(spark, tmp_path, count_jobs):
     twins = _Twins(spark, tmp_path, clock, partition_grain="hour")
     twins.insert([("a", day + 200.0, 1.0), ("b", day + 3_700.0, 2.0)])
     twins.sync()
-    assert twins.sync(count_jobs) == 0
+    assert twins.sync() == 0
 
     for base in twins.dirs:
         shutil.rmtree(os.path.join(base, "oneminute"))
-    assert twins.sync(count_jobs) > 0
+    assert twins.sync() > 0
     assert twins.db.period_table("oneminute").count() == 2
 
     for base in twins.dirs:  # drop hour 24, and with it a's only bucket
         storage.drop_partitions_below(
             os.path.join(base, "tensecond"), day + 3_600.0, 3600
         )
-    assert twins.sync(count_jobs) > 0
+    assert twins.sync() > 0
     assert twins.db.period_table("tensecond").count() == 2
-    assert twins.sync(count_jobs) == 0
+    assert twins.sync() == 0
 
 
-def test_idle_sync_reruns_a_period_after_its_retention_drop(
-    spark, tmp_path, count_jobs
-):
+def test_idle_sync_reruns_a_period_after_its_retention_drop(spark, tmp_path):
     """A period's own retention drop can lower a path's high-water mark,
     so the sync after the drop runs that period again; it and a full
     sync leave the same rows."""
@@ -1321,11 +1352,11 @@ def test_idle_sync_reruns_a_period_after_its_retention_drop(
     twins.insert([("a", 10.0, 3.0)])
     clock["now"] = 3_800.0  # tensecond drops hour 0 (and a's bucket 10)
     twins.sync()
-    assert twins.sync(count_jobs) > 0
+    assert twins.sync() > 0
 
 
 def test_idle_sync_runs_after_a_file_lands_in_the_rewritten_boundary(
-    spark, tmp_path, monkeypatch, count_jobs
+    spark, tmp_path, monkeypatch
 ):
     """A file that lands in retention's boundary partition after sync's
     snapshot, without any period having seen its rows, is outside the
@@ -1361,12 +1392,10 @@ def test_idle_sync_runs_after_a_file_lands_in_the_rewritten_boundary(
     monkeypatch.undo()
     assert ("z", 7_600.0, 5.0) in {tuple(r) for r in twins.db.incoming().collect()}
     twins.fresh().insert([late])
-    assert twins.sync(count_jobs) > 0
+    assert twins.sync() > 0
 
 
-def test_idle_sync_sees_a_change_under_spark_metadata(
-    spark, tmp_path, count_jobs
-):
+def test_idle_sync_sees_a_change_under_spark_metadata(spark, tmp_path):
     """Hidden entries are part of incoming's snapshot: a file sink log
     appearing under ``_spark_metadata`` disables the skip (the log now
     decides which files the reader lists)."""
@@ -1376,7 +1405,7 @@ def test_idle_sync_sees_a_change_under_spark_metadata(
     twins = _Twins(spark, tmp_path, clock)
     twins.insert([("a", 5.0, 1.0), ("a", 900.0, 2.0)])
     twins.sync()
-    assert twins.sync(count_jobs) == 0
+    assert twins.sync() == 0
     for base in twins.dirs:
         incoming = os.path.join(base, "incoming")
         files = sorted(_on_disk_parquet(incoming))
@@ -1401,17 +1430,15 @@ def test_idle_sync_sees_a_change_under_spark_metadata(
                     )
                     + "\n"
                 )
-    assert twins.sync(count_jobs) > 0
-    assert twins.sync(count_jobs) == 0
+    assert twins.sync() > 0
+    assert twins.sync() == 0
 
 
-def test_idle_sync_matches_full_sync_on_a_random_schedule(
-    spark, tmp_path, count_jobs
-):
+def test_idle_sync_matches_full_sync_on_a_random_schedule(spark, tmp_path):
     """Seeded mix of inserts ahead of and behind the high-water marks,
     clock advances or none, and syncs: after every sync the skipping
     handle's store equals the one a fresh handle syncs in full, and a
-    sync with no step since the previous one submits no job."""
+    sync with no step since the previous one computes no table."""
     import random
 
     rng = random.Random(20261017)
@@ -1432,9 +1459,9 @@ def test_idle_sync_matches_full_sync_on_a_random_schedule(
         elif step == "advance":
             clock["now"] += rng.choice([5.0, 60.0, 700.0])
         else:
-            jobs = twins.sync(count_jobs)
+            synced = twins.sync()
             if not dirty:
-                assert jobs == 0
+                assert synced == 0
             dirty = False
             continue
         dirty = True
@@ -1461,15 +1488,11 @@ def _staging_dirs(base):
     return [n for n in os.listdir(base) if n.startswith(".sync-staging-")]
 
 
-def test_non_idle_sync_is_at_most_three_jobs(
-    spark, tsdb_dir, count_jobs, appends_never_collide
-):
+def _hourly_ticks(spark, tsdb_dir, count_jobs, appended) -> list[int]:
     """An hourly tick over the six default periods, a day of history and
-    incoming retention in steady state: the high-water marks come from
-    the driver-side path catalog, so one aggregation and one write for
-    all six tables, then six manifest appends, and retention rewrites the
-    boundary partition's straddling file on the driver — at most 3 Spark
-    jobs, where one job chain per period took about 60."""
+    incoming retention in steady state; returns the Spark jobs of each
+    tick's sync, after checking that every table below a day took new
+    buckets."""
     import random
 
     rng = random.Random(11)
@@ -1479,16 +1502,43 @@ def test_non_idle_sync_is_at_most_three_jobs(
     db = TablesTSDB(spark, tsdb_dir, now=lambda: clock["now"])
     db.insert(_points(rng, paths, t0 - 25 * 3600.0, t0, 25 * 200))
     db.sync()
+    jobs = []
     for k in (1, 2):
         db.insert(_points(rng, paths, t0 + (k - 1) * 3600.0, t0 + k * 3600.0, 200))
         clock["now"] = t0 + k * 3600.0
-        appends_never_collide.clear()
-        assert count_jobs(db.sync) <= 3
+        appended.clear()
+        jobs.append(count_jobs(db.sync))
         # non-idle: every table below a day took new buckets
-        assert sorted(appends_never_collide) == sorted(
+        assert sorted(appended) == sorted(
             db._period_path(name) for name, s in db.periods if s < DAY
         )
     assert _staging_dirs(tsdb_dir) == []
+    return jobs
+
+
+def test_non_idle_sync_submits_no_job(
+    spark, tsdb_dir, count_jobs, appends_never_collide
+):
+    """An hourly tick's sync computes its delta on the driver: the
+    high-water marks come from the driver-side path catalog, the new
+    buckets of all six tables from a pyarrow/numpy pass over incoming,
+    six manifest appends commit them, and retention rewrites the boundary
+    partition's straddling file on the driver — no Spark job, where one
+    job chain per period took about 60."""
+    assert _hourly_ticks(spark, tsdb_dir, count_jobs, appends_never_collide) == [0, 0]
+
+
+def test_non_idle_spark_sync_is_at_most_three_jobs(
+    spark, tsdb_dir, count_jobs, appends_never_collide, monkeypatch
+):
+    """The same ticks on sync's Spark path (``_DRIVER_ROWS`` = 0): one
+    aggregation and one write for all six tables — at most 3 Spark
+    jobs."""
+    from smalltsdb_spark import storage
+
+    monkeypatch.setattr(storage, "_DRIVER_ROWS", 0)
+    jobs = _hourly_ticks(spark, tsdb_dir, count_jobs, appends_never_collide)
+    assert all(0 < n <= 3 for n in jobs), jobs
 
 
 def test_sync_across_a_day_boundary_compacts_only_closed_partitions(
@@ -1726,14 +1776,55 @@ def test_appends_stay_disjoint_with_late_points_behind_the_high_water_mark(
 def test_appends_stay_disjoint_after_a_timed_out_sync_is_retried(
     spark, tmp_path, monkeypatch, appends_never_collide
 ):
-    """A sync cancelled by ``timeout=`` mid-aggregation raises
-    TimeoutError and commits nothing; the retry appends exactly the
-    buckets a store that never timed out has."""
-    import time
-
+    """A Spark-path sync (``_DRIVER_ROWS`` = 0) cancelled by ``timeout=``
+    mid-aggregation raises TimeoutError and commits nothing; the retry
+    appends exactly the buckets a store that never timed out has."""
     from pyspark.sql import functions as F
 
+    from smalltsdb_spark import storage, tsdb
+
+    monkeypatch.setattr(storage, "_DRIVER_ROWS", 0)
+    real = tsdb.aggregate
+    slow = F.udf(lambda _: time.sleep(1.0) is None, "boolean")
+
+    def slow_aggregate(rows, *a, **kw):
+        return real(rows.filter(slow(F.col("value"))), *a, **kw)
+
+    _timed_out_then_retried(
+        spark, tmp_path, monkeypatch, appends_never_collide, "aggregate", slow_aggregate, 3.0
+    )
+
+
+def test_appends_stay_disjoint_after_a_timed_out_driver_sync_is_retried(
+    spark, tmp_path, monkeypatch, appends_never_collide
+):
+    """The driver pass checks ``timeout=`` before its first commit: a
+    pass that overruns it raises TimeoutError having committed nothing,
+    and the retry appends exactly the buckets a store that never timed
+    out has."""
     from smalltsdb_spark import tsdb
+
+    real = tsdb.aggregate_table
+
+    def slow_aggregate_table(*a, **kw):
+        time.sleep(1.0)
+        return real(*a, **kw)
+
+    _timed_out_then_retried(
+        spark,
+        tmp_path,
+        monkeypatch,
+        appends_never_collide,
+        "aggregate_table",
+        slow_aggregate_table,
+        2.0,
+    )
+
+
+def _timed_out_then_retried(spark, tmp_path, monkeypatch, appended, name, slow, timeout):
+    """Time out one sync while ``tsdb.<name>`` is replaced by ``slow``,
+    then retry it."""
+    from smalltsdb_spark import storage, tsdb
 
     clock = {"now": 1_000.0}
     twins = _KeyedTwins(spark, tmp_path, clock)
@@ -1741,20 +1832,20 @@ def test_appends_stay_disjoint_after_a_timed_out_sync_is_retried(
     twins.sync()
     twins.insert([(p, float(t), 2.0) for p in ("a", "b") for t in range(905, 1900, 60)])
     clock["now"] = 2_000.0
-    appends_never_collide.clear()
-    real = tsdb.aggregate
-    slow = F.udf(lambda _: time.sleep(1.0) is None, "boolean")
+    appended.clear()
+    real = getattr(tsdb, name)
+    monkeypatch.setattr(tsdb, name, slow)
+    def states():
+        return [storage.table_state(twins.db._period_path(n)) for n, _ in twins.PERIODS]
 
-    def slow_aggregate(rows, *a, **kw):
-        return real(rows.filter(slow(F.col("value"))), *a, **kw)
-
-    monkeypatch.setattr(tsdb, "aggregate", slow_aggregate)
+    before = states()
     with pytest.raises(TimeoutError):
-        twins.db.sync(timeout=3.0)
-    monkeypatch.setattr(tsdb, "aggregate", real)
-    assert appends_never_collide == []
+        twins.db.sync(timeout=timeout)
+    monkeypatch.setattr(tsdb, name, real)
+    assert appended == []
+    assert states() == before
     twins.sync()
-    assert appends_never_collide
+    assert appended
 
 
 def test_appends_stay_disjoint_for_the_histogram_table(
@@ -1906,7 +1997,7 @@ def test_retention_rewrites_a_spark_written_file_and_its_sidecar(
 
 
 def test_a_file_landing_in_the_boundary_partition_during_retention_survives(
-    spark, tmp_path, monkeypatch, count_jobs
+    spark, tmp_path, monkeypatch
 ):
     """A file that an insert lands in retention's boundary partition after
     retention listed it is left whole (a rewrite of the whole partition
@@ -1949,7 +2040,8 @@ def test_a_file_landing_in_the_boundary_partition_during_retention_survives(
     db.sync()
     monkeypatch.undo()
     assert sorted(map(tuple, db.incoming().collect())) == [("a", 7_500.0, 2.0), late]
-    assert count_jobs(db.sync) > 0
+    db.sync()
+    assert _synced_tables(db)
     assert ("z", 7_600.0) in {
         (r.path, r.timestamp) for r in db.period_table("tensecond").collect()
     }
@@ -2003,6 +2095,7 @@ def test_a_failure_between_two_straddling_rewrites_loses_no_row(
     db.sync()
     assert sorted(map(tuple, db.incoming().collect())) == above
     assert count_jobs(db.sync) == 0
+    assert _synced_tables(db) == set()
 
 
 # ---------------------------------------------------------------------------
@@ -2442,3 +2535,163 @@ def test_path_catalog_older_snapshot_keeps_newer_files(tmp_path, monkeypatch):
     monkeypatch.setattr(storage, "live_files", lambda path: ["new.parquet"])
     assert cat.hwms(table) == {"b": 20.0}
     assert reads == ["new.parquet", "old.parquet"]
+
+
+# ---------------------------------------------------------------------------
+# The driver pass against the Spark plan
+# ---------------------------------------------------------------------------
+
+
+def _same_double(a, b) -> bool:
+    """Equal as doubles, NaN equal to NaN and −0.0 to 0.0 (Spark returns
+    either zero, by row order)."""
+    import math
+
+    return a == b or (math.isnan(a) and math.isnan(b))
+
+
+def _close_double(a, b) -> bool:
+    """:func:`_same_double`, or within the oracle's tolerance."""
+    import math
+
+    return _same_double(a, b) or math.isclose(a, b, rel_tol=1e-9, abs_tol=1e-6)
+
+
+def _table_rows(db, name) -> dict:
+    """``{key: row}`` of a period table or the histogram, read by Spark."""
+    from smalltsdb_spark import storage
+
+    if name == "histogram":
+        df = db._histogram_table().drop(storage.PARTITION_COLUMN)
+        return {tuple(r[:3]): tuple(r) for r in df.collect()}
+    return {tuple(r[:2]): r.asDict() for r in db.period_table(name).collect()}
+
+
+def test_driver_sync_equals_the_spark_plan_on_a_random_schedule(
+    spark, tmp_path, monkeypatch, appends_never_collide
+):
+    """The random schedule of
+    :func:`test_idle_sync_matches_full_sync_on_a_random_schedule`, with
+    values that tie and hold NaN, ±∞ and −0.0, applied to three stores
+    with histograms: one whose syncs run on the driver, one on the Spark
+    plan (``_DRIVER_ROWS`` = 0), and one whose small limit sends its
+    first syncs to the driver and later ones to Spark.  After every sync
+    all three hold the same keys; n, min, max and the percentiles are
+    equal as doubles, sum and avg within the oracle's tolerance, and the
+    histograms are equal.  Each sync's path is recorded, and every store
+    took the paths it was meant to."""
+    import random
+
+    from smalltsdb_spark import storage
+
+    rng = random.Random(20261019)
+    clock = {"now": 4_000.0}
+    kw = dict(periods=_Twins.PERIODS, now=lambda: clock["now"], histograms=True)
+    limits = {"driver": storage._DRIVER_ROWS, "spark": 0, "mixed": 40}
+    dbs = {name: TablesTSDB(spark, str(tmp_path / name), **kw) for name in limits}
+    took = {name: [] for name in limits}
+    real = TablesTSDB._sync_on_driver
+
+    def recording(self, due, staging):
+        on_driver = real(self, due, staging)
+        took[os.path.basename(self.path)].append(on_driver)
+        return on_driver
+
+    monkeypatch.setattr(TablesTSDB, "_sync_on_driver", recording)
+    pool = [1.0, 2.0, 2.0, 5.5, -3.25, 0.0, -0.0, float("nan"), float("inf"), -float("inf")]
+
+    def value():
+        return rng.choice(pool) if rng.random() < 0.5 else round(rng.uniform(-50, 2_000), 1)
+
+    def insert(lo, hi):
+        points = [
+            (rng.choice(["a", "b", "c"]), rng.uniform(lo, hi), value())
+            for _ in range(rng.randint(3, 12))
+        ]
+        for db in dbs.values():
+            db.insert(points)
+
+    def sync_all():
+        for name, db in dbs.items():
+            with monkeypatch.context() as m:
+                m.setattr(storage, "_DRIVER_ROWS", limits[name])
+                db.sync()
+        tables = [n for n, _ in _Twins.PERIODS] + ["histogram"]
+        want = {t: _table_rows(dbs["spark"], t) for t in tables}
+        for name in ("driver", "mixed"):
+            for t in tables:
+                got = _table_rows(dbs[name], t)
+                assert got.keys() == want[t].keys(), (name, t)
+                for key, row in got.items():
+                    if t == "histogram":
+                        assert row == want[t][key], (name, key)
+                        continue
+                    other = want[t][key]
+                    for stat in ("n", "min", "max", "p50", "p90", "p99"):
+                        assert _same_double(row[stat], other[stat]), (name, t, key, stat)
+                    for stat in ("sum", "avg"):
+                        assert _close_double(row[stat], other[stat]), (name, t, key, stat)
+
+    insert(0.0, 600.0)
+    sync_all()
+    for _ in range(12):
+        step = rng.choice(["ahead", "behind", "advance", "sync"])
+        if step == "ahead":
+            insert(clock["now"] - 200.0, clock["now"])
+        elif step == "behind":
+            insert(clock["now"] - 3_000.0, clock["now"] - 500.0)
+        elif step == "advance":
+            clock["now"] += rng.choice([5.0, 60.0, 700.0])
+        else:
+            sync_all()
+    clock["now"] += 3_600.0
+    sync_all()
+    assert took["driver"] and all(took["driver"])
+    assert took["spark"] and not any(took["spark"])
+    assert True in took["mixed"] and False in took["mixed"]
+    assert any(p.endswith("histogram") for p in appends_never_collide)
+
+
+def test_driver_writes_are_zstd_and_spark_reads_them_back(spark, tmp_path):
+    """Every file the driver writes — an insert, sync's pass, compaction
+    and retention's rewrite of a straddling file — is zstd-compressed in
+    every column chunk, and Spark's ``read_table`` reads back its rows."""
+    import pyarrow.parquet as pq
+
+    from smalltsdb_spark import storage
+    from smalltsdb_spark.intervals import final_end
+    from smalltsdb_spark.operators.aggregate import aggregate
+    from smalltsdb_spark.schemas import AGG_SCHEMA, INCOMING_SCHEMA
+
+    db = TablesTSDB(spark, str(tmp_path / "db"), periods=_Twins.PERIODS, now=lambda: 4_000.0)
+    rows = [(p, float(t), float(t % 7)) for p in ("a", "b") for t in range(5, 3_900, 100)]
+    for half in (rows[::2], rows[1::2]):
+        db.insert(half)
+    db.sync()
+    assert db.compact()["incoming"] == [0]
+    (straddling,) = storage.live_files(db.incoming_path)
+    storage._keep_rows_at_or_above(
+        os.path.join(db.incoming_path, straddling), "timestamp", 1_000.0
+    )
+    kept = sorted(r for r in rows if r[1] >= 1_000.0)
+
+    tables = [db.incoming_path, *(db._period_path(n) for n, _ in _Twins.PERIODS)]
+    for table in tables:
+        files = storage.live_files(table)
+        assert files, table
+        for rel in files:
+            meta = pq.read_metadata(os.path.join(table, rel))
+            codecs = {
+                meta.row_group(i).column(c).compression
+                for i in range(meta.num_row_groups)
+                for c in range(meta.num_columns)
+            }
+            assert codecs == {"ZSTD"}, (table, rel)
+    incoming = storage.read_table(spark, db.incoming_path, INCOMING_SCHEMA)
+    assert sorted(map(tuple, incoming.collect())) == kept
+    source = spark.createDataFrame(rows, INCOMING_SCHEMA)
+    for name, seconds in _Twins.PERIODS:
+        got = storage.read_table(spark, db._period_path(name), AGG_SCHEMA)
+        fe = final_end(seconds, db.tail, 4_000.0)
+        want = aggregate(source.filter(F.col("timestamp") < fe), seconds)
+        assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect())), name
