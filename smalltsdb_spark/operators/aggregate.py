@@ -255,29 +255,28 @@ def value_histogram(
 
 
 def _sorted_groups(rows, seconds: int, keys=(), within=None):
-    """``rows`` (an arrow table of ``path``, ``timestamp`` and ``value``)
-    grouped by ``(path, bucket, *keys)``: returns ``(names, cols, order,
-    starts)`` — the distinct paths in Spark's order (code point, which is
-    UTF-8 byte order), the numpy columns ``(rank, bucket, *keys)`` sorted
-    by themselves and then by ``within``, the permutation of ``rows``
-    that sorts them, and the index of each group's first row."""
+    """``rows`` (an arrow table of ``path``, ``timestamp`` and ``value``;
+    ``path`` may already be dictionary-encoded) grouped by ``(path,
+    bucket, *keys)``: returns ``(paths, cols, order, starts)`` — the
+    dictionary of paths, the numpy columns ``(index, bucket, *keys)``
+    (``index`` into ``paths``) sorted by themselves and then by
+    ``within``, the permutation of ``rows`` that sorts them, and the
+    index of each group's first row.  Groups come out in dictionary
+    order, not path order; the writer sorts (``storage.write_units``)."""
     import numpy as np
     import pyarrow.compute as pc
 
     encoded = pc.dictionary_encode(rows["path"]).combine_chunks()
-    by_rank = pc.array_sort_indices(encoded.dictionary)
-    rank = np.empty(len(by_rank), np.int64)
-    rank[by_rank.to_numpy()] = np.arange(len(by_rank))
-    rank = rank[encoded.indices.to_numpy()]
+    index = encoded.indices.to_numpy()
     bucket = np.floor(rows["timestamp"].to_numpy() / seconds) * seconds
-    sort = [rank, bucket, *keys, *([] if within is None else [within])]
+    sort = [index, bucket, *keys, *([] if within is None else [within])]
     order = np.lexsort(sort[::-1])
-    cols = [c[order] for c in (rank, bucket, *keys)]
+    cols = [c[order] for c in (index, bucket, *keys)]
     changed = np.zeros(len(order), bool)
     changed[:1] = True
     for c in cols:
         changed[1:] |= c[1:] != c[:-1]
-    return encoded.dictionary.take(by_rank), cols, order, np.flatnonzero(changed)
+    return encoded.dictionary, cols, order, np.flatnonzero(changed)
 
 
 def spark_percentile(values, starts, counts, q: float):
@@ -299,8 +298,8 @@ def spark_percentile(values, starts, counts, q: float):
 
 def aggregate_table(rows, seconds: int):
     """:func:`aggregate` of the arrow table ``rows`` on the driver: one
-    row per ``(path, bucket)`` in the fixed aggregate schema, ordered by
-    ``(path, timestamp)``, equal to Spark's rows.  ``min``/``max`` and
+    row per ``(path, bucket)`` in the fixed aggregate schema, equal to
+    Spark's rows.  ``min``/``max`` and
     the percentiles come from the group's values sorted with NaN last
     (Spark's ordering of doubles) and :func:`spark_percentile`; ``sum``
     is added in value order rather than Spark's row order, so it and
@@ -312,7 +311,7 @@ def aggregate_table(rows, seconds: int):
     from smalltsdb_spark.schemas import AGG_COLUMNS
 
     values = rows["value"].to_numpy()
-    names, (rank, bucket), order, starts = _sorted_groups(
+    paths, (index, bucket), order, starts = _sorted_groups(
         rows, seconds, within=values
     )
     values = values[order]
@@ -320,7 +319,7 @@ def aggregate_table(rows, seconds: int):
     with np.errstate(invalid="ignore"):  # ∞ − ∞ is NaN, as in Spark
         sums = np.add.reduceat(values, starts) if len(starts) else values[:0]
     cols = {
-        "path": names.take(rank[starts]),
+        "path": paths.take(index[starts]),
         "timestamp": bucket[starts],
         "n": counts.astype(np.float64),
         "min": values[starts],
@@ -347,21 +346,21 @@ def _spark_long(x):
 
 def histogram_table(rows, seconds: int, bin_width: float = 50.0, clamp_bin: int = 19):
     """:func:`value_histogram` of the arrow table ``rows`` on the driver:
-    ``(path, timestamp, bin, n)`` ordered by ``(path, timestamp, bin)``,
-    with Spark's ``least(floor(value / bin_width), clamp_bin)`` as a
-    long (NaN in bin 0, −∞ in the least long)."""
+    one ``(path, timestamp, bin, n)`` row per group, with Spark's
+    ``least(floor(value / bin_width), clamp_bin)`` as a long (NaN in bin
+    0, −∞ in the least long)."""
     import numpy as np
     import pyarrow as pa
 
     bins = _spark_long(
         np.minimum(np.floor(rows["value"].to_numpy() / bin_width), clamp_bin)
     )
-    names, (rank, bucket, bins), _order, starts = _sorted_groups(
+    paths, (index, bucket, bins), _order, starts = _sorted_groups(
         rows, seconds, keys=(bins,)
     )
     return pa.table(
         {
-            "path": names.take(rank[starts]),
+            "path": paths.take(index[starts]),
             "timestamp": bucket[starts],
             "bin": bins[starts],
             "n": np.diff(np.append(starts, len(bins))),

@@ -58,7 +58,7 @@ import math
 import os
 import shutil
 import uuid
-from contextlib import ExitStack, contextmanager
+from contextlib import contextmanager
 from operator import itemgetter
 
 from pyspark.sql import DataFrame, SparkSession
@@ -1174,29 +1174,32 @@ def read_files(
     import pyarrow.parquet as pq
 
     target = _arrow_schema(schema)
-    tables, n = [], 0
-    with ExitStack() as stack:
-        chosen = []
-        for rel in files:
-            parquet = stack.enter_context(pq.ParquetFile(os.path.join(path, rel)))
-            meta = parquet.metadata
-            col = meta.schema.names.index("timestamp")
-            groups = []
-            for i in range(meta.num_row_groups):
-                group = meta.row_group(i)
-                stats = group.column(col).statistics
-                if stats is None or not stats.has_min_max:
-                    bounds = (None, None)
-                else:
-                    bounds = (stats.min, stats.max)
-                if where is None or where(*bounds):
-                    groups.append(i)
-                    n += group.num_rows
-            if n > limit:
-                return None
-            if groups:
-                chosen.append((parquet, groups))
-        for parquet, groups in chosen:
+    chosen, n = [], 0
+    for rel in files:
+        # the footer alone, so no file stays open while the rest are
+        # counted: a table of thousands of small files must not hold a
+        # descriptor for each
+        file = os.path.join(path, rel)
+        meta = pq.read_metadata(file)
+        col = meta.schema.names.index("timestamp")
+        groups = []
+        for i in range(meta.num_row_groups):
+            group = meta.row_group(i)
+            stats = group.column(col).statistics
+            if stats is None or not stats.has_min_max:
+                bounds = (None, None)
+            else:
+                bounds = (stats.min, stats.max)
+            if where is None or where(*bounds):
+                groups.append(i)
+                n += group.num_rows
+        if n > limit:
+            return None
+        if groups:
+            chosen.append((file, meta, groups))
+    tables = []
+    for file, meta, groups in chosen:
+        with pq.ParquetFile(file, metadata=meta) as parquet:
             tables.append(
                 parquet.read_row_groups(groups, columns=target.names).cast(target)
             )

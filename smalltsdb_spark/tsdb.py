@@ -995,9 +995,8 @@ class TablesTSDB(BaseTSDB):
         each table's new rows are written under ``staging`` as the Spark
         pass writes them (``_table=i`` for the ``i``-th period, then
         ``histogram``).  Incoming's live files are read with pyarrow, only
-        the row groups whose footer ``timestamp`` range can hold an
-        eligible row (below the largest ``final_end``, at or above the
-        smallest lower bound); each table keeps :meth:`_eligible_rows`'
+        the row groups whose footer ``timestamp`` range starts below the
+        largest ``final_end``; each table keeps :meth:`_eligible_rows`'
         rows (per path, ``[last_final + period, final_end)``, with
         ``last_final=None ⇒ 0``) and computes them with
         :func:`aggregate_table` or :func:`histogram_table`.  Returns False,
@@ -1011,19 +1010,18 @@ class TablesTSDB(BaseTSDB):
         if not self.exact_percentiles:
             return False
         top = max(fe for _s, fe, _hwms in due.values())
-        low = min(
-            [0.0, *(h + s for s, _fe, hwms in due.values() for h in hwms.values())]
-        )
         rows = storage.read_files(
             self.incoming_path,
             storage.live_files(self.incoming_path),
             INCOMING_SCHEMA,
             storage._DRIVER_ROWS,
-            where=lambda lo, hi: lo is None or (lo < top and hi >= low),
+            where=lambda lo, hi: lo is None or lo < top,
         )
         if rows is None or any(c.null_count for c in rows.columns):
             return False
+        # encoded once: the aggregation groups on the same indices
         encoded = pc.dictionary_encode(rows["path"]).combine_chunks()
+        rows = rows.set_column(rows.schema.get_field_index("path"), "path", encoded)
         paths = encoded.dictionary.to_pylist()
         index = encoded.indices.to_numpy()
         ts = rows["timestamp"].to_numpy()

@@ -2652,6 +2652,52 @@ def test_driver_sync_equals_the_spark_plan_on_a_random_schedule(
     assert any(p.endswith("histogram") for p in appends_never_collide)
 
 
+def test_driver_reads_hold_one_file_open_at_a_time(tmp_path):
+    """The driver pass's read and driver compaction take a table of more
+    small files than the process may hold open: each file is open only
+    while its footer or its chosen row groups are read.  A child process
+    lowers its own soft ``RLIMIT_NOFILE`` below the file count first."""
+    import subprocess
+    import sys
+    import textwrap
+
+    files, limit = 600, 256
+    script = textwrap.dedent(
+        f"""
+        import resource
+        from smalltsdb_spark import storage
+        from smalltsdb_spark.schemas import INCOMING_SCHEMA
+
+        path = {str(tmp_path / "incoming")!r}
+        for i in range({files}):
+            storage.append_rows([("a", float(i), 1.0)], path, INCOMING_SCHEMA)
+        assert len(storage.live_files(path)) == {files}
+        _soft, hard = resource.getrlimit(resource.RLIMIT_NOFILE)
+        resource.setrlimit(resource.RLIMIT_NOFILE, ({limit}, hard))
+        rows = storage.read_files(
+            path, storage.live_files(path), INCOMING_SCHEMA, {files},
+            where=lambda lo, hi: lo < {files - 1},
+        )
+        assert rows.num_rows == {files - 1}, rows.num_rows
+        assert storage.compact_partitions(None, path, INCOMING_SCHEMA) == [0]
+        (rel,) = storage.live_files(path)
+        rows = storage.read_files(path, [rel], INCOMING_SCHEMA, {files})
+        assert rows["timestamp"].to_pylist() == [float(i) for i in range({files})]
+        print("OK")
+        """
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=root,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert out.returncode == 0, out.stderr
+    assert "OK" in out.stdout
+
+
 def test_driver_writes_are_zstd_and_spark_reads_them_back(spark, tmp_path):
     """Every file the driver writes — an insert, sync's pass, compaction
     and retention's rewrite of a straddling file — is zstd-compressed in
