@@ -68,6 +68,7 @@ from pyspark.sql import functions as F
 
 from smalltsdb_spark.functions import md5_long, tokens, word_ngrams
 from smalltsdb_spark.operators import spread
+from smalltsdb_spark.session import persisted
 
 #: fixed-point scale for order-independent sums (~7 decimal digits)
 FP_SHIFT = 24
@@ -348,7 +349,6 @@ def fit(
         base.select(id_col, "feature", "x", "label")
         .unionByName(bias_rows)
         .repartition(F.col(id_col))
-        .persist()
     )
     # Size the cached relation's partition count by MEASURED bytes, not
     # by core count (partitions track data): the session lets AQE
@@ -360,17 +360,6 @@ def fit(
     # per fit — measured 1.15 → 0.55 s/iteration at sf0.1 (32 partitions
     # → 1), bit-identical model (fixed-point sums are
     # partitioning-independent by the module contract).
-    # Every training doc owns exactly one bias row, so this count is the
-    # old distinct-id count (and it materializes the cache).
-    n_docs = fx.filter(F.col("feature") == dim).count()
-    if n_docs == 0:
-        fx.unpersist()
-        raise ValueError("no labeled documents to fit on")
-    # cache the constant sigmoid table: each iteration broadcasts it,
-    # and the broadcast build re-serialized the 131k-row local relation
-    # every time — reading it from the block manager instead is worth
-    # ~0.1-0.15 s/iteration (unpersisted in the finally below)
-    sig_table = _sigmoid_table(spark).persist()
     w = [0.0] * dim
     bias = 0.0
     losses: list[float] = []
@@ -412,7 +401,16 @@ def fit(
             ),
         )
     ).alias("loss_sum")
-    try:
+    # cache the constant sigmoid table too: each iteration broadcasts it,
+    # and the broadcast build re-serialized the 131k-row local relation
+    # every time — reading it from the block manager instead is worth
+    # ~0.1-0.15 s/iteration
+    with persisted(fx, _sigmoid_table(spark)) as (fx, sig_table):
+        # Every training doc owns exactly one bias row, so this count is
+        # the old distinct-id count (and it materializes the cache).
+        n_docs = fx.filter(F.col("feature") == dim).count()
+        if n_docs == 0:
+            raise ValueError("no labeled documents to fit on")
         for _ in range(iters):
             # per-doc margin with the label carried THROUGH the
             # aggregation (F.first over a per-doc-constant column —
@@ -474,9 +472,6 @@ def fit(
                 else:
                     w[f] -= lr * (row.g_int / FP_SCALE) / n_docs
             losses.append(loss_sum / n_docs)
-    finally:
-        fx.unpersist()
-        sig_table.unpersist()
     return LogisticModel(weights=w, bias=bias, dim=dim, losses=losses)
 
 

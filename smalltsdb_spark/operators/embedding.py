@@ -45,6 +45,7 @@ from pyspark.sql import functions as F
 
 from smalltsdb_spark.functions import md5_long
 from smalltsdb_spark.operators.classifier import FP_SCALE, featurize
+from smalltsdb_spark.session import persisted
 
 __all__ = [
     "smoothed_idf",
@@ -174,8 +175,7 @@ def embed_text(
     throughput phases then amplify into minute-long cold runs).  A
     failure releases both caches: ``tf`` always, ``out`` when its
     materialization fails."""
-    tf = featurize(df, id_col, text_col, n_features).persist()
-    try:
+    with persisted(featurize(df, id_col, text_col, n_features)) as tf:
         feats = tfidf_features(df, id_col, text_col, n_features, _tf=tf)
         proj = random_projection_matrix(feats, d)
         contrib = feats.join(F.broadcast(proj), "feature").select(
@@ -207,8 +207,6 @@ def embed_text(
         except BaseException:
             out.unpersist()
             raise
-    finally:
-        tf.unpersist()
     return out
 
 

@@ -19,13 +19,14 @@ double, value := value (FIXTURES.md §6).
 from __future__ import annotations
 
 from collections.abc import Callable
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import LongType
 
 from smalltsdb_spark.operators.aggregate import aggregate, bucket
+from smalltsdb_spark.session import persisted
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 #: values are SQL strings, or zero-arg callables returning SQL for oracles
@@ -81,15 +82,17 @@ def read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Handles both generator vintages of the events parquet:
 
-    - TIMESTAMP(NANOS), which Spark 4 refuses by default — the runtime
-      conf maps it to a nanosecond LongType, and the epoch derivation
-      truncates to microseconds first (``div 1000``);
+    - TIMESTAMP(NANOS), which Spark 4 refuses by default —
+      ``get_spark`` sets ``spark.sql.legacy.parquet.nanosAsLong``, which
+      maps it to a nanosecond LongType, and the epoch derivation
+      truncates to microseconds first (``div 1000``).  On a session
+      built without that conf, reading such a file fails with Spark's
+      error, which names the conf; this function does not set it;
     - TIMESTAMP(MICROS) (TIMESTAMP_NTZ in Spark) — NTZ → TZ (session tz
-      is pinned UTC, session.py:53) → double is micros/1e6, the same
+      is pinned UTC by ``get_spark``) → double is micros/1e6, the same
       IEEE-754 division DuckDB's ``epoch(ts)`` performs (DuckDB
       timestamps are µs), so both paths stay bit-identical to the
       oracle."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     df = _t(spark, sf_dir, "events")
     if isinstance(df.schema["ts"].dataType, LongType):
         ts_sec = F.expr("ts div 1000").cast("double") / F.lit(1e6)
@@ -284,11 +287,8 @@ def tsdb_get_metric_partial(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket_s = 3600.0
     # cached: min/max probe + staged half-writes re-scan the same
     # relation (guide §1.2); built from parquet inside the timed query
-    inc = events_as_incoming(spark, sf_dir).cache()
-    # r15 (VERDICT r14 item 4): the cache feeds only in-function
-    # actions; release it before returning (the returned plan reads
-    # back from storage), even on error
-    try:
+    inc = events_as_incoming(spark, sf_dir)
+    with persisted(inc):
         t_min, t_max = inc.agg(F.min("timestamp"), F.max("timestamp")).first()
         # mid-bucket horizon: engine-vs-oracle boundary semantics can't
         # disagree (the tsdb_sync_idempotent pattern)
@@ -308,8 +308,6 @@ def tsdb_get_metric_partial(spark: SparkSession, sf_dir: str) -> DataFrame:
             "click", "onehour", "p90", (0.0, 4e9), include_partial=True
         )
         return out.select("timestamp", F.round("p90", 6).alias("p90"))
-    finally:
-        inc.unpersist()
 
 
 @query(
@@ -481,38 +479,55 @@ def tsdb_agg_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@contextmanager
-def _stream_state_partitions(spark: SparkSession, n: int):
-    """Pin ``spark.sql.shuffle.partitions`` for a streaming lifecycle.
-
-    A stateful streaming agg commits one state-store delta file per state
-    partition per micro-batch, and the partition count is frozen into the
-    checkpoint from the session conf at first start — inheriting the batch
-    shuffle width (32) means 32+ tiny state commits per batch for a
-    5-path keyspace, which dominates these queries' wall time (~4× the
-    actual compute).  State partitions should track KEY CARDINALITY and
-    state size, not batch width: a 100 TB deployment with millions of
-    paths would raise this, the bench keyspace wants it small.  Restored
-    only after the caller's ``awaitTermination`` — the conf is read during
-    micro-batch planning, so restoring before termination would race."""
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", n)
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
-
-
-#: state partitions for the driver's streaming queries.  The state key is
-#: (path, window) — ~10k entries at sf0.1 — so a handful of partitions
-#: covers it and avoids 32 near-empty state-store commits per micro-batch.
-#: A/B at sf0.1 (4 vs 16 vs 32) shows the choice is inside run-to-run
-#: noise at this shape — the pin is about the CONTRACT (state partitions
-#: track key cardinality and are frozen into the checkpoint at first
-#: start, so they must be chosen deliberately, not inherited from the
-#: batch shuffle width; a 100 TB deployment with millions of paths raises
-#: this the same way).
+#: state partitions for the driver's stateful streams, set on the child
+#: session :func:`_drain` runs them on.  A stateful stream commits one
+#: state-store delta file per state partition per micro-batch, and the
+#: count is frozen into the checkpoint at first start, so it must track
+#: the state key's cardinality — (path, window), ~10k entries at sf0.1 —
+#: not the batch shuffle width (32 near-empty state commits per batch,
+#: ~4× these queries' compute).  A/B at sf0.1 (4 vs 16 vs 32) is inside
+#: run-to-run noise; a 100 TB deployment with millions of paths raises it.
 STREAM_STATE_PARTITIONS = 4
+
+#: seconds an availableNow drain may run before :func:`_drain` gives up
+_DRAIN_TIMEOUT_S = 600
+
+
+def _drain(
+    spark: SparkSession,
+    start: Callable[[SparkSession], StreamingQuery],
+    *,
+    stateful: bool,
+) -> SparkSession:
+    """Run the availableNow query ``start(session)`` to its end and
+    return the session it ran on.
+
+    A stateful query runs on a child of ``spark`` (``newSession``: same
+    SparkContext, cache and builder conf; its own SQL conf and temp
+    views) whose ``spark.sql.shuffle.partitions`` is
+    :data:`STREAM_STATE_PARTITIONS`, so the caller's conf is never
+    written; a restart from the checkpoint reads the count from its
+    offset log.  A memory sink's table is a temp view of the session
+    that owns it: read it through the returned session.  A stateless
+    query runs on ``spark`` itself, so its foreachBatch plans keep the
+    caller's shuffle width.
+
+    Raises ``TimeoutError`` when the query has not ended within
+    :data:`_DRAIN_TIMEOUT_S`.  The query is stopped on every exit: a
+    child session's queries are not in the caller's ``spark.streams``."""
+    session = spark
+    if stateful:
+        session = spark.newSession()
+        session.conf.set("spark.sql.shuffle.partitions", STREAM_STATE_PARTITIONS)
+    q = start(session)
+    try:
+        if not q.awaitTermination(_DRAIN_TIMEOUT_S):
+            raise TimeoutError(
+                f"stream {q.id} did not drain within {_DRAIN_TIMEOUT_S} s"
+            )
+    finally:
+        q.stop()
+    return session
 
 
 @query("stream_agg_tensecond", _oracle_agg(10))
@@ -531,19 +546,20 @@ def stream_agg_tensecond(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one staged file ⇒ availableNow runs one micro-batch ⇒ update mode
     # emits each bucket exactly once (no per-batch re-emission dups)
     events_as_incoming(spark, sf_dir).coalesce(1).write.mode("overwrite").parquet(staging)
-    inc = spark.readStream.schema(INCOMING_SCHEMA).parquet(staging)
     sink = f"stream_agg_{uuid.uuid4().hex[:8]}"
-    with _stream_state_partitions(spark, STREAM_STATE_PARTITIONS):
-        q = (
-            streaming_aggregate(inc, 10)
-            .writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
+    owner = _drain(
+        spark,
+        lambda s: streaming_aggregate(
+            s.readStream.schema(INCOMING_SCHEMA).parquet(staging), 10
         )
-        assert q.awaitTermination(600), "stream drain did not finish"
-    return _round_stats(spark.table(sink), _STATS)
+        .writeStream.format("memory")
+        .queryName(sink)
+        .outputMode("update")
+        .trigger(availableNow=True)
+        .start(),
+        stateful=True,
+    )
+    return _round_stats(owner.table(sink), _STATS)
 
 
 @query(
@@ -608,10 +624,13 @@ def stream_ingest_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     for i, part in enumerate(sorted(glob.glob(f"{spool}/part-*"))):
         os.rename(part, f"{spool}/{i:06d}.graphite")
 
-    q = start_ingest(
-        read_spool_stream(spark, spool), inc_path, ckpt, available_now=True
+    _drain(
+        spark,
+        lambda s: start_ingest(
+            read_spool_stream(s, spool), inc_path, ckpt, available_now=True
+        ),
+        stateful=False,
     )
-    assert q.awaitTermination(600), "stream drain did not finish"
 
     landed = spark.read.parquet(inc_path).select("path", "timestamp", "value")
     return _round_stats(aggregate(landed, 60), _STATS)
@@ -638,6 +657,7 @@ def stream_first_seen(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch-1 keys and flips rows_match."""
     import math
 
+    from smalltsdb_spark.schemas import INCOMING_SCHEMA
     from smalltsdb_spark.streaming.stateful import first_seen_stream
 
     # cached: the min/max probe and the two staged half-writes are
@@ -647,11 +667,8 @@ def stream_first_seen(spark: SparkSession, sf_dir: str) -> DataFrame:
         "path",
         "timestamp",
         (F.floor(F.col("value") / 10) * 10).cast("double").alias("value"),
-    ).cache()
-    # r15 (VERDICT r14 item 4): the cache feeds only in-function
-    # actions; release it before returning (the returned plan reads
-    # back from storage), even on error
-    try:
+    )
+    with persisted(inc):
         t_min, t_max = inc.agg(F.min("timestamp"), F.max("timestamp")).first()
         t_split = (t_min + t_max) / 2
 
@@ -659,22 +676,20 @@ def stream_first_seen(spark: SparkSession, sf_dir: str) -> DataFrame:
         src, out, ckpt = f"{base}/src", f"{base}/out", f"{base}/ckpt"
 
         def run_once():
-            with _stream_state_partitions(spark, STREAM_STATE_PARTITIONS):
-                q = (
-                    first_seen_stream(
-                        spark.readStream.schema(INCOMING_SCHEMA).parquet(src),
-                        key_cols=["path", "value"],
-                    )
-                    .writeStream.format("parquet")
-                    .outputMode("append")
-                    .option("checkpointLocation", ckpt)
-                    .option("path", out)
-                    .trigger(availableNow=True)
-                    .start()
+            _drain(
+                spark,
+                lambda s: first_seen_stream(
+                    s.readStream.schema(INCOMING_SCHEMA).parquet(src),
+                    key_cols=["path", "value"],
                 )
-                assert q.awaitTermination(600), "stream drain did not finish"
-
-        from smalltsdb_spark.schemas import INCOMING_SCHEMA
+                .writeStream.format("parquet")
+                .outputMode("append")
+                .option("checkpointLocation", ckpt)
+                .option("path", out)
+                .trigger(availableNow=True)
+                .start(),
+                stateful=True,
+            )
 
         inc.filter(F.col("timestamp") < t_split).coalesce(1).write.mode(
             "append"
@@ -692,8 +707,6 @@ def stream_first_seen(spark: SparkSession, sf_dir: str) -> DataFrame:
         return spark.read.parquet(out).select(
             "path", F.round("timestamp", 6).alias("timestamp"), "value"
         )
-    finally:
-        inc.unpersist()
 
 
 @query(
@@ -727,11 +740,8 @@ def stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
         "path",
         "timestamp",
         (F.floor(F.col("value") / 10) * 10).cast("double").alias("value"),
-    ).cache()
-    # r15 (VERDICT r14 item 4): the cache feeds only in-function
-    # actions; release it before returning (the returned plan reads
-    # back from storage), even on error
-    try:
+    )
+    with persisted(inc):
         t_min, t_max = inc.agg(F.min("timestamp"), F.max("timestamp")).first()
         t_split = (t_min + t_max) / 2
 
@@ -739,24 +749,22 @@ def stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
         src, out, ckpt = f"{base}/src", f"{base}/out", f"{base}/ckpt"
 
         def run_once():
-            with _stream_state_partitions(spark, STREAM_STATE_PARTITIONS):
-                stream = (
-                    spark.readStream.schema(INCOMING_SCHEMA)
-                    .parquet(src)
-                    .withColumn("ets", F.timestamp_seconds(F.col("timestamp")))
-                    .withWatermark("ets", "100000 hours")
-                    .dropDuplicatesWithinWatermark(["path", "value"])
-                    .select("path", "value")
-                )
-                q = (
-                    stream.writeStream.format("parquet")
-                    .outputMode("append")
-                    .option("checkpointLocation", ckpt)
-                    .option("path", out)
-                    .trigger(availableNow=True)
-                    .start()
-                )
-                assert q.awaitTermination(600), "stream drain did not finish"
+            _drain(
+                spark,
+                lambda s: s.readStream.schema(INCOMING_SCHEMA)
+                .parquet(src)
+                .withColumn("ets", F.timestamp_seconds(F.col("timestamp")))
+                .withWatermark("ets", "100000 hours")
+                .dropDuplicatesWithinWatermark(["path", "value"])
+                .select("path", "value")
+                .writeStream.format("parquet")
+                .outputMode("append")
+                .option("checkpointLocation", ckpt)
+                .option("path", out)
+                .trigger(availableNow=True)
+                .start(),
+                stateful=True,
+            )
 
         inc.filter(F.col("timestamp") < t_split).coalesce(1).write.mode(
             "append"
@@ -772,8 +780,6 @@ def stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
         run_once()
 
         return spark.read.parquet(out).select("path", "value")
-    finally:
-        inc.unpersist()
 
 
 @query("stream_rollup_finality", _oracle_agg(3600))
@@ -800,11 +806,8 @@ def stream_rollup_finality(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket = 3600.0
     # cached: min/max probe + staged half-writes re-scan the same
     # relation (guide §1.2); built from parquet inside the timed query
-    inc = events_as_incoming(spark, sf_dir).cache()
-    # r15 (VERDICT r14 item 4): the cache feeds only in-function
-    # actions; release it before returning (the returned plan reads
-    # back from storage), even on error
-    try:
+    inc = events_as_incoming(spark, sf_dir)
+    with persisted(inc):
         t_min, t_max = inc.agg(F.min("timestamp"), F.max("timestamp")).first()
         # mid-bucket split: watermark comparisons stay ~½ bucket away from any
         # bucket end, so engine-vs-oracle boundary semantics can't disagree
@@ -815,15 +818,17 @@ def stream_rollup_finality(spark: SparkSession, sf_dir: str) -> DataFrame:
         src, out, ckpt = f"{base}/src", f"{base}/onehour", f"{base}/ckpt"
 
         def run_once():
-            with _stream_state_partitions(spark, STREAM_STATE_PARTITIONS):
-                q = start_rollup(
-                    spark.readStream.schema(INCOMING_SCHEMA).parquet(src),
+            _drain(
+                spark,
+                lambda s: start_rollup(
+                    s.readStream.schema(INCOMING_SCHEMA).parquet(src),
                     out,
                     ckpt,
                     int(bucket),
                     available_now=True,
-                )
-                assert q.awaitTermination(600), "stream drain did not finish"
+                ),
+                stateful=True,
+            )
 
         inc.filter(F.col("timestamp") < t_split).coalesce(1).write.mode(
             "append"
@@ -848,8 +853,6 @@ def stream_rollup_finality(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             _STATS,
         )
-    finally:
-        inc.unpersist()
 
 
 @query("stream_rollup_partials", _oracle_agg(3600))
@@ -878,11 +881,8 @@ def stream_rollup_partials(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket = 3600.0
     # cached: min/max probe + staged half-writes re-scan the same
     # relation (guide §1.2); built from parquet inside the timed query
-    inc = events_as_incoming(spark, sf_dir).cache()
-    # r15 (VERDICT r14 item 4): the cache feeds only in-function
-    # actions; release it before returning (the returned plan reads
-    # back from storage), even on error
-    try:
+    inc = events_as_incoming(spark, sf_dir)
+    with persisted(inc):
         t_min, t_max = inc.agg(F.min("timestamp"), F.max("timestamp")).first()
         t_split = math.floor((t_min + (t_max - t_min) / 2) / bucket) * bucket + bucket / 2
 
@@ -890,15 +890,17 @@ def stream_rollup_partials(spark: SparkSession, sf_dir: str) -> DataFrame:
         src, out, ckpt = f"{base}/src", f"{base}/onehour_partial", f"{base}/ckpt"
 
         def run_once():
-            with _stream_state_partitions(spark, STREAM_STATE_PARTITIONS):
-                q = start_rollup_partials(
-                    spark.readStream.schema(INCOMING_SCHEMA).parquet(src),
+            _drain(
+                spark,
+                lambda s: start_rollup_partials(
+                    s.readStream.schema(INCOMING_SCHEMA).parquet(src),
                     out,
                     ckpt,
                     int(bucket),
                     available_now=True,
-                )
-                assert q.awaitTermination(600), "stream drain did not finish"
+                ),
+                stateful=True,
+            )
 
         inc.filter(F.col("timestamp") < t_split).coalesce(1).write.mode(
             "append"
@@ -924,8 +926,6 @@ def stream_rollup_partials(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             _STATS,
         )
-    finally:
-        inc.unpersist()
 
 
 @query("tsdb_sync_idempotent", _oracle_agg(3600))
@@ -964,11 +964,8 @@ def tsdb_sync_idempotent(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket = 3600.0
     # cached: min/max probe + staged half-writes re-scan the same
     # relation (guide §1.2); built from parquet inside the timed query
-    inc = events_as_incoming(spark, sf_dir).cache()
-    # r15 (VERDICT r14 item 4): the cache feeds only in-function
-    # actions; release it before returning (the returned plan reads
-    # back from storage), even on error
-    try:
+    inc = events_as_incoming(spark, sf_dir)
+    with persisted(inc):
         t_min, t_max = inc.agg(F.min("timestamp"), F.max("timestamp")).first()
         # mid-bucket split: the finality horizon lands ~half a bucket from
         # any bucket end, so engine-vs-oracle boundary semantics can't
@@ -1002,8 +999,6 @@ def tsdb_sync_idempotent(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             _STATS,
         )
-    finally:
-        inc.unpersist()
 
 
 @query("tsdb_compact_roundtrip", _oracle_agg(3600))
@@ -1026,11 +1021,8 @@ def tsdb_compact_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from smalltsdb_spark.tsdb import TablesTSDB
 
-    inc = events_as_incoming(spark, sf_dir).cache()  # two insert scans
-    # r15 (VERDICT r14 item 4): the cache feeds only in-function
-    # actions; release it before returning (the returned plan reads
-    # back from storage), even on error
-    try:
+    inc = events_as_incoming(spark, sf_dir)  # two insert scans
+    with persisted(inc):
         base = _scratch_dir("tsdb_compact_")
         db = TablesTSDB(spark, base, now=lambda: 0.0)
         # one row goes to exactly one batch (hash over ALL columns, so
@@ -1041,8 +1033,6 @@ def tsdb_compact_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             db.insert(inc.filter(bucket == i))
         db.compact()
         return _round_stats(aggregate(db.incoming(), 3600), _STATS)
-    finally:
-        inc.unpersist()
 
 
 @query("tsdb_two_databases", _oracle_agg(3600))
@@ -1058,11 +1048,8 @@ def tsdb_two_databases(spark: SparkSession, sf_dir: str) -> DataFrame:
     from smalltsdb_spark.schemas import SECONDS_PER_DAY
     from smalltsdb_spark.tsdb import TwoDatabasesTSDB
 
-    inc = events_as_incoming(spark, sf_dir).cache()  # probe + insert
-    # r15 (VERDICT r14 item 4): the cache feeds only in-function
-    # actions; release it before returning (the returned plan reads
-    # back from storage), even on error
-    try:
+    inc = events_as_incoming(spark, sf_dir)  # probe + insert
+    with persisted(inc):
         t_max = inc.agg(F.max("timestamp")).first()[0]
         base = _scratch_dir("tsdb_twodb_")
         db = TwoDatabasesTSDB(
@@ -1079,8 +1066,6 @@ def tsdb_two_databases(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             _STATS,
         )
-    finally:
-        inc.unpersist()
 
 
 #: the deterministic self-metric name set one sync() with the default
@@ -1528,11 +1513,8 @@ def stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream_rollup_finality's)."""
     # cached: the min/max probe plus FOUR staged filter-writes all
     # re-scan the same events transform (guide §1.2)
-    ev = read_events(spark, sf_dir).cache()
-    # r15 (VERDICT r14 item 4): the cache feeds only in-function
-    # actions; release it before returning (the returned plan reads
-    # back from storage), even on error
-    try:
+    ev = read_events(spark, sf_dir)
+    with persisted(ev):
         t_min, t_max = ev.agg(F.min("ts_sec"), F.max("ts_sec")).first()
         t_split = (t_min + t_max) / 2
 
@@ -1552,38 +1534,36 @@ def stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             "ts_sec",
         )
 
-        def run_once():
-            with _stream_state_partitions(spark, STREAM_STATE_PARTITIONS):
-                l = (
-                    spark.readStream.schema("user_id long, ts timestamp, v_click double")
-                    .parquet(src_l)
-                    .withWatermark("ts", "40 days")
-                )
-                r = (
-                    spark.readStream.schema("uid_r long, ts_r timestamp")
-                    .parquet(src_r)
-                    .withWatermark("ts_r", "40 days")
-                )
-                j = l.join(
-                    r,
-                    F.expr(
-                        "user_id = uid_r AND ts_r BETWEEN ts - INTERVAL 1 DAY AND ts"
-                    ),
-                ).select(
-                    "user_id",
-                    F.round(F.col("ts").cast("double"), 6).alias("t_click"),
-                    F.round("v_click", 6).alias("v_click"),
-                    F.round(F.col("ts_r").cast("double"), 6).alias("t_view"),
-                )
-                q = (
-                    j.writeStream.format("parquet")
-                    .outputMode("append")
-                    .option("checkpointLocation", ckpt)
-                    .option("path", out)
-                    .trigger(availableNow=True)
-                    .start()
-                )
-                assert q.awaitTermination(600), "stream drain did not finish"
+        def start(s: SparkSession) -> StreamingQuery:
+            l = (
+                s.readStream.schema("user_id long, ts timestamp, v_click double")
+                .parquet(src_l)
+                .withWatermark("ts", "40 days")
+            )
+            r = (
+                s.readStream.schema("uid_r long, ts_r timestamp")
+                .parquet(src_r)
+                .withWatermark("ts_r", "40 days")
+            )
+            j = l.join(
+                r,
+                F.expr(
+                    "user_id = uid_r AND ts_r BETWEEN ts - INTERVAL 1 DAY AND ts"
+                ),
+            ).select(
+                "user_id",
+                F.round(F.col("ts").cast("double"), 6).alias("t_click"),
+                F.round("v_click", 6).alias("v_click"),
+                F.round(F.col("ts_r").cast("double"), 6).alias("t_view"),
+            )
+            return (
+                j.writeStream.format("parquet")
+                .outputMode("append")
+                .option("checkpointLocation", ckpt)
+                .option("path", out)
+                .trigger(availableNow=True)
+                .start()
+            )
 
         for lo, hi in [(t_min - 1, t_split), (t_split, t_max + 1)]:
             clicks.filter(
@@ -1592,11 +1572,9 @@ def stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             views.filter(
                 (F.col("ts_sec") >= lo) & (F.col("ts_sec") < hi)
             ).drop("ts_sec").coalesce(1).write.mode("append").parquet(src_r)
-            run_once()
+            _drain(spark, start, stateful=True)
 
         return spark.read.parquet(out)
-    finally:
-        ev.unpersist()
 
 
 @query(

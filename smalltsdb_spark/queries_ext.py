@@ -1423,7 +1423,7 @@ def stream_gopher_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     (value-level correctness for the streaming projection path, the
     stream_topk_tokens pattern)."""
     from smalltsdb_spark.operators.textstats import gopher_rule_columns
-    from smalltsdb_spark.queries import _scratch_dir
+    from smalltsdb_spark.queries import _drain, _scratch_dir
 
     base = _scratch_dir("stream_gopher_")
     staging, out, ckpt = f"{base}/src", f"{base}/out", f"{base}/ckpt"
@@ -1434,15 +1434,16 @@ def stream_gopher_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     gated = feed.select(
         F.col("doc_id"), *[c.alias(name) for name, c in cols.items()]
     )
-    q = (
-        gated.writeStream.format("parquet")
+    _drain(
+        spark,
+        lambda s: gated.writeStream.format("parquet")
         .outputMode("append")
         .option("checkpointLocation", ckpt)
         .option("path", out)
         .trigger(availableNow=True)
-        .start()
+        .start(),
+        stateful=False,
     )
-    assert q.awaitTermination(600), "stream drain did not finish"
     return spark.read.parquet(out)
 
 
@@ -3883,34 +3884,29 @@ def stream_topk_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-partition partial top-20s."""
     import uuid
 
-    from smalltsdb_spark.queries import (
-        STREAM_STATE_PARTITIONS,
-        _scratch_dir,
-        _stream_state_partitions,
-    )
+    from smalltsdb_spark.queries import _drain, _scratch_dir
 
     staging = _scratch_dir("stream_topk_src_")
     docs = _t(spark, sf_dir, "documents")
     docs.coalesce(1).write.mode("overwrite").parquet(staging)
-    feed = spark.readStream.schema(docs.schema).parquet(staging)
-    counts = (
-        feed.select(F.explode(tokens("text")).alias("token"))
+    sink = f"stream_topk_{uuid.uuid4().hex[:8]}"
+    owner = _drain(
+        spark,
+        lambda s: s.readStream.schema(docs.schema)
+        .parquet(staging)
+        .select(F.explode(tokens("text")).alias("token"))
         .groupBy("token")
         .agg(F.count("*").alias("n"))
+        .writeStream.format("memory")
+        .queryName(sink)
+        .outputMode("update")
+        .trigger(availableNow=True)
+        .start(),
+        stateful=True,
     )
-    sink = f"stream_topk_{uuid.uuid4().hex[:8]}"
-    with _stream_state_partitions(spark, STREAM_STATE_PARTITIONS):
-        q = (
-            counts.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(600), "stream drain did not finish"
     w = Window.orderBy(F.desc("n"), "token")
     return (
-        spark.table(sink)
+        owner.table(sink)
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= 20)
         .select("token", "n", "rank")
@@ -5264,7 +5260,7 @@ def stream_span_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame
     count lookup the dedup join inherently needs) + an O(batch) delta
     append — the corpus text never re-shingles and the corpus index
     never rewrites outside amortized compaction (SCALE.md)."""
-    from smalltsdb_spark.queries import _scratch_dir
+    from smalltsdb_spark.queries import _drain, _scratch_dir
     from smalltsdb_spark.streaming.span_dedup import (
         make_span_dedup_batch_handler,
     )
@@ -5285,16 +5281,17 @@ def stream_span_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame
         spark, f"{base}/index", out, "doc_id", "text",
         k=SPAN_K, min_count=SPAN_MIN_COUNT,
     )
-    q = (
-        spark.readStream.schema(docs.schema)
+    _drain(
+        spark,
+        lambda s: s.readStream.schema(docs.schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(f"{staging}/b*")
         .writeStream.foreachBatch(handle)
         .option("checkpointLocation", ckpt)
         .trigger(availableNow=True)
-        .start()
+        .start(),
+        stateful=False,
     )
-    assert q.awaitTermination(600), "stream drain did not finish"
     return spark.read.parquet(out).drop("batch")
 
 
@@ -5625,12 +5622,7 @@ def stream_histogram_bounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     counters.  This is the always-on deployment's bounds story: raw
     incoming is never scanned."""
     from smalltsdb_spark.operators.aggregate import aggregate
-    from smalltsdb_spark.queries import (
-        STREAM_STATE_PARTITIONS,
-        _scratch_dir,
-        _stream_state_partitions,
-        events_as_incoming,
-    )
+    from smalltsdb_spark.queries import _drain, _scratch_dir, events_as_incoming
     from smalltsdb_spark.schemas import INCOMING_SCHEMA
     from smalltsdb_spark.streaming import start_histogram_rollup
     from smalltsdb_spark.tsdb import TablesTSDB
@@ -5642,15 +5634,17 @@ def stream_histogram_bounds(spark: SparkSession, sf_dir: str) -> DataFrame:
         [("_clock", 3_999_999_999.0, 0.0)], INCOMING_SCHEMA
     )
     inc.unionByName(clock).coalesce(4).write.mode("append").parquet(src)
-    with _stream_state_partitions(spark, STREAM_STATE_PARTITIONS):
-        q = start_histogram_rollup(
-            spark.readStream.schema(INCOMING_SCHEMA).parquet(src),
+    _drain(
+        spark,
+        lambda s: start_histogram_rollup(
+            s.readStream.schema(INCOMING_SCHEMA).parquet(src),
             f"{store}/histogram",
             ckpt,
             60,
             available_now=True,
-        )
-        assert q.awaitTermination(600), "stream drain did not finish"
+        ),
+        stateful=True,
+    )
 
     db = TablesTSDB(
         spark,
@@ -5711,7 +5705,7 @@ def stream_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     amortized compaction.  The oracle is exact because the union over
     batches must reconstruct the full frozen-centroid pair relation
     with no duplicates."""
-    from smalltsdb_spark.queries import _scratch_dir
+    from smalltsdb_spark.queries import _drain, _scratch_dir
     from smalltsdb_spark.streaming.semantic_dedup import (
         make_semantic_dedup_batch_handler,
     )
@@ -5738,16 +5732,17 @@ def stream_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, f"{base}/index", out, C, "vec_id", "embedding",
         threshold=SEMANTIC_THRESHOLD,
     )
-    q = (
-        spark.readStream.schema(emb.schema)
+    _drain(
+        spark,
+        lambda s: s.readStream.schema(emb.schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(f"{staging}/b*")
         .writeStream.foreachBatch(handle)
         .option("checkpointLocation", ckpt)
         .trigger(availableNow=True)
-        .start()
+        .start(),
+        stateful=False,
     )
-    assert q.awaitTermination(600), "stream drain did not finish"
     return spark.read.parquet(out).drop("batch")
 
 
@@ -5791,12 +5786,7 @@ def stream_histogram_handover(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from smalltsdb_spark import storage
     from smalltsdb_spark.operators.aggregate import aggregate
-    from smalltsdb_spark.queries import (
-        STREAM_STATE_PARTITIONS,
-        _scratch_dir,
-        _stream_state_partitions,
-        events_as_incoming,
-    )
+    from smalltsdb_spark.queries import _drain, _scratch_dir, events_as_incoming
     from smalltsdb_spark.schemas import INCOMING_SCHEMA
     from smalltsdb_spark.streaming import start_histogram_rollup
     from smalltsdb_spark.tsdb import TablesTSDB
@@ -5820,19 +5810,21 @@ def stream_histogram_handover(spark: SparkSession, sf_dir: str) -> DataFrame:
         .write.mode("append")
         .parquet(src)
     )
-    with _stream_state_partitions(spark, STREAM_STATE_PARTITIONS):
-        q = start_histogram_rollup(
-            spark.readStream.schema(INCOMING_SCHEMA).parquet(src),
+    # the drain must have completed before the handover, or the stream
+    # would still be live while decommission removes its log and batch
+    # sync mutates the table: _drain raises on a timeout and stops the
+    # query on every exit
+    _drain(
+        spark,
+        lambda s: start_histogram_rollup(
+            s.readStream.schema(INCOMING_SCHEMA).parquet(src),
             f"{store}/histogram",
             ckpt,
             60,
             available_now=True,
-        )
-        # the drain MUST have completed before the handover: a timed-out
-        # awaitTermination leaves the stream live while decommission
-        # removes its log and batch sync mutates the table — exactly the
-        # race decommission forbids (ADVICE r13)
-        assert q.awaitTermination(600), "histogram drain did not finish"
+        ),
+        stateful=True,
+    )
     # retire the stream; hand the table to batch ownership
     storage.decommission_streaming_sink(f"{store}/histogram")
     db = TablesTSDB(

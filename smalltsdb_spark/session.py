@@ -1,10 +1,21 @@
-"""SparkSession factory with the engine's recommended configuration."""
+"""SparkSession factory with the engine's recommended configuration, and
+the one scope library code uses to borrow the block manager.
+
+:func:`get_spark` is the only function that sets a caller's conf.  Library
+code runs on a caller's session and hands it back unchanged: a relation
+it caches for its own passes is released by :func:`persisted`, and a
+stateful stream that needs its own shuffle width runs on a child session
+(``queries._drain``).
+"""
 
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 
-from pyspark.sql import SparkSession
+from pyspark import StorageLevel
+from pyspark.sql import DataFrame, SparkSession
 
 
 def _default_driver_mem() -> str:
@@ -114,6 +125,10 @@ def get_spark(
         )
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # read a TIMESTAMP(NANOS) parquet column (an older generator
+        # vintage of the events fixture) as nanosecond longs instead of
+        # refusing it (queries.read_events)
+        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # MERGE-equivalent upsert path: overwrite only the partitions
         # present in the written DataFrame (see tsdb.TablesTSDB.sync).
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
@@ -124,3 +139,25 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+@contextmanager
+def persisted(*dfs: DataFrame) -> Iterator[DataFrame | tuple[DataFrame, ...]]:
+    """Persist ``dfs`` for the ``with`` block and unpersist them on exit,
+    error or not, so a relation cached for the block's own passes never
+    outlives it.  Yields the one DataFrame, or the tuple of them.
+
+    They persist in argument order: a later relation built on an earlier
+    one then caches a plan that reads the earlier cache.  A relation whose
+    plan the session already caches is left to whoever cached it, neither
+    persisted nor released here.  A cache that a returned plan must read
+    cannot use this scope."""
+    owned = []
+    try:
+        for df in dfs:
+            if df.storageLevel == StorageLevel.NONE:
+                owned.append(df.persist())
+        yield dfs[0] if len(dfs) == 1 else dfs
+    finally:
+        for df in owned:
+            df.unpersist()

@@ -68,6 +68,7 @@ from pyspark.sql import types as T
 from smalltsdb_spark import manifests
 from smalltsdb_spark.manifests import is_hidden_name
 from smalltsdb_spark.schemas import PARTITION_COLUMN, SECONDS_PER_DAY
+from smalltsdb_spark.session import persisted
 
 #: the parquet codec of every file written on the driver
 DRIVER_CODEC = "zstd"
@@ -1105,8 +1106,8 @@ def upsert(
     stored one and a replayed micro-batch rewrites identical values
     instead of duplicating rows.
 
-    ``rows`` is cached for the affected-partition collect and the write,
-    and released in ``finally``: a failed commit leaves no pinned cache.
+    ``rows`` is persisted for the affected-partition collect and the
+    write, and released on exit: a failed commit leaves no pinned cache.
     When the table is the tagged empty relation (:func:`read_table`; the
     first trigger) the anti-join is skipped outright — otherwise
     ``rows`` would be shuffled by (path, timestamp) purely to anti-join a
@@ -1117,8 +1118,7 @@ def upsert(
     (:func:`_gc_unmanifested`): the per-trigger streaming upsert passes a
     grace window.  At most one writer per table; concurrent readers see
     the previous or the new whole-table snapshot."""
-    rows = rows.cache()
-    try:
+    with persisted(rows):
         affected = [
             r.d
             for r in rows.select(
@@ -1147,8 +1147,6 @@ def upsert(
         overwrite_partitions(
             out, path, grain_seconds, manifest=True, gc_min_age=gc_min_age
         )
-    finally:
-        rows.unpersist()
 
 
 def _arrow_schema(schema: T.StructType):

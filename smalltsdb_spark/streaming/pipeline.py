@@ -35,6 +35,8 @@ metric dominates.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
@@ -87,6 +89,46 @@ def read_spool_stream(
     return parse_lines_df(lines)
 
 
+def _start(
+    stream: DataFrame,
+    checkpoint: str,
+    interval: str | None,
+    available_now: bool,
+    *,
+    path: str | None = None,
+    grain_seconds: int = SECONDS_PER_DAY,
+    upsert: Callable[[DataFrame, int], None] | None = None,
+) -> StreamingQuery:
+    """Start ``stream`` under ``checkpoint``: appended to the parquet
+    table at ``path``, partitioned by ``pday`` like the batch writer
+    (storage.append), or, given ``upsert``, handed each micro-batch in
+    update mode.  ``available_now`` drains what is there and stops;
+    otherwise a trigger fires every ``interval`` (None: back to back)."""
+    if upsert is None:
+        writer = (
+            stream.withColumn(
+                PARTITION_COLUMN,
+                F.floor(F.col("timestamp") / F.lit(grain_seconds)).cast("long"),
+            )
+            .writeStream.format("parquet")
+            .outputMode("append")
+            .option("checkpointLocation", checkpoint)
+            .option("path", path)
+            .partitionBy(PARTITION_COLUMN)
+        )
+    else:
+        writer = (
+            stream.writeStream.outputMode("update")
+            .foreachBatch(upsert)
+            .option("checkpointLocation", checkpoint)
+        )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    elif interval:
+        writer = writer.trigger(processingTime=interval)
+    return writer.start()
+
+
 def start_ingest(
     incoming_stream: DataFrame,
     incoming_path: str,
@@ -106,21 +148,8 @@ def start_ingest(
     refused by the storage layer while the log exists
     (storage._assert_mutable); a retired stream's table is converted
     back with ``storage.decommission_streaming_sink``."""
-    writer = (
-        incoming_stream.withColumn(
-            PARTITION_COLUMN,
-            F.floor(F.col("timestamp") / F.lit(grain_seconds)).cast("long"),
-        )
-        .writeStream.format("parquet")
-        .option("checkpointLocation", checkpoint)
-        .option("path", incoming_path)
-        .partitionBy(PARTITION_COLUMN)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif interval:
-        writer = writer.trigger(processingTime=interval)
-    return writer.start()
+    return _start(incoming_stream, checkpoint, interval, available_now,
+                  path=incoming_path, grain_seconds=grain_seconds)
 
 
 def streaming_aggregate(
@@ -203,24 +232,13 @@ def start_rollup_partials(
     upsert write per trigger (changed buckets only), not a table
     rewrite."""
     agg = streaming_aggregate(incoming_stream, seconds, tail=tail, exact=exact)
-    writer = (
-        agg.writeStream.outputMode("update")
-        .foreachBatch(
-            lambda batch, _id: storage.upsert(
-                batch,
-                partial_path,
-                AGG_SCHEMA,
-                grain_seconds,
-                gc_min_age=STREAM_GC_MIN_AGE,
-            )
-        )
-        .option("checkpointLocation", checkpoint)
+    return _start(
+        agg, checkpoint, interval, available_now,
+        upsert=lambda batch, _id: storage.upsert(
+            batch, partial_path, AGG_SCHEMA, grain_seconds,
+            gc_min_age=STREAM_GC_MIN_AGE,
+        ),
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif interval:
-        writer = writer.trigger(processingTime=interval)
-    return writer.start()
 
 
 def streaming_value_histogram(
@@ -323,22 +341,8 @@ def start_histogram_rollup(
         bin_width=bin_width,
         clamp_bin=clamp_bin,
     )
-    writer = (
-        hist.withColumn(
-            PARTITION_COLUMN,
-            F.floor(F.col("timestamp") / F.lit(grain_seconds)).cast("long"),
-        )
-        .writeStream.format("parquet")
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .option("path", hist_path)
-        .partitionBy(PARTITION_COLUMN)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif interval:
-        writer = writer.trigger(processingTime=interval)
-    return writer.start()
+    return _start(hist, checkpoint, interval, available_now,
+                  path=hist_path, grain_seconds=grain_seconds)
 
 
 def start_rollup(
@@ -359,19 +363,5 @@ def start_rollup(
     they are independent queries and scale independently.  Pass the
     store's ``grain_seconds`` when it uses partition_grain='hour'."""
     agg = streaming_aggregate(incoming_stream, seconds, tail=tail, exact=exact)
-    writer = (
-        agg.withColumn(
-            PARTITION_COLUMN,
-            F.floor(F.col("timestamp") / F.lit(grain_seconds)).cast("long"),
-        )
-        .writeStream.format("parquet")
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .option("path", period_path)
-        .partitionBy(PARTITION_COLUMN)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif interval:
-        writer = writer.trigger(processingTime=interval)
-    return writer.start()
+    return _start(agg, checkpoint, interval, available_now,
+                  path=period_path, grain_seconds=grain_seconds)

@@ -56,6 +56,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from smalltsdb_spark import manifests
+from smalltsdb_spark.session import persisted
 
 #: grace window for retired/superseded index files — in-flight readers
 #: that resolved the previous manifest must finish their scan (the
@@ -140,9 +141,8 @@ def make_semantic_dedup_batch_handler(
         )
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df = batch_df.persist()
-        assigned = ivf_assign(batch_df, id_col, vec_col, C).persist()
-        try:
+        assigned = ivf_assign(batch_df, id_col, vec_col, C)
+        with persisted(batch_df, assigned):
             pre_version, pre_files = manifests.resolve_version(
                 index_base, before=batch_id
             )
@@ -242,8 +242,5 @@ def make_semantic_dedup_batch_handler(
             manifests.gc_superseded_versions(
                 index_base, batch_id, pre_version, live, gc_grace_seconds
             )
-        finally:
-            assigned.unpersist()
-            batch_df.unpersist()
 
     return handle

@@ -73,6 +73,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from smalltsdb_spark import manifests
+from smalltsdb_spark.session import persisted
 
 _MANIFEST_RE = manifests.VERSION_RE
 
@@ -163,13 +164,10 @@ def make_span_dedup_batch_handler(
         )
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df = batch_df.persist()
-        delta = (
-            shingle_count_index(batch_df, id_col, text_col, k=k)
-            .withColumn("pfx", F.pmod(F.col("h"), F.lit(n_prefixes)))
-            .persist()
-        )
-        try:
+        delta = shingle_count_index(
+            batch_df, id_col, text_col, k=k
+        ).withColumn("pfx", F.pmod(F.col("h"), F.lit(n_prefixes)))
+        with persisted(batch_df, delta):
             pre_version, pre_files = manifests.resolve_version(
                 index_base, before=batch_id
             )
@@ -272,8 +270,5 @@ def make_span_dedup_batch_handler(
             manifests.gc_superseded_versions(
                 index_base, batch_id, pre_version, live, gc_grace_seconds
             )
-        finally:
-            delta.unpersist()
-            batch_df.unpersist()
 
     return handle

@@ -81,6 +81,8 @@ _STAGING = ".sync-staging-"
 #: live files a table's open partition may hold before sync compacts it
 #: too (one is appended per sync that touches it)
 _OPEN_FILES = 8
+#: the thread-local properties ``SparkContext.setJobGroup`` sets
+_JOB_GROUP = ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
 
 
 def _check_page(offset: int, limit: int | None) -> None:
@@ -398,6 +400,8 @@ class BaseTSDB:
         Cancellation is cooperative and job-scoped — other queries on
         the same SparkSession are untouched, which is exactly what the
         reference's connection-level ``interrupt()`` could not offer.
+        The thread's own job group (id, description, interrupt flag) is
+        restored on exit.
         """
         import contextlib
         import threading
@@ -416,6 +420,7 @@ class BaseTSDB:
                 fired.set()
                 sc.cancelJobGroup(group)
 
+            saved = {k: sc.getLocalProperty(k) for k in _JOB_GROUP}
             sc.setJobGroup(group, f"smalltsdb query (timeout={timeout}s)", True)
             watchdog = threading.Timer(timeout, cancel)
             watchdog.daemon = True
@@ -431,8 +436,8 @@ class BaseTSDB:
                 raise
             finally:
                 watchdog.cancel()
-                sc.setLocalProperty("spark.jobGroup.id", None)
-                sc.setLocalProperty("spark.job.interruptOnCancel", None)
+                for k, v in saved.items():
+                    sc.setLocalProperty(k, v)
 
         return guard()
 

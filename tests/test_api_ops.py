@@ -312,6 +312,28 @@ def test_query_timeout_cancels_slow_query(spark, tsdb_dir):
     assert db.get_metric("two", "tensecond", "n", (0, 100))
 
 
+def test_query_timeout_restores_the_callers_job_group(spark, tsdb_dir):
+    """A timed read runs under its own job group and then gives the
+    thread back the caller's group: id, description and interrupt flag."""
+    db = TablesTSDB(spark, tsdb_dir, now=lambda: 100.0)
+    db.insert(GOLDEN_B_INPUT)
+    db.sync()
+    sc = spark.sparkContext
+    keys = ("spark.jobGroup.id", "spark.job.description",
+            "spark.job.interruptOnCancel")
+    sc.setJobGroup("caller-group", "the caller's own jobs", False)
+    try:
+        outer = {k: sc.getLocalProperty(k) for k in keys}
+        # include_partial runs the read on Spark, under the timeout group
+        assert db.get_metric(
+            "two", "tensecond", "n", (0, 100), include_partial=True, timeout=30
+        )
+        assert {k: sc.getLocalProperty(k) for k in keys} == outer
+    finally:
+        for k in keys:
+            sc.setLocalProperty(k, None)
+
+
 def test_sync_accepts_timeout(spark, tsdb_dir):
     """sync(timeout=...) with headroom completes normally (the watchdog
     disarms) — and the timeout knob exists on the API (reference TODO

@@ -147,6 +147,31 @@ def test_fit_refuses_empty_input(spark):
         classifier.fit(feats, labels, "doc_id", 16, iters=1)
 
 
+def test_fit_failure_leaves_no_cache(spark, monkeypatch):
+    """A failure in the count that materializes ``fit``'s training cache
+    releases it and the sigmoid table's: no cached relation is left."""
+    from pyspark.sql import functions as F
+
+    spark.catalog.clearCache()
+    docs = _docs(spark, ["good words here", "more good words"])
+    feats = classifier.featurize(docs, "doc_id", "text", 16)
+    labels = docs.select("doc_id", F.lit(1).alias("label"))
+    frame = type(docs)  # the session's concrete DataFrame class
+    real = frame.count
+
+    def failing(self):
+        n = real(self)
+        if self.columns == ["doc_id", "feature", "x", "label"]:
+            raise RuntimeError("injected failure in the fx count")
+        return n
+
+    monkeypatch.setattr(frame, "count", failing)
+    with pytest.raises(RuntimeError, match="injected"):
+        classifier.fit(feats, labels, "doc_id", 16, iters=1)
+    assert spark.sparkContext._jsc.getPersistentRDDs().isEmpty()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_with_weight_literal_and_join_paths_identical(spark):
     """The gated weight attachment (r15): both paths must attach the
     bit-identical double per feature, and the gate must route to the

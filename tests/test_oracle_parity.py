@@ -53,6 +53,59 @@ def normalize(rows, columns):
 
 QUERY_NAMES = sorted(entry_mod.queries())
 
+#: rows whose returned plan reads a relation they cached, so the cache
+#: must outlive the call: the classifier rows' featurize cache, the
+#: ``embed_text`` result, and the events cache of the four rows that
+#: scan it again in the returned plan
+RETURNED_PLAN_CACHES = {
+    "ext_curate_learned",
+    "text_quality_classifier",
+    "text_quality_classifier_sampled",
+    "text_embed_rp",
+    "text_semdedup_e2e",
+    "tsdb_rollup_cascade_quantiles",
+    "tsdb_get_metric_bounds",
+    "stream_histogram_bounds",
+    "stream_histogram_handover",
+}
+
+
+def _session_state(spark):
+    """What a query must hand back unchanged: the SQL conf, the temp
+    views and the persisted RDDs."""
+    rdds = spark.sparkContext._jsc.getPersistentRDDs().entrySet().toArray()
+    return (
+        dict(spark.conf.getAll),
+        {t.name for t in spark.catalog.listTables() if t.isTemporary},
+        {e.getKey() for e in rdds},
+    )
+
+
+def _record_child_sessions(spark, monkeypatch):
+    """The sessions ``spark.newSession()`` makes from here on."""
+    children = []
+    real = type(spark).newSession
+
+    def record(self):
+        children.append(real(self))
+        return children[-1]
+
+    monkeypatch.setattr(type(spark), "newSession", record)
+    return children
+
+
+def _assert_session_unchanged(spark, before, children, keep_caches=False):
+    conf, views, rdds = _session_state(spark)
+    assert conf == before[0], {
+        k: (before[0].get(k), conf.get(k))
+        for k in set(conf) | set(before[0])
+        if conf.get(k) != before[0].get(k)
+    }
+    assert views == before[1]
+    assert keep_caches or rdds <= before[2], rdds - before[2]
+    assert not spark.streams.active
+    assert not [q for c in children for q in c.streams.active]
+
 
 def test_entry_smoke(spark):
     df = entry_mod.entry(spark)
@@ -61,11 +114,20 @@ def test_entry_smoke(spark):
 
 
 @pytest.mark.parametrize("name", QUERY_NAMES)
-def test_query_matches_oracle(name, spark, ddb):
+def test_query_matches_oracle(name, spark, ddb, monkeypatch):
+    """The row equals its oracle, and the query hands the caller's
+    session back unchanged: same conf, no stream left running (on the
+    session or on a child session the query made), no temp view added,
+    no cache left behind unless its returned plan reads it."""
     qfn = entry_mod.queries()[name]
+    children = _record_child_sessions(spark, monkeypatch)
+    before = _session_state(spark)
     sdf = qfn(spark, SF_DIR)
     spark_cols = sdf.columns
     spark_rows = [tuple(r) for r in sdf.collect()]
+    _assert_session_unchanged(
+        spark, before, children, keep_caches=name in RETURNED_PLAN_CACHES
+    )
 
     oracle = entry_mod.oracle_sql().get(name)
     if oracle is None:
@@ -170,3 +232,66 @@ def test_oracle_bit_exact(name, spark):
     left = sorted(bits(r) for r in srows)
     right = sorted(bits(r) for r in orows)
     assert left == right, f"{name}: float-bit mismatch"
+
+
+def test_drain_timeout_raises_stops_the_query_and_keeps_the_session(
+    spark, monkeypatch
+):
+    """A drain whose query does not end in time raises TimeoutError (not
+    an assert, which ``python -O`` drops), stops the query, and the
+    split-and-replay row still gives the session back unchanged."""
+    from pyspark.sql.streaming.query import StreamingQuery
+
+    children = _record_child_sessions(spark, monkeypatch)
+    drained = []
+
+    def never_ends(self, timeout=None):
+        drained.append(self)
+        return False
+
+    monkeypatch.setattr(StreamingQuery, "awaitTermination", never_ends)
+    before = _session_state(spark)
+    with pytest.raises(TimeoutError):
+        QUERIES["stream_rollup_finality"](spark, SF_DIR)
+    assert len(drained) == 1 and not drained[0].isActive
+    assert len(children) == 1
+    _assert_session_unchanged(spark, before, children)
+
+
+def test_failure_inside_persisted_stops_the_query_and_keeps_the_session(
+    spark, monkeypatch
+):
+    """A failure raised right after the partials sink's ``persisted``
+    block is entered (its cache materialized) fails the micro-batch: the
+    row raises, its query is stopped, and both caches — the sink's and
+    the row's own — are released."""
+    from contextlib import contextmanager
+
+    from pyspark.sql.streaming.query import StreamingQuery
+
+    from smalltsdb_spark import storage
+    from smalltsdb_spark.session import persisted
+
+    @contextmanager
+    def failing(*dfs):
+        with persisted(*dfs):
+            for df in dfs:
+                df.count()
+            raise RuntimeError("injected failure after persist")
+        yield
+
+    monkeypatch.setattr(storage, "persisted", failing)
+    children = _record_child_sessions(spark, monkeypatch)
+    drained = []
+    real = StreamingQuery.awaitTermination
+
+    def record(self, timeout=None):
+        drained.append(self)
+        return real(self, timeout)
+
+    monkeypatch.setattr(StreamingQuery, "awaitTermination", record)
+    before = _session_state(spark)
+    with pytest.raises(Exception, match="injected failure after persist"):
+        QUERIES["stream_rollup_partials"](spark, SF_DIR)
+    assert len(drained) == 1 and not drained[0].isActive
+    _assert_session_unchanged(spark, before, children)

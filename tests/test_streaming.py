@@ -42,6 +42,130 @@ def _run_rollup(spark, spool, tmp_path, **kwargs):
     q.awaitTermination(120)
 
 
+#: what each starter hands Spark, pinned from before the starters shared
+#: one helper: sink, trigger, output mode, and the parsed plan's sink
+#: node and top projection (paths, query id and expression ids
+#: normalized) plus a digest of the whole normalized parsed plan
+STARTER_PLANS = {
+    "start_ingest": (
+        "FileSink[file:<base>/q0/out]",
+        "AvailableNowTrigger",
+        "Append",
+        [
+            "~WriteToMicroBatchDataSourceV1 FileSink[file:<base>/q0/out], <id>, [checkpointLocation=<base>/q0/ck, path=<base>/q0/out], Append",
+            "+- ~Project [path#, timestamp#, value#, cast(FLOOR((timestamp# / cast(86400 as double))) as bigint) AS pday#]",
+        ],
+        "255414c336f9a71a",
+    ),
+    "start_rollup": (
+        "FileSink[file:<base>/q1/out]",
+        "AvailableNowTrigger",
+        "Append",
+        [
+            "~WriteToMicroBatchDataSourceV1 FileSink[file:<base>/q1/out], <id>, [checkpointLocation=<base>/q1/ck, path=<base>/q1/out], Append",
+            "+- ~Project [path#, timestamp#, n#, min#, max#, avg#, sum#, p50#, p90#, p99#, cast(FLOOR((timestamp# / cast(86400 as double))) as bigint) AS pday#]",
+        ],
+        "c95383e06692f4ad",
+    ),
+    "start_histogram_rollup": (
+        "FileSink[file:<base>/q2/out]",
+        "AvailableNowTrigger",
+        "Append",
+        [
+            "~WriteToMicroBatchDataSourceV1 FileSink[file:<base>/q2/out], <id>, [checkpointLocation=<base>/q2/ck, path=<base>/q2/out], Append",
+            "+- ~Project [path#, timestamp#, bin#, n#, cast(FLOOR((timestamp# / cast(86400 as double))) as bigint) AS pday#]",
+        ],
+        "0f5e8c45847f0ea9",
+    ),
+    "start_rollup_partials": (
+        "ForeachBatchSink",
+        "AvailableNowTrigger",
+        "Update",
+        [
+            "~WriteToMicroBatchDataSourceV1 ForeachBatchSink, <id>, [checkpointLocation=<base>/q3/ck], Update",
+            "+- ~Project [path#, cast(unix_timestamp(_w#-T60000ms.start, yyyy-MM-dd HH:mm:ss, Some(UTC), true) as double) AS timestamp#, n#, min#, max#, avg#, sum#, cast(_pcts#[0] as double) AS p50#, cast(_pcts#[1] as double) AS p90#, cast(_pcts#[2] as double) AS p99#]",
+        ],
+        "af32b775801cd6fb",
+    ),
+    "start_rollup interval": (
+        "FileSink[file:<base>/q4/out]",
+        "ProcessingTimeTrigger(10000)",
+        "Append",
+        [
+            "~WriteToMicroBatchDataSourceV1 FileSink[file:<base>/q4/out], <id>, [checkpointLocation=<base>/q4/ck, path=<base>/q4/out], Append",
+            "+- ~Project [path#, timestamp#, n#, min#, max#, avg#, sum#, p50#, p90#, p99#, cast(FLOOR((timestamp# / cast(86400 as double))) as bigint) AS pday#]",
+        ],
+        "3a46106b2c1bca47",
+    ),
+}
+
+
+def _starter_plan(q, base):
+    """(sink, trigger, output mode, parsed-plan head, digest) of ``q``."""
+    import hashlib
+    import re
+
+    q.processAllAvailable()
+    se = q._jsq.streamingQuery()
+    parsed = q._jsq.explainInternal(True).split("== Analyzed Logical Plan ==")[0]
+    parsed = re.sub(r"#\d+L?", "#", parsed.replace(base, "<base>"))
+    parsed = re.sub(r"[0-9a-f]{8}(-[0-9a-f]{4}){3}-[0-9a-f]{12}", "<id>", parsed)
+    # the sink node ends in the batch id the plan was last run for
+    parsed = re.sub(r"(Append|Update), \d+$", r"\1", parsed, flags=re.M)
+    lines = parsed.splitlines()[1:]
+    return (
+        q.lastProgress["sink"]["description"].replace(base, "<base>"),
+        se.trigger().toString(),
+        se.outputMode().toString(),
+        lines[:2],
+        hashlib.sha256(parsed.encode()).hexdigest()[:16],
+    )
+
+
+def starter_plans(spark, base):
+    """Start each streaming starter over a two-row parquet source under
+    ``base`` and return its :func:`_starter_plan`."""
+    from smalltsdb_spark.schemas import INCOMING_SCHEMA
+    from smalltsdb_spark.streaming import (
+        start_histogram_rollup,
+        start_rollup_partials,
+    )
+
+    spark.createDataFrame(
+        [("a", 100.0, 1.0), ("b", 7300.0, 2.0)], INCOMING_SCHEMA
+    ).write.parquet(f"{base}/src")
+    starters = {
+        "start_ingest": lambda src, d: start_ingest(
+            src, f"{d}/out", f"{d}/ck", available_now=True),
+        "start_rollup": lambda src, d: start_rollup(
+            src, f"{d}/out", f"{d}/ck", 60, available_now=True),
+        "start_histogram_rollup": lambda src, d: start_histogram_rollup(
+            src, f"{d}/out", f"{d}/ck", 60, available_now=True),
+        "start_rollup_partials": lambda src, d: start_rollup_partials(
+            src, f"{d}/out", f"{d}/ck", 60, available_now=True),
+        "start_rollup interval": lambda src, d: start_rollup(
+            src, f"{d}/out", f"{d}/ck", 60),
+    }
+    plans = {}
+    for i, (name, start) in enumerate(starters.items()):
+        src = spark.readStream.schema(INCOMING_SCHEMA).parquet(f"{base}/src")
+        q = start(src, f"{base}/q{i}")
+        try:
+            plans[name] = _starter_plan(q, base)
+        finally:
+            q.stop()
+    return plans
+
+
+def test_starter_plans_unchanged(spark, tmp_path):
+    """The four starters share one private helper for the trigger choice
+    and the file sink chain; what each one starts is unchanged."""
+    plans = starter_plans(spark, str(tmp_path))
+    assert {k: list(v) for k, v in plans.items()} == {
+        k: list(v) for k, v in STARTER_PLANS.items()
+    }
+
+
 def _table(spark, tmp_path, name="tensecond"):
     from smalltsdb_spark.storage import _has_data
 
@@ -490,6 +614,39 @@ def test_span_dedup_index_appends_only_the_batch_delta(spark, tmp_path):
     # the read path union-sums base + delta: one row per hash
     rows = read_index(spark, index_base).collect()
     assert len({r.h for r in rows}) == len(rows)
+
+
+def test_span_dedup_handler_failure_leaves_no_cache(
+    spark, tmp_path, monkeypatch
+):
+    """A failure raised after the span dedup handler persists its batch
+    (here: persisting the batch's shingle delta) releases the batch's
+    cache: a failed trigger pins nothing."""
+    from smalltsdb_spark.streaming.span_dedup import (
+        make_span_dedup_batch_handler,
+    )
+
+    spark.catalog.clearCache()
+    batch = spark.createDataFrame(
+        [(1, "a b c d e"), (2, "a b c d f")], "doc_id long, text string"
+    )
+    frame = type(batch)  # the session's concrete DataFrame class
+    real = frame.persist
+
+    def failing(self, *args, **kwargs):
+        if self.columns == ["h", "c", "pfx"]:
+            raise RuntimeError("injected failure persisting the delta")
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(frame, "persist", failing)
+    handle = make_span_dedup_batch_handler(
+        spark, str(tmp_path / "idx"), str(tmp_path / "out"), "doc_id", "text",
+        k=4, min_count=2,
+    )
+    with pytest.raises(RuntimeError, match="injected"):
+        handle(batch, 0)
+    assert spark.sparkContext._jsc.getPersistentRDDs().isEmpty()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_span_dedup_index_compaction_bounds_files_per_partition(
