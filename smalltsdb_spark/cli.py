@@ -138,31 +138,39 @@ def cmd_stream(args) -> None:
     # streaming writer would interleave mismatched pday values
     grain = read_grain(args.db)
     mft = getattr(args, "max_files_per_trigger", None)
-    queries = [
-        start_ingest(
-            read_spool_stream(spark, args.spool, max_files_per_trigger=mft),
-            os.path.join(args.db, "incoming"),
-            os.path.join(ckpt, "ingest"),
-            interval=f"{int(args.interval)} seconds",
-            grain_seconds=grain,
-        )
-    ]
-    for name, seconds in PERIODS:
+    # each rollup runs on its own child session (session.state_session),
+    # whose queries spark.streams does not see: wait on the handles, and
+    # stop every one of them however the wait ends
+    queries = []
+    try:
         queries.append(
-            start_rollup(
+            start_ingest(
                 read_spool_stream(spark, args.spool, max_files_per_trigger=mft),
-                os.path.join(args.db, name),
-                os.path.join(ckpt, f"rollup_{name}"),
-                seconds,
-                tail=args.tail,
+                os.path.join(args.db, "incoming"),
+                os.path.join(ckpt, "ingest"),
                 interval=f"{int(args.interval)} seconds",
                 grain_seconds=grain,
             )
         )
-    print(f"{len(queries)} streaming queries running; ctrl-c to stop")
-    try:
-        spark.streams.awaitAnyTermination()
+        for name, seconds in PERIODS:
+            queries.append(
+                start_rollup(
+                    read_spool_stream(spark, args.spool, max_files_per_trigger=mft),
+                    os.path.join(args.db, name),
+                    os.path.join(ckpt, f"rollup_{name}"),
+                    seconds,
+                    tail=args.tail,
+                    interval=f"{int(args.interval)} seconds",
+                    grain_seconds=grain,
+                )
+            )
+        print(f"{len(queries)} streaming queries running; ctrl-c to stop")
+        # awaitTermination raises the query's error if it failed
+        while not any(q.awaitTermination(0.5) for q in queries):
+            pass
     except KeyboardInterrupt:
+        pass
+    finally:
         for q in queries:
             q.stop()
 

@@ -224,10 +224,14 @@ def featurize(
     toks = F.filter(tokens(text_col), lambda w: F.length(w) > 0)
     base = spread(df).select(F.col(id_col).alias("_id"), toks.alias("_t"))
     grams = F.concat(F.col("_t"), word_ngrams(F.col("_t"), 2))
-    ex = base.select("_id", grams.alias("_gs")).select(
-        "_id",
-        F.size("_gs").alias("_n"),
-        F.explode("_gs").alias("_g"),
+    # explode_outer + a filter on its output, not explode: the optimizer
+    # infers ``size(_gs) > 0`` from an inner explode (and pushes any
+    # filter on ``_gs``) below the spread repartition, where it would
+    # evaluate the whole gram tree a second time on the raw text
+    ex = (
+        base.select("_id", grams.alias("_gs"))
+        .select("_id", F.size("_gs").alias("_n"), F.explode_outer("_gs").alias("_g"))
+        .where(F.col("_g").isNotNull())
     )
     return (
         ex.groupBy(

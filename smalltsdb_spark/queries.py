@@ -26,7 +26,7 @@ from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import LongType
 
 from smalltsdb_spark.operators.aggregate import aggregate, bucket
-from smalltsdb_spark.session import persisted
+from smalltsdb_spark.session import persisted, state_session
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 #: values are SQL strings, or zero-arg callables returning SQL for oracles
@@ -479,16 +479,6 @@ def tsdb_agg_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: state partitions for the driver's stateful streams, set on the child
-#: session :func:`_drain` runs them on.  A stateful stream commits one
-#: state-store delta file per state partition per micro-batch, and the
-#: count is frozen into the checkpoint at first start, so it must track
-#: the state key's cardinality — (path, window), ~10k entries at sf0.1 —
-#: not the batch shuffle width (32 near-empty state commits per batch,
-#: ~4× these queries' compute).  A/B at sf0.1 (4 vs 16 vs 32) is inside
-#: run-to-run noise; a 100 TB deployment with millions of paths raises it.
-STREAM_STATE_PARTITIONS = 4
-
 #: seconds an availableNow drain may run before :func:`_drain` gives up
 _DRAIN_TIMEOUT_S = 600
 
@@ -502,23 +492,23 @@ def _drain(
     """Run the availableNow query ``start(session)`` to its end and
     return the session it ran on.
 
-    A stateful query runs on a child of ``spark`` (``newSession``: same
-    SparkContext, cache and builder conf; its own SQL conf and temp
-    views) whose ``spark.sql.shuffle.partitions`` is
-    :data:`STREAM_STATE_PARTITIONS`, so the caller's conf is never
-    written; a restart from the checkpoint reads the count from its
-    offset log.  A memory sink's table is a temp view of the session
-    that owns it: read it through the returned session.  A stateless
-    query runs on ``spark`` itself, so its foreachBatch plans keep the
-    caller's shuffle width.
+    A stateful query runs on a child of ``spark`` with the state width
+    (:func:`session.state_session`; a starter it calls then stays on that
+    child), so the caller's conf and temp views are never written; a
+    restart from the checkpoint reads the width from its offset log.  A
+    memory sink's table is a temp view of the session that owns it: read
+    it through the returned session.  A stateless query runs on ``spark``
+    itself, so its foreachBatch plans keep the caller's shuffle width.
 
     Raises ``TimeoutError`` when the query has not ended within
     :data:`_DRAIN_TIMEOUT_S`.  The query is stopped on every exit: a
     child session's queries are not in the caller's ``spark.streams``."""
     session = spark
     if stateful:
-        session = spark.newSession()
-        session.conf.set("spark.sql.shuffle.partitions", STREAM_STATE_PARTITIONS)
+        session = state_session(spark)
+        if session is spark:
+            # a caller already at the state width still keeps its views
+            session = state_session(spark.newSession())
     q = start(session)
     try:
         if not q.awaitTermination(_DRAIN_TIMEOUT_S):

@@ -4,8 +4,8 @@ the one scope library code uses to borrow the block manager.
 :func:`get_spark` is the only function that sets a caller's conf.  Library
 code runs on a caller's session and hands it back unchanged: a relation
 it caches for its own passes is released by :func:`persisted`, and a
-stateful stream that needs its own shuffle width runs on a child session
-(``queries._drain``).
+stateful stream runs on :func:`state_session`, a child session with the
+state width :data:`STATE_PARTITIONS`.
 """
 
 from __future__ import annotations
@@ -16,6 +16,19 @@ from contextlib import contextmanager
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
+
+
+#: shuffle width of every stateful stream the engine starts, so the
+#: number of state-store partitions each micro-batch commits and of files
+#: a file sink writes per touched ``pday``.  It follows the state, not
+#: the cores: a ``stream`` rollup holds ~200 state rows, and at 4
+#: partitions each micro-batch committed 4 state versions and wrote up
+#: to 4 small files per ``pday`` (174 B per stored point against 108 at
+#: 1; SCALE.md "State partitions").  The count is frozen into a
+#: checkpoint's offset log at first start, so a restarted checkpoint
+#: keeps the width it was created with.  A deployment whose state has
+#: millions of keys raises this one constant.
+STATE_PARTITIONS = 1
 
 
 def _default_driver_mem() -> str:
@@ -139,6 +152,20 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def state_session(spark: SparkSession) -> SparkSession:
+    """The session a stateful stream of ``spark`` runs on: ``spark``
+    itself when its shuffle width is already :data:`STATE_PARTITIONS`,
+    else a child (``newSession``: same SparkContext, cache and builder
+    conf; its own SQL conf, temp views and ``streams``) with that width,
+    so the caller's conf is never written."""
+    width = str(STATE_PARTITIONS)
+    if spark.conf.get("spark.sql.shuffle.partitions") == width:
+        return spark
+    child = spark.newSession()
+    child.conf.set("spark.sql.shuffle.partitions", width)
+    return child
 
 
 @contextmanager

@@ -44,6 +44,7 @@ from pyspark.sql.streaming import StreamingQuery
 from smalltsdb_spark import storage
 from smalltsdb_spark.config import DEFAULT_TAIL, QUANTILES
 from smalltsdb_spark.schemas import AGG_SCHEMA, PARTITION_COLUMN, SECONDS_PER_DAY
+from smalltsdb_spark.session import state_session
 from smalltsdb_spark.sources.graphite import parse_lines_df
 
 #: minimum age (mtime) before the per-trigger partials upsert physically
@@ -95,6 +96,7 @@ def _start(
     interval: str | None,
     available_now: bool,
     *,
+    stateful: bool,
     path: str | None = None,
     grain_seconds: int = SECONDS_PER_DAY,
     upsert: Callable[[DataFrame, int], None] | None = None,
@@ -103,7 +105,21 @@ def _start(
     table at ``path``, partitioned by ``pday`` like the batch writer
     (storage.append), or, given ``upsert``, handed each micro-batch in
     update mode.  ``available_now`` drains what is there and stops;
-    otherwise a trigger fires every ``interval`` (None: back to back)."""
+    otherwise a trigger fires every ``interval`` (None: back to back).
+
+    A ``stateful`` stream's plan is re-bound onto
+    :func:`session.state_session` of its own session, so its state and
+    each micro-batch's sink write have the state width; a restarted
+    checkpoint keeps the width frozen in its offset log."""
+    if stateful:
+        session = state_session(stream.sparkSession)
+        if session is not stream.sparkSession:
+            stream = DataFrame(
+                session._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+                    session._jsparkSession, stream._jdf.queryExecution().logical()
+                ),
+                session,
+            )
     if upsert is None:
         writer = (
             stream.withColumn(
@@ -149,7 +165,8 @@ def start_ingest(
     (storage._assert_mutable); a retired stream's table is converted
     back with ``storage.decommission_streaming_sink``."""
     return _start(incoming_stream, checkpoint, interval, available_now,
-                  path=incoming_path, grain_seconds=grain_seconds)
+                  stateful=False, path=incoming_path,
+                  grain_seconds=grain_seconds)
 
 
 def streaming_aggregate(
@@ -233,7 +250,7 @@ def start_rollup_partials(
     rewrite."""
     agg = streaming_aggregate(incoming_stream, seconds, tail=tail, exact=exact)
     return _start(
-        agg, checkpoint, interval, available_now,
+        agg, checkpoint, interval, available_now, stateful=True,
         upsert=lambda batch, _id: storage.upsert(
             batch, partial_path, AGG_SCHEMA, grain_seconds,
             gc_min_age=STREAM_GC_MIN_AGE,
@@ -341,7 +358,7 @@ def start_histogram_rollup(
         bin_width=bin_width,
         clamp_bin=clamp_bin,
     )
-    return _start(hist, checkpoint, interval, available_now,
+    return _start(hist, checkpoint, interval, available_now, stateful=True,
                   path=hist_path, grain_seconds=grain_seconds)
 
 
@@ -363,5 +380,5 @@ def start_rollup(
     they are independent queries and scale independently.  Pass the
     store's ``grain_seconds`` when it uses partition_grain='hour'."""
     agg = streaming_aggregate(incoming_stream, seconds, tail=tail, exact=exact)
-    return _start(agg, checkpoint, interval, available_now,
+    return _start(agg, checkpoint, interval, available_now, stateful=True,
                   path=period_path, grain_seconds=grain_seconds)

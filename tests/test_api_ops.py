@@ -242,6 +242,51 @@ def test_cli_rundev(spark, tsdb_dir):
     assert all(1.0 <= r.min <= r.max <= 6.0 for r in rows)
 
 
+def test_cli_stream_failure_raises_and_stops_every_query(
+    spark, tmp_path, monkeypatch
+):
+    """``stream`` waits on the queries it started, not on the caller's
+    ``spark.streams`` (the rollups run on child sessions): when one of
+    them fails, the command raises that failure and stops all 7."""
+    import argparse
+
+    from pyspark.sql import functions as F
+
+    from smalltsdb_spark import session, streaming
+    from smalltsdb_spark.sources.daemon import SpoolSink
+
+    spool = str(tmp_path / "spool")
+    SpoolSink(spool)([("web.latency", 100.0, 1.0)])
+    started = []
+
+    def recording(start):
+        def wrapper(stream, *args, **kwargs):
+            if args[2:3] == (60,):  # the oneminute rollup fails on its first row
+                stream = stream.withColumn(
+                    "value", F.raise_error(F.lit("injected stream failure"))
+                )
+            started.append(start(stream, *args, **kwargs))
+            return started[-1]
+
+        return wrapper
+
+    monkeypatch.setattr(session, "get_spark", lambda: spark)
+    monkeypatch.setattr(streaming, "start_ingest", recording(streaming.start_ingest))
+    monkeypatch.setattr(streaming, "start_rollup", recording(streaming.start_rollup))
+    args = argparse.Namespace(
+        db=str(tmp_path / "db"), spool=spool, interval=1.0, tail=60.0,
+        checkpoints=None, max_files_per_trigger=None,
+    )
+    try:
+        with pytest.raises(Exception, match="injected stream failure"):
+            cli.cmd_stream(args)
+        assert len(started) == 7
+        assert not [q for q in started if q.isActive]
+    finally:
+        for q in started:
+            q.stop()
+
+
 def test_approx_percentile_error_bounds_sf01(spark):
     """Quantitative |approx - exact| pin for the 100 TB percentile mode at
     sf0.1: every day-bucket's approx p50/p90/p99 must land inside the

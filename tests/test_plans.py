@@ -561,6 +561,22 @@ def test_text_semdedup_e2e_pair_stage_never_joins_the_corpus(spark):
     assert scan_columns(feats) == [{"doc_id", "text"}]
 
 
+def test_featurize_evaluates_its_grams_once(spark):
+    """featurize builds each document's gram array in one projection:
+    no filter the optimizer infers from the explode (``size(_gs) > 0``)
+    re-evaluates the gram tree below it on the raw text."""
+    from smalltsdb_spark.operators import classifier
+
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    feats = classifier.featurize(docs, "doc_id", "text", 1 << 12)
+    # the optimizer on the analyzed plan, not optimizedPlan: a classifier
+    # query that ran earlier may have cached this plan, and the cache's
+    # InMemoryRelation prints its own physical plans
+    analyzed = feats._jdf.queryExecution().analyzed()
+    plan = spark._jsparkSession.sessionState().optimizer().execute(analyzed)
+    assert plan.toString().count("concat(") == 1, plan.toString()
+
+
 @pytest.mark.parametrize(
     "row",
     [

@@ -166,6 +166,147 @@ def test_starter_plans_unchanged(spark, tmp_path):
     }
 
 
+def _state_partitions(checkpoint):
+    """Partition directories of the checkpoint's one stateful operator."""
+    return sorted(n for n in os.listdir(f"{checkpoint}/state/0") if n.isdigit())
+
+
+def _offset_log_width(checkpoint, batch=0):
+    """The shuffle width the checkpoint's offset log froze at ``batch``."""
+    import json
+
+    with open(f"{checkpoint}/offsets/{batch}") as f:
+        meta = json.loads(f.read().splitlines()[1])
+    return int(meta["conf"]["spark.sql.shuffle.partitions"])
+
+
+def _files_per_batch_and_pday(table):
+    """{(micro-batch, pday): files} from the table's file-sink log."""
+    import collections
+    import json
+
+    log = f"{table}/_spark_metadata"
+    out = collections.Counter()
+    for name in os.listdir(log):
+        if name.isdigit():
+            with open(f"{log}/{name}") as f:
+                for line in f.read().splitlines()[1:]:
+                    path = json.loads(line)["path"]
+                    out[int(name), path.rsplit("/pday=", 1)[1].split("/")[0]] += 1
+    return out
+
+
+def _write_sources(spark, src, first_batch):
+    """Three one-file source batches of 24 paths: the first (or, with
+    ``first_batch=False``, the other two) just before a day boundary,
+    just after it, and a clock point a day on that closes every window."""
+    from smalltsdb_spark.schemas import INCOMING_SCHEMA
+
+    day = 86400.0
+    batches = [
+        [(f"p{i}", day - 290 + 7 * i, float(i)) for i in range(24)],
+        [(f"p{i}", day + 10 + 7 * i, float(i) / 2) for i in range(24)],
+        [("clock", 2 * day + 500, 0.0)],
+    ]
+    for k, rows in enumerate(batches[:1] if first_batch else batches[1:]):
+        spark.createDataFrame(rows, INCOMING_SCHEMA).coalesce(1).write.parquet(
+            f"{src}/b{k + (0 if first_batch else 1)}"
+        )
+
+
+@pytest.mark.parametrize(
+    "starter", ["start_rollup", "start_histogram_rollup", "start_rollup_partials"]
+)
+def test_stateful_starters_run_at_the_state_width(spark, tmp_path, starter):
+    """Each stateful starter runs its stream at ``STATE_PARTITIONS``
+    whatever the caller's width (4 here): the offset log freezes that
+    width, the state has that many partitions, a file sink writes at
+    most one file per ``pday`` per micro-batch, and the caller's conf is
+    not written."""
+    from smalltsdb_spark import streaming
+    from smalltsdb_spark.schemas import INCOMING_SCHEMA
+    from smalltsdb_spark.session import STATE_PARTITIONS
+
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "4"
+    src, out, ck = (str(tmp_path / d) for d in ("src", "out", "ck"))
+    _write_sources(spark, src, first_batch=True)
+    _write_sources(spark, src, first_batch=False)
+    before = dict(spark.conf.getAll)
+    q = getattr(streaming, starter)(
+        spark.readStream.schema(INCOMING_SCHEMA)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(f"{src}/*"),
+        out,
+        ck,
+        60,
+        available_now=True,
+    )
+    try:
+        assert q.awaitTermination(120)
+    finally:
+        q.stop()
+    assert dict(spark.conf.getAll) == before
+    assert _offset_log_width(ck) == STATE_PARTITIONS
+    assert len(_state_partitions(ck)) == STATE_PARTITIONS
+    if starter != "start_rollup_partials":
+        files = _files_per_batch_and_pday(out)
+        assert len({pday for _, pday in files}) == 2, files
+        assert max(files.values()) == 1, files
+
+
+def test_four_partition_checkpoint_restarts_at_its_width(spark, tmp_path):
+    """A rollup checkpoint made at 4 state partitions (before the state
+    width existed: ``streaming_aggregate`` written by the 4-wide session)
+    restarts through ``start_rollup`` at its frozen width: every bucket
+    is emitted once, and the table equals the batch aggregation of what
+    the watermark closed."""
+    from smalltsdb_spark.operators.aggregate import aggregate
+    from smalltsdb_spark.schemas import INCOMING_SCHEMA, PARTITION_COLUMN
+
+    src, out, ck = (str(tmp_path / d) for d in ("src", "out", "ck"))
+
+    def source():
+        return spark.readStream.schema(INCOMING_SCHEMA).parquet(f"{src}/*")
+
+    _write_sources(spark, src, first_batch=True)
+    q = (
+        streaming_aggregate(source(), 10)
+        .withColumn(
+            PARTITION_COLUMN,
+            F.floor(F.col("timestamp") / F.lit(86400)).cast("long"),
+        )
+        .writeStream.format("parquet")
+        .outputMode("append")
+        .option("checkpointLocation", ck)
+        .option("path", out)
+        .partitionBy(PARTITION_COLUMN)
+        .trigger(availableNow=True)
+        .start()
+    )
+    assert q.awaitTermination(120)
+    assert len(_state_partitions(ck)) == 4
+
+    _write_sources(spark, src, first_batch=False)
+    q = start_rollup(source(), out, ck, 10, available_now=True)
+    try:
+        assert q.awaitTermination(120)
+    finally:
+        q.stop()
+    assert len(_state_partitions(ck)) == 4
+    last = max(int(n) for n in os.listdir(f"{ck}/offsets") if n.isdigit())
+    assert _offset_log_width(ck, last) == 4
+
+    cols = ["path", "timestamp", "n", "min", "max", "avg", "sum", "p50", "p90", "p99"]
+    got = sorted(tuple(r) for r in spark.read.parquet(out).select(cols).collect())
+    assert len({r[:2] for r in got}) == len(got)
+    incoming = spark.read.schema(INCOMING_SCHEMA).parquet(f"{src}/*")
+    watermark = incoming.agg(F.max("timestamp")).first()[0] - 60
+    oracle = aggregate(incoming, 10).where(F.col("timestamp") + 10 <= watermark)
+    want = sorted(tuple(r) for r in oracle.select(cols).collect())
+    assert len(want) == 48
+    assert got == pytest.approx(want)
+
+
 def _table(spark, tmp_path, name="tensecond"):
     from smalltsdb_spark.storage import _has_data
 
